@@ -9,9 +9,11 @@ data path (BASELINE.json north-rule requirement).
 
 Two implementations with identical semantics:
 
-- ``decode_events``      mapInPandas (Arrow/pandas UDF) — the default, per
-                         the north rule; handles rename-coalescing and
-                         type-widening from the schema version.
+- ``decode_events``      mapInArrow (Arrow compute kernels) — the default,
+                         per the north rule, with a mapInPandas kernel as
+                         its per-row-isolation and decimal fallback; handles
+                         rename-coalescing and type-widening from the schema
+                         version.
 - ``decode_events_sql``  pure Catalyst ``from_json`` — JVM-side, used as a
                          cross-check and a bench comparison point.
 """
@@ -19,6 +21,8 @@ Two implementations with identical semantics:
 from __future__ import annotations
 
 import io
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,6 +41,23 @@ _PD_CAST = {
     "double": "float64",
     "float": "float32",
 }
+
+
+def _drop_zip_importers() -> None:
+    """Forget every cached ``zipimporter`` in ``sys.path_importer_cache``.
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` before
+    each task, and on CPython 3.11 that makes every cached zipimporter
+    re-read its whole archive (pyspark.zip, and the Spark jars that sit on
+    the worker's sys.path): about 0.2 s per task before the first batch.
+    The decode kernels call this when they finish, so the next task's
+    invalidation finds no archive to re-read. The entries are only a cache:
+    an import that needs a dropped importer rebuilds it from
+    ``zipimport._zip_directory_cache`` without reading the archive."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 def _presence_pattern(name: str) -> str:
@@ -478,26 +499,32 @@ def decode_events(
         out_arrow = to_arrow_schema(out_schema)
 
         def afn(batches):
-            for rb in batches:
-                try:
-                    yield _decode_batch_arrow(
-                        rb, fields, renames, with_validity, field_bits, out_arrow
-                    )
-                except Exception:  # noqa: BLE001 — pandas path isolates rows
-                    import pyarrow as pa
+            try:
+                for rb in batches:
+                    try:
+                        yield _decode_batch_arrow(
+                            rb, fields, renames, with_validity, field_bits, out_arrow
+                        )
+                    except Exception:  # noqa: BLE001 — pandas path isolates rows
+                        import pyarrow as pa
 
-                    out = _decode_batch(
-                        rb.to_pandas(), fields, renames, with_validity, field_bits
-                    )
-                    yield pa.RecordBatch.from_pandas(
-                        out, schema=out_arrow, preserve_index=False
-                    )
+                        out = _decode_batch(
+                            rb.to_pandas(), fields, renames, with_validity, field_bits
+                        )
+                        yield pa.RecordBatch.from_pandas(
+                            out, schema=out_arrow, preserve_index=False
+                        )
+            finally:
+                _drop_zip_importers()
 
         return dml.mapInArrow(afn, schema=out_schema)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf, fields, renames, with_validity, field_bits)
+        try:
+            for pdf in batches:
+                yield _decode_batch(pdf, fields, renames, with_validity, field_bits)
+        finally:
+            _drop_zip_importers()
 
     return dml.mapInPandas(fn, schema=out_schema)
 

@@ -23,6 +23,7 @@ Checks:
   refs        hint / branch hints / tags resolve to snapshot files
   snapshots   every retained snapshot parses; schema + spec registry
               resolve; watermark is monotonic along retained parents
+              (except into a rollback child, which restores an older one)
   manifests   every referenced manifest exists and parses
   files       every referenced data file exists; no duplicate entries in
               one snapshot; bucket ids within their spec's range
@@ -81,16 +82,28 @@ def fsck(
 
     # ---------------------------------------------------------------- refs
     heads: dict[str, str] = {}  # ref label -> snapshot file name
-    try:
-        with open(table._hint_path()) as f:
-            heads["main"] = f.read().strip()
-    except FileNotFoundError:
-        err("refs", "version hint missing (table never created or hint lost)")
+
+    def read_hint(label: str, path: str) -> None:
+        try:
+            with open(path) as f:
+                heads[label] = f.read().strip()
+        except FileNotFoundError:
+            if label == "main":  # a branch hint may be dropped mid-listing
+                err("refs", "version hint missing (table never created or hint lost)")
+        except (OSError, UnicodeDecodeError) as e:
+            err("refs", f"{os.path.basename(path)} unreadable: {type(e).__name__}: {e}",
+                ref=label)
+
+    read_hint("main", table._hint_path())
     for fn in os.listdir(meta):
         if fn.startswith("branch-") and fn.endswith(".hint"):
-            with open(os.path.join(meta, fn)) as f:
-                heads[f"branch:{fn[len('branch-'):-len('.hint')]}"] = f.read().strip()
-    for name, ref in table.tags().items():
+            read_hint(f"branch:{fn[len('branch-'):-len('.hint')]}", os.path.join(meta, fn))
+    try:
+        tags = table.tags()
+    except (OSError, ValueError) as e:  # ValueError covers JSON and UTF-8 decode
+        err("refs", f"refs.json unreadable: {type(e).__name__}: {e}")
+        tags = {}
+    for name, ref in tags.items():
         heads[f"tag:{name}"] = f"snapshot-{ref['snapshot_id']:08d}.json"
 
     snap_files = {
@@ -128,7 +141,8 @@ def fsck(
             err("snapshots", f"{label}: schema-{snap['schema_id']}.json missing/unreadable",
                 snapshot_id=sid)
         parent = snap.get("parent")
-        if parent is not None and parent in snaps:
+        # a rollback child restores its target's older watermark by design
+        if parent is not None and parent in snaps and snap.get("kind") != "rollback":
             pw = snaps[parent].get("watermark_lsn") or 0
             sw = snap.get("watermark_lsn") or 0
             if sw < pw:

@@ -1039,7 +1039,7 @@ class LakehouseTable:
         cluster_order: 'linear' (lexicographic by cluster_by — tight
         bounds on the LEADING column, later columns only tie-break) or
         'zorder' (Delta OPTIMIZE ZORDER BY / Iceberg z-sort-order analog:
-        one Morton key interleaving the cluster_by columns byte-wise, each
+        one Morton key interleaving the cluster_by columns' bits, each
         RANGE-NORMALIZED to 16 bits against the manifests' recorded
         bounds, so every file covers a compact hyper-rectangle and
         `read(where=)` skipping gets comparably tight bounds on EVERY z

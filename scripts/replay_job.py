@@ -2,9 +2,9 @@
 
 Run via plain `python` or `spark-submit --py-files dist/data_pipeline_spark.zip`
 (north rule): replays a pre-generated change feed through the full engine
-(streaming source → Arrow decode → salted LWW dedup → COW merge) and prints
-one JSON line with throughput. bench.py launches this twice (N and 4N cores)
-for the scaling-efficiency evidence.
+(streaming source → Arrow decode → max-of-struct LWW collapse → MOR delta
+merge) and prints one JSON line with throughput. bench.py launches this
+twice (N and 4N cores) for the scaling-efficiency evidence.
 """
 
 from __future__ import annotations

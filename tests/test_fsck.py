@@ -97,6 +97,65 @@ def test_corrupt_snapshot_json_detected(table):
     assert any(fn in e["detail"] for e in _errs(r, "snapshots"))
 
 
+def _snapshots(table):
+    out = {}
+    for fn in os.listdir(table.meta_dir):
+        if fn.startswith("snapshot-") and fn.endswith(".json"):
+            s = table._load_snapshot(fn)
+            out[s["snapshot_id"]] = s
+    return out
+
+
+def test_rollback_is_not_a_watermark_regression(table):
+    cur = table.current_snapshot()
+    target = min(
+        (s for s in _snapshots(table).values()
+         if 0 < (s.get("watermark_lsn") or 0) < cur["watermark_lsn"]),
+        key=lambda s: s["snapshot_id"],
+    )
+    table.rollback_to(target["snapshot_id"])
+    head = table.current_snapshot()
+    assert head["kind"] == "rollback"
+    assert head["watermark_lsn"] < cur["watermark_lsn"]
+    r = fsck(table)
+    assert r["ok"], r["errors"]
+
+
+def test_hand_edited_watermark_regression_detected(table):
+    snaps = _snapshots(table)
+    sid, snap = max(
+        (sid, s) for sid, s in snaps.items()
+        if s.get("parent") in snaps and (snaps[s["parent"]].get("watermark_lsn") or 0) > 0
+    )
+    snap["watermark_lsn"] = snaps[snap["parent"]]["watermark_lsn"] - 1
+    with open(os.path.join(table.meta_dir, f"snapshot-{sid:08d}.json"), "w") as f:
+        json.dump(snap, f)
+    r = fsck(table)
+    assert not r["ok"]
+    assert any(e.get("snapshot_id") == sid and "watermark" in e["detail"]
+               for e in _errs(r, "snapshots"))
+
+
+def test_truncated_refs_json_reported(table):
+    refs_path = os.path.join(table.meta_dir, "refs.json")
+    with open(refs_path) as f:
+        body = f.read()
+    with open(refs_path, "w") as f:
+        f.write(body[: len(body) // 2])
+    r = fsck(table)
+    assert not r["ok"]
+    assert any("refs.json unreadable" in e["detail"] for e in _errs(r, "refs"))
+
+
+def test_unreadable_branch_hint_reported(table):
+    hint = os.path.join(table.meta_dir, "branch-audit.hint")
+    os.remove(hint)
+    os.mkdir(hint)  # open() fails with IsADirectoryError
+    r = fsck(table)
+    assert not r["ok"]
+    assert any(e.get("ref") == "branch:audit" for e in _errs(r, "refs"))
+
+
 def test_truncated_parquet_detected_deep(table):
     entry = table.files()[0]
     p = os.path.join(table.path, entry["path"])
