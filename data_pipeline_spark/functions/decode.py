@@ -14,8 +14,9 @@ Two implementations with identical semantics:
                          its per-row-isolation and decimal fallback; handles
                          rename-coalescing and type-widening from the schema
                          version.
-- ``decode_events_sql``  pure Catalyst ``from_json`` — JVM-side, used as a
-                         cross-check and a bench comparison point.
+- ``decode_events_sql``  pure Catalyst ``from_json`` — JVM-side, kept only
+                         as the tests' independent cross-check (it measured
+                         slower than the Arrow kernel, BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -533,11 +534,13 @@ def decode_events_sql(
     raw: DataFrame,
     table_schema: T.StructType,
     renames: dict[str, list[str]] | None = None,
-    with_validity: bool = False,
     field_bits: dict[str, int] | None = None,
 ) -> DataFrame:
     """Catalyst-only decode via ``from_json`` — same output contract as
-    ``decode_events``; stays entirely inside whole-stage codegen."""
+    ``decode_events`` on well-formed payloads; stays entirely inside
+    whole-stage codegen. A test cross-check only: a malformed payload
+    decodes to nulls (PERMISSIVE) instead of failing or being
+    quarantined."""
     renames = renames or {}
     # from_json needs every historical payload key in the parse schema.
     parse_fields = []
@@ -548,31 +551,8 @@ def decode_events_sql(
         parse_fields.append(T.StructField(f.name, typ, True))
         for old in renames.get(f.name, []):
             parse_fields.append(T.StructField(old, T.StringType(), True))
-    # _corrupt is parsed unconditionally: validity mode quarantines on it,
-    # abort mode raises on it (strictness parity with the Arrow/pandas
-    # kernels, which raise on malformed payloads when with_validity=False —
-    # PERMISSIVE from_json would otherwise silently null the row out)
-    parse_fields.append(T.StructField("_corrupt", T.StringType(), True))
-    parsed = F.from_json(
-        F.col("payload"),
-        T.StructType(parse_fields),
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-
-    malformed = F.col("payload").isNotNull() & (
-        F.col("j").isNull() | F.col("j._corrupt").isNotNull()
-    )
-    lsn_col = F.col("lsn")
-    if not with_validity:
-        # abort mode: fail the task (→ batch → stream abort-alert) on the
-        # first malformed payload, like the Arrow/pandas kernels do
-        lsn_col = F.when(
-            malformed,
-            F.raise_error(
-                F.concat(F.lit("malformed payload in abort mode: "), F.col("payload"))
-            ).cast("long"),
-        ).otherwise(F.col("lsn"))
-    cols = [lsn_col.alias("lsn"), F.col("op"), F.col("conv_id")]
+    parsed = F.from_json(F.col("payload"), T.StructType(parse_fields))
+    cols = [F.col("lsn"), F.col("op"), F.col("conv_id")]
     key_type = dict((f.name, f.dataType) for f in table_schema.fields)
     cols.append(F.col("turn_idx").cast(key_type["turn_idx"]).alias("turn_idx"))
     for f in table_schema.fields:
@@ -599,15 +579,6 @@ def decode_events_sql(
             .otherwise(mask)
         )
         cols.append(mask.alias("_set_mask"))
-    if with_validity:
-        err = (
-            F.when(malformed, F.lit("malformed payload"))
-            .when(F.col("conv_id").isNull() | F.col("turn_idx").isNull(), F.lit("missing merge key"))
-            .when(F.col("op").isin("I", "U") & F.col("payload").isNull(), F.lit("missing payload for I/U"))
-        )
-        cols.append(F.col("payload").alias("_payload"))
-        cols.append(err.alias("_error"))
-        cols.append(err.isNull().alias("_valid"))
     return (
         raw.where(F.col("op") != "DDL")
         .withColumn("j", parsed)

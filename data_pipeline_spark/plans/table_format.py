@@ -1,24 +1,23 @@
-"""Lakehouse table with an atomic JSON commit log: MOR deltas + COW merge.
+"""Lakehouse table with an atomic JSON commit log: merge-on-read deltas.
 
 The sandbox ships no Iceberg/Delta jars, so Iceberg semantics are emulated
 (SURVEY.md §0): atomic snapshot commits, field-id-based schema evolution
 (add / rename / type-widen), time travel by snapshot id, bucketed layout.
 The public surface (`create / read / merge / apply_ddl / overwrite /
 compact`) is deliberately the shape of Iceberg's — with the Iceberg runtime
-present, `merge` becomes `MERGE INTO` (COW) or an equality-delete write
-(MOR), and `apply_ddl` becomes `ALTER TABLE`; nothing else changes.
+present, `merge` becomes an equality-delete write (MOR) and `apply_ddl`
+becomes `ALTER TABLE`; nothing else changes.
 
-Two merge strategies, chosen at `create` (Iceberg's copy-on-write vs
-merge-on-read, same trade-off):
-
-- **mor** (default, the CDC-ingest design): a merge writes ONLY the deduped
-  changeset — including DELETE tombstones — as a delta layer. O(batch) per
-  commit, no read of existing data; the price is read-side reconcile
-  (last-writer-wins over base ∪ deltas), bounded by automatic compaction
-  every `compact_every` delta commits. At 10^10 events this is the only
-  viable shape: a COW merge is O(table) per batch.
-- **cow**: classic copy-on-write — read affected buckets, reconcile, rewrite.
-  Best for read-heavy tables with rare updates.
+One merge strategy, Iceberg's merge-on-read: a merge writes ONLY the
+deduped changeset — including DELETE tombstones — as a delta layer.
+O(batch) per commit, no read of existing data; the price is read-side
+reconcile (last-writer-wins over base ∪ deltas), bounded by automatic
+compaction every `compact_every` delta commits. At 10^10 events this is the
+only viable shape: a copy-on-write merge is O(table) per batch. The delta
+files double as the changelog (`read_changes`, `tail_changes`). Tables
+written by older versions may carry copy-on-write history
+(`merge_mode: "cow"`, or no `merge_mode` at all); `merge` refuses them and
+the changelog reads refuse the COW-era snapshots they cannot reconstruct.
 
 Layout (paths relative to the table root):
 
@@ -726,7 +725,7 @@ class LakehouseTable:
     # manifest + the snapshot json with N+1 manifest refs — instead of
     # rewriting the full O(table) file inventory every commit, which is the
     # thing that turns the driver into the bottleneck at 10^10 events.
-    # Removal ops (COW merge, compact, rebucket) rewrite ONLY the manifests
+    # Removal ops (compact, rebucket) rewrite ONLY the manifests
     # whose bucket range intersects the affected buckets; the rest carry by
     # name. Manifest files are immutable → cached by name after first load.
     #
@@ -1003,7 +1002,6 @@ class LakehouseTable:
         self,
         schema: T.StructType,
         n_buckets: int = 128,
-        merge_mode: str = "mor",
         compact_every: int = 8,
         update_mode: str = "full",
         rewrite_manifests_every: int | None = None,
@@ -1014,8 +1012,9 @@ class LakehouseTable:
     ) -> None:
         """Create an empty table. n_buckets bounds merge/compaction write
         parallelism — size it ≥ 4N executor cores (SURVEY.md §7 hard part c).
-        merge_mode: 'mor' (delta commits + auto-compaction, the CDC design)
-        or 'cow' (rewrite affected buckets per merge).
+        Every merge is a delta commit; compact_every bounds the per-bucket
+        delta depth that triggers auto-compaction. The snapshot records
+        `merge_mode: "mor"` so the table on disk says what it is.
 
         rewrite_manifests_every: auto-fold the manifest LIST (pure metadata,
         see rewrite_manifests) whenever a merge leaves it at least this
@@ -1070,7 +1069,6 @@ class LakehouseTable:
         columns its UPDATE set — Oracle LogMiner style; sequential-apply
         column fold; delta files persist the `_set_mask` presence bitmask,
         keyed by field id so it survives renames)."""
-        assert merge_mode in ("mor", "cow")
         assert update_mode in ("full", "partial")
         if cluster_order not in ("linear", "zorder"):
             raise ValueError(f"cluster_order must be linear|zorder, got {cluster_order!r}")
@@ -1113,7 +1111,7 @@ class LakehouseTable:
                 "n_buckets": n_buckets,
                 "spec_id": 0,
                 "specs": {"0": n_buckets},
-                "merge_mode": merge_mode,
+                "merge_mode": "mor",
                 "update_mode": update_mode,
                 "compact_every": compact_every,
                 "rewrite_manifests_every": rewrite_manifests_every,
@@ -1235,8 +1233,8 @@ class LakehouseTable:
         as_of_ts=None,
     ) -> DataFrame:
         """Read the table at the current (or a past) snapshot. MOR deltas are
-        reconciled here (the read-side LWW); COW tables hit the no-delta fast
-        path (plain scan, no shuffle).
+        reconciled here (the read-side LWW); a snapshot without deltas
+        takes the no-delta fast path (plain scan, no shuffle).
 
         where: conjunctive simple predicates [(col, op, value), ...] with op
         in =/</<=/>/>= over payload columns. Always applied as a row filter
@@ -1635,7 +1633,7 @@ class LakehouseTable:
         `key_max` of cluster_by[0] for clustered tables, plus
         `col_stats: {field_id: [min, max]}` for every configured stats
         column (Iceberg's manifest lower_bounds/upper_bounds). Recorded
-        whenever BASE files are written (overwrite / COW merge / compact /
+        whenever BASE files are written (overwrite / compact /
         rebucket / migrate); on a real cluster the writers would report
         these with the commit. Files written under an older schema resolve
         each field's name AT WRITE TIME via its id."""
@@ -1775,7 +1773,7 @@ class LakehouseTable:
         MOR soundness rule: a base file may only be skipped in a bucket
         with NO delta files at this snapshot. In such a bucket every
         row's current image IS its base image (the base layer holds one
-        version per key — overwrite/COW/compaction all write folded
+        version per key — overwrite and compaction both write folded
         output), so a file whose bounds exclude the predicate holds no
         matching current rows. In a bucket WITH deltas, a delta row can
         move a key's current image into the predicate range (or a stale
@@ -1884,19 +1882,28 @@ class LakehouseTable:
         spark: SparkSession,
         batch_id: int,
         changes: DataFrame,
-        affected_hint: set[int] | None = None,
-        max_lsn_hint: int | None = None,
         enforce_watermark: bool = True,
         bucket_n: int | None = None,
     ) -> dict:
         """Apply a deduped changeset (≤1 row per key; columns: lsn, op,
-        <table columns>, optionally _bucket).
+        <table columns>, optionally _bucket) as one delta commit — the
+        Iceberg equivalent is an equality-delete + data-file commit.
+        Idempotent by batch_id and by watermark LSN.
 
-        Iceberg equivalents: COW = `MERGE INTO t USING s ON keys WHEN MATCHED
-        AND s.op='D' THEN DELETE WHEN MATCHED THEN UPDATE SET * WHEN NOT
-        MATCHED AND s.op!='D' THEN INSERT *`; MOR = an equality-delete +
-        data-file commit. Idempotent by batch_id and by watermark LSN."""
+        Write-first: the changeset is written in ONE pass (decode →
+        collapse → bucketed write, no persist, no probe job), then lineage
+        metrics and the watermark come from the written files' footers.
+
+        Raises ValueError on a table whose snapshot is not `merge_mode:
+        "mor"` (copy-on-write history written by an older version): delta
+        layers stacked on it would make its changelog unreadable."""
         snap = self.current_snapshot()
+        if snap.get("merge_mode", "cow") != "mor":
+            raise ValueError(
+                f"table {self.path} has copy-on-write history "
+                f"(merge_mode={snap.get('merge_mode', 'cow')!r}); merge "
+                "writes delta commits only — rebuild it as a new table"
+            )
         if batch_id <= snap["last_batch_id"]:
             return {"skipped": True, "batch_id": batch_id, "snapshot_id": snap["snapshot_id"]}
 
@@ -1913,8 +1920,6 @@ class LakehouseTable:
             # land in dirs that disagree with the rows' real buckets and
             # bucket-pruned point reads miss them
             changes = changes.withColumn("_bucket", self.bucket_expr(n_buckets))
-            if affected_hint is not None:
-                affected_hint = None  # stale spec's bucket ids — recompute
         # Columns added to the schema AFTER this changeset was decoded (a
         # concurrent add_column landing between decode and commit, or a
         # with_commit_retry re-running merge against an evolved snapshot)
@@ -1935,38 +1940,14 @@ class LakehouseTable:
                 ],
             )
 
-        if snap.get("merge_mode", "cow") == "mor":
-            # MOR is write-first: the changeset is written in ONE pass
-            # (decode → collapse → bucketed write, no persist, no probe
-            # job), then lineage metrics and the watermark come from a
-            # thin-column scan of the just-written delta files.
-            result = self._merge_mor(spark, snap, batch_id, changes)
-            # Auto-migration piggybacked on every committed merge —
-            # including noop commits (watermark-filtered / fully-duplicate
-            # batches), so a replay run still makes migration progress.
-            mig = self._maybe_auto_migrate(spark, snap)
-            if mig:
-                result["spec_migration"] = mig
-            return result
-
-        # COW needs the affected-bucket set BEFORE reading existing buckets:
-        # tiny probe collect, or caller-provided (the ingest loop folds it
-        # into its lineage-metrics pass).
-        if affected_hint is not None and max_lsn_hint is not None:
-            affected = set(affected_hint)
-            new_watermark = max(watermark, max_lsn_hint)
-            if max_lsn_hint <= watermark:
-                affected = set()
-        else:
-            head = changes.agg(
-                F.collect_set("_bucket").alias("b"), F.max("lsn").alias("m")
-            ).first()
-            affected = set(head["b"])
-            new_watermark = max(watermark, head["m"] or 0)
-
-        if not affected:
-            return self._commit_noop_merge(snap, batch_id)
-        return self._merge_cow(spark, snap, batch_id, changes, affected, new_watermark)
+        result = self._merge_mor(spark, snap, batch_id, changes)
+        # Auto-migration piggybacked on every committed merge — including
+        # noop commits (watermark-filtered / fully-duplicate batches), so a
+        # replay run still makes migration progress.
+        mig = self._maybe_auto_migrate(spark, snap)
+        if mig:
+            result["spec_migration"] = mig
+        return result
 
     def _commit_noop_merge(self, snap, batch_id) -> dict:
         """Fully-duplicate batch: metadata-only commit advancing batch_id."""
@@ -2090,58 +2071,11 @@ class LakehouseTable:
             "remaining_old_files": r["remaining_old_files"],
         }
 
-    def _merge_cow(self, spark, snap, batch_id, changes, affected, new_watermark) -> dict:
-        """Copy-on-write: reconcile + rewrite only the affected buckets."""
-        data_cols = [f["name"] for f in self._load_schema(snap["schema_id"])["fields"]]
-        partial = self.update_mode(snap) == "partial"
-        existing = self._reconciled(spark, snap, buckets=affected)
-        if existing is not None:
-            existing = existing.select(
-                "lsn", F.lit("I").alias("op"),
-                self.bucket_expr(snap["n_buckets"]).alias("_bucket"), *data_cols,
-            )
-        if partial:
-            chg = changes.select("lsn", "op", MASK_COL, "_bucket", *data_cols)
-            live = merge_changeset_partial(existing, chg, self.field_bits(snap))
-        else:
-            chg = changes.select("lsn", "op", "_bucket", *data_cols)
-            live = merge_changeset(existing, chg, data_cols)
-        live = live.withColumnRenamed("lsn", LSN_COL)
-        new_id = self._next_id(snap)
-        new_entries = self._write_data(
-            live, new_id, snap["schema_id"], snap["n_buckets"], "base",
-            sort_cols=self._sort_cols(snap),
-            max_records_per_file=snap.get("target_file_rows"),
-            spec_id=self.spec_id(snap),
-        )
-        new_entries = self._record_stats(new_entries, snap)
-        carried = self._carry_without_buckets(snap, new_id, affected)
-        if new_entries:
-            carried.append(self._write_manifest(new_id, new_entries))
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "merge",
-            "batch_id": batch_id,
-            "last_batch_id": batch_id,
-            "watermark_lsn": new_watermark,
-            "manifests": carried,
-            "delta_depth": {
-                b: c for b, c in snap.get("delta_depth", {}).items() if int(b) not in affected
-            },
-            "stats": {"affected_buckets": len(affected)},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return {"skipped": False, "batch_id": batch_id, "snapshot_id": new_id,
-                "affected_buckets": len(affected)}
-
     # ------------------------------------------------------------ compaction
     def delta_depth(self, snap: dict | None = None) -> dict[int, int]:
         """Per-bucket delta-file count = that bucket's read amplification,
         keyed by CURRENT-spec bucket id. Maintained INCREMENTALLY in the
-        snapshot (merge adds, compact/COW clears) so the per-commit
+        snapshot (merge adds, compact clears) so the per-commit
         compaction decision is O(n_buckets), not an O(total files) sweep;
         legacy snapshots fall back to the sweep. During a spec migration
         the retired spec's un-folded stacks are NOT counted here (their
@@ -2467,8 +2401,9 @@ class LakehouseTable:
         compaction squashes instead of folding (tombstones must outlive any
         old-spec base row they shadow — see _squash).
 
-        MOR tables only: COW merges rewrite whole buckets in place, which
-        requires a single consistent bucket→file layout (use rebucket).
+        Refuses tables with copy-on-write history (older versions): a COW
+        merge rewrote whole buckets in place, which requires a single
+        consistent bucket→file layout (use rebucket).
         One migration at a time: evolving again while old-spec files remain
         would stack three live specs — finish migrate_spec first.
 
@@ -2487,8 +2422,8 @@ class LakehouseTable:
             snap = self.current_snapshot()
             if snap.get("merge_mode", "cow") != "mor":
                 raise ValueError(
-                    "evolve_bucket_spec needs merge_mode='mor' (COW rewrites "
-                    "whole buckets in place); use rebucket for COW tables"
+                    "evolve_bucket_spec needs merge_mode='mor'; this table "
+                    "has copy-on-write history — use rebucket"
                 )
             if new_n_buckets == snap["n_buckets"]:
                 return {"skipped": True, "n_buckets": new_n_buckets}
@@ -3019,8 +2954,8 @@ class LakehouseTable:
         are the tombstones), lsn, <table columns> (+ `_set_mask` on partial
         tables: null/-1 = full image). Sources per snapshot kind:
         - merge (MOR): its delta files — the collapsed changeset verbatim;
-        - merge (COW): not reconstructable from files alone → raises (use
-          MOR for changelog consumers, same trade as Iceberg COW);
+        - merge (COW, written by an older version): not reconstructable
+          from files alone → raises (same trade as Iceberg COW);
         - overwrite: every written row, as inserts;
         - create/ddl/compact/rollback/rebucket: no logical row changes.
 
@@ -3040,7 +2975,7 @@ class LakehouseTable:
         cur = self.current_snapshot()
         partial = self.update_mode(cur) == "partial"
         out_parts: list[DataFrame] = []
-        # Path-based diff (not manifest-name diff): compaction/COW rewrite
+        # Path-based diff (not manifest-name diff): compaction/rewrites
         # carried entries into NEW manifests without changing the underlying
         # file paths, so only genuinely new files count as changes. Manifest
         # loads are cached by name, so each manifest reads once per call.
@@ -3070,8 +3005,8 @@ class LakehouseTable:
                 deltas = [e for e in new_entries if e.get("layer") == "delta"]
                 if not deltas:
                     raise ValueError(
-                        f"snapshot {sid} is a COW merge — changelog read needs "
-                        "merge_mode='mor' (delta files are the changelog)"
+                        f"snapshot {sid} is a COW merge written by an older "
+                        "version — only delta files are a changelog"
                     )
                 extra = [LSN_COL, OP_COL] + ([MASK_COL] if partial else [])
                 df = self._read_parts(spark, cur, deltas, extra)
@@ -3117,8 +3052,9 @@ class LakehouseTable:
         """Distinct merge keys touched in (from_id, to_id] — derived from
         the window's MOR delta files (tombstones carry keys too). Returns
         None when the key set is not derivable from deltas alone: an
-        overwrite replaces every row, a COW merge rewrites whole buckets
-        without isolating its changeset, and a rollback reverts state
+        overwrite replaces every row, a COW merge (older versions' tables)
+        rewrote whole buckets without isolating its changeset, and a
+        rollback reverts state
         without writing anything — those windows must diff full snapshots."""
         chain = self.history()
         prev_files: set[str] = {
@@ -3146,9 +3082,9 @@ class LakehouseTable:
                 # writes ZERO new files (the folded output is empty), so
                 # `new_entries` alone would misread it as a no-op and the
                 # D rows for those keys would silently vanish from
-                # net_changes. affected_buckets > 0 is recorded by every
-                # non-skipped COW commit (_merge_cow); watermark-skipped
-                # merges record 0 and correctly fall through as no-ops.
+                # net_changes. affected_buckets > 0 was recorded by every
+                # non-skipped COW commit; watermark-skipped merges record 0
+                # and correctly fall through as no-ops.
                 if not d and (
                     new_entries
                     or (s.get("stats") or {}).get("affected_buckets", 0) > 0

@@ -58,7 +58,7 @@ def get_spark(
         # keep stdout clean: bench.py must print exactly one JSON line
         .config("spark.ui.showConsoleProgress", "false")
         # v2 commit: per-task rename instead of a sequential driver-side
-        # directory merge — matters for the 128-way bucketed COW writes
+        # directory merge — matters for the 128-way bucketed base writes
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
     for k, v in (extra_conf or {}).items():

@@ -214,8 +214,38 @@ def translate_ddl_sql(sql: str) -> dict | None:
 
 # connector-specific total-order offset fields of the source block, tried in
 # order (first non-null): postgres WAL LSN, oracle SCN, mysql binlog
-# position, generic sequence — extracted together in the one source-level
-# json_tuple parse below.
+# coordinate (file + position), generic sequence — extracted together in the
+# one source-level json_tuple parse below.
+
+
+def _binlog_coord(file_no, pos):
+    """MySQL binlog coordinate → one ordered long: (file number << 32) |
+    position, the composition maxwell.py uses. A position alone restarts at
+    every binlog rotation, so it cannot order events across files."""
+    return F.shiftleft(file_no.cast("long"), 32).bitwiseOR(pos.cast("long"))
+
+
+def _txn_order(tid):
+    """Debezium transaction id (a string) → an ordered long, so the
+    TxnAligner's max(txn_id) is the newest transaction:
+    - all digits (postgres txId, numeric ids): the number itself;
+    - postgres "txid:lsn" (``571:53195829``): the leading txid, 571;
+    - mysql "binlog-file:pos" (``mysql-bin.000003:1234``): the binlog
+      coordinate, (3 << 32) | 1234.
+    Any other shape (a MySQL GTID, say) has no order a long can carry and
+    stays null, which the aligner passes through unaligned. Hashing would
+    give a long but not the order."""
+    return (
+        F.when(tid.rlike(r"^\d{1,18}$"), tid.cast("long"))
+        .when(tid.rlike(r"^\d{1,18}:\d+$"), F.regexp_extract(tid, r"^(\d+):", 1).cast("long"))
+        .when(
+            tid.rlike(r"^[^:]*\.\d{1,9}:\d{1,10}$"),
+            _binlog_coord(
+                F.regexp_extract(tid, r"\.(\d+):", 1), F.regexp_extract(tid, r":(\d+)$", 1)
+            ),
+        )
+    )
+
 
 @pandas_udf(T.StringType())
 def _translate_ddl_udf(sql: pd.Series) -> pd.Series:
@@ -238,8 +268,10 @@ def debezium_to_envelope(
     Tombstones (null value) and non-replicable DDL are dropped.
 
     with_txns adds `txn_id` (TXN_EVENT_SCHEMA) from the transaction
-    metadata block / postgres txId — feeds without it carry null, which the
-    TxnAligner passes through unaligned, same contract as the native feed.
+    metadata block / postgres txId, mapped to an ordered long by
+    `_txn_order` — feeds without it (or with an id shape that has no
+    order, such as a GTID) carry null, which the TxnAligner passes through
+    unaligned, same contract as the native feed.
     with_table_name prepends `table_name` from `source.table` for the
     multi-table router (MULTI_EVENT_SCHEMA column order).
 
@@ -273,17 +305,27 @@ def debezium_to_envelope(
     s3 = s2.select(
         "*",
         F.json_tuple(
-            F.col("_source"), "ts_ms", "lsn", "scn", "pos", "sequence", "table", "txId"
-        ).alias("_s_tsms", "_s_lsn", "_s_scn", "_s_pos", "_s_seq", "_s_table", "_s_txid"),
+            F.col("_source"), "ts_ms", "lsn", "scn", "file", "pos", "sequence", "table",
+            "txId",
+        ).alias(
+            "_s_tsms", "_s_lsn", "_s_scn", "_s_file", "_s_pos", "_s_seq", "_s_table",
+            "_s_txid",
+        ),
     )
     # stage 4 — key fields from the row image (before for deletes), one
     # parse; the DDL translator's input is null on every DML record so its
-    # Arrow transfer carries only the rare schema-change rows' SQL text
+    # Arrow transfer carries only the rare schema-change rows' SQL text.
+    # Values the final projection reads more than once are computed here,
+    # once per record.
     image = F.coalesce(F.col("_after"), F.col("_before"))
+    # _txn is a tiny object ({"id": ..}), a per-path parse is fine here
+    tid = F.coalesce(F.get_json_object(F.col("_txn"), "$.id"), F.col("_s_txid"))
     s4 = s3.select(
         "*",
         F.json_tuple(image, "conv_id", "turn_idx").alias("_k_conv", "_k_turn"),
         _translate_ddl_udf(F.col("_ddl")).alias("_ddl_desc"),
+        F.regexp_extract(F.col("_s_file"), r"\.(\d+)$", 1).alias("_s_file_no"),
+        *([tid.alias("_tid")] if with_txns else []),
     )
 
     op_raw = F.col("_op")
@@ -299,10 +341,15 @@ def debezium_to_envelope(
         .when(op_raw == "d", F.lit(None).cast("string"))
         .otherwise(F.col("_after"))
     )
+    binlog = F.when(
+        (F.col("_s_file_no") != "") & F.col("_s_pos").isNotNull(),
+        _binlog_coord(F.col("_s_file_no"), F.col("_s_pos")),
+    )
     cols = [
         F.coalesce(
-            F.col("_s_lsn"), F.col("_s_scn"), F.col("_s_pos"), F.col("_s_seq")
-        ).cast("long").alias("lsn"),
+            F.col("_s_lsn").cast("long"), F.col("_s_scn").cast("long"), binlog,
+            F.col("_s_pos").cast("long"), F.col("_s_seq").cast("long"),
+        ).alias("lsn"),
         op.alias("op"),
         F.timestamp_millis(
             F.coalesce(F.col("_s_tsms"), F.col("_tsms")).cast("long")
@@ -312,11 +359,7 @@ def debezium_to_envelope(
         payload.alias("payload"),
     ]
     if with_txns:
-        # _txn is a tiny object ({"id": ..}), a per-path parse is fine here
-        txn = F.coalesce(
-            F.get_json_object(F.col("_txn"), "$.id"), F.col("_s_txid")
-        ).cast("long")
-        cols.append(txn.alias("txn_id"))
+        cols.append(_txn_order(F.col("_tid")).alias("txn_id"))
     if with_table_name:
         cols.insert(0, F.col("_s_table").alias("table_name"))
 

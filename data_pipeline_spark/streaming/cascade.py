@@ -100,13 +100,13 @@ def _replica_feed(
 
 
 def _assert_mor_upstream(upstream: LakehouseTable) -> None:
-    """A COW upstream has no delta layer — its changelog stream would be
-    silently EMPTY (every merge rewrites base files). Refuse loudly."""
+    """A COW upstream (copy-on-write history written by an older version)
+    has no delta layer — its changelog stream would be silently EMPTY
+    (every merge rewrote base files). Refuse loudly."""
     if upstream.current_snapshot().get("merge_mode") != "mor":
         raise ValueError(
             f"cascade upstream {upstream.path} is copy-on-write: COW merges "
             "produce no delta files, so the changelog stream would be empty "
-            "— use merge_mode='mor' for tables with downstream consumers "
             "(same trade as Iceberg CDC requiring MOR)"
         )
 

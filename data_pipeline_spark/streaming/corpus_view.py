@@ -252,7 +252,7 @@ class CorpusViewJob:
             raise ValueError(
                 f"corpus view upstream {self.upstream.path} is copy-on-write: "
                 "COW merges produce no delta files, so the changelog stream "
-                "would be empty — use merge_mode='mor'"
+                "would be empty"
             )
 
         def handle(df: DataFrame, batch_id: int) -> None:

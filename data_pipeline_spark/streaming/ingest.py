@@ -27,8 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_spark.functions.decode import decode_events, decode_events_sql
-from data_pipeline_spark.operators.lww import lww_collapse_agg, lww_dedup
+from data_pipeline_spark.functions.decode import decode_events
+from data_pipeline_spark.operators.lww import lww_collapse_agg
 from data_pipeline_spark.operators.merge import collapse_partial
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.sources.feed import read_feed_batch, read_feed_stream
@@ -43,8 +43,6 @@ class IngestJob:
         self,
         table_path: str,
         control_path: str,
-        salt: int | None = None,
-        decoder: str = "pandas",  # "pandas" (Arrow UDF, north-rule default) | "sql" (from_json)
         on_error: str = "abort",  # "abort" (fail batch, resume from ckpt) | "quarantine"
         quarantine_path: str | None = None,
         archive_path: str | None = None,  # raw batch archive (reference K2 file writer)
@@ -78,8 +76,6 @@ class IngestJob:
         assert on_error in ("abort", "quarantine")
         self.table = LakehouseTable(table_path, ref=ref)
         self.control_path = control_path
-        self.salt = salt
-        self.decoder = decoder
         self.on_error = on_error
         self.quarantine_path = quarantine_path or os.path.join(control_path, "..", "quarantine")
         self.archive_path = archive_path
@@ -320,12 +316,11 @@ class IngestJob:
         renames = self.table.renames(snap_now)
         partial = self.table.update_mode(snap_now) == "partial"
         field_bits = self.table.field_bits(snap_now) if partial else None
-        decode = decode_events if self.decoder == "pandas" else decode_events_sql
         if self.on_error == "quarantine":
             # skip-and-continue error handling (reference: configurable
             # skip/abort + notification — SURVEY.md §2 T11): malformed
             # records land in a dead-letter parquet dir with the reason.
-            flagged = decode(raw, schema, renames, with_validity=True, field_bits=field_bits)
+            flagged = decode_events(raw, schema, renames, with_validity=True, field_bits=field_bits)
             bad = flagged.where(~F.col("_valid")).select(
                 "lsn", "op", "conv_id", "turn_idx",
                 F.col("_payload").alias("payload"), "_error",
@@ -342,73 +337,35 @@ class IngestJob:
                 })
             decoded = flagged.where(F.col("_valid")).drop("_valid", "_error", "_payload")
         else:
-            decoded = decode(raw, schema, renames, field_bits=field_bits)
+            decoded = decode_events(raw, schema, renames, field_bits=field_bits)
         mark("decode-quarantine")
         n_buckets = snap_now["n_buckets"]
         # Per-batch per-key collapse: full-row images take the max-LSN op
         # (LWW); partial images must COMPOSE stacked updates column-wise, so
         # they go through the sequential-apply fold instead (both are single
-        # map-side-combinable aggregations — SURVEY.md §2 T5). The default
-        # full-mode collapse is the max-of-struct HASH aggregation, not the
+        # map-side-combinable aggregations — SURVEY.md §2 T5). The full-mode
+        # collapse is the max-of-struct HASH aggregation, not the
         # window: no per-partition sort, better 1→4N scaling (lww.py
-        # docstring has the measurements); salt>1 opts into the salted
-        # two-phase window variant.
+        # docstring has the measurements).
         if partial:
             collapsed = collapse_partial(decoded, field_bits)
-        elif self.salt:
-            # salt=1 → plain single-window; salt>1 → salted two-phase window
-            collapsed = lww_dedup(decoded, salt=self.salt)
         else:
             collapsed = lww_collapse_agg(decoded)
         collapsed = collapsed.withColumn("_bucket", self.table.bucket_expr(n_buckets))
 
-        if snap_now.get("merge_mode", "cow") == "mor":
-            # Write-first: decode → collapse → bucketed delta write runs as
-            # ONE action (no persist, no second pass); per-bucket lineage
-            # comes back from the merge's thin-column scan of the written
-            # delta files.
-            result = self.table.merge(
-                spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
-                bucket_n=n_buckets,
-            )
-            mark("merge")
-            metrics = [
-                {"partition_id": m["bucket"], "rows_applied": m["rows"],
-                 "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
-                for m in result.get("bucket_metrics", [])
-            ]
-        else:
-            # COW needs the affected-bucket set BEFORE it reads existing
-            # buckets, so the lineage pass runs first and feeds the merge
-            # its hints; persist bridges the two actions.
-            deduped = collapsed.persist()
-            try:
-                rows = (
-                    deduped.groupBy(F.spark_partition_id().alias("partition_id"))
-                    .agg(
-                        F.count("*").alias("rows_applied"),
-                        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("rows_deleted"),
-                        F.max("lsn").alias("watermark_lsn"),
-                        F.collect_set("_bucket").alias("buckets"),
-                    )
-                    .collect()
-                )
-                affected = {b for m in rows for b in m.buckets}
-                max_lsn = max((m.watermark_lsn for m in rows), default=None)
-                mark("dedup+metrics")
-                result = self.table.merge(
-                    spark, batch_id, deduped,
-                    affected_hint=affected, max_lsn_hint=max_lsn or 0,
-                    enforce_watermark=enforce_watermark, bucket_n=n_buckets,
-                )
-                mark("merge")
-            finally:
-                deduped.unpersist()
-            metrics = [
-                {"partition_id": m.partition_id, "rows_applied": m.rows_applied,
-                 "rows_deleted": m.rows_deleted, "watermark_lsn": m.watermark_lsn}
-                for m in rows
-            ]
+        # Write-first: decode → collapse → bucketed delta write runs as ONE
+        # action (no persist, no second pass); per-bucket lineage comes back
+        # from the merge's footer scan of the written delta files.
+        result = self.table.merge(
+            spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
+            bucket_n=n_buckets,
+        )
+        mark("merge")
+        metrics = [
+            {"partition_id": m["bucket"], "rows_applied": m["rows"],
+             "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
+            for m in result.get("bucket_metrics", [])
+        ]
 
         if not result.get("skipped"):
             self._write_control(batch_id, metrics, wall_ms=int((time.monotonic() - t0) * 1000))

@@ -24,7 +24,7 @@ filter and LWW ordering remain correct on its filtered slice.
 
 create_table payload (a DDL-op event whose `table_name` is the new table):
     {"action": "create_table", "schema": "conv_id string, turn_idx int, ...",
-     "n_buckets": 16, "merge_mode": "mor", "update_mode": "full"}
+     "n_buckets": 16, "update_mode": "full"}
 (only "schema" is required; storage options default to the router's). The
 event is idempotent under checkpoint replay: an existing table directory
 short-circuits the create, and the per-table DDL stream treats
@@ -70,7 +70,7 @@ class MultiTableIngestJob:
         active: set[str] | None = None,  # allowlist (T2); default: all registered
         table_root: str | None = None,  # where create_table tables materialize;
         # None disables dynamic registration (strict static allowlist)
-        create_defaults: dict | None = None,  # n_buckets/merge_mode/... for creates
+        create_defaults: dict | None = None,  # n_buckets/update_mode for creates
         apply_concurrency: int = 8,  # per-table apply jobs submitted at once
         txn_aligned: bool = False,  # hold router batches to SOURCE-transaction
         # boundaries (streaming/txn.py): txn ids are global across tables
@@ -122,9 +122,6 @@ class MultiTableIngestJob:
                 schema,
                 n_buckets=spec.get(
                     "n_buckets", self.create_defaults.get("n_buckets", 16)
-                ),
-                merge_mode=spec.get(
-                    "merge_mode", self.create_defaults.get("merge_mode", "mor")
                 ),
                 update_mode=spec.get(
                     "update_mode", self.create_defaults.get("update_mode", "full")

@@ -85,8 +85,7 @@ def main() -> None:
         whole table, pending deltas included."""
         path = os.path.join(root, name)
         LakehouseTable(path).create(
-            TRANSCRIPT_SCHEMA, n_buckets=args.from_buckets, merge_mode="mor",
-            compact_every=10**9,
+            TRANSCRIPT_SCHEMA, n_buckets=args.from_buckets, compact_every=10**9,
         )
         job = IngestJob(path, os.path.join(root, f"ctl-{name}"))
         tbl = LakehouseTable(path)

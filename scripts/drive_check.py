@@ -23,7 +23,7 @@ for mode, partial in (("full", False), ("partial", True)):
                     hot_key=True, partial_updates=partial)
     feed = os.path.join(root, f"feed-{mode}"); generate_feed(feed, spec)
     tp, ctl, ckpt = (os.path.join(root, f"{n}-{mode}") for n in ("tbl", "ctl", "ckpt"))
-    job = IngestJob(tp, ctl, salt=None if partial else 8)
+    job = IngestJob(tp, ctl)
     job.table.create(TRANSCRIPT_SCHEMA, n_buckets=16, update_mode=mode if partial else "full")
 
     # crash after 2 batches

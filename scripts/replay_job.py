@@ -25,16 +25,10 @@ def main() -> None:
     ap.add_argument("--events", type=int, required=True)
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument("--n-buckets", type=int, default=128)
-    ap.add_argument("--salt", type=int, default=0, help="0 = single-window "
-        "LWW (Spark 4's WindowGroupLimit pre-reduces rank-1 map-side, so the "
-        "hot key ships <=1 row per map partition and the salt phase's extra "
-        "shuffle only costs — measured ~15%% slower with salt=8); set >1 to "
-        "exercise the salted two-phase path")
     ap.add_argument("--max-files-per-trigger", type=int, default=256,
         help="replay/backfill default drains the feed in one AvailableNow "
         "batch (throughput mode, matches bench.py); lower it to exercise "
         "many-micro-batch streaming behavior")
-    ap.add_argument("--decoder", default="pandas", choices=["pandas", "sql"])
     ap.add_argument("--update-mode", default="full", choices=["full", "partial"])
     ap.add_argument("--mode", default="stream", choices=["stream", "batch"])
     ap.add_argument("--wap", action="store_true", help="ingest through the "
@@ -95,10 +89,9 @@ def main() -> None:
         job = WapIngestJob(
             tbl, os.path.join(root, "control"),
             audit=combine_audits(audit_changes_clean("text", "POISON")),
-            salt=args.salt, decoder=args.decoder,
         )
     else:
-        job = IngestJob(tbl, os.path.join(root, "control"), salt=args.salt, decoder=args.decoder)
+        job = IngestJob(tbl, os.path.join(root, "control"))
 
     if args.warmup:
         # one-time costs (whole-stage codegen compile, Python worker spawn,
@@ -110,7 +103,7 @@ def main() -> None:
         generate_feed(wfeed, FeedSpec(n_events=50_000, n_convs=500, seed=7, chunk_size=25_000))
         wtbl = os.path.join(root, "wtable")
         LakehouseTable(wtbl).create(TRANSCRIPT_SCHEMA, n_buckets=args.n_buckets)
-        wjob = IngestJob(wtbl, os.path.join(root, "wctl"), salt=args.salt, decoder=args.decoder)
+        wjob = IngestJob(wtbl, os.path.join(root, "wctl"))
         wjob.run_to_completion(spark, wfeed, os.path.join(root, "wckpt"), max_files_per_trigger=1)
 
     def steal_ticks() -> int:
@@ -146,7 +139,6 @@ def main() -> None:
         "steal_sec": round((steal_ticks() - s0) / 100.0, 1),
         "final_rows": final_rows,
         "mode": args.mode,
-        "decoder": args.decoder,
         "update_mode": args.update_mode,
         "wap": bool(args.wap),
     }))

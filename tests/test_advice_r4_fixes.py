@@ -13,7 +13,10 @@
 3. MEDIUM — net_changes: a COW merge whose changeset deletes every live
    row in its affected buckets writes ZERO new files; _touched_key_df must
    detect the COW by snapshot metadata (stats.affected_buckets) and fall
-   back to the full diff instead of treating the window as a no-op.
+   back to the full diff instead of treating the window as a no-op. Merges
+   now write deltas only, where an all-delete batch writes tombstone
+   deltas that the point path must find; the COW case stays covered on a
+   hand-edited legacy table.
 4. LOW — inspect('files') declares key_min/key_max StringType but numeric
    cluster keys record int bounds → createDataFrame TypeError.
 5. LOW — DDL dropping cluster_by[0] promotes cluster_by[1]; files recorded
@@ -124,10 +127,7 @@ def test_float_double_never_prune(spark, tmp_path):
 
 # ---------------------------------------------------------------- finding 3
 def test_net_changes_cow_all_delete_emits_d_rows(spark, tmp_path):
-    t, job = _mk(
-        spark, tmp_path, "t3",
-        n_buckets=2, merge_mode="cow", compact_every=10**9,
-    )
+    t, job = _mk(spark, tmp_path, "t3", n_buckets=2, compact_every=10**9)
     ins = pd.DataFrame([
         {"lsn": i + 1, "op": "I", "ts": None,
          "conv_id": f"c{i % 3}", "turn_idx": i // 3,
@@ -147,13 +147,30 @@ def test_net_changes_cow_all_delete_emits_d_rows(spark, tmp_path):
     sid_b = t.current_snapshot()["snapshot_id"]
     assert t.read(spark).count() == 0
 
-    # the all-delete COW merge wrote no files — metadata must still flag it
-    assert t._touched_key_df(spark, sid_a, sid_b) is None
+    # the all-delete merge wrote only tombstone deltas — the point path
+    # must find exactly their keys
+    keys = t._touched_key_df(spark, sid_a, sid_b).toPandas()
+    inserted = sorted(zip(ins["conv_id"], ins["turn_idx"]))
+    assert sorted(zip(keys["conv_id"], keys["turn_idx"])) == inserted
     got = t.net_changes(spark, sid_a, sid_b).toPandas()
     assert len(got) == 6
     assert set(got["_change_op"]) == {"D"}
+    assert sorted(zip(got["conv_id"], got["turn_idx"])) == inserted
+
+
+def test_net_changes_legacy_cow_all_delete_falls_back(spark, legacy_cow):
+    """A table an older version wrote in copy-on-write mode: its all-delete
+    COW merge wrote no files, so only the snapshot metadata flags it and
+    net_changes must take the full diff."""
+    rows = [(f"c{i % 3}", i // 3, "user", f"t{i}", None, None) for i in range(6)]
+    t = legacy_cow("t3", loads=[rows, []])
+    sid_a, sid_b = (s["snapshot_id"] for s in t.history()[1:])
+    assert t.read(spark).count() == 0
+    assert t._touched_key_df(spark, sid_a, sid_b) is None
+    got = t.net_changes(spark, sid_a, sid_b).toPandas()
+    assert set(got["_change_op"]) == {"D"}
     assert sorted(zip(got["conv_id"], got["turn_idx"])) == sorted(
-        zip(ins["conv_id"], ins["turn_idx"])
+        (r[0], r[1]) for r in rows
     )
 
 

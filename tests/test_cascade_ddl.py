@@ -2,8 +2,9 @@
 downstream DDL from the upstream schema (rename-aware via `former_names`,
 widen-lattice-checked, drops replicated) so an edge restart after upstream
 DDL is one call — and downstream data written under the OLD names survives
-(field-id remapping, not drop+add). Plus: COW upstreams are refused loudly
-(no delta layer → the changelog stream would be silently empty).
+(field-id remapping, not drop+add). Plus: a COW upstream (a table an older
+version wrote in copy-on-write mode) is refused loudly (no delta layer →
+the changelog stream would be silently empty).
 """
 
 from __future__ import annotations
@@ -18,13 +19,11 @@ from data_pipeline_spark.streaming.cascade import CascadeJob
 from data_pipeline_spark.streaming.ingest import IngestJob
 
 
-def _mk_upstream(spark, tmp_path, name, seed, **create_kw):
+def _mk_upstream(spark, tmp_path, name, seed):
     feed = str(tmp_path / f"feed-{name}")
     generate_feed(feed, FeedSpec(n_events=4_000, n_convs=100, seed=seed, chunk_size=2_000))
     path = str(tmp_path / name)
-    LakehouseTable(path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9, **create_kw
-    )
+    LakehouseTable(path).create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
     IngestJob(path, str(tmp_path / f"ctl-{name}")).run_to_completion(
         spark, feed, str(tmp_path / f"cp-{name}"), max_files_per_trigger=2
     )
@@ -49,8 +48,8 @@ def _state(spark, path):
     )
 
 
-def test_cow_upstream_refused(spark, tmp_path):
-    a = _mk_upstream(spark, tmp_path, "cow", seed=7, merge_mode="cow")
+def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
+    a = legacy_cow("cow").path
     b = str(tmp_path / "b-cow")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     with pytest.raises(ValueError, match="copy-on-write"):

@@ -100,16 +100,15 @@ def test_cherry_pick_guards(spark, tmp_path):
         tbl.cherry_pick(merge_id)
 
 
-def test_cherry_pick_cow_refused(spark, tmp_path):
-    path = str(tmp_path / "t")
-    tbl = LakehouseTable(path)
-    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="cow")
-    job = IngestJob(path, str(tmp_path / "ctl"))
-    _apply(spark, job, _feed(1_000, 95), 0)
-    mid = tbl.current_snapshot()["snapshot_id"]
-    _apply(spark, job, _feed(500, 96, base=10_000), 1)
-    with pytest.raises(ValueError):
-        tbl.cherry_pick(mid)
+def test_cherry_pick_cow_refused(legacy_cow):
+    """A COW merge (older versions' copy-on-write tables) rewrote whole
+    buckets as base files — nothing to re-layer."""
+    tbl = legacy_cow("t", loads=[[("c0", 0, "user", "a", None, None)],
+                                 [("c0", 0, "user", "b", None, None)]])
+    first = tbl.history()[1]
+    assert first["kind"] == "merge"
+    with pytest.raises(ValueError, match="MOR delta commits only"):
+        tbl.cherry_pick(first["snapshot_id"])
 
 
 def test_time_based_expiry_keeps_recent_window(spark, tmp_path):

@@ -8,6 +8,7 @@ the equality oracle is the full batch re-assembly."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from data_pipeline_spark.operators.corpus import assemble_conversations
 from data_pipeline_spark.plans.table_format import LakehouseTable
@@ -124,3 +125,12 @@ def test_view_options_match_batch_operators(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(_view_frame(spark, view), want)
     assert want["n_turns"].max() <= 2
+
+
+def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
+    """A COW upstream (written by an older version) has no delta files, so
+    its changelog stream would be silently empty."""
+    up = legacy_cow("up").path
+    vj = CorpusViewJob(up, str(tmp_path / "view"), str(tmp_path / "ctl-view"))
+    with pytest.raises(ValueError, match="copy-on-write"):
+        vj.start(spark, str(tmp_path / "cp-view"))

@@ -20,6 +20,7 @@ from data_pipeline_spark.sources.debezium import (
 from data_pipeline_spark.sources.feed import (
     FeedSpec,
     generate_feed,
+    generate_feed_pandas,
     read_feed_batch,
 )
 from data_pipeline_spark.streaming.ingest import IngestJob
@@ -194,6 +195,71 @@ def test_malformed_records_skip_and_continue(spark):
     mdf = spark.createDataFrame([(v,) for v in [m_good] + m_junk], "value string")
     mout = maxwell_to_envelope(mdf).collect()
     assert len(mout) == 1 and mout[0].op == "I" and mout[0].lsn == (1 << 32) + 10
+
+
+def test_mysql_binlog_rotation_keeps_post_rotation_events(spark, tmp_path):
+    """MySQL's binlog position restarts at every file rotation
+    (mysql-bin.000001 → mysql-bin.000002), so the lsn must compose the file
+    number with the position: ordered by position alone, every
+    post-rotation event sits at or below the watermark and is dropped."""
+    from data_pipeline_spark.oracle import reduce_feed
+    from data_pipeline_spark.sources.debezium import (
+        debezium_to_envelope,
+        encode_debezium_pandas,
+    )
+
+    feed = generate_feed_pandas(FeedSpec(n_events=2_000, n_convs=60, seed=17))
+    values = encode_debezium_pandas(feed, connector="mysql")["value"]
+    cut = len(feed) // 2
+    rotated = int(feed["lsn"].iloc[cut])
+    for part, (name, first) in enumerate((("mysql-bin.000001", 0), ("mysql-bin.000002", rotated))):
+        rows = slice(0, cut) if part == 0 else slice(cut, None)
+        coords = (
+            f'"file":"{name}","pos":' + (feed["lsn"].iloc[rows] - first + 4).astype(str)
+        )
+        values.iloc[rows] = [
+            v.replace(f'"lsn":{lsn}}}', c + "}", 1)
+            for v, lsn, c in zip(values.iloc[rows], feed["lsn"].iloc[rows], coords)
+        ]
+    assert not values.str.contains('"lsn"').any()
+
+    path = str(tmp_path / "t")
+    LakehouseTable(path).create(TRANSCRIPT_SCHEMA, n_buckets=4)
+    job = IngestJob(path, str(tmp_path / "ctl"), ddl_fast_scan=False)
+    for batch_id, rows in enumerate((slice(0, cut), slice(cut, None))):
+        raw = spark.createDataFrame(values.iloc[rows].to_frame(), "value string")
+        job.apply_batch(spark, batch_id, debezium_to_envelope(raw))
+
+    got = (LakehouseTable(path).read(spark).toPandas()
+           .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    want = reduce_feed(feed)
+    assert got["conv_id"].tolist() == want["conv_id"].tolist()
+    assert got["turn_idx"].tolist() == [int(t) for t in want["turn_idx"]]
+    assert got["text"].tolist() == want["text"].tolist()
+
+
+def test_txn_id_shapes_map_to_ordered_longs(spark):
+    """Transaction ids arrive as strings; each shape with an order maps to
+    a long that keeps it (TxnAligner's max(txn_id) is the newest), any
+    other shape stays null."""
+    from data_pipeline_spark.sources.debezium import debezium_to_envelope
+
+    def rec(lsn, txn):
+        return ('{"after":{"conv_id":"c","turn_idx":%d},"op":"c",'
+                '"source":{"ts_ms":1,"lsn":%d%s}%s}' % (lsn, lsn, *txn))
+
+    cases = [
+        (("", ',"transaction":{"id":"42"}'), 42),
+        (("", ',"transaction":{"id":"571:53195829"}'), 571),  # postgres
+        (("", ',"transaction":{"id":"mysql-bin.000003:1234"}'), (3 << 32) | 1234),
+        (("", ',"transaction":{"id":"3E11FA47-71CA-11E1-9E33-C80AA9429562:23"}'), None),
+        ((',"txId":571', ""), 571),  # postgres source block, no txn block
+    ]
+    df = spark.createDataFrame(
+        [(rec(i + 1, txn),) for i, (txn, _) in enumerate(cases)], "value string"
+    )
+    got = {r.lsn: r.txn_id for r in debezium_to_envelope(df, with_txns=True).collect()}
+    assert [got[i + 1] for i in range(len(cases))] == [want for _, want in cases]
 
 
 # --------------------------------------------------------------- CDC-out

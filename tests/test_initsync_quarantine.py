@@ -34,7 +34,7 @@ def test_initsync_overwrite_and_verify(spark, tmp_path):
     assert not bad["ok"] and bad["missing_in_target"] == 1 and bad["extra_in_target"] == 1
 
 
-@pytest.mark.parametrize("decoder", ["pandas", "sql"])
+@pytest.mark.parametrize("decoder", ["pandas"])
 def test_quarantine_bad_payloads(spark, tmp_path, decoder):
     spec = FeedSpec(n_events=2_000, n_convs=50, seed=42)
     feed = generate_feed_pandas(spec)
@@ -44,8 +44,7 @@ def test_quarantine_bad_payloads(spark, tmp_path, decoder):
     tbl_path = str(tmp_path / f"t-{decoder}")
     LakehouseTable(tbl_path).create(TRANSCRIPT_SCHEMA, n_buckets=8)
     job = IngestJob(
-        tbl_path, str(tmp_path / f"ctl-{decoder}"),
-        decoder=decoder, on_error="quarantine",
+        tbl_path, str(tmp_path / f"ctl-{decoder}"), on_error="quarantine",
         quarantine_path=str(tmp_path / f"q-{decoder}"),
     )
     job.apply_batch(spark, 0, spark.createDataFrame(feed, schema=CHANGE_EVENT_SCHEMA))
@@ -65,17 +64,16 @@ def test_quarantine_bad_payloads(spark, tmp_path, decoder):
     assert actual["text"].tolist() == expected["text"].tolist()
 
 
-@pytest.mark.parametrize("decoder", ["pandas", "sql"])
+@pytest.mark.parametrize("decoder", ["pandas"])
 def test_abort_mode_fails_batch(spark, tmp_path, decoder):
-    """Strictness parity (r3): BOTH decoders must fail the batch on a
-    malformed payload in abort mode — the SQL decoder's PERMISSIVE
-    from_json previously nulled the row out silently."""
+    """Abort mode fails the batch on a malformed payload instead of
+    nulling the row out."""
     spec = FeedSpec(n_events=500, n_convs=20, seed=42)
     feed = generate_feed_pandas(spec)
     feed.loc[feed.index[feed["op"] == "I"][:1], "payload"] = "not json at all"
     tbl_path = str(tmp_path / "t")
     LakehouseTable(tbl_path).create(TRANSCRIPT_SCHEMA, n_buckets=8)
-    job = IngestJob(tbl_path, str(tmp_path / "ctl"), decoder=decoder)  # default abort
+    job = IngestJob(tbl_path, str(tmp_path / "ctl"))  # default abort
     with pytest.raises(Exception):
         job.apply_batch(spark, 0, spark.createDataFrame(feed, schema=CHANGE_EVENT_SCHEMA))
     # nothing was committed — the table is still at the create snapshot

@@ -73,7 +73,7 @@ def _changeset(spark, n=100):
 
 def test_merge_commit_metadata_is_o_batch_not_o_table(spark, tmp_path):
     tbl = LakehouseTable(str(tmp_path / "t"))
-    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode="mor", compact_every=10**9)
+    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=16, compact_every=10**9)
     _install_big_inventory(tbl)  # 10,000 entries across 100 manifests
 
     inventory = tbl.files()
@@ -102,7 +102,7 @@ def test_second_merge_metadata_does_not_grow_with_inventory(spark, tmp_path):
     (bounded by compaction), not the number of FILES: a second identical
     merge against a 10k-file table writes ~the same bytes as the first."""
     tbl = LakehouseTable(str(tmp_path / "t"))
-    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode="mor", compact_every=10**9)
+    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=16, compact_every=10**9)
     _install_big_inventory(tbl)
 
     before = _meta_bytes(tbl)
@@ -121,7 +121,7 @@ def test_compact_carries_untouched_manifests_by_name(spark, tmp_path):
     intersects the compacted buckets; every other manifest ref carries
     verbatim (same name — zero I/O for it)."""
     tbl = LakehouseTable(str(tmp_path / "t"))
-    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=8, merge_mode="mor", compact_every=10**9)
+    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=8, compact_every=10**9)
     for b in range(4):
         tbl.merge(spark, batch_id=b, changes=_changeset(spark, n=50))
     snap = tbl.current_snapshot()
@@ -144,7 +144,7 @@ def test_compact_carries_untouched_manifests_by_name(spark, tmp_path):
 
 def test_expire_snapshots_gcs_unreferenced_manifests(spark, tmp_path):
     tbl = LakehouseTable(str(tmp_path / "t"))
-    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=8, merge_mode="mor", compact_every=10**9)
+    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=8, compact_every=10**9)
     for b in range(5):
         tbl.merge(spark, batch_id=b, changes=_changeset(spark, n=30))
     tbl.compact(spark)  # folds deltas → old delta manifests become garbage

@@ -58,10 +58,10 @@ def _assert_matches_sequential_oracle(spark, table: LakehouseTable, spec: FeedSp
         assert got_tok == exp_tok
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_partial_replay_matches_sequential_oracle(spark, feed_dir, tmp_path, mode):
     job = IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"))
-    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=8, merge_mode=mode, update_mode="partial")
+    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=8, update_mode="partial")
     job.run_to_completion(spark, feed_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     _assert_matches_sequential_oracle(spark, job.table, SPEC)
 

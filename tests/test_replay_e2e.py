@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
 import pytest
 
@@ -9,7 +12,7 @@ from data_pipeline_spark.functions.decode import decode_events, decode_events_sq
 from data_pipeline_spark.operators.lww import lww_dedup
 from data_pipeline_spark.oracle import reduce_feed
 from data_pipeline_spark.plans.table_format import LakehouseTable
-from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
+from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_feed_pandas, read_feed_batch
 from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -122,22 +125,32 @@ def test_incremental_batches_match_oracle(spark, feed_dir, tmp_path):
     assert_matches_oracle(spark, table, SPEC)
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_batch_replay_both_merge_modes(spark, feed_dir, tmp_path, mode):
-    table = LakehouseTable(str(tmp_path / f"t-{mode}"))
-    table.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode=mode)
-    job = IngestJob(str(tmp_path / f"t-{mode}"), str(tmp_path / f"ctl-{mode}"))
-    import glob
+def test_merge_refuses_legacy_cow_table(spark, tmp_path, legacy_cow):
+    """A table an older version wrote in copy-on-write mode — merge_mode
+    "cow", or no merge_mode field at all — takes no delta commit: deltas
+    stacked on COW history would leave a changelog no reader can trust."""
+    t = legacy_cow("t")
+    head = t.current_snapshot()
+    events = spark.createDataFrame(
+        generate_feed_pandas(FeedSpec(n_events=200, n_convs=10, seed=3)),
+        schema=CHANGE_EVENT_SCHEMA,
+    )
+    job = IngestJob(t.path, str(tmp_path / "ctl"))
+    with pytest.raises(ValueError, match="copy-on-write"):
+        job.apply_batch(spark, 5, events)
 
-    for i, c in enumerate(sorted(glob.glob(feed_dir + "/chunk-*.parquet"))):
-        job.apply_batch(spark, i, spark.read.parquet(c))
-    assert_matches_oracle(spark, table, SPEC)
+    del head["merge_mode"]
+    with open(os.path.join(t.meta_dir, f"snapshot-{head['snapshot_id']:08d}.json"), "w") as f:
+        json.dump(head, f)
+    with pytest.raises(ValueError, match="copy-on-write"):
+        t.merge(spark, 6, events)
+    assert t.current_snapshot() == head
 
 
 def test_mor_compaction_preserves_state(spark, feed_dir, tmp_path):
     table = LakehouseTable(str(tmp_path / "tc"))
     # compact_every high so compaction only happens when we call it
-    table.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode="mor", compact_every=99)
+    table.create(TRANSCRIPT_SCHEMA, n_buckets=16, compact_every=99)
     job = IngestJob(str(tmp_path / "tc"), str(tmp_path / "ctl-c"))
     import glob
 
@@ -163,7 +176,7 @@ def test_bucket_targeted_compaction(spark, feed_dir, tmp_path):
     not O(table)) and preserves table state; auto-compaction targets buckets
     whose delta depth reached compact_every."""
     table = LakehouseTable(str(tmp_path / "t"))
-    table.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode="mor", compact_every=99)
+    table.create(TRANSCRIPT_SCHEMA, n_buckets=16, compact_every=99)
     job = IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"))
     job.run_to_completion(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1)
 
@@ -236,7 +249,7 @@ def test_rebucket_partition_evolution(spark, feed_dir, tmp_path):
     """Growing n_buckets mid-life: state preserved, deltas folded, later
     merges route by the new bucketing."""
     job = IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"))
-    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=99)
+    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=99)
     # first half of the feed
     raw = read_feed_batch(spark, feed_dir).where("lsn <= 10000")
     job.apply_batch(spark, 0, raw)
@@ -259,7 +272,7 @@ def test_point_read_bucket_pruning(spark, feed_dir, tmp_path):
     """conv_ids point reads prune to the hashed buckets and equal the
     full-read filter."""
     job = IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"))
-    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=16, merge_mode="mor")
+    job.table.create(TRANSCRIPT_SCHEMA, n_buckets=16)
     job.replay_batch(spark, feed_dir)
     full = table_as_pandas(spark, job.table)
     targets = full["conv_id"].drop_duplicates().head(3).tolist()
@@ -283,7 +296,7 @@ def test_tombstone_only_batch_metrics(spark, tmp_path):
     import json as _json
 
     table = LakehouseTable(str(tmp_path / "t"))
-    table.create(TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor")
+    table.create(TRANSCRIPT_SCHEMA, n_buckets=4)
     job = IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"))
 
     def feed_chunk(rows, name):

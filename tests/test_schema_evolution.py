@@ -179,7 +179,7 @@ def test_decimal_columns_and_widen(spark, tmp_path):
         T.StructField("amount", T.DecimalType(10, 2), True),
     ])
     tbl = LakehouseTable(str(tmp_path / "t"))
-    tbl.create(schema, n_buckets=4, merge_mode="mor")
+    tbl.create(schema, n_buckets=4)
     rows = spark.createDataFrame(
         [("a", 0, Decimal("12345678.99")), ("b", 0, Decimal("0.01"))], schema=schema
     )

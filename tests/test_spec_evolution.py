@@ -40,8 +40,7 @@ def feed_pdf():
 def _mk(tmp_path, name, n_buckets=4, **kw):
     path = str(tmp_path / name)
     LakehouseTable(path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=n_buckets, merge_mode="mor",
-        compact_every=10**9, **kw,
+        TRANSCRIPT_SCHEMA, n_buckets=n_buckets, compact_every=10**9, **kw,
     )
     return LakehouseTable(path), IngestJob(path, str(tmp_path / f"ctl-{name}"))
 
@@ -279,13 +278,11 @@ def test_merge_reroutes_stale_bucket_n(spark, tmp_path, feed_pdf):
     assert got["text"].tolist() == ["sa", "sb"]
 
 
-def test_evolve_guards(spark, tmp_path, feed_pdf):
-    """COW tables, double evolution, and cross-spec cherry-pick all fail
-    fast; same-size evolve is a no-op."""
-    cow_path = str(tmp_path / "cow")
-    LakehouseTable(cow_path).create(TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="cow")
-    with pytest.raises(ValueError, match="mor"):
-        LakehouseTable(cow_path).evolve_bucket_spec(spark, 8)
+def test_evolve_guards(spark, tmp_path, feed_pdf, legacy_cow):
+    """COW tables (written by older versions), double evolution, and
+    cross-spec cherry-pick all fail fast; same-size evolve is a no-op."""
+    with pytest.raises(ValueError, match="copy-on-write"):
+        legacy_cow("cow").evolve_bucket_spec(spark, 8)
 
     tbl, job = _mk(tmp_path, "t")
     parts = _slices(feed_pdf, 2)
@@ -302,7 +299,7 @@ def test_evolve_guards(spark, tmp_path, feed_pdf):
     # cherry-pick guard: a merge picked across a spec change routes wrong
     src_path = str(tmp_path / "pick")
     src = LakehouseTable(src_path)
-    src.create(TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=10**9)
+    src.create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
     pick_job = IngestJob(src_path, str(tmp_path / "ctl-pick"))
     _apply(spark, pick_job, parts[0], 0)
     merge_id = src.current_snapshot()["snapshot_id"]
@@ -326,7 +323,7 @@ def test_partial_mode_evolve_migrate_matches_sequential_oracle(spark, tmp_path):
     pdf = generate_feed_pandas(pspec)
     path = str(tmp_path / "t")
     LakehouseTable(path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor",
+        TRANSCRIPT_SCHEMA, n_buckets=4,
         update_mode="partial", compact_every=10**9,
     )
     job = IngestJob(path, str(tmp_path / "ctl"))

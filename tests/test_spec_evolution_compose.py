@@ -37,7 +37,7 @@ def _frame(df) -> pd.DataFrame:
 def test_gc_races_migration_and_ingest(spark, tmp_path):
     path = str(tmp_path / "t")
     LakehouseTable(path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=10**9
+        TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9
     )
     job = IngestJob(path, str(tmp_path / "ctl"))
     tbl = LakehouseTable(path)
@@ -99,7 +99,7 @@ def test_corpus_view_refresh_across_evolve(spark, tmp_path):
 
     up, view = str(tmp_path / "up"), str(tmp_path / "view")
     LakehouseTable(up).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=10**9
+        TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9
     )
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
@@ -157,7 +157,7 @@ def test_ddl_during_mixed_spec_window(spark, tmp_path):
 
     tbl_path = str(tmp_path / "t")
     LakehouseTable(tbl_path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=10**9
+        TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9
     )
     job = IngestJob(tbl_path, str(tmp_path / "ctl"))
     tbl = LakehouseTable(tbl_path)
@@ -224,7 +224,7 @@ def test_ddl_during_mixed_spec_window(spark, tmp_path):
 def test_evolve_on_wap_branch_publishes_mixed_spec(spark, tmp_path):
     path = str(tmp_path / "t")
     LakehouseTable(path).create(
-        TRANSCRIPT_SCHEMA, n_buckets=4, merge_mode="mor", compact_every=10**9
+        TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9
     )
     feed = generate_feed_pandas(FeedSpec(n_events=8_000, n_convs=120, seed=31))
     half = len(feed) // 2

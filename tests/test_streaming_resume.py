@@ -32,7 +32,7 @@ def _assert_final_state(spark, table_path):
 def test_stream_drains_and_matches_oracle(spark, feed_dir, tmp_path):
     tbl = str(tmp_path / "t")
     LakehouseTable(tbl).create(TRANSCRIPT_SCHEMA, n_buckets=16)
-    job = IngestJob(tbl, str(tmp_path / "ctl"), salt=4)
+    job = IngestJob(tbl, str(tmp_path / "ctl"))
     job.run_to_completion(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=2)
     _assert_final_state(spark, tbl)
     ctl = job.read_control(spark).toPandas()
