@@ -281,19 +281,33 @@ def with_commit_retry(fn, max_retries: int = 5, base_backoff: float = 0.05):
 
 
 class CursorExpiredError(RuntimeError):
-    """A changelog consumer's cursor points below the oldest retained
-    snapshot: `expire_snapshots` GC'd the delta commits in between, so the
-    missing changes are only recoverable by re-reading the full table.
-    Re-bootstrap (full read), then resume tailing from `oldest_retained`."""
+    """A changelog consumer's cursor can't be resumed incrementally: it
+    points below the oldest retained snapshot (`expire_snapshots` GC'd the
+    delta commits in between), or its window holds a `rollback_to`, which
+    writes no change rows for the rows it removes. The missing changes are
+    only recoverable by re-reading the full table. Re-bootstrap (full
+    read), then resume tailing from `oldest_retained` (the oldest retained
+    snapshot, or the rollback)."""
 
     def __init__(self, cursor_snapshot_id: int, oldest_retained: int):
         super().__init__(
             f"changelog cursor at snapshot {cursor_snapshot_id} expired — "
-            f"oldest retained snapshot is {oldest_retained}; re-bootstrap "
+            f"resume point is snapshot {oldest_retained}; re-bootstrap "
             "with a full table read before resuming incremental tailing"
         )
         self.cursor_snapshot_id = cursor_snapshot_id
         self.oldest_retained = oldest_retained
+
+
+def _last_rollback(chain: list[dict], from_id: int, to_id: int) -> int | None:
+    """Id of the newest `rollback` snapshot in the changelog window
+    (from_id, to_id] of a parent chain, or None."""
+    ids = [
+        s["snapshot_id"]
+        for s in chain
+        if s["kind"] == "rollback" and from_id < s["snapshot_id"] <= to_id
+    ]
+    return max(ids, default=None)
 
 
 def _spark_type(name: str) -> T.DataType:
@@ -453,7 +467,7 @@ class LakehouseTable:
     #
     # Readers and changelog tailers of the main table never observe
     # unpublished snapshots; a discarded batch never enters the published
-    # parent chain, so `read_changes`/`stream_changes` consumers never see
+    # parent chain, so `read_changes`/`tail_changes` consumers never see
     # its deltas (rollback_to on main can't give that: it appends a
     # correction, the bad deltas stay in the chain). Concurrent writers on
     # different refs are serialized by the snapshot-file link CAS exactly
@@ -2200,9 +2214,9 @@ class LakehouseTable:
         read-time-LWW-equivalent to the stack); partial-image tables fold
         per COLUMN at read, so their squash is pure concatenation — file
         count drops, rows are preserved verbatim. Output files are delta
-        layer in the manifest but written WITHOUT the _del= dir split:
-        stream_changes tails the _del= glob, and a squash (like any
-        compaction) must be invisible to changelog consumers."""
+        layer in the manifest, written without the _del= dir split (only a
+        merge's footer-derived delete counts need it); a squash commits as
+        `compact`, which changelog reads skip like any compaction."""
         cur_spec = self.spec_id(snap)
         delta_e = [
             e
@@ -2559,8 +2573,8 @@ class LakehouseTable:
         # layer, so read-time LWW resolves versions exactly as before and a
         # tombstone keeps shadowing whatever it shadowed. Two data dirs
         # (layers carry different columns), one atomic commit. The
-        # re-bucketed delta files are written without the _del= split —
-        # like a squash, a migration must be invisible to stream_changes.
+        # re-bucketed delta files are written without the _del= split, like
+        # a squash's; changelog reads skip `migrate_spec` commits.
         base_id = self._next_id(snap)
         new_id = base_id + 1 if chosen_delta else base_id
         entries: list[dict] = []
@@ -2957,7 +2971,10 @@ class LakehouseTable:
         - merge (COW, written by an older version): not reconstructable
           from files alone → raises (same trade as Iceberg COW);
         - overwrite: every written row, as inserts;
-        - create/ddl/compact/rollback/rebucket: no logical row changes.
+        - create/ddl/compact/rebucket: no logical row changes;
+        - rollback: restores old files and writes no change rows for what
+          it removes → raises CursorExpiredError carrying the rollback id
+          (re-bootstrap the consumer, then resume from there).
 
         Scale note: the path-based diff builds `prev_files` (every file path
         at/below `from_snapshot_id`) on the driver — O(retained files) set
@@ -2972,6 +2989,9 @@ class LakehouseTable:
         if from_snapshot_id not in ids:
             raise ValueError(f"snapshot {from_snapshot_id} not in retained history {ids}")
         to_id = to_snapshot_id if to_snapshot_id is not None else ids[-1]
+        rollback = _last_rollback(chain, from_snapshot_id, to_id)
+        if rollback is not None:
+            raise CursorExpiredError(from_snapshot_id, rollback)
         cur = self.current_snapshot()
         partial = self.update_mode(cur) == "partial"
         out_parts: list[DataFrame] = []
@@ -2994,7 +3014,7 @@ class LakehouseTable:
             new_entries = [e for e in s_files if e["path"] not in prev_files]
             prev_files.update(e["path"] for e in s_files)
             if s["kind"] in (
-                "create", "ddl", "compact", "recluster", "rollback", "rebucket",
+                "create", "ddl", "compact", "recluster", "rebucket",
                 "rewrite_manifests", "evolve_spec", "migrate_spec",
             ) or not new_entries:
                 continue
@@ -3213,132 +3233,6 @@ class LakehouseTable:
             *[img[c].alias(c) for c in payload],
         )
 
-    def stream_changes(
-        self, spark: SparkSession, max_files_per_trigger: int | None = None
-    ) -> DataFrame:
-        """Streaming changelog tail (CDC-out as a live Structured Streaming
-        source): a file-stream over the table's DELTA layer. Only MOR delta
-        writes partition by ``_del``, so the glob
-        ``data/*/_bucket=*/_del=*`` selects exactly the per-commit collapsed
-        changesets (compaction and overwrite write plain ``_bucket=`` base
-        dirs and are correctly invisible — no re-emission when deltas fold;
-        folded delta FILES remain on disk for time travel until
-        ``expire_snapshots``, so a brand-new checkpoint bootstraps from
-        whatever history is still retained). Downstream pipelines chain off
-        the table live: ``tbl.stream_changes(spark).writeStream...``.
-
-        Emitted: (_change_op, lsn, <current-schema columns>[, _set_mask],
-        _bucket). Semantics and caveats, relative to the batch
-        ``read_changes``/``tail_changes`` (which remain the exact path):
-
-        - at-least-once, file-visibility ordering: delta files land BEFORE
-          their snapshot commit swings, so a merge that crashes between
-          write and commit can emit changes that were never committed
-          (they will be re-emitted as part of the replayed batch's new
-          delta too). Consumers needing exactly-once should merge into an
-          idempotent sink keyed by (key, lsn) — the engine's own merge
-          qualifies — or use ``tail_changes``.
-        - no per-snapshot attribution (``_snapshot_id``/``_batch_id``):
-          the stream sees files, not commits.
-        - FIELD-ID-CORRECT ACROSS RENAMES: each delta file lives under its
-          writing snapshot's ``data/s<N>/`` dir, and snapshot N records the
-          schema_id it wrote with — so the stream reads a UNION of every
-          retained schema version's column names and re-projects per file
-          (CASE over the snapshot id parsed from ``_metadata.file_path``)
-          to the current names, matching the batch changelog's field-id
-          projection. Bounds: the name map covers snapshots retained at
-          STREAM CONSTRUCTION (files from already-expired snapshots fall
-          back to current-name reads, bounded by ``expire_snapshots``), and
-          like any Structured Streaming source the output schema is fixed —
-          a rename committed AFTER the stream starts still needs a restart
-          to surface under its new name.
-        - MOR tables only (COW merges produce no delta files), like
-          read_changes.
-        - NOT WAP-SAFE: on a table with staging branches the file tail
-          sees STAGED delta files the moment they land — before any audit
-          passes, and even if the batch is later discarded by
-          ``reset_branch``. Consumers of a write-audit-publish table must
-          use ``tail_changes``/``read_changes`` (cursor over the MAIN
-          parent chain, where unpublished snapshots are unreachable by
-          construction)."""
-        snap = self.current_snapshot()
-        partial = self.update_mode(snap) == "partial"
-        cur_fields = self._load_schema(snap["schema_id"])["fields"]
-
-        # snapshot id -> schema version that wrote its delta files
-        # (merge writes data/s<N> with the schema current at commit N)
-        chain = self.history()
-        sid_schema = {s["snapshot_id"]: s["schema_id"] for s in chain}
-        schemas = {
-            sch_id: self._load_schema(sch_id) for sch_id in set(sid_schema.values())
-        }
-        # union read-schema: every name each CURRENT field carried across
-        # retained versions (newest first so the current name/type wins a
-        # historical name collision, e.g. rename a->b then re-add a)
-        union: dict[str, str] = {f["name"]: f["type"] for f in cur_fields}
-        for sch_id in sorted(schemas, reverse=True):
-            by_id = {f["id"]: f for f in schemas[sch_id]["fields"]}
-            for f in cur_fields:
-                w = by_id.get(f["id"])
-                if w is not None and w["name"] not in union:
-                    union[w["name"]] = f["type"]  # read at the current (widest) type
-
-        struct = T.StructType(
-            [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(OP_COL, T.StringType(), True),
-            ]
-            + ([T.StructField(MASK_COL, T.LongType(), True)] if partial else [])
-            + [T.StructField(n, _spark_type(t), True) for n, t in union.items()]
-        )
-        # recursiveFileLookup turns partition inference OFF (the s<N>
-        # snapshot level under data/ is not key=value and would otherwise
-        # raise CONFLICTING_DIRECTORY_STRUCTURES); the glob still selects
-        # only _del= dirs — i.e. only delta files — and the bucket id comes
-        # back from the file path via the _metadata column.
-        reader = spark.readStream.schema(struct).option("recursiveFileLookup", "true")
-        if max_files_per_trigger is not None:
-            # bound per-micro-batch work during catch-up: a consumer starting
-            # from a fresh checkpoint on a long-retained table would otherwise
-            # get the ENTIRE retained delta history as one batch
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        raw = reader.parquet(os.path.join(self.path, "data", "*", "_bucket=*", "_del=*"))
-        snap_sid = (
-            F.regexp_extract(F.col("_metadata.file_path"), r"/data/s(\d+)/", 1)
-            .cast("long")
-        )
-
-        def field_expr(f: dict) -> F.Column:
-            """Per-file projection: the name this field was WRITTEN under,
-            keyed by the file's snapshot dir; default = current name (covers
-            snapshots committed after stream construction)."""
-            cur_type = _spark_type(f["type"])
-            by_name: dict[str | None, list[int]] = {}
-            for sid, sch_id in sid_schema.items():
-                w = {x["id"]: x for x in schemas[sch_id]["fields"]}.get(f["id"])
-                by_name.setdefault(w["name"] if w else None, []).append(sid)
-            expr = F.col(f["name"]).cast(cur_type)
-            for nm, sids in by_name.items():
-                if nm == f["name"]:
-                    continue  # same as the default branch
-                src = (
-                    F.lit(None).cast(cur_type)  # field didn't exist yet
-                    if nm is None
-                    else F.col(nm).cast(cur_type)
-                )
-                expr = F.when(snap_sid.isin(sids), src).otherwise(expr)
-            return expr.alias(f["name"])
-
-        return raw.select(
-            F.col(OP_COL).alias("_change_op"),
-            F.col(LSN_COL).alias("lsn"),
-            *[field_expr(f) for f in cur_fields],
-            *([F.col(MASK_COL)] if partial else []),
-            F.regexp_extract(F.col("_metadata.file_path"), r"_bucket=(\d+)", 1)
-            .cast("int")
-            .alias("_bucket"),
-        )
-
     def tail_changes(
         self, spark: SparkSession, cursor_path: str, on_expired: str = "raise"
     ) -> tuple[DataFrame | None, dict]:
@@ -3353,31 +3247,32 @@ class LakehouseTable:
         A cursor that points BELOW the oldest retained snapshot has expired:
         `expire_snapshots` GC'd the deltas between it and the retained chain,
         so the changes folded into the oldest snapshot's base files can NEVER
-        be emitted incrementally — silently resuming would lose them. By
-        default this raises CursorExpiredError (carrying the oldest retained
-        id); the consumer must re-bootstrap with a full table read
-        (``read(spark)``), then resume tailing from the cursor the error
-        carries. ``on_expired="reset"`` opts into that skip explicitly and
-        marks the returned cursor with ``expired_reset``."""
+        be emitted incrementally — silently resuming would lose them; a
+        `rollback_to` inside the window likewise emits nothing for the rows
+        it removes. By default both raise CursorExpiredError (carrying the
+        oldest retained id, or the newest rollback id in the window); the
+        consumer must re-bootstrap with a full table read (``read(spark)``),
+        then resume tailing from the cursor the error carries.
+        ``on_expired="reset"`` opts into that skip explicitly and marks the
+        returned cursor with ``expired_reset``."""
         if on_expired not in ("raise", "reset"):
             raise ValueError(f"on_expired must be 'raise' or 'reset', got {on_expired!r}")
         cur = self.current_snapshot()
-        chain_ids = [s["snapshot_id"] for s in self.history()]
-        start = None
+        chain = self.history()
+        chain_ids = [s["snapshot_id"] for s in chain]
+        new_cursor = {"snapshot_id": cur["snapshot_id"]}
+        start = chain_ids[0]
         if os.path.exists(cursor_path):
             with open(cursor_path) as f:
-                start = json.load(f)["snapshot_id"]
-        expired = start is not None and start not in chain_ids
-        if expired and on_expired == "raise":
-            raise CursorExpiredError(start, chain_ids[0])
-        if start is None or expired:
-            reset_from = chain_ids[0]
-            new_cursor = {"snapshot_id": cur["snapshot_id"]}
-            if expired:
-                new_cursor["expired_reset"] = {"from": start, "to": reset_from}
-            start = reset_from
-        else:
-            new_cursor = {"snapshot_id": cur["snapshot_id"]}
+                at = json.load(f)["snapshot_id"]
+            expired = at not in chain_ids
+            rollback = _last_rollback(chain, start if expired else at, cur["snapshot_id"])
+            resume = rollback if rollback is not None else start if expired else None
+            if resume is not None:
+                if on_expired == "raise":
+                    raise CursorExpiredError(at, resume)
+                new_cursor["expired_reset"] = {"from": at, "to": resume}
+            start = at if resume is None else resume
         if start >= cur["snapshot_id"]:
             return None, new_cursor
         return self.read_changes(spark, start, cur["snapshot_id"]), new_cursor

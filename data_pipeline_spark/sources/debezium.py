@@ -483,7 +483,7 @@ def envelope_to_debezium(
     any Debezium-aware consumer (JDBC sink, search indexer, another team's
     pipeline) can tail an engine table without speaking the engine's
     format. Compose with ``changes_to_feed`` (sources/kafka.py) to publish
-    a table's changelog: table → read_changes/stream_changes →
+    a table's changelog: table → read_changes/tail_changes →
     changes_to_feed → envelope_to_debezium → Kafka producer records.
 
     The round trip ``debezium_to_envelope(envelope_to_debezium(e))`` is

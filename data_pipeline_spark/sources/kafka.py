@@ -102,7 +102,7 @@ def changes_to_feed(
     key_cols: tuple[str, str] = ("conv_id", "turn_idx"),
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Re-publish a table's changelog (``read_changes`` / ``stream_changes``
+    """Re-publish a table's changelog (``read_changes`` / ``tail_changes``
     output) as a change-event FEED — the K1 producer's payload builder:
     downstream tables ingest table A's changes exactly like a source feed
     (A → changes → Kafka → B). op = the changelog's ``_change_op``; payload =
@@ -190,8 +190,9 @@ def write_kafka_feed_stream(
     topic: str,
     checkpoint_dir: str,
 ):
-    """Streaming Kafka sink for a change-event DataFrame (the K1 producer:
-    e.g. ``tbl.stream_changes(spark)`` re-published as a feed). Returns the
+    """Streaming Kafka sink for a change-event DataFrame (the K1 producer
+    for a live feed; a table's changelog windows go through
+    ``changes_to_feed`` + ``encode_kafka_envelope``). Returns the
     started StreamingQuery. At-least-once (Kafka sink semantics) — consumers
     dedup by (conv_id, turn_idx, lsn), which the engine's merge does."""
     return (

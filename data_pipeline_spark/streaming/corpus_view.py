@@ -4,11 +4,11 @@
 documents; this module keeps that result LIVE as conversations keep
 changing, without ever re-assembling the whole corpus:
 
-    upstream.stream_changes → touched conv_ids → bucket-pruned point read
+    upstream.tail_changes → touched conv_ids → bucket-pruned point read
     → re-assemble ONLY those conversations → merge into the docs table
-    through the engine's own idempotent apply path
+    through the engine's own idempotent apply path → commit cursor
 
-Per micro-batch the work is O(churn): the changelog batch names the
+Per changelog window the work is O(churn): the window names the
 conversations whose document image may have changed; everything else in
 the corpus is untouched. The point read prunes to the buckets those
 conv_ids hash into (metadata-level file skipping), the re-assembly
@@ -18,18 +18,19 @@ thousand conversations — the refresh costs minutes of one executor, not
 a corpus-wide rebuild.
 
 Semantics: the view is a MATERIALIZED VIEW refresh, not a transcript
-replica — each batch re-reads the touched conversations' CURRENT state,
+replica — each window re-reads the touched conversations' CURRENT state,
 so the view always converges to `assemble_conversations(upstream)` as of
-the latest refresh, whatever order catch-up micro-batches arrive in.
+the latest refresh.
 Conversations whose turns are all deleted upstream produce a DELETE of
 their document. Emitted rows carry the upstream watermark LSN at refresh
 time: monotone across refreshes, so the engine's LWW keeps the newest
 image; equal-LSN collisions can only carry identical images (same
 upstream snapshot) and are harmless under the D>U>I tie-break.
 
-Exactly-once: checkpoint re-delivery is skipped by batch_id like every
-engine sink — and a replayed refresh would be a no-op anyway (it
-re-derives the same images from the same upstream state).
+Exactly-once: a window redelivered after a lost cursor commit is skipped
+by batch_id like every engine sink — and a replayed refresh would be a
+no-op anyway (it re-derives the same images from the same upstream
+state).
 
 DML only, MOR upstream required (same contract as cascade edges —
 reference: data_pipeline's applier chain publishing to further consumers,
@@ -52,6 +53,7 @@ from data_pipeline_spark.operators.corpus import (
     redact_pii,
 )
 from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 
 
@@ -128,7 +130,7 @@ DOCUMENT_SCHEMA = T.StructType(
 
 class CorpusViewJob:
     """Keep a documents table equal to `assemble_conversations(upstream)`
-    by incremental refresh over the upstream changelog stream.
+    by incremental refresh over the upstream changelog (cursor-polled).
 
     redact: apply `redact_pii` to each re-assembled document (the default
     single-pass scrub — the view keeps the corpus schema, no counts column).
@@ -238,65 +240,24 @@ class CorpusViewJob:
             ddl_rows=[],
         )
 
-    # ------------------------------------------------------------- streaming
-    def start(
-        self,
-        spark: SparkSession,
-        checkpoint_dir: str,
-        available_now: bool = True,
-        max_files_per_trigger: int | None = None,
-    ):
-        """Tail the upstream changelog and refresh per micro-batch.
-        available_now=True drains the retained changelog and stops."""
-        if self.upstream.current_snapshot().get("merge_mode") != "mor":
-            raise ValueError(
-                f"corpus view upstream {self.upstream.path} is copy-on-write: "
-                "COW merges produce no delta files, so the changelog stream "
-                "would be empty"
-            )
-
-        def handle(df: DataFrame, batch_id: int) -> None:
-            self.refresh_for(df.sparkSession, int(batch_id), df)
-
-        writer = (
-            self.upstream.stream_changes(spark, max_files_per_trigger)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_to_completion(self, spark: SparkSession, checkpoint_dir: str) -> None:
-        q = self.start(spark, checkpoint_dir, available_now=True)
-        q.awaitTermination()
-
-    # ----------------------------------------------------- cursor-driven mode
     def poll_once(self, spark: SparkSession, cursor_path: str) -> dict:
-        """One cursor-driven refresh — the WAP-SAFE mode (same rationale as
-        `CascadeJob.poll_once`): `start()` tails the upstream delta FILES,
-        which on a write-audit-publish upstream include staged and
-        later-discarded batches, so the view could briefly assemble
-        documents from conversations whose changes were never published.
-        This mode reads the PUBLISHED chain via `tail_changes`; the refresh
-        re-derives touched conversations from the CURRENT published state,
-        so the view converges on exactly the audited corpus. The cursor
-        commits after the merge; a lost commit just re-refreshes the same
-        conversations to the same images (view refresh is idempotent by
-        construction)."""
-        chg, cursor = self.upstream.tail_changes(spark, cursor_path)
-        if chg is None:
-            return {"applied": False, "cursor": cursor}
-        batch_id = cursor["snapshot_id"]
-        res = self.refresh_for(spark, batch_id, chg.select("conv_id"))
-        LakehouseTable.commit_cursor(cursor_path, cursor)
-        return {"applied": True, "batch_id": batch_id, "cursor": cursor,
-                "result": res}
+        """One refresh over the window since the cursor. It reads the
+        published chain only, so on a write-audit-publish upstream the view
+        converges on exactly the audited corpus; a lost cursor commit just
+        re-refreshes the same conversations to the same images. Raises
+        CursorExpiredError when the window can't be read incrementally —
+        recover with `resync`."""
+
+        def apply(batch_id: int, chg: DataFrame) -> dict:
+            return self.refresh_for(spark, batch_id, chg.select("conv_id"))
+
+        return poll_window(spark, self.upstream, cursor_path, apply)
 
     def resync(self, spark: SparkSession, cursor_path: str) -> dict:
         """Full reconciliation against the current PUBLISHED upstream — the
         `CursorExpiredError` recovery (view down past upstream retention,
-        or upstream history collapsed by a compliance `purge_keys`). A
+        upstream history collapsed by a compliance `purge_keys`, or an
+        upstream `rollback_to` inside the view's window). A
         fresh cursor alone is NOT enough: `tail_changes` with no cursor
         starts at the oldest RETAINED snapshot, and rows folded into base
         files by earlier `expire_snapshots`/purge calls are absent from
@@ -322,22 +283,14 @@ class CorpusViewJob:
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
         """Poll until the view reflects the full published upstream head;
-        raises if still behind after max_polls (never a silent partial)."""
-        n = 0
-        for _ in range(max_polls):
-            if not self.poll_once(spark, cursor_path)["applied"]:
-                return n
-            n += 1
-        raise RuntimeError(
-            f"view still behind after {max_polls} windows — raise max_polls "
-            "or keep polling"
+        returns the number of windows applied."""
+        return run_until_caught_up(
+            lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "view"
         )
 
     def lag(self) -> dict:
-        """Refresh lag in LSNs (same metadata-only metric as cascade edges)."""
-        up = self.upstream.current_snapshot().get("watermark_lsn") or 0
-        down = self.job.table.current_snapshot().get("watermark_lsn") or 0
-        return {"upstream_lsn": up, "view_lsn": down, "lag_lsns": up - down}
+        """Refresh lag in LSNs (see `cursor.lsn_lag`)."""
+        return lsn_lag(self.upstream, self.job.table)
 
 
 def export_corpus_delta(

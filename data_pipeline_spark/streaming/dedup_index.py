@@ -65,6 +65,7 @@ from data_pipeline_spark.operators.corpus import (
 )
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.streaming.corpus_view import touched_documents
+from data_pipeline_spark.streaming.cursor import lsn_lag, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 from data_pipeline_spark.streaming.txn import TxnCatalog
 
@@ -431,20 +432,12 @@ class DedupIndexJob:
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
-        n = 0
-        for _ in range(max_polls):
-            if not self.poll_once(spark, cursor_path)["applied"]:
-                return n
-            n += 1
-        raise RuntimeError(
-            f"index still behind after {max_polls} windows — raise max_polls "
-            "or keep polling"
+        return run_until_caught_up(
+            lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "index"
         )
 
     def lag(self) -> dict:
-        up = self.upstream.current_snapshot().get("watermark_lsn") or 0
-        down = self.sig.current_snapshot().get("watermark_lsn") or 0
-        return {"upstream_lsn": up, "index_lsn": down, "lag_lsns": up - down}
+        return lsn_lag(self.upstream, self.sig)
 
     # --------------------------------------------------------------- queries
     def _pinned(self, table_name: str) -> int | None:

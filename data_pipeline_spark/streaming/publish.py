@@ -49,6 +49,7 @@ from pyspark.sql import SparkSession
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.sources.debezium import envelope_to_debezium
 from data_pipeline_spark.sources.kafka import changes_to_feed
+from data_pipeline_spark.streaming.cursor import run_until_caught_up
 
 
 class DebeziumPublishJob:
@@ -127,9 +128,6 @@ class DebeziumPublishJob:
     def run_until_caught_up(self, spark: SparkSession, max_polls: int = 1000) -> int:
         """Poll until the published head is fully written; returns the
         number of chunks published."""
-        n = 0
-        for _ in range(max_polls):
-            if not self.poll_once(spark)["published"]:
-                return n
-            n += 1
-        raise RuntimeError(f"not caught up after {max_polls} polls")
+        return run_until_caught_up(
+            lambda: self.poll_once(spark)["published"], max_polls, "publisher"
+        )

@@ -31,9 +31,8 @@ audit-failure lands in the control alerts trail (alerts.jsonl +
 on_alert hook) with the snapshot ids involved.
 
 Downstream consumption of a WAP table: `tail_changes`/`read_changes`
-(cursor over the main chain) — publish-respecting by construction.
-`stream_changes` is NOT: it tails delta files, which exist on disk the
-moment a batch is STAGED (see its docstring)."""
+(cursor over the main chain, which every in-engine consumer polls) —
+publish-respecting by construction."""
 
 from __future__ import annotations
 

@@ -1,10 +1,11 @@
 """Cascade-edge benchmark: what does the SECOND hop cost?
 
 First hop: raw change feed → decode → collapse → merge into table A.
-Edge:      A's delta layer → changes_to_feed → same apply path → table B.
+Edge:      A's changelog (cursor-polled windows) → changes_to_feed → same
+           apply path → table B.
 Fan-out (--fanout N): N full replicas via N independent CascadeJob edges
-(N passes over A's delta layer) vs one CascadeFanout (one pass, shared
-cached batch, concurrent applies) — the read-amplification A/B.
+(N reads of A's changelog) vs one CascadeFanout (one read per window,
+shared cached window, concurrent applies) — the read-amplification A/B.
 
 The edge never re-reads A — it moves only the collapsed per-commit
 changesets (strictly fewer rows than the raw feed, since upstream collapse
@@ -95,7 +96,7 @@ def main() -> None:
         LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=args.n_buckets)
         edge = CascadeJob(a, b, os.path.join(root, "ctl-b"))
         t0 = time.monotonic()
-        edge.run_to_completion(spark, os.path.join(root, "cp-b"))
+        edge.run_until_caught_up(spark, os.path.join(root, "b.cursor"))
         edge_sec = time.monotonic() - t0
 
         delta_rows = LakehouseTable(a).read_changes(spark, 0).count()
@@ -132,8 +133,8 @@ def main() -> None:
             indep = mk_tables("ind")
             t0 = time.monotonic()
             for i, p in enumerate(indep):
-                CascadeJob(a, p, os.path.join(root, f"ctl-ind{i}")).run_to_completion(
-                    spark, os.path.join(root, f"cp-ind{i}")
+                CascadeJob(a, p, os.path.join(root, f"ctl-ind{i}")).run_until_caught_up(
+                    spark, os.path.join(root, f"ind{i}.cursor")
                 )
             indep_sec = time.monotonic() - t0
 
@@ -144,7 +145,7 @@ def main() -> None:
                 os.path.join(root, "ctl-fan"),
             )
             t0 = time.monotonic()
-            fan.run_to_completion(spark, os.path.join(root, "cp-fan"))
+            fan.run_until_caught_up(spark, os.path.join(root, "fan.cursor"))
             fanout_sec = time.monotonic() - t0
 
             ok = all(digest(p) == digest(a) for p in (indep[0], *shared))

@@ -5,7 +5,7 @@ Phase 1: ingest a base corpus (--events change events) into upstream A.
 Phase 2: bootstrap the documents view (catch-up over the full changelog —
          the one unavoidable O(corpus) pass).
 Phase 3: churn a SMALL slice of conversations (--churn-events over
-         --churn-convs) and refresh the view from the same checkpoint —
+         --churn-convs) and refresh the view from the same cursor —
          the steady-state cost, O(churn) by construction.
 Phase 4: the baseline the view replaces: full `assemble_conversations`
          over A written to parquet (what a no-view pipeline re-runs to get
@@ -114,9 +114,9 @@ def main() -> None:
         view = os.path.join(root, "view")
         CorpusViewJob.create_view_table(view, n_buckets=args.n_buckets)
         vj = CorpusViewJob(up, view, os.path.join(root, "ctl-view"))
-        ckpt = os.path.join(root, "cp-view")
+        cursor = os.path.join(root, "view.cursor")
         t0 = time.monotonic()
-        vj.run_to_completion(spark, ckpt)
+        vj.run_until_caught_up(spark, cursor)
         bootstrap_sec = time.monotonic() - t0
         n_docs = LakehouseTable(view).read(spark).count()
 
@@ -140,7 +140,7 @@ def main() -> None:
         churn_ids = sorted(set(churn["conv_id"]))
         planned = len(up_tbl._prune_by_key(files, churn_ids))
         t0 = time.monotonic()
-        vj.run_to_completion(spark, ckpt)
+        vj.run_until_caught_up(spark, cursor)
         refresh_sec = time.monotonic() - t0
         assert vj.lag()["lag_lsns"] == 0
 

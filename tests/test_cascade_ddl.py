@@ -4,7 +4,7 @@ widen-lattice-checked, drops replicated) so an edge restart after upstream
 DDL is one call — and downstream data written under the OLD names survives
 (field-id remapping, not drop+add). Plus: a COW upstream (a table an older
 version wrote in copy-on-write mode) is refused loudly (no delta layer →
-the changelog stream would be silently empty).
+its changelog would be silently empty).
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
     b = str(tmp_path / "b-cow")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     with pytest.raises(ValueError, match="copy-on-write"):
-        CascadeJob(a, b, str(tmp_path / "ctl-b")).start(spark, str(tmp_path / "cp-b"))
+        CascadeJob(a, b, str(tmp_path / "ctl-b")).poll_once(spark, str(tmp_path / "b.cursor"))
 
 
 def test_auto_ddl_heals_add_rename_widen_drop(spark, tmp_path):
@@ -61,8 +61,8 @@ def test_auto_ddl_heals_add_rename_widen_drop(spark, tmp_path):
     b = str(tmp_path / "b")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     edge = CascadeJob(a, b, str(tmp_path / "ctl-b"))
-    ckpt = str(tmp_path / "cp-b")
-    edge.run_to_completion(spark, ckpt)
+    cursor = str(tmp_path / "b.cursor")
+    edge.run_until_caught_up(spark, cursor)
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
 
     # ---- upstream DDL round 1: add + rename; then more upstream data
@@ -75,12 +75,12 @@ def test_auto_ddl_heals_add_rename_widen_drop(spark, tmp_path):
     _advance(spark, tmp_path, a, seed=73, batch_id=99)
 
     with pytest.raises(ValueError, match="schema drift"):
-        edge.start(spark, ckpt)  # strict check still refuses
+        edge.poll_once(spark, cursor)  # strict check still refuses
     applied = edge.sync_schema(auto_ddl=True)
     assert {(d["action"]) for d in applied} == {"add_column", "rename_column"}
     assert {"action": "rename_column", "old": "text", "new": "body"} in applied
 
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     up, down = _state(spark, a), _state(spark, b)
     pd.testing.assert_frame_equal(up, down)
     # rows replicated BEFORE the rename kept their values under the new
@@ -98,7 +98,7 @@ def test_auto_ddl_heals_add_rename_widen_drop(spark, tmp_path):
     applied2 = edge.sync_schema(auto_ddl=True)
     assert {(d["action"]) for d in applied2} == {"widen_type", "drop_column"}
     _advance(spark, tmp_path, a, seed=79, batch_id=100)
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
     assert "tool" not in _state(spark, b).columns
 
@@ -115,8 +115,8 @@ def test_auto_ddl_rename_then_readd_collision(spark, tmp_path):
     b = str(tmp_path / "b6")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     edge = CascadeJob(a, b, str(tmp_path / "ctl-b6"))
-    ckpt = str(tmp_path / "cp-b6")
-    edge.run_to_completion(spark, ckpt)
+    cursor = str(tmp_path / "b6.cursor")
+    edge.run_until_caught_up(spark, cursor)
 
     LakehouseTable(a).apply_ddl(
         [
@@ -129,7 +129,7 @@ def test_auto_ddl_rename_then_readd_collision(spark, tmp_path):
     assert {"action": "add_column", "name": "text", "type": "string"} in applied
 
     _advance(spark, tmp_path, a, seed=93, batch_id=99)
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     up, down = _state(spark, a), _state(spark, b)
     pd.testing.assert_frame_equal(up, down)
     assert down["body"].notna().all()  # old generation's data survived

@@ -1,6 +1,7 @@
 """Fan-out cascade: N replica targets (full, filtered, projected) fed from
-ONE pass over the upstream changelog, applied concurrently over the shared
-cached micro-batch — plus crash/resume with per-target batch_id idempotence.
+ONE read of each upstream changelog window, applied concurrently over the
+shared cached window — plus crash/resume with per-target batch_id
+idempotence.
 """
 
 from __future__ import annotations
@@ -9,7 +10,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQueryException
 
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
@@ -75,20 +75,34 @@ def _assert_all_replicas(spark, a, full, filt, proj):
 def test_fanout_three_targets_one_pass(spark, tmp_path):
     a = _mk_upstream(spark, tmp_path, "a", seed=61)
     fanout, full, filt, proj = _mk_fanout(spark, tmp_path, a)
-    fanout.run_to_completion(spark, str(tmp_path / "cp-fan"))
+    assert fanout.run_until_caught_up(spark, str(tmp_path / "fan.cursor")) == 1
     _assert_all_replicas(spark, a, full, filt, proj)
 
 
-def test_fanout_crash_resume(spark, tmp_path):
+def test_fanout_crash_resume(spark, tmp_path, monkeypatch):
+    """One target's apply fails after the others committed: the shared
+    cursor stays put, and the re-poll re-reads the same window — targets
+    that already applied it skip by batch_id, the failed one catches up."""
     a = _mk_upstream(spark, tmp_path, "a2", seed=67)
     fanout, full, filt, proj = _mk_fanout(spark, tmp_path, a)
-    ckpt = str(tmp_path / "cp-fan2")
-    q = fanout.start(
-        spark, ckpt, available_now=True, max_files_per_trigger=4, fail_after_batches=1
-    )
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination()
-    fanout.run_to_completion(spark, ckpt)
+    cursor = str(tmp_path / "fan2.cursor")
+    filt_job = fanout.jobs["filt"]
+    apply_batch = filt_job.apply_batch
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(filt_job, "apply_batch", apply_batch)
+        raise RuntimeError("injected crash (test hook)")
+
+    monkeypatch.setattr(filt_job, "apply_batch", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        fanout.poll_once(spark, cursor)
+    assert not (tmp_path / "fan2.cursor").exists()
+    assert LakehouseTable(filt).read(spark).count() == 0
+
+    res = fanout.poll_once(spark, cursor)
+    assert res["result"]["full"].get("skipped") and res["result"]["proj"].get("skipped")
+    assert not res["result"]["filt"].get("skipped")
+    assert fanout.run_until_caught_up(spark, cursor) == 0
     _assert_all_replicas(spark, a, full, filt, proj)
 
 

@@ -53,9 +53,9 @@ def test_filtered_replica_equals_sigma_upstream(spark, tmp_path):
     b = str(tmp_path / "b")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     edge = CascadeJob(a, b, str(tmp_path / "ctl-b"), row_predicate=PRED)
-    ckpt = str(tmp_path / "cp-b")
+    cursor = str(tmp_path / "b.cursor")
 
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     sigma = _sorted_pdf(LakehouseTable(a).read(spark).where(F.expr(PRED)))
     got = _sorted_pdf(LakehouseTable(b).read(spark))
     assert 0 < len(sigma) < len(_sorted_pdf(LakehouseTable(a).read(spark)))
@@ -64,7 +64,7 @@ def test_filtered_replica_equals_sigma_upstream(spark, tmp_path):
     # more upstream commits: keys flip INTO and OUT OF the predicate (text
     # gains a new rev suffix) — the replica must track σ, not accumulate
     _advance_upstream(spark, tmp_path, a, seed=43)
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     sigma2 = _sorted_pdf(LakehouseTable(a).read(spark).where(F.expr(PRED)))
     got2 = _sorted_pdf(LakehouseTable(b).read(spark))
     pd.testing.assert_frame_equal(sigma2, got2)
@@ -82,8 +82,8 @@ def test_projected_replica_column_subset(spark, tmp_path):
     )
     b = str(tmp_path / "b2")
     LakehouseTable(b).create(subset_schema, n_buckets=4)
-    CascadeJob(a, b, str(tmp_path / "ctl-b2"), columns=["role", "ts"]).run_to_completion(
-        spark, str(tmp_path / "cp-b2")
+    CascadeJob(a, b, str(tmp_path / "ctl-b2"), columns=["role", "ts"]).run_until_caught_up(
+        spark, str(tmp_path / "b2.cursor")
     )
     want = _sorted_pdf(
         LakehouseTable(a).read(spark).select("conv_id", "turn_idx", "role", "ts")
@@ -103,7 +103,7 @@ def test_filtered_and_projected_compose(spark, tmp_path):
     # runs on the full changelog row before projection, as it must
     CascadeJob(
         a, b, str(tmp_path / "ctl-b3"), row_predicate=PRED, columns=["role"]
-    ).run_to_completion(spark, str(tmp_path / "cp-b3"))
+    ).run_until_caught_up(spark, str(tmp_path / "b3.cursor"))
     want = _sorted_pdf(
         LakehouseTable(a).read(spark).where(F.expr(PRED)).select("conv_id", "turn_idx", "role")
     )
@@ -116,8 +116,8 @@ def test_projected_replica_schema_mismatch_refused(spark, tmp_path):
     b = str(tmp_path / "b4")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)  # full schema
     with pytest.raises(ValueError, match="schema drift"):
-        CascadeJob(a, b, str(tmp_path / "ctl-b4"), columns=["role"]).start(
-            spark, str(tmp_path / "cp-b4")
+        CascadeJob(a, b, str(tmp_path / "ctl-b4"), columns=["role"]).poll_once(
+            spark, str(tmp_path / "b4.cursor")
         )
 
 

@@ -22,10 +22,10 @@ def test_lag_tracks_upstream_commits(spark, tmp_path):
     b = str(tmp_path / "b")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     edge = CascadeJob(a, b, str(tmp_path / "ctl-b"))
-    ckpt = str(tmp_path / "cp-b")
+    cursor = str(tmp_path / "b.cursor")
 
     assert edge.lag()["lag_lsns"] == edge.lag()["upstream_lsn"] > 0  # nothing applied yet
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     assert edge.lag()["lag_lsns"] == 0
 
     feed2 = generate_feed_pandas(FeedSpec(n_events=1_000, n_convs=100, seed=89))
@@ -35,7 +35,7 @@ def test_lag_tracks_upstream_commits(spark, tmp_path):
     )
     assert edge.lag()["lag_lsns"] == 1_000
 
-    edge.run_to_completion(spark, ckpt)
+    edge.run_until_caught_up(spark, cursor)
     assert edge.lag()["lag_lsns"] == 0
 
 def test_fanout_lag_per_target(spark, tmp_path):
@@ -56,5 +56,5 @@ def test_fanout_lag_per_target(spark, tmp_path):
     lag0 = fan.lag()
     assert set(lag0) == {"full", "users"}
     assert all(v["lag_lsns"] == v["upstream_lsn"] > 0 for v in lag0.values())
-    fan.run_to_completion(spark, str(tmp_path / "cp-f"))
+    fan.run_until_caught_up(spark, str(tmp_path / "f.cursor"))
     assert fan.lag()["full"]["lag_lsns"] == 0

@@ -1,16 +1,18 @@
-"""Live replication chaining: CascadeJob tails an upstream table's delta
-layer and keeps a downstream table identical — including incremental
-catch-up of NEW upstream commits from the same checkpoint, crash/resume of
-the cascade itself, and a two-edge chain A → B → C.
+"""Live replication chaining: CascadeJob polls an upstream table's
+changelog with a durable cursor and keeps a downstream table identical —
+including incremental catch-up of NEW upstream commits from the same
+cursor, a crash between apply and cursor commit, a two-edge chain
+A → B → C, and an upstream rollback inside the edge's window.
 """
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pytest
-from pyspark.sql.streaming import StreamingQueryException
 
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import CursorExpiredError, LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_feed_pandas
 from data_pipeline_spark.streaming.cascade import CascadeJob
@@ -26,6 +28,17 @@ def _mk_upstream(spark, tmp_path, name, n_events=6_000, seed=31):
         spark, feed, str(tmp_path / f"cp-{name}"), max_files_per_trigger=1
     )
     return path
+
+
+def _advance(spark, tmp_path, a, seed):
+    """Commit one more upstream batch whose LSNs continue past A's
+    watermark (the generator restarts at 0, which the recovery filter would
+    rightly drop)."""
+    feed = generate_feed_pandas(FeedSpec(n_events=4_000, n_convs=120, seed=seed))
+    feed["lsn"] = feed["lsn"] + LakehouseTable(a).current_snapshot()["watermark_lsn"]
+    IngestJob(a, str(tmp_path / f"ctl-adv-{seed}")).apply_batch(
+        spark, 99, spark.createDataFrame(feed, schema=CHANGE_EVENT_SCHEMA)
+    )
 
 
 def _mk_empty(tmp_path, name):
@@ -46,30 +59,23 @@ def _state(spark, path):
 
 def test_cascade_catchup_and_incremental(spark, tmp_path):
     """Drain the retained changelog into B; then commit MORE upstream
-    batches and re-run from the SAME checkpoint — only the new deltas flow,
-    and B tracks A after each round."""
+    batches and poll from the SAME cursor — only the new deltas flow, and
+    B tracks A after each round."""
     a = _mk_upstream(spark, tmp_path, "a")
     b = _mk_empty(tmp_path, "b")
     edge = CascadeJob(a, b, str(tmp_path / "ctl-edge"))
-    ckpt = str(tmp_path / "cp-edge")
+    cursor = str(tmp_path / "edge.cursor")
 
-    edge.run_to_completion(spark, ckpt)
+    assert edge.run_until_caught_up(spark, cursor) == 1
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
     assert len(_state(spark, b)) > 0
 
-    # new upstream activity: a second feed segment (LSNs continue past A's
-    # watermark — the generator restarts at 0, which the recovery filter
-    # would rightly drop) applied to A as a direct batch
-    feed2 = generate_feed_pandas(FeedSpec(n_events=4_000, n_convs=120, seed=77))
-    feed2["lsn"] = feed2["lsn"] + LakehouseTable(a).current_snapshot()["watermark_lsn"]
-    IngestJob(a, str(tmp_path / "ctl-a")).apply_batch(
-        spark, 99, spark.createDataFrame(feed2, schema=CHANGE_EVENT_SCHEMA)
-    )
+    _advance(spark, tmp_path, a, seed=77)  # new upstream activity
     control_files_before = len(
         [r for r in (tmp_path / "ctl-edge").iterdir() if r.suffix == ".parquet"]
     )
 
-    edge.run_to_completion(spark, ckpt)  # same checkpoint: incremental
+    assert edge.run_until_caught_up(spark, cursor) == 1  # same cursor: incremental
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
     control_files_after = len(
         [r for r in (tmp_path / "ctl-edge").iterdir() if r.suffix == ".parquet"]
@@ -77,28 +83,29 @@ def test_cascade_catchup_and_incremental(spark, tmp_path):
     assert control_files_after > control_files_before  # new batches applied
 
 
-def test_cascade_crash_resume_idempotent(spark, tmp_path):
-    """Kill the cascade after one micro-batch; resume from the checkpoint.
-    Re-delivered rows are LWW no-ops, replayed batch_ids are skipped — B
-    still converges to A exactly.
-
-    maxFilesPerTrigger=4 also makes this the ordering regression test: the
-    file source batches the backlog by mtime, not upstream commit order, so
-    later micro-batches carry older LSNs — the edge must NOT let the
-    downstream watermark filter eat them (caught live: 195 rows lost when
-    apply ran with enforce_watermark=True)."""
+def test_cascade_crash_resume_idempotent(spark, tmp_path, monkeypatch):
+    """Crash between the downstream apply and the cursor commit; then more
+    upstream commits land before the re-poll. The widened window re-applies
+    the crashed one's rows as LWW no-ops — B still converges to A exactly."""
     a = _mk_upstream(spark, tmp_path, "a3", seed=5)
     b = _mk_empty(tmp_path, "b3")
     edge = CascadeJob(a, b, str(tmp_path / "ctl-e3"))
-    ckpt = str(tmp_path / "cp-e3")
+    cursor = str(tmp_path / "e3.cursor")
 
-    q = edge.start(
-        spark, ckpt, available_now=True, max_files_per_trigger=4, fail_after_batches=1
-    )
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination()
+    commit = LakehouseTable.commit_cursor
 
-    edge.run_to_completion(spark, ckpt)
+    def crash_once(path, cur):
+        monkeypatch.setattr(LakehouseTable, "commit_cursor", staticmethod(commit))
+        raise RuntimeError("injected crash (test hook)")
+
+    monkeypatch.setattr(LakehouseTable, "commit_cursor", staticmethod(crash_once))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        edge.poll_once(spark, cursor)
+    assert not (tmp_path / "e3.cursor").exists()
+    assert len(_state(spark, b)) > 0  # the apply landed
+
+    _advance(spark, tmp_path, a, seed=7)
+    assert edge.run_until_caught_up(spark, cursor) == 1
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
 
 
@@ -110,11 +117,11 @@ def test_cascade_two_edge_chain(spark, tmp_path):
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
     c = _mk_empty(tmp_path, "c4")
 
-    CascadeJob(a, b, str(tmp_path / "ctl-ab")).run_to_completion(
-        spark, str(tmp_path / "cp-ab")
+    CascadeJob(a, b, str(tmp_path / "ctl-ab")).run_until_caught_up(
+        spark, str(tmp_path / "ab.cursor")
     )
-    CascadeJob(b, c, str(tmp_path / "ctl-bc")).run_to_completion(
-        spark, str(tmp_path / "cp-bc")
+    CascadeJob(b, c, str(tmp_path / "ctl-bc")).run_until_caught_up(
+        spark, str(tmp_path / "bc.cursor")
     )
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, c))
 
@@ -124,4 +131,31 @@ def test_cascade_refuses_schema_drift(spark, tmp_path):
     b = _mk_empty(tmp_path, "b5")
     LakehouseTable(b).apply_ddl([{"action": "rename_column", "old": "text", "new": "body"}])
     with pytest.raises(ValueError, match="schema drift"):
-        CascadeJob(a, b, str(tmp_path / "ctl-e5")).start(spark, str(tmp_path / "cp-e5"))
+        CascadeJob(a, b, str(tmp_path / "ctl-e5")).poll_once(spark, str(tmp_path / "e5.cursor"))
+
+
+def test_cascade_upstream_rollback_refuses_to_poll(spark, tmp_path):
+    """A rollback writes no change rows for the rows it removes, so a
+    replica that kept polling would silently keep them. The poll after an
+    upstream rollback must raise CursorExpiredError carrying the rollback
+    snapshot as the resume point, without moving the cursor."""
+    a = _mk_upstream(spark, tmp_path, "a6", n_events=4_000, seed=19)
+    b = _mk_empty(tmp_path, "b6")
+    edge = CascadeJob(a, b, str(tmp_path / "ctl-e6"))
+    cursor = str(tmp_path / "e6.cursor")
+    edge.run_until_caught_up(spark, cursor)
+    pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
+
+    up = LakehouseTable(a)
+    first_merge = next(s for s in up.history() if s["kind"] == "merge")
+    rollback_id = up.rollback_to(first_merge["snapshot_id"])["snapshot_id"]
+    assert len(_state(spark, a)) < len(_state(spark, b))
+
+    with pytest.raises(CursorExpiredError) as ei:
+        edge.poll_once(spark, cursor)
+    assert ei.value.oldest_retained == rollback_id
+    with open(cursor) as f:
+        assert json.load(f)["snapshot_id"] < rollback_id
+    # the opt-in reset skips to the rollback snapshot, like an expired cursor
+    _, reset = up.tail_changes(spark, cursor, on_expired="reset")
+    assert reset["expired_reset"]["to"] == rollback_id

@@ -1,9 +1,9 @@
 """Cursor-driven cascade edge over a write-audit-publish upstream.
 
-The file-tail edge (`CascadeJob.start`) reads staged delta files the
-moment they land — on a WAP upstream it would replicate unaudited and
-even discarded batches. `poll_once` consumes the PUBLISHED chain via
-`tail_changes`, so the replica can only ever contain audited state."""
+Staged delta files exist on disk the moment a batch lands on the audit
+branch; `poll_once` consumes the PUBLISHED chain via `tail_changes`, so
+the replica can only ever contain audited state — never unaudited or
+discarded batches."""
 
 from __future__ import annotations
 

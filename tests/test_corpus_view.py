@@ -1,7 +1,7 @@
 """Incrementally-maintained documents view (CorpusViewJob): the view table
 must always equal `assemble_conversations(upstream)` — after initial
 catch-up, after further upstream churn (incremental refresh from the same
-checkpoint), and after a conversation is deleted outright (the view drops
+cursor), and after a conversation is deleted outright (the view drops
 its document). Refresh work is O(touched conversations) by construction;
 the equality oracle is the full batch re-assembly."""
 
@@ -48,23 +48,23 @@ def test_view_converges_and_refreshes_incrementally(spark, tmp_path):
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"))
-    ckpt = str(tmp_path / "cp-view")
+    cursor = str(tmp_path / "view.cursor")
 
     for b in range(3):
         _apply(spark, ingest, up, b, generate_feed_pandas(
             FeedSpec(n_events=600, n_convs=50, seed=600 + b)
         ))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     pd.testing.assert_frame_equal(_view_frame(spark, view), _oracle_frame(spark, up))
     assert vj.lag()["lag_lsns"] == 0
 
     # upstream keeps moving: updates + new conversations; the SAME
-    # checkpoint catches up incrementally (only new changelog files)
+    # cursor catches up incrementally (only the new commits' changes)
     for b in (10, 11):
         _apply(spark, ingest, up, b, generate_feed_pandas(
             FeedSpec(n_events=500, n_convs=80, seed=700 + b)
         ))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     pd.testing.assert_frame_equal(_view_frame(spark, view), _oracle_frame(spark, up))
     assert vj.lag()["lag_lsns"] == 0
 
@@ -76,12 +76,12 @@ def test_view_drops_fully_deleted_conversation(spark, tmp_path):
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"))
-    ckpt = str(tmp_path / "cp-view")
+    cursor = str(tmp_path / "view.cursor")
 
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=400, n_convs=20, seed=800)
     ))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     victim = _view_frame(spark, view)["conv_id"].iloc[0]
 
     # delete EVERY turn of the victim conversation upstream
@@ -101,7 +101,7 @@ def test_view_drops_fully_deleted_conversation(spark, tmp_path):
     _apply(spark, ingest, up, 1, dels)
     assert LakehouseTable(up).read(spark).where(f"conv_id = '{victim}'").count() == 0
 
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     got = _view_frame(spark, view)
     assert victim not in set(got["conv_id"])
     pd.testing.assert_frame_equal(got, _oracle_frame(spark, up))
@@ -118,7 +118,7 @@ def test_view_options_match_batch_operators(spark, tmp_path):
     ))
 
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"), max_turns=2)
-    vj.run_to_completion(spark, str(tmp_path / "cp-view"))
+    vj.run_until_caught_up(spark, str(tmp_path / "view.cursor"))
     want = (
         assemble_conversations(LakehouseTable(up).read(spark), max_turns=2)
         .toPandas().sort_values("conv_id").reset_index(drop=True)
@@ -129,8 +129,8 @@ def test_view_options_match_batch_operators(spark, tmp_path):
 
 def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
     """A COW upstream (written by an older version) has no delta files, so
-    its changelog stream would be silently empty."""
+    its changelog would be silently empty."""
     up = legacy_cow("up").path
     vj = CorpusViewJob(up, str(tmp_path / "view"), str(tmp_path / "ctl-view"))
     with pytest.raises(ValueError, match="copy-on-write"):
-        vj.start(spark, str(tmp_path / "cp-view"))
+        vj.poll_once(spark, str(tmp_path / "view.cursor"))

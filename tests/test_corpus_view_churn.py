@@ -49,14 +49,14 @@ def test_high_churn_semi_join_refresh(spark, tmp_path):
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"), high_churn_threshold=10)
-    ckpt = str(tmp_path / "cp-view")
+    cursor = str(tmp_path / "view.cursor")
 
     # seed: 120 conversations — a single catch-up batch over them already
     # crosses the (tiny, test-sized) threshold → semi-join from the start
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=1_200, n_convs=120, seed=900)
     ))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert vj.last_refresh_mode == "semi_join"
     pd.testing.assert_frame_equal(_view_frame(spark, view), _oracle_frame(spark, up))
     n_docs = len(_view_frame(spark, view))
@@ -81,7 +81,7 @@ def test_high_churn_semi_join_refresh(spark, tmp_path):
         ],
     })
     _apply(spark, ingest, up, 1, overwrite)
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert vj.last_refresh_mode == "semi_join"
     got = _view_frame(spark, view)
     pd.testing.assert_frame_equal(got, _oracle_frame(spark, up))
@@ -91,7 +91,7 @@ def test_high_churn_semi_join_refresh(spark, tmp_path):
     # point-read path — the threshold is a cap, not a mode switch
     small = generate_feed_pandas(FeedSpec(n_events=30, n_convs=3, seed=901))
     _apply(spark, ingest, up, 2, small)
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert vj.last_refresh_mode == "point"
     pd.testing.assert_frame_equal(_view_frame(spark, view), _oracle_frame(spark, up))
 
@@ -109,6 +109,6 @@ def test_point_path_unchanged_for_small_churn(spark, tmp_path):
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=400, n_convs=40, seed=902)
     ))
-    vj.run_to_completion(spark, str(tmp_path / "cp-view"))
+    vj.run_until_caught_up(spark, str(tmp_path / "view.cursor"))
     assert vj.last_refresh_mode == "point"
     pd.testing.assert_frame_equal(_view_frame(spark, view), _oracle_frame(spark, up))

@@ -41,10 +41,9 @@ CONTRACT: dict[str, list[str]] = {
     "apply_ddl": ["descriptors"],              # multi_table DDL replication
     # reads ----------------------------------------------------------------
     "read": ["spark", "snapshot_id", "conv_ids", "tag"],  # corpus_view, corpus
-    "read_changes": ["spark", "from_snapshot_id"],        # cascade cursor edge
-    "stream_changes": ["spark"],               # CascadeJob/CorpusViewJob.start
-    "tail_changes": ["spark", "cursor_path"],  # poll_once (all cursor consumers)
-    "commit_cursor": ["cursor_path", "cursor"],  # poll_once commit step
+    "read_changes": ["spark", "from_snapshot_id"],        # DedupIndexJob.poll_once
+    "tail_changes": ["spark", "cursor_path"],  # cursor.poll_window (all consumers)
+    "commit_cursor": ["cursor_path", "cursor"],  # cursor.poll_window commit step
     # writes ---------------------------------------------------------------
     "merge": ["spark"],                        # IngestJob.apply_batch
     "overwrite": ["spark"],                    # initsync

@@ -59,12 +59,12 @@ def test_gated_view_tracks_the_bar_in_both_directions(spark, tmp_path):
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"), doc_filter=GATE)
-    ckpt = str(tmp_path / "cp-view")
+    cursor = str(tmp_path / "view.cursor")
 
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=600, n_convs=40, seed=980)
     ))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     got = (
         LakehouseTable(view).read(spark)
         .select("conv_id", "doc_text", "n_turns", "n_chars")
@@ -102,7 +102,7 @@ def test_gated_view_tracks_the_bar_in_both_directions(spark, tmp_path):
         "payload": ['{"role": "user", "text": "extra turn"}'] * 8,
     })
     _apply(spark, ingest, up, 1, pd.concat([down, upturns], ignore_index=True))
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
 
     got2 = (
         LakehouseTable(view).read(spark)

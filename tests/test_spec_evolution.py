@@ -13,7 +13,7 @@ files the table is mixed-spec:
   equality deletes until the files they may target are rewritten);
 - `migrate_spec` re-layouts old files in bounded, resumable batches,
   after which the spec list collapses and normal folds resume;
-- the changelog (read_changes / stream_changes) never re-emits rows
+- the changelog (read_changes / tail_changes) never re-emits rows
   for evolve/squash/migrate snapshots — they are physical, not logical.
 """
 

@@ -104,7 +104,7 @@ def test_corpus_view_refresh_across_evolve(spark, tmp_path):
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
     vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"))
-    ckpt = str(tmp_path / "cp-view")
+    cursor = str(tmp_path / "view.cursor")
     upstream = LakehouseTable(up)
 
     def apply_shifted(batch_id: int, seed: int) -> None:
@@ -130,12 +130,12 @@ def test_corpus_view_refresh_across_evolve(spark, tmp_path):
         pd.testing.assert_frame_equal(got, exp)
 
     apply_shifted(0, 901)
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert_view_equal()
 
     upstream.evolve_bucket_spec(spark, 16)
     apply_shifted(1, 902)  # churn lands mixed-spec
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert_view_equal()
 
     while not upstream.migrate_spec(spark, max_old_buckets=2).get(
@@ -143,7 +143,7 @@ def test_corpus_view_refresh_across_evolve(spark, tmp_path):
     ) == 0:
         pass
     apply_shifted(2, 903)
-    vj.run_to_completion(spark, ckpt)
+    vj.run_until_caught_up(spark, cursor)
     assert_view_equal()
     assert vj.lag()["lag_lsns"] == 0
 

@@ -1,13 +1,10 @@
-"""Streaming CDC-out: `stream_changes` tails the table's delta layer live
-and must agree with the exact batch changelog (`read_changes`) on the set
-of change rows; compaction folds deltas into base files without the stream
+"""Changelog tail under schema evolution: `tail_changes` surfaces delta
+files written BEFORE a rename or widen under the CURRENT schema (field-id
+projection), and compaction folds deltas into base files without the tail
 re-emitting them.
 """
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pandas as pd
 
@@ -19,50 +16,16 @@ from data_pipeline_spark.streaming.ingest import IngestJob
 SPEC = FeedSpec(n_events=8_000, n_convs=150, seed=11, chunk_size=2_000)
 
 
-def _drain(stream_df, tmp_path, name):
-    out = str(tmp_path / f"sink-{name}")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / f"ckpt-{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    files = glob.glob(os.path.join(out, "*.parquet"))
-    return (
-        pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-        if files
-        else pd.DataFrame()
-    )
+def _tail(spark, tbl, cursor):
+    chg, new_cursor = tbl.tail_changes(spark, cursor)
+    return chg.toPandas().sort_values("lsn").set_index("lsn"), new_cursor
 
 
-def test_stream_changes_matches_batch_changelog(spark, tmp_path):
-    feed = str(tmp_path / "feed")
-    generate_feed(feed, SPEC)
-    tbl_path = str(tmp_path / "t")
-    LakehouseTable(tbl_path).create(TRANSCRIPT_SCHEMA, n_buckets=8, compact_every=10**9)
-    job = IngestJob(tbl_path, str(tmp_path / "ctl"))
-    job.run_to_completion(spark, feed, str(tmp_path / "cp"), max_files_per_trigger=2)
-    tbl = LakehouseTable(tbl_path)
-
-    streamed = _drain(tbl.stream_changes(spark), tmp_path, "s1")
-    batch = tbl.read_changes(spark, 0).toPandas()
-
-    key = ["lsn", "_change_op", "conv_id", "turn_idx"]
-    s = streamed[key + ["text"]].sort_values("lsn").reset_index(drop=True)
-    b = batch[key + ["text"]].sort_values("lsn").reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, b)
-    assert (s["_change_op"] == "D").any()  # tombstones flow too
-
-
-def test_stream_changes_rename_projects_by_field_id(spark, tmp_path):
+def test_tail_changes_rename_projects_by_field_id(spark, tmp_path):
     """VERDICT r2 #4: delta files written BEFORE a rename_column must surface
-    their values under the CURRENT name in a fresh-checkpoint tail — equal to
-    the batch changelog's field-id projection, not null."""
+    their values under the CURRENT name in the tail (field-id projection),
+    not null."""
     import json
-
-    from pyspark.sql import functions as F
 
     tbl_path = str(tmp_path / "t")
     LakehouseTable(tbl_path).create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
@@ -88,17 +51,15 @@ def test_stream_changes_rename_projects_by_field_id(spark, tmp_path):
     ]))
     tbl = LakehouseTable(tbl_path)
 
-    streamed = _drain(tbl.stream_changes(spark), tmp_path, "ren")
-    batch_log = tbl.read_changes(spark, 0).toPandas()
-
-    cols = ["lsn", "_change_op", "conv_id", "turn_idx", "text", "tool_name"]
-    s = streamed[cols].sort_values("lsn").reset_index(drop=True)
-    b = batch_log[cols].sort_values("lsn").reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, b)
+    cursor = str(tmp_path / "c.cursor")
+    s, new_cursor = _tail(spark, tbl, cursor)
+    assert "tool" not in s.columns
     # pre-rename values actually flow under the new name (the r2 gap: null)
-    assert s.set_index("lsn").loc[1, "tool_name"] == "grep"
-    assert s.set_index("lsn").loc[2, "tool_name"] == "sed"
-    assert s.set_index("lsn").loc[4, "tool_name"] == "awk"
+    assert s.loc[1, "tool_name"] == "grep"
+    assert s.loc[2, "tool_name"] == "sed"
+    assert s.loc[4, "tool_name"] == "awk"
+    assert s.loc[5, "tool_name"] == "rg"
+    LakehouseTable.commit_cursor(cursor, new_cursor)
 
     # a historical-name COLLISION: re-add a fresh column named `tool`;
     # old files' `tool` values must keep flowing to tool_name (field id),
@@ -109,20 +70,19 @@ def test_stream_changes_rename_projects_by_field_id(spark, tmp_path):
         (7, "I", None, "c4", 0,
          json.dumps({"role": "user", "text": "d", "tool": "NEW", "tool_name": "cut"})),
     ]))
-    streamed2 = _drain(tbl.stream_changes(spark), tmp_path, "ren2")
-    s2 = streamed2.sort_values("lsn").set_index("lsn")
+    s_new, _ = _tail(spark, tbl, cursor)  # the committed cursor: batch 2 only
+    assert list(s_new.index) == [7]
+    assert s_new.loc[7, "tool_name"] == "cut" and s_new.loc[7, "tool"] == "NEW"
+    s2, _ = _tail(spark, tbl, str(tmp_path / "fresh.cursor"))
     assert s2.loc[1, "tool_name"] == "grep" and pd.isna(s2.loc[1, "tool"])
     assert s2.loc[7, "tool_name"] == "cut" and s2.loc[7, "tool"] == "NEW"
-    b2 = tbl.read_changes(spark, 0).toPandas().sort_values("lsn").set_index("lsn")
-    cols2 = ["_change_op", "conv_id", "turn_idx", "text", "tool_name", "tool"]
-    pd.testing.assert_frame_equal(s2[cols2], b2[cols2])
 
 
-def test_stream_changes_across_widen(spark, tmp_path):
+def test_tail_changes_across_widen(spark, tmp_path):
     """Delta files written before a widen_type store the narrow physical
-    type (int32 turn_idx); the stream declares the current (widened) type —
-    Spark 4's parquet type-widening read must surface them correctly, equal
-    to the batch changelog."""
+    type (int32 turn_idx); the tail reads them at the current (widened)
+    type — Spark 4's parquet type-widening read must surface them
+    correctly."""
     import json
 
     tbl_path = str(tmp_path / "t")
@@ -149,20 +109,17 @@ def test_stream_changes_across_widen(spark, tmp_path):
     )
     job.apply_batch(spark, 1, wide)
     tbl = LakehouseTable(tbl_path)
-    streamed = _drain(tbl.stream_changes(spark), tmp_path, "widen")
-    s = streamed.sort_values("lsn").set_index("lsn")
+    s, _ = _tail(spark, tbl, str(tmp_path / "c.cursor"))
     assert int(s.loc[1, "turn_idx"]) == 7          # narrow file, widened read
     assert int(s.loc[3, "turn_idx"]) == 2**31 + 5  # value needing the widen
-    b = tbl.read_changes(spark, 0).toPandas().sort_values("lsn").set_index("lsn")
-    cols = ["_change_op", "conv_id", "turn_idx", "text"]
-    pd.testing.assert_frame_equal(s[cols], b[cols])
+    assert s.loc[1, "text"] == "narrow" and s.loc[3, "text"] == "wide"
 
 
-def test_stream_changes_compaction_emits_nothing_new(spark, tmp_path):
-    """Compaction folds deltas into base files (no _del= dirs) — a stream
-    that has already consumed the deltas sees NOTHING new from compaction;
-    once expire_snapshots physically removes the folded delta files, even a
-    fresh-checkpoint tail starts empty."""
+def test_tail_changes_compaction_emits_nothing_new(spark, tmp_path):
+    """Compaction folds deltas into base files — a consumer that has
+    already committed the deltas sees NOTHING new from compaction; once
+    expire_snapshots drops the folded history, even a fresh cursor starts
+    empty."""
     feed = str(tmp_path / "feed")
     generate_feed(feed, SPEC)
     tbl_path = str(tmp_path / "t")
@@ -171,14 +128,15 @@ def test_stream_changes_compaction_emits_nothing_new(spark, tmp_path):
     job.run_to_completion(spark, feed, str(tmp_path / "cp"), max_files_per_trigger=2)
     tbl = LakehouseTable(tbl_path)
 
-    before = _drain(tbl.stream_changes(spark), tmp_path, "pre")
-    assert len(before) > 0
+    cursor = str(tmp_path / "c.cursor")
+    before, new_cursor = tbl.tail_changes(spark, cursor)
+    assert before.count() > 0
+    LakehouseTable.commit_cursor(cursor, new_cursor)
     tbl.compact(spark)
-    # same checkpoint, drained again after compaction: the cumulative sink
-    # grows by zero rows (the new base files are invisible to the delta glob)
-    again = _drain(tbl.stream_changes(spark), tmp_path, "pre")
-    assert len(again) == len(before)
-    # GC the folded delta files: a brand-new consumer now starts empty
+    # same cursor after compaction: the window holds only the compact
+    # commit, which carries no change rows
+    after, _ = tbl.tail_changes(spark, cursor)
+    assert after.count() == 0
+    # GC the folded history: a brand-new consumer now starts empty
     tbl.expire_snapshots(keep_last=1)
-    fresh = _drain(tbl.stream_changes(spark), tmp_path, "post")
-    assert len(fresh) == 0
+    assert tbl.tail_changes(spark, str(tmp_path / "fresh.cursor"))[0] is None

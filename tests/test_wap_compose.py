@@ -2,10 +2,9 @@
 publish-respecting consumption path.
 
 `read_changes`/`tail_changes` walk the MAIN parent chain, so staged and
-discarded snapshots are invisible to cursor consumers by construction.
-(`stream_changes` is the one consumer that is NOT WAP-safe — it tails the
-delta FILE layer, where staged files exist before publish; its docstring
-and wap.py both say so.)"""
+discarded snapshots are invisible to cursor consumers by construction —
+and the cursor is the only way an in-engine consumer reads another
+table's changes."""
 
 from __future__ import annotations
 
