@@ -19,7 +19,7 @@ Architecture (Spark-first, columnar end-to-end — see SURVEY.md):
                  per-row Python).
 - ``operators``  last-writer-wins dedup (plain + salted two-phase for hot-key
                  skew), MERGE apply (reference: data_pipeline/applier/*).
-- ``plans``      the copy-on-write lakehouse table format: atomic snapshot
+- ``plans``      the merge-on-read lakehouse table format: atomic snapshot
                  commit log, schema evolution (add / rename / widen) as
                  metadata-only ops — Iceberg semantics emulated because the
                  sandbox has no Iceberg jar; the API is an interface so a

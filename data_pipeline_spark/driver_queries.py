@@ -1522,7 +1522,7 @@ def ensure_replay_feed() -> str:
 )
 def cdc_replay_transcripts(spark, sf_dir):
     """Full engine replay on a deterministic synthetic feed: generate →
-    decode (Arrow UDF) → LWW dedup → COW merge → read final table. The
+    decode (Arrow UDF) → LWW dedup → MOR merge → read final table. The
     DuckDB oracle reduces the SAME fixed-path feed (max-(lsn, op-rank) per
     (conv_id, turn_idx), deletes dropped, role/text/tool/ts from the winning
     full row image) — the engine's flagship e2e carries the identical

@@ -73,9 +73,7 @@ def clone_snapshot(
     os.makedirs(dest_meta, exist_ok=True)
 
     entries = table.files(snap)
-    schema_ids = {snap["schema_id"]} | {
-        e["schema_id"] for e in entries if "schema_id" in e
-    }
+    schema_ids = {snap["schema_id"]} | {e["schema_id"] for e in entries}
 
     n_bytes = 0
     n_linked = 0
@@ -99,7 +97,7 @@ def clone_snapshot(
         n_bytes += os.path.getsize(dst)
 
     meta_files = [f"snapshot-{snap['snapshot_id']:08d}.json"]
-    meta_files += [m["name"] for m in snap.get("manifests", [])]
+    meta_files += [m["name"] for m in snap["manifests"]]
     meta_files += [f"schema-{k}.json" for k in sorted(schema_ids)]
     for fn in meta_files:
         shutil.copy2(os.path.join(table.meta_dir, fn), os.path.join(dest_meta, fn))

@@ -21,9 +21,10 @@ failing loudly on).
 
 Checks:
   refs        hint / branch hints / tags resolve to snapshot files
-  snapshots   every retained snapshot parses; schema + spec registry
-              resolve; watermark is monotonic along retained parents
-              (except into a rollback child, which restores an older one)
+  snapshots   every retained snapshot parses and is format v2; schema +
+              spec registry resolve; watermark is monotonic along retained
+              parents (except into a rollback child, which restores an
+              older one)
   manifests   every referenced manifest exists and parses
   files       every referenced data file exists; no duplicate entries in
               one snapshot; bucket ids within their spec's range
@@ -120,7 +121,7 @@ def fsck(
         try:
             s = table._load_snapshot(fn)
             snaps[s["snapshot_id"]] = s
-        except (json.JSONDecodeError, KeyError, OSError) as e:
+        except (ValueError, KeyError, OSError) as e:  # ValueError: bad JSON, pre-v2
             err("snapshots", f"{fn} unreadable: {type(e).__name__}: {e}", file=fn)
 
     schema_cache: dict[int, dict | None] = {}
@@ -151,14 +152,14 @@ def fsck(
                     snapshot_id=sid)
         specs = table.table_specs(snap)
         seen_paths: set[str] = set()
-        for m in snap.get("manifests", []):
+        for m in snap["manifests"]:
             try:
                 entries = table._manifest_entries(m["name"])
             except (OSError, json.JSONDecodeError) as e:
                 err("manifests", f"{label}: {m['name']} unreadable: {e}",
                     snapshot_id=sid, manifest=m["name"])
                 continue
-            if m.get("entry_count") is not None and m["entry_count"] != len(entries):
+            if m["entry_count"] != len(entries):
                 err("manifests",
                     f"{label}: {m['name']} lists {len(entries)} entries, "
                     f"manifest-list records {m['entry_count']}",
@@ -169,7 +170,7 @@ def fsck(
                 if p in seen_paths:
                     err("files", f"{label}: duplicate entry {p}", snapshot_id=sid, path=p)
                 seen_paths.add(p)
-                spec = table._entry_spec(e)
+                spec = e["spec_id"]
                 if spec not in specs:
                     err("files", f"{label}: {p} written under spec {spec}, "
                         f"not in the snapshot's spec registry {sorted(specs)}",
@@ -179,10 +180,6 @@ def fsck(
                         f"for spec {spec} ({specs[spec]} buckets)",
                         snapshot_id=sid, path=p)
                 referenced.setdefault(p, {"snapshot_id": sid, "entry": e})
-        # legacy inline files list
-        for e in snap.get("files", []):
-            n_entries += 1
-            referenced.setdefault(e["path"], {"snapshot_id": sid, "entry": e})
 
     missing = [p for p in referenced if not os.path.exists(os.path.join(table.path, p))]
     for p in sorted(missing):
@@ -255,7 +252,7 @@ def fsck(
             # stats were recorded against the WRITE-time schema: resolve
             # field ids / column names there (renames since then don't
             # change what the file holds)
-            wsch = schema_of(e["schema_id"]) if "schema_id" in e else None
+            wsch = schema_of(e["schema_id"])
             by_id = {f["id"]: f for f in wsch["fields"]} if wsch else {}
             if e.get("key_min") is not None and by_id:
                 kf = by_id.get(e.get("key_field"))

@@ -14,21 +14,27 @@ O(batch) per commit, no read of existing data; the price is read-side
 reconcile (last-writer-wins over base ∪ deltas), bounded by automatic
 compaction every `compact_every` delta commits. At 10^10 events this is the
 only viable shape: a copy-on-write merge is O(table) per batch. The delta
-files double as the changelog (`read_changes`, `tail_changes`). Tables
-written by older versions may carry copy-on-write history
-(`merge_mode: "cow"`, or no `merge_mode` at all); `merge` refuses them and
-the changelog reads refuse the COW-era snapshots they cannot reconstruct.
+files double as the changelog (`read_changes`, `tail_changes`).
+
+Every snapshot carries `format_version: 2`. `_load_snapshot` is the one
+place that checks it: a table an older version wrote is refused until
+`upgrade()` (`scripts/maintenance.py --table <path> upgrade`) rewrites its
+head once (Iceberg's format-version upgrade).
 
 Layout (paths relative to the table root):
 
     _meta/version-hint.txt      name of the current snapshot json; swapped by
                                 atomic rename (POSIX) — crash-safe; an
                                 orphaned snapshot json is simply unreachable
-    _meta/snapshot-<n>.json     {snapshot_id, parent, kind, batch_id,
-                                 last_batch_id, watermark_lsn, schema_id,
-                                 files:[{path,bucket,schema_id,layer}], ...}
-    _meta/schema-<k>.json       {schema_id, fields:[{id,name,type,former_names}]}
-    data/s<n>/_bucket=<b>/*.parquet
+    _meta/snapshot-<n>.json     {format_version: 2, snapshot_id, parent, kind,
+                                 batch_id, last_batch_id, watermark_lsn,
+                                 schema_id, n_buckets, spec_id, specs,
+                                 update_mode, delta_depth, manifests:[{name,
+                                 buckets, specs, entry_count}], ...}
+    _meta/manifest-<n>-<u>.json {entries:[{path,bucket,schema_id,layer,spec_id}]}
+    _meta/schema-<k>.json       {schema_id, last_column_id, fields:[{id,name,
+                                 type,former_names}]}
+    data/s<n>/_bucket=<b>/[_del=<bool>/]*.parquet   (_del= on merge deltas)
 
 Data files carry engine columns: ``_lsn`` (writer's LSN per row) always, and
 ``_op`` in delta files (I/U/D — D rows are tombstones). Files are bucketed by
@@ -49,6 +55,7 @@ object stores the CAS comes from the catalog).
 from __future__ import annotations
 
 import bisect
+import collections
 import datetime
 import json
 import os
@@ -67,6 +74,9 @@ from data_pipeline_spark.operators.merge import (
 from data_pipeline_spark.schemas import LSN_COL, MERGE_KEY
 
 OP_COL = "_op"
+
+#: Written into every snapshot; `_load_snapshot` refuses any other value.
+FORMAT_VERSION = 2
 
 _TYPES: dict[str, T.DataType] = {
     "string": T.StringType(),
@@ -348,10 +358,14 @@ class LakehouseTable:
     def exists(self) -> bool:
         return os.path.exists(self._hint_path())
 
+    def _head_name(self) -> str:
+        """This ref's head snapshot file name, read from its hint."""
+        with open(self._hint_path()) as f:
+            return f.read().strip()
+
     def current_snapshot(self) -> dict:
         try:
-            with open(self._hint_path()) as f:
-                name = f.read().strip()
+            name = self._head_name()
         except FileNotFoundError:
             if self.ref is not None:
                 raise KeyError(
@@ -360,9 +374,28 @@ class LakehouseTable:
             raise
         return self._load_snapshot(name)
 
-    def _load_snapshot(self, name: str) -> dict:
+    def _read_json(self, name: str) -> dict:
         with open(os.path.join(self.meta_dir, name)) as f:
-            snap = json.load(f)
+            return json.load(f)
+
+    def _head_id(self) -> int | None:
+        """This ref's head snapshot id from the hint's file name alone — no
+        snapshot load, so commit checks also work on a pre-v2 head."""
+        try:
+            return int(self._head_name()[len("snapshot-"):-len(".json")])
+        except FileNotFoundError:
+            return None
+
+    def _load_snapshot(self, name: str) -> dict:
+        """The single format gate: every reader and writer loads snapshots
+        here, so nothing else needs to know what older versions wrote."""
+        snap = self._read_json(name)
+        if snap.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"table {self.path}: {name} predates table format v"
+                f"{FORMAT_VERSION}; run `python scripts/maintenance.py "
+                f"--table {self.path} upgrade` once"
+            )
         return snap
 
     def snapshot_by_id(self, snapshot_id: int) -> dict:
@@ -403,8 +436,7 @@ class LakehouseTable:
 
     def _refs(self) -> dict[str, dict]:
         try:
-            with open(os.path.join(self.meta_dir, "refs.json")) as f:
-                return json.load(f)
+            return self._read_json("refs.json")
         except FileNotFoundError:
             return {}
 
@@ -602,38 +634,30 @@ class LakehouseTable:
         the picked batch_id, so a checkpoint redelivery of that batch on
         this ref is a no-op.
 
-        Refuses: non-merge snapshots, COW merges (base rewrites can't be
-        re-layered), bucket-layout mismatch (a rebucket between fork and
-        pick re-routes keys), and double-picks (all files already present →
-        skipped, idempotent)."""
+        Refuses: non-merge snapshots, bucket-layout mismatch (a rebucket
+        between fork and pick re-routes keys), and double-picks (all files
+        already present → skipped, idempotent)."""
         src = self.snapshot_by_id(snapshot_id)
         cur = self.current_snapshot()
         if src["kind"] != "merge":
             raise ValueError(
                 f"cherry_pick needs a merge snapshot, got {src['kind']!r}"
             )
-        if src["n_buckets"] != cur["n_buckets"] or src.get("spec_id", 0) != cur.get(
-            "spec_id", 0
-        ):
+        if src["n_buckets"] != cur["n_buckets"] or src["spec_id"] != cur["spec_id"]:
             raise ValueError(
-                f"bucket layout changed (spec {src.get('spec_id', 0)}/"
-                f"{src['n_buckets']} buckets → spec {cur.get('spec_id', 0)}/"
+                f"bucket layout changed (spec {src['spec_id']}/"
+                f"{src['n_buckets']} buckets → spec {cur['spec_id']}/"
                 f"{cur['n_buckets']}); the picked files route keys wrong"
             )
         prefix = f"manifest-{src['snapshot_id']:08d}-"
         picked = [
             e
-            for m in src.get("manifests", [])
+            for m in src["manifests"]
             if m["name"].startswith(prefix)
             for e in self._manifest_entries(m["name"])
         ]
         if not picked:
             return {"skipped": True, "reason": "no files written by snapshot"}
-        if any(e.get("layer", "base") != "delta" for e in picked):
-            raise ValueError(
-                "cherry_pick supports MOR delta commits only (COW merge "
-                "rewrote whole buckets; replay the batch instead)"
-            )
         # idempotency must survive compaction folding the picked files out
         # of the HEAD: check presence across the whole retained chain (the
         # pre-compact snapshots still reference the paths), not just the
@@ -668,7 +692,7 @@ class LakehouseTable:
             [cur.get("watermark_lsn") or 0]
             + [fs["lsn_max"] for fs in self.file_stats(picked) if fs["lsn_max"] is not None]
         )
-        depth = dict(cur.get("delta_depth", {}))
+        depth = dict(cur["delta_depth"])
         for e in picked:
             depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
         src_batch = src.get("batch_id")
@@ -685,7 +709,7 @@ class LakehouseTable:
             ),
             "watermark_lsn": watermark,
             "delta_commits": cur.get("delta_commits", 0) + 1,
-            "manifests": cur.get("manifests", []) + [self._write_manifest(new_id, picked)],
+            "manifests": cur["manifests"] + [self._write_manifest(new_id, picked)],
             "delta_depth": depth,
             "stats": {"picked_snapshot": snapshot_id, "picked_files": len(picked)},
             "committed_at": time.time(),
@@ -699,24 +723,7 @@ class LakehouseTable:
         }
 
     def _load_schema(self, schema_id: int) -> dict:
-        with open(os.path.join(self.meta_dir, f"schema-{schema_id}.json")) as f:
-            return json.load(f)
-
-    def _last_column_id(self, sch: dict) -> int:
-        """Highest field id ever allocated for this table (Iceberg's
-        last-column-id). Tables written before the counter existed backfill
-        it as the max id over EVERY historical schema version — dropped
-        fields keep occupying their ids, so a later add can never reuse
-        one."""
-        if "last_column_id" in sch:
-            return sch["last_column_id"]
-        last = 0
-        for fn in os.listdir(self.meta_dir):
-            if fn.startswith("schema-") and fn.endswith(".json"):
-                with open(os.path.join(self.meta_dir, fn)) as f:
-                    hist = json.load(f)
-                last = max(last, *(fld["id"] for fld in hist["fields"]))
-        return last
+        return self._read_json(f"schema-{schema_id}.json")
 
     def schema_struct(self, snap: dict | None = None) -> T.StructType:
         snap = snap or self.current_snapshot()
@@ -758,23 +765,30 @@ class LakehouseTable:
         return {
             "name": name,
             "buckets": sorted({e["bucket"] for e in entries}),
-            "specs": sorted({self._entry_spec(e) for e in entries}),
+            "specs": sorted({e["spec_id"] for e in entries}),
             "entry_count": len(entries),
         }
 
+    def _write_manifests(
+        self, snapshot_id: int, entries: list[dict], target: int = 100_000
+    ) -> list[dict]:
+        """Manifest refs for `entries`, grouped by (layer, bucket) so pruned
+        reads open the fewest manifests; at most `target` entries each."""
+        entries = sorted(entries, key=lambda e: (e["layer"], e["bucket"], e["path"]))
+        return [
+            self._write_manifest(snapshot_id, entries[i : i + target])
+            for i in range(0, len(entries), target)
+        ]
+
     def _manifest_entries(self, name: str) -> list[dict]:
         if name not in self._manifest_cache:
-            with open(os.path.join(self.meta_dir, name)) as f:
-                self._manifest_cache[name] = json.load(f)["entries"]
+            self._manifest_cache[name] = self._read_json(name)["entries"]
         return self._manifest_cache[name]
 
     def _files(self, snap: dict) -> list[dict]:
-        """All file entries of a snapshot (manifest-backed; legacy snapshots
-        with an inline `files` list still read)."""
-        if "files" in snap:
-            return snap["files"]
+        """All file entries of a snapshot, from its manifests."""
         out: list[dict] = []
-        for m in snap.get("manifests", []):
+        for m in snap["manifests"]:
             out.extend(self._manifest_entries(m["name"]))
         return out
 
@@ -797,9 +811,9 @@ class LakehouseTable:
         entry whose bucket NUMBER merely collides with a current-spec
         bucket it is rewriting."""
         carried: list[dict] = []
-        for m in snap.get("manifests", []):
+        for m in snap["manifests"]:
             if not (set(m["buckets"]) & drop_buckets) or (
-                spec_id is not None and "specs" in m and spec_id not in m["specs"]
+                spec_id is not None and spec_id not in m["specs"]
             ):
                 carried.append(m)
                 continue
@@ -809,8 +823,8 @@ class LakehouseTable:
                 for e in entries
                 if not (
                     e["bucket"] in drop_buckets
-                    and (spec_id is None or self._entry_spec(e) == spec_id)
-                    and (layer is None or e.get("layer", "base") == layer)
+                    and (spec_id is None or e["spec_id"] == spec_id)
+                    and (layer is None or e["layer"] == layer)
                 )
             ]
             if len(rest) == len(entries):
@@ -831,12 +845,8 @@ class LakehouseTable:
         dropped entries' spec ids — manifests whose recorded spec set is
         disjoint carry by ref without being opened."""
         carried: list[dict] = []
-        for m in snap.get("manifests", []):
-            if (
-                specs_hint is not None
-                and "specs" in m
-                and not (set(m["specs"]) & specs_hint)
-            ):
+        for m in snap["manifests"]:
+            if specs_hint is not None and not (set(m["specs"]) & specs_hint):
                 carried.append(m)
                 continue
             entries = self._manifest_entries(m["name"])
@@ -860,8 +870,9 @@ class LakehouseTable:
     #: reclaiming that would lose its commit, so it's a conflict instead.
     orphan_reclaim_seconds: float = 60.0
 
-    def _commit(self, snap: dict) -> None:
+    def _commit(self, snap: dict, expected_head: int | None = None) -> None:
         """Write the snapshot json, then atomically swing the version hint.
+        expected_head defaults to the snapshot's parent (see _swing_hint).
 
         CAS protocol: the snapshot JSON is fully written to a temp file,
         then `os.link`ed to its final name — POSIX guarantees exactly one
@@ -892,11 +903,8 @@ class LakehouseTable:
                     linked = True
                     break
                 except FileExistsError:
-                    try:
-                        cur_id = self.current_snapshot()["snapshot_id"]
-                    except FileNotFoundError:
-                        cur_id = -1
-                    if cur_id >= snap["snapshot_id"]:
+                    cur_id = self._head_id()
+                    if cur_id is not None and cur_id >= snap["snapshot_id"]:
                         raise CommitConflictError(
                             f"snapshot {snap['snapshot_id']} already committed "
                             "by another writer"
@@ -928,7 +936,7 @@ class LakehouseTable:
                 "racing a concurrent reclaimer"
             )
         try:
-            self._swing_hint(name, expected_head=snap.get("parent"))
+            self._swing_hint(name, snap["parent"] if expected_head is None else expected_head)
         except CommitConflictError:
             # our snapshot file is dead weight now — remove it so the id
             # doesn't linger as a phantom in the global id space
@@ -991,10 +999,7 @@ class LakehouseTable:
                     f"hint lock {lock} held by a concurrent writer"
                 )
             if expected_head is not None:
-                try:
-                    cur_id = self.current_snapshot()["snapshot_id"]
-                except (FileNotFoundError, KeyError):
-                    cur_id = None
+                cur_id = self._head_id()
                 if cur_id != expected_head:
                     raise CommitConflictError(
                         f"head moved to {cur_id} while this commit was built "
@@ -1027,8 +1032,8 @@ class LakehouseTable:
         """Create an empty table. n_buckets bounds merge/compaction write
         parallelism — size it ≥ 4N executor cores (SURVEY.md §7 hard part c).
         Every merge is a delta commit; compact_every bounds the per-bucket
-        delta depth that triggers auto-compaction. The snapshot records
-        `merge_mode: "mor"` so the table on disk says what it is.
+        delta depth that triggers auto-compaction. Snapshots record
+        `format_version: 2` (see the module docstring).
 
         rewrite_manifests_every: auto-fold the manifest LIST (pure metadata,
         see rewrite_manifests) whenever a merge leaves it at least this
@@ -1083,7 +1088,8 @@ class LakehouseTable:
         columns its UPDATE set — Oracle LogMiner style; sequential-apply
         column fold; delta files persist the `_set_mask` presence bitmask,
         keyed by field id so it survives renames)."""
-        assert update_mode in ("full", "partial")
+        if update_mode not in ("full", "partial"):
+            raise ValueError(f"update_mode must be full|partial, got {update_mode!r}")
         if cluster_order not in ("linear", "zorder"):
             raise ValueError(f"cluster_order must be linear|zorder, got {cluster_order!r}")
         if cluster_order == "zorder":
@@ -1115,6 +1121,7 @@ class LakehouseTable:
         )
         self._commit(
             {
+                "format_version": FORMAT_VERSION,
                 "snapshot_id": 0,
                 "parent": None,
                 "kind": "create",
@@ -1125,7 +1132,6 @@ class LakehouseTable:
                 "n_buckets": n_buckets,
                 "spec_id": 0,
                 "specs": {"0": n_buckets},
-                "merge_mode": "mor",
                 "update_mode": update_mode,
                 "compact_every": compact_every,
                 "rewrite_manifests_every": rewrite_manifests_every,
@@ -1205,12 +1211,12 @@ class LakehouseTable:
             entries = [
                 e
                 for e in entries
-                if e["bucket"] in bucket_sets.get(self._entry_spec(e), ())
+                if e["bucket"] in bucket_sets.get(e["spec_id"], ())
             ]
         elif buckets is not None:
             entries = [e for e in entries if e["bucket"] in buckets]
-        base_e = [e for e in entries if e.get("layer", "base") == "base"]
-        delta_e = [e for e in entries if e.get("layer") == "delta"]
+        base_e = [e for e in entries if e["layer"] == "base"]
+        delta_e = [e for e in entries if e["layer"] == "delta"]
         data_cols = [f["name"] for f in self._load_schema(snap["schema_id"])["fields"]]
 
         partial = self.update_mode(snap) == "partial"
@@ -1372,12 +1378,12 @@ class LakehouseTable:
             kept = [
                 e
                 for e in kept
-                if e["bucket"] in bucket_sets.get(self._entry_spec(e), set())
+                if e["bucket"] in bucket_sets.get(e["spec_id"], set())
             ]
         if conv_ids and (snap.get("cluster_by") or [None])[0] == "conv_id":
             kept = self._prune_by_key(kept, conv_ids, self._field_id(snap, "conv_id"))
         delta_buckets = {
-            (self._entry_spec(e), e["bucket"]) for e in kept if e.get("layer") == "delta"
+            (e["spec_id"], e["bucket"]) for e in kept if e["layer"] == "delta"
         }
         if where:
             kept = self._prune_by_preds(kept, self._parse_preds(snap, where), snap)
@@ -1394,12 +1400,9 @@ class LakehouseTable:
 
     # -------------------------------------------------- partition-spec state
     def spec_id(self, snap: dict | None = None) -> int:
-        """Current write-spec id. Legacy snapshots (pre-spec-evolution) are
-        spec 0 by definition: every file they reference was written under
-        the snapshot's single n_buckets (eager rebucket rewrites all files,
-        so the single-spec invariant held)."""
+        """Current write-spec id."""
         snap = snap or self.current_snapshot()
-        return snap.get("spec_id", 0)
+        return snap["spec_id"]
 
     def table_specs(self, snap: dict | None = None) -> dict[int, int]:
         """spec_id → n_buckets for every spec that may still own live files
@@ -1407,14 +1410,7 @@ class LakehouseTable:
         tables that never evolved; two entries between evolve_bucket_spec
         and the completion of migrate_spec."""
         snap = snap or self.current_snapshot()
-        specs = snap.get("specs")
-        if specs is None:
-            return {self.spec_id(snap): snap["n_buckets"]}
-        return {int(s): int(n) for s, n in specs.items()}
-
-    @staticmethod
-    def _entry_spec(e: dict) -> int:
-        return e.get("spec_id", 0)
+        return {int(s): int(n) for s, n in snap["specs"].items()}
 
     def _field_id(self, snap: dict, name: str) -> int | None:
         """Field id of `name` in the snapshot's schema, or None."""
@@ -1432,7 +1428,7 @@ class LakehouseTable:
         if len(self.table_specs(snap)) <= 1:
             return False
         cur = self.spec_id(snap)
-        return any(self._entry_spec(e) != cur for e in self._files(snap))
+        return any(e["spec_id"] != cur for e in self._files(snap))
 
     def _buckets_by_spec(
         self, spark: SparkSession, conv_ids: list[str], specs: dict[int, int]
@@ -1452,7 +1448,7 @@ class LakehouseTable:
 
     def update_mode(self, snap: dict | None = None) -> str:
         snap = snap or self.current_snapshot()
-        return snap.get("update_mode", "full")
+        return snap["update_mode"]
 
     def field_bits(self, snap: dict | None = None) -> dict[str, int]:
         """Payload column name → field id (= its bit in `_set_mask`) for the
@@ -1813,15 +1809,15 @@ class LakehouseTable:
         if snap is not None and self._mixed_spec(snap):
             return entries
         delta_buckets = {
-            (self._entry_spec(e), e["bucket"])
+            (e["spec_id"], e["bucket"])
             for e in entries
-            if e.get("layer") == "delta"
+            if e["layer"] == "delta"
         }
 
         def keep(e: dict) -> bool:
-            if e.get("layer") == "delta":
+            if e["layer"] == "delta":
                 return True
-            if (self._entry_spec(e), e["bucket"]) in delta_buckets:
+            if (e["spec_id"], e["bucket"]) in delta_buckets:
                 return True
             cs = e.get("col_stats") or {}
             for fid, op, ev in active:
@@ -1906,18 +1902,8 @@ class LakehouseTable:
 
         Write-first: the changeset is written in ONE pass (decode →
         collapse → bucketed write, no persist, no probe job), then lineage
-        metrics and the watermark come from the written files' footers.
-
-        Raises ValueError on a table whose snapshot is not `merge_mode:
-        "mor"` (copy-on-write history written by an older version): delta
-        layers stacked on it would make its changelog unreadable."""
+        metrics and the watermark come from the written files' footers."""
         snap = self.current_snapshot()
-        if snap.get("merge_mode", "cow") != "mor":
-            raise ValueError(
-                f"table {self.path} has copy-on-write history "
-                f"(merge_mode={snap.get('merge_mode', 'cow')!r}); merge "
-                "writes delta commits only — rebuild it as a new table"
-            )
         if batch_id <= snap["last_batch_id"]:
             return {"skipped": True, "batch_id": batch_id, "snapshot_id": snap["snapshot_id"]}
 
@@ -2025,7 +2011,7 @@ class LakehouseTable:
         )
         # O(batch) commit metadata: one new manifest + incremental per-bucket
         # delta depth; prior manifests carry by reference.
-        depth = dict(snap.get("delta_depth", {}))
+        depth = dict(snap["delta_depth"])
         for e in entries:
             depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
         new = {
@@ -2037,7 +2023,7 @@ class LakehouseTable:
             "last_batch_id": batch_id,
             "watermark_lsn": new_watermark,
             "delta_commits": snap.get("delta_commits", 0) + 1,
-            "manifests": snap.get("manifests", []) + [self._write_manifest(new_id, entries)],
+            "manifests": snap["manifests"] + [self._write_manifest(new_id, entries)],
             "delta_depth": depth,
             "stats": {"affected_buckets": len(bucket_metrics)},
             "committed_at": time.time(),
@@ -2057,7 +2043,7 @@ class LakehouseTable:
         rewrite_every = snap.get("rewrite_manifests_every")
         rewrote = False
         if rewrite_every and not compacted:
-            if len(self.current_snapshot().get("manifests", [])) >= rewrite_every:
+            if len(self.current_snapshot()["manifests"]) >= rewrite_every:
                 rewrote = not self.rewrite_manifests().get("skipped", True)
         return {"skipped": False, "batch_id": batch_id, "snapshot_id": new_id,
                 "affected_buckets": len(bucket_metrics), "compacted": compacted,
@@ -2090,20 +2076,13 @@ class LakehouseTable:
         """Per-bucket delta-file count = that bucket's read amplification,
         keyed by CURRENT-spec bucket id. Maintained INCREMENTALLY in the
         snapshot (merge adds, compact clears) so the per-commit
-        compaction decision is O(n_buckets), not an O(total files) sweep;
-        legacy snapshots fall back to the sweep. During a spec migration
-        the retired spec's un-folded stacks are NOT counted here (their
-        bucket ids live in another keyspace) — they stay visible under the
-        snapshot's `old_delta_depth` and are serviced by migrate_spec,
-        never by compact."""
+        compaction decision is O(n_buckets), not an O(total files) sweep.
+        During a spec migration the retired spec's un-folded stacks are NOT
+        counted here (their bucket ids live in another keyspace) — they
+        stay visible under the snapshot's `old_delta_depth` and are
+        serviced by migrate_spec, never by compact."""
         snap = snap or self.current_snapshot()
-        if "delta_depth" in snap:
-            return {int(b): c for b, c in snap["delta_depth"].items()}
-        depth: dict[int, int] = {}
-        for e in self._files(snap):
-            if e.get("layer") == "delta":
-                depth[e["bucket"]] = depth.get(e["bucket"], 0) + 1
-        return depth
+        return {int(b): c for b, c in snap["delta_depth"].items()}
 
     def compact(self, spark: SparkSession, buckets: set[int] | None = None) -> dict:
         """Fold delta layers into fresh base files — tombstones dropped, one
@@ -2178,9 +2157,9 @@ class LakehouseTable:
         if entries:
             carried.append(self._write_manifest(new_id, entries))
         remaining_depth = {
-            b: c for b, c in snap.get("delta_depth", {}).items() if int(b) not in sel
+            b: c for b, c in snap["delta_depth"].items() if int(b) not in sel
         }
-        prev_total = sum(m["entry_count"] for m in snap.get("manifests", []))
+        prev_total = sum(m["entry_count"] for m in snap["manifests"])
         new = {
             **snap,
             "snapshot_id": new_id,
@@ -2221,8 +2200,8 @@ class LakehouseTable:
         delta_e = [
             e
             for e in self._files(snap)
-            if e.get("layer") == "delta"
-            and self._entry_spec(e) == cur_spec
+            if e["layer"] == "delta"
+            and e["spec_id"] == cur_spec
             and e["bucket"] in sel
         ]
         if not delta_e:
@@ -2257,7 +2236,7 @@ class LakehouseTable:
         if entries:
             carried.append(self._write_manifest(new_id, entries))
         depth = {
-            b: c for b, c in snap.get("delta_depth", {}).items() if int(b) not in sel
+            b: c for b, c in snap["delta_depth"].items() if int(b) not in sel
         }
         for e in entries:
             depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
@@ -2307,20 +2286,14 @@ class LakehouseTable:
 
         No-op ({"skipped": True}) when the list is already that small."""
         snap = self.current_snapshot()
-        manifests = snap.get("manifests", [])
+        manifests = snap["manifests"]
         entries = self._files(snap)
         target = max(1, target_entries_per_manifest)
         n_target = max(1, -(-len(entries) // target)) if entries else 0
         if len(manifests) <= n_target:
             return {"skipped": True, "n_manifests": len(manifests)}
         new_id = self._next_id(snap)
-        entries = sorted(
-            entries, key=lambda e: (e.get("layer", ""), e["bucket"], e["path"])
-        )
-        refs = [
-            self._write_manifest(new_id, entries[i : i + target])
-            for i in range(0, len(entries), target)
-        ]
+        refs = self._write_manifests(new_id, entries, target)
         new = {
             **snap,
             "snapshot_id": new_id,
@@ -2415,9 +2388,6 @@ class LakehouseTable:
         compaction squashes instead of folding (tombstones must outlive any
         old-spec base row they shadow — see _squash).
 
-        Refuses tables with copy-on-write history (older versions): a COW
-        merge rewrote whole buckets in place, which requires a single
-        consistent bucket→file layout (use rebucket).
         One migration at a time: evolving again while old-spec files remain
         would stack three live specs — finish migrate_spec first.
 
@@ -2434,11 +2404,6 @@ class LakehouseTable:
 
         def attempt() -> dict:
             snap = self.current_snapshot()
-            if snap.get("merge_mode", "cow") != "mor":
-                raise ValueError(
-                    "evolve_bucket_spec needs merge_mode='mor'; this table "
-                    "has copy-on-write history — use rebucket"
-                )
             if new_n_buckets == snap["n_buckets"]:
                 return {"skipped": True, "n_buckets": new_n_buckets}
             if self._mixed_spec(snap):
@@ -2477,7 +2442,7 @@ class LakehouseTable:
                 "delta_depth": {},
                 "old_delta_depth": {
                     b: c
-                    for b, c in snap.get("delta_depth", {}).items()
+                    for b, c in snap["delta_depth"].items()
                     if c
                 },
                 # an empty table collapses specs immediately (above): never
@@ -2533,7 +2498,7 @@ class LakehouseTable:
     ) -> dict:
         snap = self.current_snapshot()
         cur_spec = self.spec_id(snap)
-        old = [e for e in self._files(snap) if self._entry_spec(e) != cur_spec]
+        old = [e for e in self._files(snap) if e["spec_id"] != cur_spec]
         if not old:
             if len(self.table_specs(snap)) > 1:
                 # no old-spec files remain (e.g. a rollback or compaction
@@ -2557,15 +2522,15 @@ class LakehouseTable:
                 }
                 self._commit(new)
             return {"skipped": True, "remaining_old_files": 0}
-        groups = sorted({(self._entry_spec(e), e["bucket"]) for e in old})
+        groups = sorted({(e["spec_id"], e["bucket"]) for e in old})
         if max_old_buckets is not None:
             groups = groups[: max(1, max_old_buckets)]
         chosen_keys = set(groups)
         chosen = [
-            e for e in old if (self._entry_spec(e), e["bucket"]) in chosen_keys
+            e for e in old if (e["spec_id"], e["bucket"]) in chosen_keys
         ]
-        chosen_base = [e for e in chosen if e.get("layer", "base") == "base"]
-        chosen_delta = [e for e in chosen if e.get("layer") == "delta"]
+        chosen_base = [e for e in chosen if e["layer"] == "base"]
+        chosen_delta = [e for e in chosen if e["layer"] == "delta"]
         data_cols = [f["name"] for f in self._load_schema(snap["schema_id"])["fields"]]
 
         # Pure re-layout of BOTH layers, no fold: base rows move with their
@@ -2619,7 +2584,7 @@ class LakehouseTable:
         # migrated delta stacks now live under current-spec buckets: count
         # them in delta_depth so auto-compaction sees them, and retire
         # their old-spec observability entries
-        depth = dict(snap.get("delta_depth", {}))
+        depth = dict(snap["delta_depth"])
         for b in delta_buckets:
             depth[str(b)] = depth.get(str(b), 0) + 1
         migrated_old = {b for _s, b in groups}
@@ -2676,7 +2641,7 @@ class LakehouseTable:
         sch = self._load_schema(snap["schema_id"])
         fields = [dict(f) for f in sch["fields"]]
         by_name = {f["name"]: f for f in fields}
-        last_column_id = self._last_column_id(sch)
+        last_column_id = sch["last_column_id"]
         for d in descriptors:
             action = d["action"]
             if action == "create_table":
@@ -2735,7 +2700,7 @@ class LakehouseTable:
                 # old values do not resurface (Iceberg drop semantics).
             else:
                 raise ValueError(f"unknown DDL action {action}")
-        if fields == sch["fields"] and last_column_id == self._last_column_id(sch):
+        if fields == sch["fields"] and last_column_id == sch["last_column_id"]:
             # every descriptor was a replay/create no-op: committing anyway
             # would bump schema_id + append a 'ddl' snapshot on EVERY replay
             # of the batch (checkpoint recovery, create_table fan-out) —
@@ -2846,16 +2811,12 @@ class LakehouseTable:
         # it through datetime (µs-quantized) — without quantizing both
         # sides, a µs-truncated timestamp resolves to the PREVIOUS snapshot
         tsq = round(ts * 1e6)
-        cands = [
-            s for s in self.history()
-            if s.get("committed_at") is not None
-            and round(s["committed_at"] * 1e6) <= tsq
-        ]
+        cands = [s for s in self.history() if round(s["committed_at"] * 1e6) <= tsq]
         if not cands:
             oldest = self.history()[0]
             raise ValueError(
                 f"no retained snapshot at or before ts={ts} "
-                f"(oldest retained committed_at={oldest.get('committed_at')})"
+                f"(oldest retained committed_at={oldest['committed_at']})"
             )
         return max(cands, key=lambda s: (round(s["committed_at"] * 1e6), s["snapshot_id"]))
 
@@ -2874,12 +2835,11 @@ class LakehouseTable:
                 (
                     s["snapshot_id"], s.get("parent"), s["kind"],
                     s.get("batch_id"), s.get("watermark_lsn"),
-                    s.get("schema_id"), s.get("spec_id", 0),
-                    len(s.get("manifests") or []),
+                    s.get("schema_id"), s["spec_id"],
+                    len(s["manifests"]),
                     datetime.datetime.fromtimestamp(
                         s["committed_at"], tz=datetime.timezone.utc
-                    ).replace(tzinfo=None)
-                    if s.get("committed_at") is not None else None,
+                    ).replace(tzinfo=None),
                 )
                 for s in self.history()
             ]
@@ -2899,8 +2859,8 @@ class LakehouseTable:
             snap = self.current_snapshot()
             rows = [
                 (
-                    e["path"], e["bucket"], e.get("layer", "base"),
-                    self._entry_spec(e), e.get("schema_id"),
+                    e["path"], e["bucket"], e["layer"],
+                    e["spec_id"], e.get("schema_id"),
                     bool(e.get("is_delete", False)),
                     # declared StringType but _record_stats also stores
                     # int/float bounds for numeric cluster keys — stringify
@@ -2929,7 +2889,7 @@ class LakehouseTable:
                 (m["name"], m.get("entry_count"),
                  min(m["buckets"]) if m.get("buckets") else None,
                  max(m["buckets"]) if m.get("buckets") else None)
-                for m in snap.get("manifests") or []
+                for m in snap["manifests"]
             ]
             schema = T.StructType([
                 T.StructField("name", T.StringType()),
@@ -2967,9 +2927,8 @@ class LakehouseTable:
         Emitted columns: _snapshot_id, _batch_id, _change_op (I/U/D — D rows
         are the tombstones), lsn, <table columns> (+ `_set_mask` on partial
         tables: null/-1 = full image). Sources per snapshot kind:
-        - merge (MOR): its delta files — the collapsed changeset verbatim;
-        - merge (COW, written by an older version): not reconstructable
-          from files alone → raises (same trade as Iceberg COW);
+        - merge / cherry-pick: its delta files — the collapsed changeset
+          verbatim;
         - overwrite: every written row, as inserts;
         - create/ddl/compact/rebucket: no logical row changes;
         - rollback: restores old files and writes no change rows for what
@@ -3021,15 +2980,9 @@ class LakehouseTable:
             if s["kind"] in ("merge", "cherry-pick"):
                 # cherry-pick re-references an earlier merge's delta files —
                 # new to THIS chain by path-diff, so they emit here exactly
-                # like the direct merge would have
-                deltas = [e for e in new_entries if e.get("layer") == "delta"]
-                if not deltas:
-                    raise ValueError(
-                        f"snapshot {sid} is a COW merge written by an older "
-                        "version — only delta files are a changelog"
-                    )
+                # like the direct merge would have; both add delta files only
                 extra = [LSN_COL, OP_COL] + ([MASK_COL] if partial else [])
-                df = self._read_parts(spark, cur, deltas, extra)
+                df = self._read_parts(spark, cur, new_entries, extra)
                 df = df.select(
                     F.lit(sid).alias("_snapshot_id"),
                     F.lit(s.get("batch_id")).cast("long").alias("_batch_id"),
@@ -3072,10 +3025,8 @@ class LakehouseTable:
         """Distinct merge keys touched in (from_id, to_id] — derived from
         the window's MOR delta files (tombstones carry keys too). Returns
         None when the key set is not derivable from deltas alone: an
-        overwrite replaces every row, a COW merge (older versions' tables)
-        rewrote whole buckets without isolating its changeset, and a
-        rollback reverts state
-        without writing anything — those windows must diff full snapshots."""
+        overwrite replaces every row, and a rollback reverts state without
+        writing anything — those windows must diff full snapshots."""
         chain = self.history()
         prev_files: set[str] = {
             e["path"]
@@ -3095,22 +3046,7 @@ class LakehouseTable:
             if s["kind"] in ("overwrite", "rollback"):
                 return None
             if s["kind"] in ("merge", "cherry-pick"):
-                d = [e for e in new_entries if e.get("layer") == "delta"]
-                # COW merge: changeset not materialized as deltas. Detect by
-                # snapshot METADATA, not file output — a COW merge whose
-                # changeset deletes every live row in its affected buckets
-                # writes ZERO new files (the folded output is empty), so
-                # `new_entries` alone would misread it as a no-op and the
-                # D rows for those keys would silently vanish from
-                # net_changes. affected_buckets > 0 was recorded by every
-                # non-skipped COW commit; watermark-skipped merges record 0
-                # and correctly fall through as no-ops.
-                if not d and (
-                    new_entries
-                    or (s.get("stats") or {}).get("affected_buckets", 0) > 0
-                ):
-                    return None
-                delta_e.extend(d)
+                delta_e.extend(new_entries)
             # create/ddl/compact/recluster/rebucket/rewrite_manifests/
             # evolve_spec/migrate_spec: no logical row changes
         if not delta_e:
@@ -3172,10 +3108,8 @@ class LakehouseTable:
           semi-joins the full snapshot reads distributed — no id ever lands
           on the driver, one pass over the table.
         Both regimes end in one full-outer join on the merge key. Windows
-        containing an overwrite, a COW merge, or a rollback can't enumerate
-        touched keys from metadata and fall back to a full two-snapshot
-        diff (documented Iceberg trade: changelog consumers should run
-        MOR)."""
+        containing an overwrite or a rollback can't enumerate touched keys
+        from metadata and fall back to a full two-snapshot diff."""
         chain_ids = [s["snapshot_id"] for s in self.history()]
         if from_snapshot_id not in chain_ids:
             raise ValueError(
@@ -3306,6 +3240,68 @@ class LakehouseTable:
         return {"skipped": False, "snapshot_id": new["snapshot_id"], "restored": snapshot_id}
 
     # ------------------------------------------------------------ maintenance
+    def upgrade(self) -> dict:
+        """One-shot, metadata-only upgrade of a table an older version wrote
+        to format v2 (Iceberg's format-version upgrade; no Spark). Reads
+        the pre-v2 head raw, fills what v2 guarantees (`layer`/`spec_id` on
+        entries; `specs`, `update_mode`, `manifests`, `delta_depth`; the
+        schema's `last_column_id`, max over every schema version so dropped
+        ids stay retired), commits it as a root snapshot (`kind: "upgrade"`,
+        old head id in `stats`), then deletes every pre-v2 snapshot json
+        (files only they referenced are left to expire_snapshots).
+        Earlier history is given up as with expire_snapshots: an older
+        cursor gets CursorExpiredError. Refuses while a tag or branch pins
+        a pre-v2 snapshot; on a v2 table it commits nothing and finishes an
+        interrupted cleanup."""
+        if self.ref is not None or self._refs() or self._branch_hints():
+            raise ValueError(
+                f"table {self.path}: tags or branches pin pre-v2 snapshots; "
+                "remove them (untag / drop-branch) before upgrade"
+            )
+        old = self._read_json(self._head_name())
+        new_id = None
+        if old.get("format_version") != FORMAT_VERSION:
+            new_id, spec = self._next_id(old), old.get("spec_id", 0)
+            entries = [{"layer": "base", "spec_id": 0, **e} for e in old.get("files") or [
+                e for m in old.get("manifests", []) for e in self._manifest_entries(m["name"])
+            ]]
+            depth = old.get("delta_depth") or dict(collections.Counter(
+                str(e["bucket"]) for e in entries
+                if e["layer"] == "delta" and e["spec_id"] == spec
+            ))
+            sch = self._load_schema(old["schema_id"])
+            if "last_column_id" not in sch:
+                sch["last_column_id"] = max(
+                    f["id"] for fn in os.listdir(self.meta_dir)
+                    if fn.startswith("schema-") and fn.endswith(".json")
+                    for f in self._read_json(fn)["fields"]
+                )
+                self._write_json(f"schema-{old['schema_id']}.json", sch)
+            self._commit({
+                **{k: v for k, v in old.items() if k not in ("files", "merge_mode")},
+                "format_version": FORMAT_VERSION,
+                "snapshot_id": new_id,
+                "parent": None,
+                "kind": "upgrade",
+                "batch_id": None,
+                "spec_id": spec,
+                "specs": old.get("specs") or {str(spec): old["n_buckets"]},
+                "update_mode": old.get("update_mode", "full"),
+                "manifests": self._write_manifests(new_id, entries),
+                "delta_depth": depth,
+                "stats": {"upgraded_from": old["snapshot_id"]},
+                "committed_at": time.time(),
+            }, expected_head=old["snapshot_id"])
+        stale = [
+            fn for fn in sorted(os.listdir(self.meta_dir))
+            if fn.startswith("snapshot-") and fn.endswith(".json")
+            and self._read_json(fn).get("format_version") != FORMAT_VERSION
+        ]
+        for fn in stale:
+            os.remove(os.path.join(self.meta_dir, fn))
+        return {"skipped": new_id is None, "snapshot_id": self._head_id(),
+                "removed_snapshots": len(stale)}
+
     def expire_snapshots(
         self,
         keep_last: int = 2,
@@ -3415,7 +3411,7 @@ class LakehouseTable:
         live_manifests: set[str] = set()
         for sid in list(keep_ids) + spared_snaps:
             kept = self.snapshot_by_id(sid)
-            live_manifests.update(m["name"] for m in kept.get("manifests", []))
+            live_manifests.update(m["name"] for m in kept["manifests"])
             live_files.update(e["path"] for e in self._files(kept))
 
         removed_files = 0

@@ -8,7 +8,7 @@ The cursor commits only after the apply, so a crash in between re-reads
 the window: an exact redelivery (batch_id = the window's head snapshot id)
 is skipped by the sink's batch_id check, a widened one re-applies old rows
 as LWW no-ops. A window the cursor can't cover (expired retention, an
-upstream `rollback_to`) raises `CursorExpiredError`.
+upstream `rollback_to`, a format `upgrade`) raises `CursorExpiredError`.
 """
 
 from __future__ import annotations
@@ -29,13 +29,7 @@ def poll_window(
     """One poll: `apply(batch_id, changes)` the window since the cursor,
     then commit the cursor. Returns {"applied": False, "cursor"} when there
     is nothing new, else {"applied": True, "batch_id", "cursor", "result":
-    <apply's return>}. Refuses a copy-on-write upstream (older versions'
-    tables), whose changelog would be silently empty."""
-    if upstream.current_snapshot().get("merge_mode") != "mor":
-        raise ValueError(
-            f"changelog upstream {upstream.path} is copy-on-write: COW merges "
-            "produce no delta files, so its changelog would be empty"
-        )
+    <apply's return>}."""
     chg, cursor = upstream.tail_changes(spark, cursor_path)
     if chg is None:
         return {"applied": False, "cursor": cursor}

@@ -45,8 +45,8 @@ members list grow with the dup cluster size — that is a data-quality
 signal, surfaced via the opt-in `max_bucket_members` alert; run exact
 dedup upstream (dedup_exact_docs) to keep clusters honest.
 
-MOR upstream required (COW merges emit no changelog — same contract as
-CorpusViewJob). DML only.
+The upstream's changelog is read through the shared cursor protocol
+(`streaming/cursor.py`), the same contract as CorpusViewJob. DML only.
 """
 
 from __future__ import annotations
@@ -293,7 +293,8 @@ class DedupIndexJob:
                        ids: list[str], new_sig: DataFrame) -> dict:
         """O(churn) path: rewrite only the touched docs' old ∪ new buckets.
         ids: the changed id list, already collected by touched_documents'
-        bounded probe (no second driver round-trip)."""
+        bounded probe. The band keys (≤ 2 × n_bands per doc) are probed the
+        same way: above high_churn_threshold keys, rebuild instead."""
         self.last_refresh_mode = "point"
         changed_ids = spark.createDataFrame(
             [(c,) for c in ids], "conv_id string"
@@ -303,7 +304,10 @@ class DedupIndexJob:
             self._bands_of(old_sig).unionByName(self._bands_of(new_sig))
             .select("key").distinct()
         )
-        keys = [r["key"] for r in affected.collect()]
+        probed = affected.limit(self.high_churn_threshold + 1).collect()
+        if len(probed) > self.high_churn_threshold:
+            return self._refresh_rebuild(spark, batch_id, lsn, changed_ids, new_sig)
+        keys = [r["key"] for r in probed]
         cur_members = self._read_keys(spark, self.bands, keys).select(
             F.col("conv_id").alias("key"),
             F.explode(F.from_json("members", _MEMBERS_T)).alias("member"),

@@ -73,7 +73,8 @@ class IngestJob:
         # fast-probe assumes the chunk files hold CHANGE_EVENT columns.
         batch_reader=None,  # replay_batch counterpart (read_feed_batch shape)
     ):
-        assert on_error in ("abort", "quarantine")
+        if on_error not in ("abort", "quarantine"):
+            raise ValueError(f"on_error must be abort|quarantine, got {on_error!r}")
         self.table = LakehouseTable(table_path, ref=ref)
         self.control_path = control_path
         self.on_error = on_error

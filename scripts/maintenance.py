@@ -3,6 +3,7 @@
 Run via plain `python` or `spark-submit --py-files dist/data_pipeline_spark.zip`:
 
     python scripts/maintenance.py --table <path> status
+    python scripts/maintenance.py --table <path> upgrade
     python scripts/maintenance.py --table <path> history
     python scripts/maintenance.py --table <path> compact [--buckets 3,7,12]
     python scripts/maintenance.py --table <path> expire --keep-last 4
@@ -25,8 +26,10 @@ Run via plain `python` or `spark-submit --py-files dist/data_pipeline_spark.zip`
     python scripts/maintenance.py --table <path> corpus-delta --out /corpora/deltas --cursor /corpora/cursor.json
     python scripts/maintenance.py --table <path> --ref audit status
 
-`status`, `history`, `rewrite-manifests`, the tag commands and all branch
-commands are pure metadata — they never start Spark; the others run the
+`status`, `history`, `upgrade`, `rewrite-manifests`, the tag commands and
+all branch commands are pure metadata — they never start Spark. `upgrade`
+converts a table written by an older version to format v2, once; until
+then every other command refuses it. The others run the
 corresponding LakehouseTable op under a local session. `--ref <branch>`
 points status/history/compact/etc. at a branch head (write-audit-publish).
 """
@@ -47,6 +50,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=8)
     sub = ap.add_subparsers(dest="cmd", required=True)
     sub.add_parser("status")
+    sub.add_parser("upgrade", help="one-shot metadata upgrade to format v2")
     sub.add_parser("history")
     c = sub.add_parser("compact")
     c.add_argument("--buckets", default=None, help="comma-separated bucket ids; default: all with deltas")
@@ -194,10 +198,10 @@ def main() -> None:
             "n_buckets": snap["n_buckets"],
             "spec_id": table.spec_id(snap),
             "specs": {str(s): n for s, n in table.table_specs(snap).items()},
-            "merge_mode": snap.get("merge_mode"),
-            "update_mode": snap.get("update_mode", "full"),
+            "format_version": snap["format_version"],
+            "update_mode": snap["update_mode"],
             "n_files": len(table.files(snap)),
-            "n_manifests": len(snap.get("manifests", [])),
+            "n_manifests": len(snap["manifests"]),
             "delta_depth": table.delta_depth(snap),
             **(
                 {"old_delta_depth": snap["old_delta_depth"]}
@@ -215,11 +219,14 @@ def main() -> None:
                 "batch_id": s.get("batch_id"),
                 "watermark_lsn": s.get("watermark_lsn"),
                 "schema_id": s["schema_id"],
-                "n_manifests": len(s.get("manifests", [])),
+                "n_manifests": len(s["manifests"]),
                 "committed_at": s.get("committed_at"),
             }))
         return
 
+    if args.cmd == "upgrade":
+        print(json.dumps(table.upgrade()))
+        return
     if args.cmd == "rewrite-manifests":
         print(json.dumps(table.rewrite_manifests(args.target_entries)))
         return

@@ -22,30 +22,81 @@ def spark():
     s.stop()
 
 
-@pytest.fixture
-def legacy_cow(spark, tmp_path):
-    """Factory for a table as an older version wrote it in copy-on-write
-    mode. Each load is an overwrite (batch_id = its index), relabelled by
-    hand-editing the snapshot JSON into what a COW merge left behind: kind
-    "merge", folded base files only, its affected bucket count in stats.
-    Every snapshot says merge_mode "cow"."""
+#: One MOR batch laid over SIX_ROWS by the "mor-inline" legacy shape:
+#: (lsn, op, conv_id, turn_idx, text).
+MOR_CHANGES = [(10, "U", "c0", 0, "t0-v2"), (11, "D", "c1", 0, None), (12, "I", "c9", 0, "n")]
 
-    def make(name: str, loads=(SIX_ROWS,), n_buckets: int = 2) -> LakehouseTable:
+#: The one error every entry point raises on a table written before format v2.
+UPGRADE_ERROR = r"maintenance\.py --table \S+ upgrade"
+
+
+def changes_df(spark, rows):
+    """A deduped merge changeset from (lsn, op, conv_id, turn_idx, text)."""
+    return spark.createDataFrame(
+        [(lsn, op, c, t, "user", text, None, None) for lsn, op, c, t, text in rows],
+        "lsn long, op string, conv_id string, turn_idx int, role string, "
+        "text string, tool string, ts timestamp",
+    )
+
+
+@pytest.fixture
+def legacy_table(spark, tmp_path):
+    """Factory for a table as a version before format v2 left it on disk:
+    built with today's writer, then its metadata hand-edited back. Shapes:
+
+    - "cow": each load is an overwrite relabelled as the copy-on-write
+      merge an older version wrote (kind "merge", folded base files only,
+      its affected bucket count in stats); merge_mode "cow";
+    - "no-merge-mode": the same with no merge_mode field at all;
+    - "mor-inline": SIX_ROWS overwritten, then MOR_CHANGES merged; every
+      snapshot inlines its file list (no manifests, base entries without
+      a layer, no entry spec_id) and has no delta_depth / spec_id / specs;
+    - "no-last-column-id": SIX_ROWS, then the highest-id column (ts)
+      dropped; no schema file records last_column_id.
+
+    No snapshot carries format_version."""
+
+    def make(name: str, shape: str = "cow", loads=(SIX_ROWS,), n_buckets: int = 2):
         tbl = LakehouseTable(str(tmp_path / name))
         tbl.create(TRANSCRIPT_SCHEMA, n_buckets=n_buckets)
+        if shape in ("mor-inline", "no-last-column-id"):
+            loads = (SIX_ROWS,)
         for batch_id, rows in enumerate(loads):
             tbl.overwrite(
                 spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), batch_id=batch_id
             )
+        if shape == "mor-inline":
+            tbl.merge(spark, 1, changes_df(spark, MOR_CHANGES))
+        if shape == "no-last-column-id":
+            tbl.apply_ddl([{"action": "drop_column", "name": "ts"}])
         for fn in os.listdir(tbl.meta_dir):
+            path = os.path.join(tbl.meta_dir, fn)
+            if shape == "no-last-column-id" and fn.startswith("schema-"):
+                sch = tbl._read_json(fn)
+                del sch["last_column_id"]
+                with open(path, "w") as f:
+                    json.dump(sch, f)
             if not (fn.startswith("snapshot-") and fn.endswith(".json")):
                 continue
-            snap = tbl._load_snapshot(fn)
-            snap["merge_mode"] = "cow"
-            if snap["kind"] == "overwrite":
-                snap["kind"] = "merge"
-                snap["stats"] = {"affected_buckets": n_buckets}
-            with open(os.path.join(tbl.meta_dir, fn), "w") as f:
+            snap = tbl._read_json(fn)
+            del snap["format_version"]
+            if shape in ("cow", "no-merge-mode"):
+                if shape == "cow":
+                    snap["merge_mode"] = "cow"
+                if snap["kind"] == "overwrite":
+                    snap["kind"] = "merge"
+                    snap["stats"] = {"affected_buckets": n_buckets}
+            else:
+                snap["merge_mode"] = "mor"
+            if shape == "mor-inline":
+                snap["files"] = [
+                    {k: v for k, v in e.items()
+                     if k != "spec_id" and (k, v) != ("layer", "base")}
+                    for e in tbl._files(snap)
+                ]
+                for k in ("manifests", "delta_depth", "spec_id", "specs"):
+                    del snap[k]
+            with open(path, "w") as f:
                 json.dump(snap, f)
         return tbl
 

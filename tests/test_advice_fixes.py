@@ -29,6 +29,8 @@ from data_pipeline_spark.plans.table_format import (
 from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 
 def _mk_table(tmp_path, name="t", **kw):
     tbl = LakehouseTable(str(tmp_path / name))
@@ -75,17 +77,21 @@ def test_last_column_id_survives_multiple_drop_add_cycles(spark, tmp_path):
 
 
 def test_last_column_id_backfill_for_legacy_schema(tmp_path):
-    """Schemas written before last_column_id existed backfill it from the
-    max id over every historical schema file."""
+    """Schemas written before last_column_id existed: DDL is refused by the
+    format gate, and upgrade backfills the counter from the max id over
+    every historical schema file."""
     tbl = _mk_table(tmp_path)
-    # simulate a legacy schema json (no last_column_id key)
-    sch_path = os.path.join(tbl.meta_dir, "schema-0.json")
-    with open(sch_path) as f:
-        sch = json.load(f)
-    sch.pop("last_column_id")
-    with open(sch_path, "w") as f:
-        json.dump(sch, f)
-    assert tbl._last_column_id(tbl._load_schema(0)) == len(TRANSCRIPT_SCHEMA.fields)
+    # simulate a legacy table: no last_column_id, no format_version
+    for name, key in (("schema-0.json", "last_column_id"),
+                      ("snapshot-00000000.json", "format_version")):
+        doc = tbl._read_json(name)
+        del doc[key]
+        with open(os.path.join(tbl.meta_dir, name), "w") as f:
+            json.dump(doc, f)
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        tbl.apply_ddl([{"action": "add_column", "name": "x", "type": "int"}])
+    tbl.upgrade()
+    assert tbl._load_schema(0)["last_column_id"] == len(TRANSCRIPT_SCHEMA.fields)
 
 
 # --------------------------------------------------- 2. commit CAS liveness
@@ -323,3 +329,16 @@ def test_cursor_expiry_rebootstrap_workflow(spark, tmp_path):
     # fully caught up: next tail is empty
     none_changes, _ = src.tail_changes(spark, cursor)
     assert none_changes is None
+
+
+# --------------------------------------- caller-input checks survive -O
+def test_create_rejects_unknown_update_mode(tmp_path):
+    """An `assert` here vanishes under `python -O`; the check must raise."""
+    with pytest.raises(ValueError, match="update_mode"):
+        _mk_table(tmp_path, update_mode="patch")
+    assert not LakehouseTable(str(tmp_path / "t")).exists()
+
+
+def test_ingest_job_rejects_unknown_on_error(tmp_path):
+    with pytest.raises(ValueError, match="on_error"):
+        IngestJob(str(tmp_path / "t"), str(tmp_path / "ctl"), on_error="ignore")

@@ -15,8 +15,8 @@
    detect the COW by snapshot metadata (stats.affected_buckets) and fall
    back to the full diff instead of treating the window as a no-op. Merges
    now write deltas only, where an all-delete batch writes tombstone
-   deltas that the point path must find; the COW case stays covered on a
-   hand-edited legacy table.
+   deltas that the point path must find; a hand-edited legacy COW table
+   is refused by the format gate until upgrade.
 4. LOW — inspect('files') declares key_min/key_max StringType but numeric
    cluster keys record int bounds → createDataFrame TypeError.
 5. LOW — DDL dropping cluster_by[0] promotes cluster_by[1]; files recorded
@@ -30,12 +30,15 @@ import datetime
 import json
 
 import pandas as pd
+import pytest
 
 from data_pipeline_spark.oracle import reduce_feed
 from data_pipeline_spark.plans.table_format import LakehouseTable, _stat_codec
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
 from data_pipeline_spark.streaming.ingest import IngestJob
+
+from conftest import UPGRADE_ERROR
 
 
 def _mk(spark, tmp_path, name, **create_kw):
@@ -158,20 +161,20 @@ def test_net_changes_cow_all_delete_emits_d_rows(spark, tmp_path):
     assert sorted(zip(got["conv_id"], got["turn_idx"])) == inserted
 
 
-def test_net_changes_legacy_cow_all_delete_falls_back(spark, legacy_cow):
+def test_net_changes_legacy_cow_all_delete_falls_back(spark, legacy_table):
     """A table an older version wrote in copy-on-write mode: its all-delete
-    COW merge wrote no files, so only the snapshot metadata flags it and
-    net_changes must take the full diff."""
+    COW merge wrote no files. The format gate refuses it (no silent empty
+    net changelog); after upgrade the pre-upgrade window is gone and the
+    net changelog starts at the upgrade snapshot."""
     rows = [(f"c{i % 3}", i // 3, "user", f"t{i}", None, None) for i in range(6)]
-    t = legacy_cow("t3", loads=[rows, []])
-    sid_a, sid_b = (s["snapshot_id"] for s in t.history()[1:])
+    t = legacy_table("t3", loads=[rows, []])
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        t.net_changes(spark, 1, 2)
+    sid = t.upgrade()["snapshot_id"]
     assert t.read(spark).count() == 0
-    assert t._touched_key_df(spark, sid_a, sid_b) is None
-    got = t.net_changes(spark, sid_a, sid_b).toPandas()
-    assert set(got["_change_op"]) == {"D"}
-    assert sorted(zip(got["conv_id"], got["turn_idx"])) == sorted(
-        (r[0], r[1]) for r in rows
-    )
+    with pytest.raises(ValueError, match="not in retained history"):
+        t.net_changes(spark, 1, sid)
+    assert t.net_changes(spark, sid).count() == 0
 
 
 # ---------------------------------------------------------------- finding 4

@@ -18,6 +18,8 @@ from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_f
 from data_pipeline_spark.streaming.cascade import CascadeJob
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 
 def _mk_upstream(spark, tmp_path, name, seed):
     feed = str(tmp_path / f"feed-{name}")
@@ -48,11 +50,11 @@ def _state(spark, path):
     )
 
 
-def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
-    a = legacy_cow("cow").path
+def test_cow_upstream_refused(spark, tmp_path, legacy_table):
+    a = legacy_table("cow").path
     b = str(tmp_path / "b-cow")
     LakehouseTable(b).create(TRANSCRIPT_SCHEMA, n_buckets=4)
-    with pytest.raises(ValueError, match="copy-on-write"):
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
         CascadeJob(a, b, str(tmp_path / "ctl-b")).poll_once(spark, str(tmp_path / "b.cursor"))
 
 

@@ -19,6 +19,8 @@ from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_feed_pandas
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 SPEC = FeedSpec(n_events=12_000, n_convs=250, seed=77, chunk_size=3_000)
 
 
@@ -112,11 +114,11 @@ def test_changelog_partial_mode_carries_masks(spark, tmp_path):
     pd.testing.assert_frame_equal(_tbl(spark, mirror), _tbl(spark, job.table))
 
 
-def test_cow_merge_changelog_raises(spark, legacy_cow):
-    """A COW merge in the window (older versions' copy-on-write tables)
-    left no changeset behind to read."""
-    with pytest.raises(ValueError, match="COW merge"):
-        legacy_cow("t").read_changes(spark, 0).count()
+def test_cow_merge_changelog_raises(spark, legacy_table):
+    """A COW merge (older versions' copy-on-write tables) left no changeset
+    behind to read; the format gate refuses the table until upgrade."""
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        legacy_table("t").read_changes(spark, 0).count()
 
 
 def test_rollback_restores_state_and_allows_reapply(spark, tmp_path):

@@ -18,6 +18,8 @@ from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 
 def _feed(n, seed, base=0):
     pdf = generate_feed_pandas(FeedSpec(n_events=n, n_convs=40, seed=seed))
@@ -100,15 +102,13 @@ def test_cherry_pick_guards(spark, tmp_path):
         tbl.cherry_pick(merge_id)
 
 
-def test_cherry_pick_cow_refused(legacy_cow):
-    """A COW merge (older versions' copy-on-write tables) rewrote whole
-    buckets as base files — nothing to re-layer."""
-    tbl = legacy_cow("t", loads=[[("c0", 0, "user", "a", None, None)],
-                                 [("c0", 0, "user", "b", None, None)]])
-    first = tbl.history()[1]
-    assert first["kind"] == "merge"
-    with pytest.raises(ValueError, match="MOR delta commits only"):
-        tbl.cherry_pick(first["snapshot_id"])
+def test_cherry_pick_cow_refused(legacy_table):
+    """A COW merge (older versions' copy-on-write tables) is refused by the
+    format gate before anything is re-layered."""
+    tbl = legacy_table("t", loads=[[("c0", 0, "user", "a", None, None)],
+                                   [("c0", 0, "user", "b", None, None)]])
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        tbl.cherry_pick(1)
 
 
 def test_time_based_expiry_keeps_recent_window(spark, tmp_path):

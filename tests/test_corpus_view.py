@@ -17,6 +17,8 @@ from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
 from data_pipeline_spark.streaming.corpus_view import CorpusViewJob
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 
 def _view_frame(spark, path) -> pd.DataFrame:
     return (
@@ -127,10 +129,10 @@ def test_view_options_match_batch_operators(spark, tmp_path):
     assert want["n_turns"].max() <= 2
 
 
-def test_cow_upstream_refused(spark, tmp_path, legacy_cow):
-    """A COW upstream (written by an older version) has no delta files, so
-    its changelog would be silently empty."""
-    up = legacy_cow("up").path
-    vj = CorpusViewJob(up, str(tmp_path / "view"), str(tmp_path / "ctl-view"))
-    with pytest.raises(ValueError, match="copy-on-write"):
+def test_cow_upstream_refused(spark, tmp_path, legacy_table):
+    """A COW upstream (written by an older version) is refused by the
+    format gate until it is upgraded."""
+    up = legacy_table("up").path
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        vj = CorpusViewJob(up, str(tmp_path / "view"), str(tmp_path / "ctl-view"))
         vj.poll_once(spark, str(tmp_path / "view.cursor"))

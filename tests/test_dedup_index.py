@@ -294,6 +294,20 @@ def test_high_churn_rebuild_regime(spark, tmp_path):
     _assert_index_equals_scratch(spark, job, up)
 
 
+def test_point_refresh_band_keys_bounded(spark, tmp_path):
+    """Touched docs ≤ high_churn_threshold < band keys: the point path's
+    bounded band-key probe falls through to the rebuild instead of
+    collecting every key to the driver, and the index stays exact."""
+    up, ingest, job, cursor = _setup(spark, tmp_path, high_churn_threshold=3)
+    _apply(spark, ingest, up, 0, _dup_feed([
+        (1, "I", "dup-a", 0, "alpha beta gamma delta epsilon zeta"),
+        (2, "I", "dup-b", 0, "eta theta iota kappa lambda mu"),
+    ]))
+    job.run_until_caught_up(spark, cursor)
+    assert job.last_refresh_mode == "rebuild"
+    _assert_index_equals_scratch(spark, job, up)
+
+
 def test_near_dups_for_matches_restricted_pairs(spark, tmp_path):
     up, ingest, job, cursor = _setup(spark, tmp_path)
     _apply(spark, ingest, up, 0, generate_feed_pandas(

@@ -53,6 +53,7 @@ CONTRACT: dict[str, list[str]] = {
     "rewrite_manifests": ["target_entries_per_manifest"],  # manifest scaling
     "expire_snapshots": [],                    # retention
     "rollback_to": ["snapshot_id"],            # changelog rollback
+    "upgrade": [],                             # scripts/maintenance.py upgrade
     # partition-spec evolution (lazy rebucket at scale) --------------------
     "spec_id": ["snap"],                       # write paths stamp entries
     "table_specs": ["snap"],                   # mixed-spec point-read pruning

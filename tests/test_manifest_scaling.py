@@ -42,6 +42,7 @@ def _install_big_inventory(tbl: LakehouseTable, n_manifests=100, per_manifest=10
                 "bucket": m % 16,
                 "schema_id": 0,
                 "layer": "base",
+                "spec_id": 0,
             }
             for _ in range(per_manifest)
         ]

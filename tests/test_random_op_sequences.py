@@ -15,15 +15,16 @@ metadata / maintenance op may ever move:
       spec migration, manifest rewrite are all invisible to it);
   I3  changelog completeness — read_changes over the suffix after the
       remembered snapshot, folded by (lsn, op-rank) max onto the remembered
-      frame, reproduces the final table;
+      frame, reproduces the final table; when a rollback lies in that
+      suffix, read_changes raises CursorExpiredError instead;
   I4  replay idempotence — re-applying a random earlier batch is a no-op.
 
 Ops are drawn so every sequence contains data batches, and maintenance ops
 (compact / recluster / rewrite_manifests / evolve+migrate spec / tag+expire
-/ DDL add+rename+widen) interleave at random positions. Rollback and
-branches are deliberately excluded here: they CHANGE which events are live
-(their composition semantics have dedicated suites); this test pins the
-ops that must all be state-preserving.
+/ DDL add+rename+widen / rollback_to) interleave at random positions. A
+rollback changes which events are live: the oracle tracks the applied
+chunks per snapshot id, and a rollback truncates them to its target's, after
+which the later chunks re-apply as new batches.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.oracle import reduce_feed
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import CursorExpiredError, LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
 from data_pipeline_spark.streaming.ingest import IngestJob
@@ -93,8 +94,8 @@ def _run_sequence(spark, tmp_path, seed: int) -> None:
     )
     chunks = [feed.iloc[i:i + 500] for i in range(0, 4_000, 500)]
     applied: list[pd.DataFrame] = []
+    applied_at = {0: 0}  # snapshot id -> number of chunks applied there
     batch_id = 0
-    n_buckets = 4
     pinned = None  # (snapshot_id, state_frame) remembered mid-sequence
 
     def op_batch():
@@ -124,13 +125,11 @@ def _run_sequence(spark, tmp_path, seed: int) -> None:
         tbl.apply_ddl([{"action": "widen_type", "name": name + "_r", "to": "long"}])
 
     def op_evolve():
-        nonlocal n_buckets
         if tbl._mixed_spec(tbl.current_snapshot()):
             # a prior op_evolve left its migration half-done on purpose —
             # finish it (the engine correctly refuses to stack evolutions)
             tbl.migrate_spec(spark)
-        n_buckets *= 2
-        tbl.evolve_bucket_spec(spark, n_buckets)
+        tbl.evolve_bucket_spec(spark, 2 * tbl.current_snapshot()["n_buckets"])
         # sometimes leave the migration half-done (mixed-spec table state)
         tbl.migrate_spec(spark, max_old_buckets=rng.choice([1, None]))
 
@@ -151,13 +150,28 @@ def _run_sequence(spark, tmp_path, seed: int) -> None:
             f"replay of batch {bid} committed a new snapshot"  # I4
         )
 
+    def op_rollback():
+        nonlocal batch_id
+        head = tbl.current_snapshot()["snapshot_id"]
+        targets = [
+            s["snapshot_id"] for s in tbl.history()
+            if s["snapshot_id"] != head and applied_at.get(s["snapshot_id"], 0) > 0
+        ]
+        if not targets:
+            return
+        sid = rng.choice(targets)
+        tbl.rollback_to(sid)
+        batch_id = applied_at[sid]
+        del applied[batch_id:]
+
     maintenance = [op_compact, op_recluster, op_rewrite_manifests, op_ddl,
-                   op_evolve, op_tag_expire, op_replay]
+                   op_evolve, op_tag_expire, op_replay, op_rollback]
     plan = [op_batch] * 6 + [rng.choice(maintenance) for _ in range(SEQ_LEN - 6)]
     rng.shuffle(plan)
 
     for i, op in enumerate(plan):
         op()
+        applied_at[tbl.current_snapshot()["snapshot_id"]] = len(applied)
         # remember one mid-sequence snapshot after data exists (I2/I3 anchor)
         if pinned is None and applied and i >= len(plan) // 2:
             sid = tbl.current_snapshot()["snapshot_id"]
@@ -189,8 +203,16 @@ def _run_sequence(spark, tmp_path, seed: int) -> None:
         # turn a tagged snapshot into an island (intermediates dropped), in
         # which case read_changes stops at the gap by documented contract —
         # but the island must STILL read byte-identically (I2 above covers
-        # that unconditionally).
-        if sid in [s["snapshot_id"] for s in tbl.history()]:
+        # that unconditionally). A rollback in the suffix wrote no change
+        # rows for what it removed, so the changelog refuses the window.
+        chain = tbl.history()
+        rolled_back = any(
+            s["kind"] == "rollback" and s["snapshot_id"] > sid for s in chain
+        )
+        if sid in [s["snapshot_id"] for s in chain] and rolled_back:
+            with pytest.raises(CursorExpiredError):
+                tbl.read_changes(spark, from_snapshot_id=sid)
+        elif sid in [s["snapshot_id"] for s in chain]:
             ch = (
                 tbl.read_changes(spark, from_snapshot_id=sid)
                 .select("conv_id", "turn_idx", "text",

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import pandas as pd
@@ -15,6 +14,8 @@ from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_feed_pandas, read_feed_batch
 from data_pipeline_spark.streaming.ingest import IngestJob
+
+from conftest import UPGRADE_ERROR
 
 
 SPEC = FeedSpec(n_events=20_000, n_convs=400, seed=42, chunk_size=5_000)
@@ -125,26 +126,23 @@ def test_incremental_batches_match_oracle(spark, feed_dir, tmp_path):
     assert_matches_oracle(spark, table, SPEC)
 
 
-def test_merge_refuses_legacy_cow_table(spark, tmp_path, legacy_cow):
+def test_merge_refuses_legacy_cow_table(spark, tmp_path, legacy_table):
     """A table an older version wrote in copy-on-write mode — merge_mode
-    "cow", or no merge_mode field at all — takes no delta commit: deltas
-    stacked on COW history would leave a changelog no reader can trust."""
-    t = legacy_cow("t")
-    head = t.current_snapshot()
+    "cow", or no merge_mode field at all — takes no commit before upgrade:
+    the format gate names the upgrade command and nothing is written."""
     events = spark.createDataFrame(
         generate_feed_pandas(FeedSpec(n_events=200, n_convs=10, seed=3)),
         schema=CHANGE_EVENT_SCHEMA,
     )
-    job = IngestJob(t.path, str(tmp_path / "ctl"))
-    with pytest.raises(ValueError, match="copy-on-write"):
-        job.apply_batch(spark, 5, events)
-
-    del head["merge_mode"]
-    with open(os.path.join(t.meta_dir, f"snapshot-{head['snapshot_id']:08d}.json"), "w") as f:
-        json.dump(head, f)
-    with pytest.raises(ValueError, match="copy-on-write"):
-        t.merge(spark, 6, events)
-    assert t.current_snapshot() == head
+    for shape in ("cow", "no-merge-mode"):
+        t = legacy_table(shape, shape=shape)
+        before = sorted(os.listdir(t.meta_dir))
+        job = IngestJob(t.path, str(tmp_path / f"ctl-{shape}"))
+        with pytest.raises(ValueError, match=UPGRADE_ERROR):
+            job.apply_batch(spark, 5, events)
+        with pytest.raises(ValueError, match=UPGRADE_ERROR):
+            t.merge(spark, 6, events)
+        assert sorted(os.listdir(t.meta_dir)) == before
 
 
 def test_mor_compaction_preserves_state(spark, feed_dir, tmp_path):

@@ -28,6 +28,8 @@ from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
 from data_pipeline_spark.oracle import reduce_feed
 from data_pipeline_spark.streaming.ingest import IngestJob
 
+from conftest import UPGRADE_ERROR
+
 
 SPEC = FeedSpec(n_events=12_000, n_convs=240, seed=77, chunk_size=12_000)
 
@@ -85,7 +87,7 @@ def test_evolve_mixed_spec_read_and_migrate(spark, tmp_path, feed_pdf):
     # batch 0's un-compacted delta stack) are live before and after
     assert {e["path"] for e in tbl._files(snap)} == files_before
     assert any(
-        e.get("layer") == "delta" and tbl._entry_spec(e) == 0
+        e.get("layer") == "delta" and e["spec_id"] == 0
         for e in tbl._files(snap)
     ), "pending old-spec deltas must survive the evolve unfolded"
     # their read amplification stays visible even though delta_depth (keyed
@@ -97,8 +99,8 @@ def test_evolve_mixed_spec_read_and_migrate(spark, tmp_path, feed_pdf):
     snap = tbl.current_snapshot()
     assert tbl._mixed_spec(snap)
     ent = tbl._files(snap)
-    old = [e for e in ent if tbl._entry_spec(e) == 0]
-    new = [e for e in ent if tbl._entry_spec(e) == 1]
+    old = [e for e in ent if e["spec_id"] == 0]
+    new = [e for e in ent if e["spec_id"] == 1]
     assert old and new
     assert all(e["bucket"] < 4 for e in old)
     assert any(e["bucket"] >= 4 for e in new), "new spec must use 16 buckets"
@@ -117,7 +119,7 @@ def test_evolve_mixed_spec_read_and_migrate(spark, tmp_path, feed_pdf):
     pd.testing.assert_frame_equal(got, exp)
     bsets = tbl._buckets_by_spec(spark, targets, tbl.table_specs(snap))
     assert len(bsets[0]) <= 3 and len(bsets[1]) <= 3
-    kept = [e for e in ent if e["bucket"] in bsets[tbl._entry_spec(e)]]
+    kept = [e for e in ent if e["bucket"] in bsets[e["spec_id"]]]
     assert len(kept) < len(ent), "mixed-spec point read must still prune"
 
     # migrate in bounded batches; table contents never change
@@ -135,7 +137,7 @@ def test_evolve_mixed_spec_read_and_migrate(spark, tmp_path, feed_pdf):
     assert tbl.table_specs(snap) == {1: 16}
     assert not snap.get("old_delta_depth"), "observability entries retire"
     assert not tbl._mixed_spec(snap)
-    assert all(tbl._entry_spec(e) == 1 for e in tbl._files(snap))
+    assert all(e["spec_id"] == 1 for e in tbl._files(snap))
     # migrated files carry key stats on clustered reads only; here just exact
     assert _frame(tbl.read(spark))["text"].tolist() == oracle["text"].tolist()
 
@@ -183,7 +185,7 @@ def test_mixed_spec_compact_squashes_tombstones(spark, tmp_path, feed_pdf):
     # untouched; the one-file-per-bucket invariant is about the CURRENT spec
     by_bucket = {}
     for e in delta_after:
-        if tbl._entry_spec(e) == tbl.spec_id(snap):
+        if e["spec_id"] == tbl.spec_id(snap):
             by_bucket.setdefault(e["bucket"], []).append(e)
     assert by_bucket and all(len(v) == 1 for v in by_bucket.values())
 
@@ -269,7 +271,7 @@ def test_merge_reroutes_stale_bucket_n(spark, tmp_path, feed_pdf):
     snap = tbl.current_snapshot()
     new_deltas = [
         e for e in tbl._files(snap)
-        if e.get("layer") == "delta" and tbl._entry_spec(e) == 1
+        if e.get("layer") == "delta" and e["spec_id"] == 1
     ]
     assert new_deltas, "post-evolve deltas must be written under spec 1"
     # dir bucket must agree with the rows' real spec-1 bucket: the
@@ -278,11 +280,11 @@ def test_merge_reroutes_stale_bucket_n(spark, tmp_path, feed_pdf):
     assert got["text"].tolist() == ["sa", "sb"]
 
 
-def test_evolve_guards(spark, tmp_path, feed_pdf, legacy_cow):
-    """COW tables (written by older versions), double evolution, and
-    cross-spec cherry-pick all fail fast; same-size evolve is a no-op."""
-    with pytest.raises(ValueError, match="copy-on-write"):
-        legacy_cow("cow").evolve_bucket_spec(spark, 8)
+def test_evolve_guards(spark, tmp_path, feed_pdf, legacy_table):
+    """Tables written before format v2, double evolution, and cross-spec
+    cherry-pick all fail fast; same-size evolve is a no-op."""
+    with pytest.raises(ValueError, match=UPGRADE_ERROR):
+        legacy_table("cow").evolve_bucket_spec(spark, 8)
 
     tbl, job = _mk(tmp_path, "t")
     parts = _slices(feed_pdf, 2)
@@ -425,7 +427,7 @@ def test_overwrite_mid_migration_collapses_spec_list(spark, tmp_path, feed_pdf):
     snap = tbl.current_snapshot()
     assert tbl.table_specs(snap) == {1: 8}
     assert not tbl._mixed_spec(snap)
-    assert all(tbl._entry_spec(e) == 1 for e in tbl._files(snap))
+    assert all(e["spec_id"] == 1 for e in tbl._files(snap))
     # and the lifecycle is fully reopened: evolve again works
     assert tbl.evolve_bucket_spec(spark, 16)["spec_id"] == 2
     oracle = reduce_feed(feed_pdf)
@@ -450,7 +452,7 @@ def test_gc_after_migration_drops_old_spec_files(spark, tmp_path, feed_pdf):
         e["path"]
         for s in tbl.history()
         for e in tbl._files(s)
-        if tbl._entry_spec(e) == 0
+        if e["spec_id"] == 0
     }
     assert old_paths
     tbl.expire_snapshots(keep_last=1)

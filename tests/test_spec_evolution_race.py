@@ -73,7 +73,7 @@ def test_evolve_and_migrate_race_live_ingest(spark, tmp_path):
 
     snap = tbl.current_snapshot()
     assert tbl.table_specs(snap) == {1: 16}
-    assert all(tbl._entry_spec(e) == 1 for e in tbl._files(snap))
+    assert all(e["spec_id"] == 1 for e in tbl._files(snap))
 
     expected = reduce_feed(feed)
     actual = (
