@@ -34,10 +34,15 @@ Layout (paths relative to the table root):
     _meta/manifest-<n>-<u>.json {entries:[{path,bucket,schema_id,layer,spec_id}]}
     _meta/schema-<k>.json       {schema_id, last_column_id, fields:[{id,name,
                                  type,former_names}]}
-    data/s<n>/_bucket=<b>/[_del=<bool>/]*.parquet   (_del= on merge deltas)
+    data/s<n>/_bucket=<b>/*.parquet   (one file per touched bucket per merge;
+                                       deltas written before the tombstone
+                                       column sit one level deeper, under
+                                       _del=<bool>/, and still read)
 
-Data files carry engine columns: ``_lsn`` (writer's LSN per row) always, and
-``_op`` in delta files (I/U/D — D rows are tombstones). Files are bucketed by
+Data files carry engine columns: ``_lsn`` (writer's LSN per row) always,
+``_op`` in delta files (I/U/D — D rows are tombstones), and ``_tomb`` in
+merge deltas (true on D rows, null otherwise, so a footer's null count gives
+the file's delete count with no data read). Files are bucketed by
 ``pmod(xxhash64(conv_id), B)`` so merges/compactions parallelize across ≥ B
 writer tasks and reads prune by bucket.
 
@@ -74,6 +79,9 @@ from data_pipeline_spark.operators.merge import (
 from data_pipeline_spark.schemas import LSN_COL, MERGE_KEY
 
 OP_COL = "_op"
+#: Merge deltas only: true on tombstones, null otherwise (see file_stats).
+#: Not "_del": legacy `_del=` partition dirs would clash with it.
+TOMB_COL = "_tomb"
 
 #: Written into every snapshot; `_load_snapshot` refuses any other value.
 FORMAT_VERSION = 2
@@ -318,6 +326,16 @@ def _last_rollback(chain: list[dict], from_id: int, to_id: int) -> int | None:
         if s["kind"] == "rollback" and from_id < s["snapshot_id"] <= to_id
     ]
     return max(ids, default=None)
+
+
+def _bump_depth(depth: dict[str, int], buckets: set[int]) -> dict[str, int]:
+    """`delta_depth` after one delta commit that touched `buckets`: +1 per
+    bucket however many files the commit wrote there, so `compact_every`
+    counts commits."""
+    out = dict(depth)
+    for b in buckets:
+        out[str(b)] = out.get(str(b), 0) + 1
+    return out
 
 
 def _spark_type(name: str) -> T.DataType:
@@ -692,9 +710,7 @@ class LakehouseTable:
             [cur.get("watermark_lsn") or 0]
             + [fs["lsn_max"] for fs in self.file_stats(picked) if fs["lsn_max"] is not None]
         )
-        depth = dict(cur["delta_depth"])
-        for e in picked:
-            depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
+        depth = _bump_depth(cur["delta_depth"], {e["bucket"] for e in picked})
         src_batch = src.get("batch_id")
         new_id = self._next_id(cur)
         new = {
@@ -1463,20 +1479,14 @@ class LakehouseTable:
 
     def _write_data(
         self, df: DataFrame, snapshot_id: int, schema_id: int, n_buckets: int, layer: str,
-        split_deletes: bool = False,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
         spec_id: int = 0,
     ) -> list[dict]:
         """Write rows (with _bucket, _lsn and — for deltas — _op) under
-        data/s<id>/, one shuffle (repartition by _bucket) so writes
-        parallelize across buckets. Returns file entries.
-
-        split_deletes=True (delta layer) additionally partitions by
-        `_del` = (op == 'D') so tombstones land in their own files — then
-        per-bucket applied/deleted row counts AND the watermark LSN all come
-        from parquet FOOTER statistics (file_stats), no data read at all:
-        the same trick as Iceberg manifests carrying per-file stats.
+        data/s<id>/_bucket=<b>/, one shuffle (repartition by _bucket) so
+        writes parallelize across buckets and each bucket gets one file
+        (unless max_records_per_file splits it). Returns file entries.
 
         sort_cols clusters each bucket's rows (sortWithinPartitions — a
         task-local sort, no extra shuffle); with max_records_per_file the
@@ -1485,7 +1495,6 @@ class LakehouseTable:
         min/max skipping needs."""
         rel = f"data/s{snapshot_id}"
         out = os.path.join(self.path, rel)
-        part_cols = ["_bucket", "_del"] if split_deletes else ["_bucket"]
         shaped = df.repartition(n_buckets, F.col("_bucket"))
         if sort_cols:
             shaped = shaped.sortWithinPartitions("_bucket", *sort_cols)
@@ -1506,7 +1515,7 @@ class LakehouseTable:
         tmp_out = os.path.join(
             self.path, "data", f".tmp-s{snapshot_id}-{uuid.uuid4().hex[:8]}"
         )
-        writer.partitionBy(*part_cols).parquet(tmp_out)
+        writer.partitionBy("_bucket").parquet(tmp_out)
         try:
             os.rename(tmp_out, out)
         except OSError:
@@ -1518,31 +1527,25 @@ class LakehouseTable:
                 "allocating the same snapshot id"
             ) from None
         entries = []
-        for root, _dirs, files in sorted(os.walk(out)):
-            parts = {
-                kv.split("=", 1)[0]: kv.split("=", 1)[1]
-                for kv in os.path.relpath(root, out).split(os.sep)
-                if "=" in kv
-            }
-            if "_bucket" not in parts:
+        for d in sorted(os.listdir(out)):
+            if not d.startswith("_bucket="):
                 continue
-            for fn in sorted(files):
+            for fn in sorted(os.listdir(os.path.join(out, d))):
                 if fn.endswith(".parquet"):
-                    e = {
-                        "path": os.path.join(rel, os.path.relpath(root, out), fn),
-                        "bucket": int(parts["_bucket"]),
+                    entries.append({
+                        "path": os.path.join(rel, d, fn),
+                        "bucket": int(d.split("=", 1)[1]),
                         "schema_id": schema_id,
                         "layer": layer,
                         "spec_id": spec_id,
-                    }
-                    if "_del" in parts:
-                        e["is_delete"] = parts["_del"] == "true"
-                    entries.append(e)
+                    })
         return entries
 
     def file_stats(self, entries: list[dict]) -> list[dict]:
         """Per-file (rows, lsn_min, lsn_max) from parquet FOOTERS only —
-        O(files) metadata reads, zero data I/O. On a 1000-executor cluster
+        O(files) metadata reads, zero data I/O — plus `deleted` for files
+        with a `_tomb` column: rows minus its null count, since only
+        tombstones carry a value. On a 1000-executor cluster
         this is the manifest-stats pattern (writers record stats at write
         time); here the driver reads the footers, threaded (pyarrow drops
         the GIL per read) so this per-commit cost is one parallel sweep,
@@ -1553,14 +1556,29 @@ class LakehouseTable:
 
         def one(e: dict) -> dict:
             md = pq.ParquetFile(os.path.join(self.path, e["path"])).metadata
-            lsn_idx = md.schema.names.index(LSN_COL)
+            names = md.schema.names
+            lsn_idx = names.index(LSN_COL)
             lsn_min, lsn_max = None, None
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(lsn_idx).statistics
                 if st is not None and st.has_min_max:
                     lsn_min = st.min if lsn_min is None else min(lsn_min, st.min)
                     lsn_max = st.max if lsn_max is None else max(lsn_max, st.max)
-            return {**e, "rows": md.num_rows, "lsn_min": lsn_min, "lsn_max": lsn_max}
+            out = {**e, "rows": md.num_rows, "lsn_min": lsn_min, "lsn_max": lsn_max}
+            if TOMB_COL in names:
+                tomb_idx = names.index(TOMB_COL)
+                nulls = 0
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(tomb_idx).statistics
+                    if st is None or not st.has_null_count:
+                        # a missing count is unknown, never zero deletes
+                        raise ValueError(
+                            f"{e['path']}: footer has no {TOMB_COL} null "
+                            "count; cannot count the file's deletes"
+                        )
+                    nulls += st.null_count
+                out["deleted"] = md.num_rows - nulls
+            return out
 
         if not entries:
             return []
@@ -1977,7 +1995,7 @@ class LakehouseTable:
         mask_cols = [F.col(MASK_COL)] if self.update_mode(snap) == "partial" else []
         delta = changes.select(
             F.col("_bucket"),
-            (F.col("op") == "D").alias("_del"),
+            F.when(F.col("op") == "D", F.lit(True)).alias(TOMB_COL),
             F.col("lsn").alias(LSN_COL),
             F.col("op").alias(OP_COL),
             *mask_cols,
@@ -1986,23 +2004,22 @@ class LakehouseTable:
         new_id = self._next_id(snap)
         entries = self._write_data(
             delta, new_id, snap["schema_id"], snap["n_buckets"], "delta",
-            split_deletes=True, spec_id=self.spec_id(snap),
+            spec_id=self.spec_id(snap),
         )
         if not entries:
             return self._commit_noop_merge(snap, batch_id)
 
         # Per-bucket lineage from parquet footers only (no data read, no
-        # Spark job): tombstones sit in their own partition dir, so applied
-        # vs deleted counts are file row counts, and the watermark is the
-        # max of the files' _lsn column statistics.
+        # Spark job): applied rows are file row counts, deletes are the
+        # non-null _tomb counts, and the watermark is the max of the files'
+        # _lsn column statistics.
         by_bucket: dict[int, dict] = {}
         for fs in self.file_stats(entries):
             m = by_bucket.setdefault(
                 fs["bucket"], {"bucket": fs["bucket"], "rows": 0, "deleted": 0, "max_lsn": 0}
             )
             m["rows"] += fs["rows"]
-            if fs.get("is_delete"):
-                m["deleted"] += fs["rows"]
+            m["deleted"] += fs["deleted"]
             if fs["lsn_max"] is not None:
                 m["max_lsn"] = max(m["max_lsn"], fs["lsn_max"])
         bucket_metrics = sorted(by_bucket.values(), key=lambda m: m["bucket"])
@@ -2011,9 +2028,7 @@ class LakehouseTable:
         )
         # O(batch) commit metadata: one new manifest + incremental per-bucket
         # delta depth; prior manifests carry by reference.
-        depth = dict(snap["delta_depth"])
-        for e in entries:
-            depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
+        depth = _bump_depth(snap["delta_depth"], {e["bucket"] for e in entries})
         new = {
             **snap,
             "snapshot_id": new_id,
@@ -2073,7 +2088,9 @@ class LakehouseTable:
 
     # ------------------------------------------------------------ compaction
     def delta_depth(self, snap: dict | None = None) -> dict[int, int]:
-        """Per-bucket delta-file count = that bucket's read amplification,
+        """Per-bucket count of delta commits (merge, cherry-pick, squash,
+        migrate) that touched the bucket since its last fold — its read
+        amplification, and what `compact_every` is compared against —
         keyed by CURRENT-spec bucket id. Maintained INCREMENTALLY in the
         snapshot (merge adds, compact clears) so the per-commit
         compaction decision is O(n_buckets), not an O(total files) sweep.
@@ -2193,8 +2210,8 @@ class LakehouseTable:
         read-time-LWW-equivalent to the stack); partial-image tables fold
         per COLUMN at read, so their squash is pure concatenation — file
         count drops, rows are preserved verbatim. Output files are delta
-        layer in the manifest, written without the _del= dir split (only a
-        merge's footer-derived delete counts need it); a squash commits as
+        layer in the manifest, written without `_tomb` (only a merge's
+        footer-derived delete counts need it); a squash commits as
         `compact`, which changelog reads skip like any compaction."""
         cur_spec = self.spec_id(snap)
         delta_e = [
@@ -2228,18 +2245,17 @@ class LakehouseTable:
             )
         entries = self._write_data(
             out, new_id, snap["schema_id"], snap["n_buckets"], "delta",
-            split_deletes=False, spec_id=cur_spec,
+            spec_id=cur_spec,
         )
         carried = self._carry_without_buckets(
             snap, new_id, sel, spec_id=cur_spec, layer="delta"
         )
         if entries:
             carried.append(self._write_manifest(new_id, entries))
-        depth = {
-            b: c for b, c in snap["delta_depth"].items() if int(b) not in sel
-        }
-        for e in entries:
-            depth[str(e["bucket"])] = depth.get(str(e["bucket"]), 0) + 1
+        depth = _bump_depth(
+            {b: c for b, c in snap["delta_depth"].items() if int(b) not in sel},
+            {e["bucket"] for e in entries},
+        )
         new = {
             **snap,
             "snapshot_id": new_id,
@@ -2538,8 +2554,8 @@ class LakehouseTable:
         # layer, so read-time LWW resolves versions exactly as before and a
         # tombstone keeps shadowing whatever it shadowed. Two data dirs
         # (layers carry different columns), one atomic commit. The
-        # re-bucketed delta files are written without the _del= split, like
-        # a squash's; changelog reads skip `migrate_spec` commits.
+        # re-bucketed delta files are written without `_tomb`, like a
+        # squash's; changelog reads skip `migrate_spec` commits.
         base_id = self._next_id(snap)
         new_id = base_id + 1 if chosen_delta else base_id
         entries: list[dict] = []
@@ -2571,7 +2587,7 @@ class LakehouseTable:
             )
             delta_entries = self._write_data(
                 moved, new_id, snap["schema_id"], snap["n_buckets"], "delta",
-                split_deletes=False, spec_id=cur_spec,
+                spec_id=cur_spec,
             )
             delta_buckets = {e["bucket"] for e in delta_entries}
             entries += delta_entries
@@ -2584,9 +2600,7 @@ class LakehouseTable:
         # migrated delta stacks now live under current-spec buckets: count
         # them in delta_depth so auto-compaction sees them, and retire
         # their old-spec observability entries
-        depth = dict(snap["delta_depth"])
-        for b in delta_buckets:
-            depth[str(b)] = depth.get(str(b), 0) + 1
+        depth = _bump_depth(snap["delta_depth"], delta_buckets)
         migrated_old = {b for _s, b in groups}
         old_depth = {
             b: c
@@ -2861,6 +2875,7 @@ class LakehouseTable:
                 (
                     e["path"], e["bucket"], e["layer"],
                     e["spec_id"], e.get("schema_id"),
+                    # set only on deltas written in the legacy _del= layout
                     bool(e.get("is_delete", False)),
                     # declared StringType but _record_stats also stores
                     # int/float bounds for numeric cluster keys — stringify

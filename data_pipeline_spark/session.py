@@ -49,8 +49,9 @@ def get_spark(
         # micros is what Iceberg mandates, and it's what gives timestamp
         # columns footer min/max for manifest col_stats file skipping
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # delta writes partition by (_bucket, _del); concurrent writers keep
-        # the file sink from sorting every task by the partition columns
+        # writes partition by _bucket and one task can hold several buckets;
+        # concurrent writers keep the file sink from sorting every task by
+        # the partition column
         .config("spark.sql.maxConcurrentOutputFileWriters", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

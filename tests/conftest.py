@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
+from pyspark.sql import functions as F
 
-from data_pipeline_spark.plans.table_format import LakehouseTable
-from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
+from data_pipeline_spark.plans.table_format import OP_COL, LakehouseTable
+from data_pipeline_spark.schemas import LSN_COL, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.session import get_spark
 
 #: Six live rows over three conversations (lsn 0, as an overwrite writes).
@@ -37,6 +39,57 @@ def changes_df(spark, rows):
         "lsn long, op string, conv_id string, turn_idx int, role string, "
         "text string, tool string, ts timestamp",
     )
+
+
+def write_legacy_split_delta(spark, tbl: LakehouseTable, batch_id: int, rows) -> int:
+    """Merge `rows` ((lsn, op, conv_id, turn_idx, text)) as a version before
+    the `_tomb` column did: the delta partitioned by (_bucket, _del), so a
+    bucket's tombstones sit in their own `_del=true` file, each manifest
+    entry flagged `is_delete`, and delta_depth bumped once per file.
+    Returns the new snapshot id."""
+    snap = tbl.current_snapshot()
+    data_cols = [f["name"] for f in tbl._load_schema(snap["schema_id"])["fields"]]
+    delta = changes_df(spark, rows).select(
+        tbl.bucket_expr(snap["n_buckets"]).alias("_bucket"),
+        (F.col("op") == "D").alias("_del"),
+        F.col("lsn").alias(LSN_COL),
+        F.col("op").alias(OP_COL),
+        *data_cols,
+    )
+    new_id = tbl._next_id(snap)
+    rel = f"data/s{new_id}"
+    out = os.path.join(tbl.path, rel)
+    delta.repartition(snap["n_buckets"], "_bucket").write.partitionBy(
+        "_bucket", "_del"
+    ).parquet(out)
+    entries, depth = [], dict(snap["delta_depth"])
+    for root, _dirs, files in sorted(os.walk(out)):
+        parts = dict(
+            kv.split("=", 1) for kv in os.path.relpath(root, out).split(os.sep) if "=" in kv
+        )
+        for fn in sorted(f for f in files if f.endswith(".parquet")):
+            b = int(parts["_bucket"])
+            entries.append({
+                "path": os.path.join(rel, os.path.relpath(root, out), fn),
+                "bucket": b, "schema_id": snap["schema_id"], "layer": "delta",
+                "spec_id": snap["spec_id"], "is_delete": parts["_del"] == "true",
+            })
+            depth[str(b)] = depth.get(str(b), 0) + 1
+    tbl._commit({
+        **snap,
+        "snapshot_id": new_id,
+        "parent": snap["snapshot_id"],
+        "kind": "merge",
+        "batch_id": batch_id,
+        "last_batch_id": batch_id,
+        "watermark_lsn": max([snap["watermark_lsn"] or 0] + [r[0] for r in rows]),
+        "delta_commits": snap.get("delta_commits", 0) + 1,
+        "manifests": snap["manifests"] + [tbl._write_manifest(new_id, entries)],
+        "delta_depth": depth,
+        "stats": {"affected_buckets": len({e["bucket"] for e in entries})},
+        "committed_at": time.time(),
+    })
+    return new_id
 
 
 @pytest.fixture

@@ -34,8 +34,10 @@ def pristine(spark, tmp_path_factory):
         TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=3,
         cluster_by=["conv_id", "turn_idx"], stats_columns=["ts"],
     )
+    # four batches: the third compacts (compact_every=3), so the table
+    # holds base files and one pending delta commit
     IngestJob(up, str(base / "ctl")).run_to_completion(
-        spark, feed, str(base / "ck"), max_files_per_trigger=2,
+        spark, feed, str(base / "ck"), max_files_per_trigger=1,
     )
     LakehouseTable(up).tag_snapshot("backup")
     return up

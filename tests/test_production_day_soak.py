@@ -3,7 +3,7 @@ individually raced and pairwise composed elsewhere, running AT ONCE the way
 a real deployment would —
 
   txn-aligned WAP ingest (audit gate, one poisoned batch discarded mid-day)
-  + auto compaction (compact_every=3) and auto manifest rewrite (every 4)
+  + auto compaction (compact_every=3) and auto manifest rewrite (every 3)
   + an online bucket-spec evolution with throttled migration behind ingest
   + snapshot expiry with orphan grace, twice, while consumers hold cursors
   + a corpus view, a delta exporter and a MinHash-LSH dedup index
@@ -89,8 +89,11 @@ def _fold_chain(out_dir: str) -> pd.DataFrame:
 def test_production_day_everything_at_once(spark, tmp_path):
     hub = str(tmp_path / "hub")
     LakehouseTable(hub).create(
+        # every batch touches every bucket, so a compaction lands every 3rd
+        # merge; the manifest list then grows by one per merge in between,
+        # and a rewrite only lands if it is due before the next compaction
         TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=3,
-        rewrite_manifests_every=4,
+        rewrite_manifests_every=3,
     )
     wap = WapIngestJob(
         hub, str(tmp_path / "ctl"),
