@@ -11,10 +11,17 @@ becomes `ALTER TABLE`; nothing else changes.
 One merge strategy, Iceberg's merge-on-read: a merge writes ONLY the
 deduped changeset — including DELETE tombstones — as a delta layer.
 O(batch) per commit, no read of existing data; the price is read-side
-reconcile (last-writer-wins over base ∪ deltas), bounded by automatic
-compaction every `compact_every` delta commits. At 10^10 events this is the
-only viable shape: a copy-on-write merge is O(table) per batch. The delta
-files double as the changelog (`read_changes`, `tail_changes`).
+reconcile (last-writer-wins over base ∪ deltas), bounded by compacting a
+bucket once it holds `compact_every` delta commits. At 10^10 events this is
+the only viable shape: a copy-on-write merge is O(table) per batch. The
+delta files double as the changelog (`read_changes`, `tail_changes`).
+
+`merge` only commits; it never compacts. It reports `maintenance_due`, and
+`maintain` — the one upkeep entry point (hot-bucket compaction, manifest-
+list folds, auto spec migration) — runs as its own CAS commits. The ingest
+job runs it on a background thread after each batch's control record is
+durable (streaming/ingest.py), so compaction stays off the path from a
+commit to its consumers.
 
 Every snapshot carries `format_version: 2`. `_load_snapshot` is the one
 place that checks it: a table an older version wrote is refused until
@@ -1048,15 +1055,15 @@ class LakehouseTable:
         """Create an empty table. n_buckets bounds merge/compaction write
         parallelism — size it ≥ 4N executor cores (SURVEY.md §7 hard part c).
         Every merge is a delta commit; compact_every bounds the per-bucket
-        delta depth that triggers auto-compaction. Snapshots record
+        delta depth at which `maintain` compacts a bucket. Snapshots record
         `format_version: 2` (see the module docstring).
 
         rewrite_manifests_every: auto-fold the manifest LIST (pure metadata,
-        see rewrite_manifests) whenever a merge leaves it at least this
-        long. For tables that compact, compaction already consolidates; set
-        this on tables deliberately kept at compact_every=∞ (cascade hubs)
-        so read-planning cost stays bounded without a manual maintenance
-        schedule.
+        see rewrite_manifests) in `maintain` whenever a merge leaves it at
+        least this long. For tables that compact, compaction already
+        consolidates; set this on tables deliberately kept at compact_every=∞
+        (cascade hubs) so read-planning cost stays bounded without a manual
+        maintenance schedule.
 
         cluster_by: sort order for COMPACTED base files (e.g.
         ["conv_id", "turn_idx"]) — Iceberg's table sort order. Compaction
@@ -1920,7 +1927,12 @@ class LakehouseTable:
 
         Write-first: the changeset is written in ONE pass (decode →
         collapse → bucketed write, no persist, no probe job), then lineage
-        metrics and the watermark come from the written files' footers."""
+        metrics and the watermark come from the written files' footers.
+
+        A merge never maintains: it returns as soon as its commit lands,
+        with `maintenance_due` set when `maintain` has work (a hot bucket,
+        a long manifest list, an armed spec migration). The caller runs
+        `maintain` — `IngestJob` does so on its background runner."""
         snap = self.current_snapshot()
         if batch_id <= snap["last_batch_id"]:
             return {"skipped": True, "batch_id": batch_id, "snapshot_id": snap["snapshot_id"]}
@@ -1958,14 +1970,7 @@ class LakehouseTable:
                 ],
             )
 
-        result = self._merge_mor(spark, snap, batch_id, changes)
-        # Auto-migration piggybacked on every committed merge — including
-        # noop commits (watermark-filtered / fully-duplicate batches), so a
-        # replay run still makes migration progress.
-        mig = self._maybe_auto_migrate(spark, snap)
-        if mig:
-            result["spec_migration"] = mig
-        return result
+        return self._merge_mor(spark, snap, batch_id, changes)
 
     def _commit_noop_merge(self, snap, batch_id) -> dict:
         """Fully-duplicate batch: metadata-only commit advancing batch_id."""
@@ -1981,7 +1986,8 @@ class LakehouseTable:
         }
         self._commit(new)
         return {"skipped": False, "batch_id": batch_id, "snapshot_id": new["snapshot_id"],
-                "affected_buckets": 0, "rows_filtered_by_watermark": True}
+                "affected_buckets": 0, "rows_filtered_by_watermark": True,
+                "maintenance_due": self._maintenance_due(new)}
 
     def _merge_mor(self, spark, snap, batch_id, changes) -> dict:
         """Delta commit, write-first: write the changeset (deletes kept as
@@ -1989,8 +1995,9 @@ class LakehouseTable:
         decode→collapse→write pipeline. Per-bucket lineage metrics (rows,
         deletes, watermark LSN) then come from the written files, reading
         only the three engine columns of the collapsed rows — instead of
-        running the full upstream pipeline a second time. Auto-compacts
-        every `compact_every` deltas."""
+        running the full upstream pipeline a second time. Compaction is
+        not done here: `maintenance_due` tells the caller a bucket reached
+        `compact_every` deltas, and `maintain` folds it."""
         data_cols = [f["name"] for f in self._load_schema(snap["schema_id"])["fields"]]
         mask_cols = [F.col(MASK_COL)] if self.update_mode(snap) == "partial" else []
         delta = changes.select(
@@ -2044,33 +2051,78 @@ class LakehouseTable:
             "committed_at": time.time(),
         }
         self._commit(new)
-        # Auto-compaction, bucket-targeted: fold only buckets whose delta
-        # depth (read amplification) reached compact_every — O(hot buckets)
-        # per maintenance cycle, never O(table).
-        threshold = snap.get("compact_every", 8)
-        hot = {b for b, d in self.delta_depth(new).items() if d >= threshold}
-        compacted = False
-        if hot:
-            self.compact(spark, buckets=hot)
-            compacted = True
-        # Manifest-list upkeep for never-compacting tables (cascade hubs):
-        # pure-metadata fold when the list hits the configured length.
-        rewrite_every = snap.get("rewrite_manifests_every")
-        rewrote = False
-        if rewrite_every and not compacted:
-            if len(self.current_snapshot()["manifests"]) >= rewrite_every:
-                rewrote = not self.rewrite_manifests().get("skipped", True)
         return {"skipped": False, "batch_id": batch_id, "snapshot_id": new_id,
-                "affected_buckets": len(bucket_metrics), "compacted": compacted,
-                "manifests_rewritten": rewrote,
+                "affected_buckets": len(bucket_metrics),
+                "maintenance_due": self._maintenance_due(new),
                 "bucket_metrics": bucket_metrics}
 
+    def _hot_buckets(self, snap: dict) -> set[int]:
+        """Buckets whose delta depth (read amplification) reached
+        `compact_every`."""
+        threshold = snap.get("compact_every", 8)
+        return {b for b, d in self.delta_depth(snap).items() if d >= threshold}
+
+    def _maintenance_due(self, snap: dict) -> bool:
+        """Whether `maintain` would commit anything at `snap` (a dict get
+        and an O(n_buckets) depth scan — cheap enough for every merge)."""
+        every = snap.get("rewrite_manifests_every")
+        return bool(
+            self._hot_buckets(snap)
+            or (every and len(snap["manifests"]) >= every)
+            or (snap.get("auto_migrate_buckets") and len(self.table_specs(snap)) > 1)
+        )
+
+    def maintain(self, spark: SparkSession) -> dict:
+        """The one post-commit upkeep step, run apart from `merge` (Hudi's
+        async MOR compaction; Iceberg's rewrite_data_files job), in order:
+
+          1. compact the hot buckets — those whose delta depth reached
+             `compact_every`. Bucket-targeted: O(hot buckets) per cycle,
+             never O(table);
+          2. otherwise, fold the manifest list when it reached
+             `rewrite_manifests_every` (pure metadata; for never-compacting
+             tables such as cascade hubs);
+          3. then one `auto_migrate_buckets` chunk when a spec migration is
+             armed.
+
+        A no-op when nothing is due. Each step is its own CAS commit, so a
+        concurrent writer makes this raise CommitConflictError (step 3
+        alone gives its chunk up to the next cycle instead). Returns what
+        it committed: {"commits": [{"snapshot_id", "kind"}], "buckets":
+        the compacted bucket ids, "files_rewritten": data files folded,
+        "spec_migration": the migrate chunk's counts or None}."""
+        out: dict = {"commits": [], "buckets": [], "files_rewritten": 0,
+                     "spec_migration": None}
+
+        def committed(r: dict) -> bool:
+            if r.get("skipped", False):
+                return False
+            new = self.snapshot_by_id(r["snapshot_id"])
+            out["commits"].append({"snapshot_id": new["snapshot_id"], "kind": new["kind"]})
+            stats = new["stats"]
+            out["files_rewritten"] += stats.get("compacted_files", stats.get("squashed_files", 0))
+            return True
+
+        snap = self.current_snapshot()
+        hot = self._hot_buckets(snap)
+        every = snap.get("rewrite_manifests_every")
+        if hot:
+            if committed(self.compact(spark, buckets=hot)):
+                out["buckets"] = sorted(hot)
+        elif every and len(snap["manifests"]) >= every:
+            committed(self.rewrite_manifests())
+        mig = self._maybe_auto_migrate(spark, self.current_snapshot())
+        if mig:
+            out["commits"].append({"snapshot_id": mig.pop("snapshot_id"), "kind": "migrate_spec"})
+            out["spec_migration"] = mig
+        return out
+
     def _maybe_auto_migrate(self, spark, snap: dict) -> dict | None:
-        """One SINGLE-SHOT migrate chunk per committed merge when
+        """One SINGLE-SHOT migrate chunk per `maintain` cycle when
         `auto_migrate_buckets` is armed (set by evolve_bucket_spec; see
         its docstring). Exactly one attempt, no retry loop: a lost CAS
         abandons this chunk and the next batch's cycle picks it up — the
-        ingest hot path must never sit in migrate backoff sleeps. The
+        maintenance runner must never sit in migrate backoff sleeps. The
         guard costs one dict get on tables that never evolved."""
         amb = snap.get("auto_migrate_buckets")
         if not amb or len(self.table_specs(self.current_snapshot())) <= 1:
@@ -2082,6 +2134,7 @@ class LakehouseTable:
         if r.get("skipped"):
             return None
         return {
+            "snapshot_id": r["snapshot_id"],
             "migrated_files": r["migrated_files"],
             "remaining_old_files": r["remaining_old_files"],
         }
@@ -2109,8 +2162,8 @@ class LakehouseTable:
         bucket set compacts ONLY those — the 10^10-scale shape: work is
         O(hot buckets), not O(table), so a skewed workload (one conv_id =
         30% of events → one bucket accumulating deltas fastest) never forces
-        a full-table rewrite. Auto-compaction targets buckets whose delta
-        depth reaches `compact_every` (see _merge_mor)."""
+        a full-table rewrite. `maintain` targets buckets whose delta
+        depth reaches `compact_every`."""
         snap = self.current_snapshot()
         with_deltas = set(self.delta_depth(snap))
         sel = with_deltas if buckets is None else (set(buckets) & with_deltas)
@@ -2408,8 +2461,8 @@ class LakehouseTable:
         would stack three live specs — finish migrate_spec first.
 
         auto_migrate_buckets: opt into hands-off migration — every
-        subsequent MOR merge retires this many old-spec buckets as part of
-        its own maintenance cycle (like auto-compaction), so the migration
+        subsequent `maintain` cycle (one per committed ingest batch) retires
+        this many old-spec buckets after its compaction, so the migration
         completes in ceil(old_buckets / N) batches with no operator loop;
         the setting clears itself when the last old-spec file retires."""
         if auto_migrate_buckets is not None and auto_migrate_buckets < 1:

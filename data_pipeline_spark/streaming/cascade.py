@@ -234,7 +234,9 @@ class CascadeJob:
         its apply. auto_ddl=True derives and APPLIES the missing downstream
         DDL (rename-aware via upstream `former_names`, widen-lattice-checked)
         instead of raising — the healing step; returns the descriptors
-        applied."""
+        applied. Waits for the replica's background maintenance first, so
+        a healing DDL commit never races a compaction."""
+        self.job.wait_maintenance()
         return _sync_replica_schema(
             self.upstream, self.job.table, self.columns, auto_ddl=auto_ddl
         )
@@ -255,11 +257,14 @@ class CascadeJob:
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
-        """Poll until the published upstream head is fully applied; returns
-        the number of windows applied."""
-        return run_until_caught_up(
+        """Poll until the published upstream head is fully applied, then
+        wait for the replica's maintenance; returns the number of windows
+        applied."""
+        n = run_until_caught_up(
             lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "edge"
         )
+        self.job.wait_maintenance()
+        return n
 
     def lag(self) -> dict:
         """Replication lag in LSNs (see `cursor.lsn_lag`)."""
@@ -315,6 +320,7 @@ class CascadeFanout:
         }
 
     def sync_schema(self, auto_ddl: bool = False) -> dict[str, list[dict]]:
+        self._wait_maintenance()
         return {
             t.name: _sync_replica_schema(
                 self.upstream, self.jobs[t.name].table, t.columns, auto_ddl=auto_ddl
@@ -350,11 +356,18 @@ class CascadeFanout:
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
-        """Poll until every target reflects the published upstream head;
-        returns the number of windows applied."""
-        return run_until_caught_up(
+        """Poll until every target reflects the published upstream head,
+        then wait for the targets' maintenance; returns the number of
+        windows applied."""
+        n = run_until_caught_up(
             lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "fan-out"
         )
+        self._wait_maintenance()
+        return n
+
+    def _wait_maintenance(self) -> None:
+        for job in self.jobs.values():
+            job.wait_maintenance()
 
     def lag(self) -> dict[str, dict]:
         """Per-target replication lag in LSNs (see `cursor.lsn_lag`). Caveat

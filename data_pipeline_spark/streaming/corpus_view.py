@@ -282,11 +282,14 @@ class CorpusViewJob:
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
-        """Poll until the view reflects the full published upstream head;
-        returns the number of windows applied."""
-        return run_until_caught_up(
+        """Poll until the view reflects the full published upstream head,
+        then wait for the view's maintenance; returns the number of windows
+        applied."""
+        n = run_until_caught_up(
             lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "view"
         )
+        self.job.wait_maintenance()
+        return n
 
     def lag(self) -> dict:
         """Refresh lag in LSNs (see `cursor.lsn_lag`)."""

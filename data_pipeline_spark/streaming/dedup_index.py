@@ -365,6 +365,9 @@ class DedupIndexJob:
             .agg(F.array_sort(F.collect_set("conv_id")).alias("m"))
         )
         self._check_bucket_cap(members)
+        # the overwrite commits outside bands_job: its maintenance must not
+        # be mid-compaction on the same head
+        self.bands_job.wait_maintenance()
         rows = members.select(
             F.col("key").alias("conv_id"),
             F.lit(0).alias("turn_idx"),
@@ -436,9 +439,12 @@ class DedupIndexJob:
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
     ) -> int:
-        return run_until_caught_up(
+        n = run_until_caught_up(
             lambda: self.poll_once(spark, cursor_path)["applied"], max_polls, "index"
         )
+        self.sig_job.wait_maintenance()
+        self.bands_job.wait_maintenance()
+        return n
 
     def lag(self) -> dict:
         return lsn_lag(self.upstream, self.sig)

@@ -12,6 +12,26 @@ Exactly-once = at-least-once replay (checkpoint re-delivers the in-flight
 micro-batch after a crash) × idempotent sink (LakehouseTable.merge skips
 batch_id ≤ last committed). Control rows are written only when a merge
 actually commits, so the audit shows each batch applied exactly once.
+
+Background maintenance: a merge only commits. When it reports
+`maintenance_due`, the job hands `LakehouseTable.maintain` (hot-bucket
+compaction, manifest-list folds, auto spec migration) to its one runner
+thread, after the batch's control record is durable — so the compaction
+overlaps the consumers' polls and the next trigger instead of sitting
+between a commit and its readers (Hudi's async compaction). Join points:
+the job's next `apply_batch` waits for it before reading the head, so a
+job never races its own maintenance for the commit CAS and delta depth at
+merge time stays ≤ `compact_every`; `run_to_completion`, `replay_batch`,
+`flush_pending` and `reprocess_quarantine` wait before returning; the
+cursor consumers wait at the end of `run_until_caught_up`; `WapIngestJob`
+waits before it audits or publishes. Callers that drive `apply_batch` or
+`start_stream` themselves call `wait_maintenance()`. A maintenance error
+never fails a batch: it is alerted as {"kind": "maintenance_error"} and
+the next committed batch submits maintenance again. Backlog bound: when a
+bucket's depth has reached 2 × `compact_every` (the runner kept failing),
+the batch runs `maintain` inline and its errors propagate. Every run
+appends one line to <control>/maintenance.jsonl (batch_id, commits,
+buckets, files_rewritten, wall_s, error).
 """
 
 from __future__ import annotations
@@ -20,6 +40,7 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -51,7 +72,9 @@ class IngestJob:
         # T11): fires with {"kind": "quarantine", batch_id, rows, errors} when
         # records are dead-lettered, {"kind": "abort", batch_id, error} when a
         # batch fails. Every alert is also appended to <control>/alerts.jsonl
-        # (durable audit trail) whether or not a callback is set.
+        # (durable audit trail) whether or not a callback is set; a failed
+        # background maintenance run fires {"kind": "maintenance_error",
+        # batch_id, error}.
         ddl_fast_scan: bool = True,  # driver-side pyarrow DDL probe; MUST be
         # False when apply_batch receives a FILTERED slice of the batch (the
         # file scan sees whole files, not the DF's filters) — multi-table
@@ -98,8 +121,10 @@ class IngestJob:
             ddl_fast_scan = False
         self.ddl_fast_scan = ddl_fast_scan
         self._checkpoint_dir: str | None = None
+        # the background maintenance runner, created on first use
+        self._runner: ThreadPoolExecutor | None = None
+        self._maintenance: Future | None = None
         os.makedirs(control_path, exist_ok=True)
-
 
     def _alert(self, event: dict) -> None:
         """Durable alert row + optional callback (reference mailer analog).
@@ -226,7 +251,12 @@ class IngestJob:
 
         A failing batch fires an "abort" alert (reference: mailer on abort,
         SURVEY.md §2 T11) and re-raises — the stream stops and resumes from
-        the checkpoint."""
+        the checkpoint.
+
+        Waits for the previous batch's background maintenance first; this
+        batch's own maintenance is still running when it returns (see
+        `wait_maintenance`)."""
+        self.wait_maintenance()
         try:
             return self._apply_batch_inner(
                 spark, batch_id, raw, enforce_watermark, ddl_rows
@@ -370,9 +400,50 @@ class IngestJob:
 
         if not result.get("skipped"):
             self._write_control(batch_id, metrics, wall_ms=int((time.monotonic() - t0) * 1000))
+            if result.get("maintenance_due"):
+                self._submit_maintenance(spark, batch_id)
         if debug:
             print(f"[apply_batch {batch_id}] " + " ".join(f"{l}={s:.2f}s" for l, s in marks))
         return result
+
+    # ----------------------------------------------------------- maintenance
+    def _submit_maintenance(self, spark: SparkSession, batch_id: int) -> None:
+        """Hand `maintain` to the runner — or run it inline, errors
+        propagating, once some bucket's backlog reached 2 × compact_every."""
+        snap = self.table.current_snapshot()
+        if max(self.table.delta_depth(snap).values(), default=0) >= 2 * snap.get("compact_every", 8):
+            self._maintain(spark, batch_id, inline=True)
+            return
+        if self._runner is None:
+            self._runner = ThreadPoolExecutor(max_workers=1, thread_name_prefix="ingest-maintenance")
+        self._maintenance = self._runner.submit(self._maintain, spark, batch_id, False)
+
+    def _maintain(self, spark: SparkSession, batch_id: int, inline: bool) -> None:
+        """One `maintain` run, recorded in <control>/maintenance.jsonl."""
+        t0 = time.monotonic()
+        rec = {"batch_id": batch_id, "inline": inline, "commits": [], "buckets": [],
+               "files_rewritten": 0, "spec_migration": None, "error": None}
+        try:
+            rec.update(self.table.maintain(spark))
+        except Exception as e:  # noqa: BLE001 — alerted, retried next batch
+            rec["error"] = f"{type(e).__name__}: {e}"
+            if inline:
+                raise
+            self._alert({"kind": "maintenance_error", "batch_id": batch_id, "error": rec["error"]})
+        finally:
+            rec["wall_s"] = time.monotonic() - t0
+            rec["at"] = datetime.now(timezone.utc).isoformat()
+            with open(os.path.join(self.control_path, "maintenance.jsonl"), "a") as f:
+                f.write(json.dumps(rec) + "\n")
+
+    def wait_maintenance(self) -> None:
+        """Block until this job's background maintenance, if any, has
+        finished. Never raises a maintenance error (those are alerted).
+        Call it after driving `apply_batch` or `start_stream` yourself,
+        before inspecting compaction or writing the table another way."""
+        pending, self._maintenance = self._maintenance, None
+        if pending is not None:
+            pending.result()
 
     def _write_control(self, batch_id: int, metrics: list[dict], wall_ms: int) -> None:
         counts = [m["rows_applied"] for m in metrics] or [0]
@@ -454,6 +525,7 @@ class IngestJob:
         q.awaitTermination()
         if self.txn_aligned and flush_txns:
             self.flush_pending(spark)
+        self.wait_maintenance()
 
     def flush_pending(self, spark: SparkSession) -> dict:
         """Release the still-deferred final transaction after a DRAINED feed
@@ -486,6 +558,7 @@ class IngestJob:
             self.aligner = saved
         self.aligner.mark_flushed(flush_id)
         self.aligner.clear()
+        self.wait_maintenance()
         return result
 
     # ----------------------------------------------------------- batch replay
@@ -499,6 +572,7 @@ class IngestJob:
         result = self.apply_batch(spark, batch_id, raw)
         if self.txn_aligned:
             self.flush_pending(spark)
+        self.wait_maintenance()
         return result
 
     def reprocess_quarantine(
@@ -546,6 +620,7 @@ class IngestJob:
             "conv_id", "turn_idx", "payload",
         )
         result = self.apply_batch(spark, batch_id, env, enforce_watermark=False)
+        self.wait_maintenance()
         processed_root = qdir.rstrip("/") + "-processed"
         os.makedirs(processed_root, exist_ok=True)
         import shutil
@@ -559,4 +634,5 @@ class IngestJob:
         return result
 
     def read_control(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.control_path)
+        # parquet files only: alerts.jsonl and maintenance.jsonl share the dir
+        return spark.read.option("pathGlobFilter", "*.parquet").parquet(self.control_path)

@@ -270,6 +270,7 @@ class MultiTableIngestJob:
             name, df = item
             if name not in self.jobs:
                 raise KeyError(f"table {name!r} is not registered/active")
+            self.jobs[name].wait_maintenance()
             tbl = self.jobs[name].table
             tbl.overwrite(
                 spark, df, watermark_lsn=(watermark_lsns or {}).get(name)
@@ -318,6 +319,8 @@ class MultiTableIngestJob:
         q.awaitTermination()
         if self.aligner is not None and flush_txns:
             self.flush_pending(spark)
+        for job in self.jobs.values():
+            job.wait_maintenance()
 
     def flush_pending(self, spark: SparkSession) -> dict:
         """Release the final deferred transaction after a drained feed (see

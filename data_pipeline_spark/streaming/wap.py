@@ -170,6 +170,7 @@ class WapIngestJob:
 
     # one staged batch + maybe publish — also the unit tests' batch API
     def apply_batch(self, spark: SparkSession, batch_id: int, df: DataFrame) -> dict:
+        self.job.wait_maintenance()
         pre_batch = self.branch.current_snapshot()["snapshot_id"]
         res = self.job.apply_batch(spark, batch_id, df)
         self._since_publish += 1
@@ -182,7 +183,10 @@ class WapIngestJob:
                     batch_id: int | None = None) -> dict:
         """Audit the staged state; fast-forward main on pass. On fail:
         reset the branch to `pre_batch_id` (discarding ONLY the batch whose
-        offsets are still uncommitted) and raise AuditFailedError."""
+        offsets are still uncommitted) and raise AuditFailedError. Waits for
+        the branch's background maintenance first: a branch compaction must
+        not race `fast_forward` or `reset_branch`."""
+        self.job.wait_maintenance()
         published = self.main.current_snapshot()["snapshot_id"]
         staged = self.branch.current_snapshot()["snapshot_id"]
         if staged == published:
@@ -259,3 +263,4 @@ class WapIngestJob:
         q = self.start_stream(spark, feed_dir, checkpoint_dir,
                               max_files_per_trigger, available_now=True)
         q.awaitTermination()
+        self.job.wait_maintenance()

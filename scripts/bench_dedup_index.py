@@ -67,6 +67,7 @@ def bench_one(spark, root: str, events: int, convs: int, buckets: int,
         job.apply_batch(spark, batch, spark.createDataFrame(pdf, schema=CHANGE_EVENT_SCHEMA))
         done += n
         batch += 1
+    job.wait_maintenance()
     t = LakehouseTable(up)
     t.compact(spark)
     load_s = time.time() - t0

@@ -80,6 +80,7 @@ def main() -> None:
         )
         done += n
         batch += 1
+    job.wait_maintenance()
     t = LakehouseTable(path)
     t.compact(spark)
     load_s = time.time() - t0

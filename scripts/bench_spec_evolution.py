@@ -95,6 +95,7 @@ def main() -> None:
                 spark, b, raw.where((F.col("lsn") > a - 1) & (F.col("lsn") <= z))
             )
             if b == args.batches - 2:
+                job.wait_maintenance()
                 tbl.compact(spark)
         return tbl, job
 
@@ -161,6 +162,7 @@ def main() -> None:
             t0 = time.monotonic()
             job.apply_batch(spark, 100 + b, df)
             walls.append(round(time.monotonic() - t0, 2))
+        job.wait_maintenance()
         return walls
 
     auto_walls = timed_batches(auto_job)

@@ -85,6 +85,7 @@ def main() -> None:
             # recorded before its final layout (first base write is linear
             # by design — the normalization needs recorded stats)
             if done == chunk or done >= args.events:
+                job.wait_maintenance()
                 t = LakehouseTable(path)
                 t.compact(spark)
         return LakehouseTable(path)

@@ -50,9 +50,10 @@ def _sorted_rows(df: pd.DataFrame, cols) -> list[tuple]:
 
 
 def test_compact_every_counts_commits(spark, tmp_path):
-    """compact_every=2: a merge with inserts, updates and deletes in every
+    """compact_every=2: a batch with inserts, updates and deletes in every
     bucket is one delta commit — no compaction, depth 1, one delta file per
-    bucket — and the second merge triggers exactly one compaction."""
+    bucket — and the second batch's background maintenance makes exactly
+    one compaction."""
     tbl = LakehouseTable(str(tmp_path / "t"))
     tbl.create(TRANSCRIPT_SCHEMA, n_buckets=N_BUCKETS, compact_every=2)
     convs = _convs_per_bucket(spark, tbl, 3)
@@ -69,15 +70,18 @@ def test_compact_every_counts_commits(spark, tmp_path):
             (next(lsn), "D", dele, 0, None),
         )
     ]
-    tbl.merge(spark, 1, changes_df(spark, batch1))
+    job = IngestJob(tbl.path, str(tmp_path / "ctl"))
+    job.apply_batch(spark, 1, read_feed_batch(spark, _feed_chunk(str(tmp_path / "f1"), batch1)))
+    job.wait_maintenance()
     assert "compact" not in [s["kind"] for s in tbl.history()]
     assert tbl.delta_depth() == {b: 1 for b in range(N_BUCKETS)}
     deltas = [e for e in tbl.files() if e["layer"] == "delta"]
     assert sorted(e["bucket"] for e in deltas) == list(range(N_BUCKETS))
 
     batch2 = [(next(lsn), "U", cs[0], 0, "v2") for cs in convs.values()]
-    r = tbl.merge(spark, 2, changes_df(spark, batch2))
-    assert r["compacted"]
+    r = job.apply_batch(spark, 2, read_feed_batch(spark, _feed_chunk(str(tmp_path / "f2"), batch2)))
+    assert r["maintenance_due"]
+    job.wait_maintenance()
     assert [s["kind"] for s in tbl.history()].count("compact") == 1
     assert tbl.delta_depth() == {}
 

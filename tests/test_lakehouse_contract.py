@@ -50,6 +50,8 @@ CONTRACT: dict[str, list[str]] = {
     "verify_against": ["spark", "source"],     # initsync verification
     # maintenance ----------------------------------------------------------
     "compact": ["spark", "buckets"],           # scripts/maintenance.py
+    "maintain": ["spark"],                     # IngestJob maintenance runner
+    "delta_depth": ["snap"],                   # IngestJob backlog bound
     "rewrite_manifests": ["target_entries_per_manifest"],  # manifest scaling
     "expire_snapshots": [],                    # retention
     "rollback_to": ["snapshot_id"],            # changelog rollback

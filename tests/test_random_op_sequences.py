@@ -106,6 +106,7 @@ def _run_sequence(spark, tmp_path, seed: int) -> None:
             spark, batch_id,
             spark.createDataFrame(chunks[batch_id], schema=CHANGE_EVENT_SCHEMA),
         )
+        job.wait_maintenance()
         applied.append(chunks[batch_id])
         batch_id += 1
 
