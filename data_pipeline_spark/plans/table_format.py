@@ -90,6 +90,11 @@ OP_COL = "_op"
 #: Not "_del": legacy `_del=` partition dirs would clash with it.
 TOMB_COL = "_tomb"
 
+#: Types of the engine columns a read may request from data files.
+_ENGINE_TYPES: dict[str, T.DataType] = {
+    LSN_COL: T.LongType(), OP_COL: T.StringType(), MASK_COL: T.LongType(),
+}
+
 #: Written into every snapshot; `_load_snapshot` refuses any other value.
 FORMAT_VERSION = 2
 
@@ -1194,7 +1199,14 @@ class LakehouseTable:
                 else:
                     cols.append(F.col(w["name"]).cast(_spark_type(f["type"])).alias(f["name"]))
             cols.extend(F.col(c) for c in extra)
-            parts.append(spark.read.parquet(*paths).select(*cols))
+            # The file schema is known (_write_data writes each file in its
+            # schema's types), so pin it: an unpinned read starts a Spark
+            # job per call just to infer it from the footers.
+            file_schema = T.StructType(
+                [T.StructField(w["name"], _spark_type(w["type"]), True) for w in written["fields"]]
+                + [T.StructField(c, _ENGINE_TYPES[c], True) for c in extra]
+            )
+            parts.append(spark.read.schema(file_schema).parquet(*paths).select(*cols))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1502,6 +1514,15 @@ class LakehouseTable:
         min/max skipping needs."""
         rel = f"data/s{snapshot_id}"
         out = os.path.join(self.path, rel)
+        # files hold exactly their schema's types (no-op casts when the rows
+        # already do): _read_parts reads them with that schema pinned
+        types = {
+            f["name"]: _spark_type(f["type"]) for f in self._load_schema(schema_id)["fields"]
+        }
+        types.update(_ENGINE_TYPES)
+        df = df.select(
+            *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in df.columns]
+        )
         shaped = df.repartition(n_buckets, F.col("_bucket"))
         if sort_cols:
             shaped = shaped.sortWithinPartitions("_bucket", *sort_cols)

@@ -5,11 +5,14 @@ bus so further targets consume them like any source feed (extract → Kafka →
 apply → Kafka → apply...; SURVEY.md §2 K1/S4). Here the hop is one
 cursor-polled edge per target (the protocol in `streaming/cursor.py`):
 
-    upstream.tail_changes  →  changes_to_feed  →  downstream apply_batch
+    upstream.tail_changes  →  typed projection  →  downstream apply_changes
 
 - Transport: in-lake (the edge reads the upstream's committed changelog
-  directly — no broker needed; swap `write_kafka_feed_stream` /
-  `read_kafka_feed_stream` in for a real bus hop, same envelope).
+  directly — no broker needed). The changelog is already typed and
+  columnar, so the hop hands it to the downstream merge as typed rows: no
+  JSON envelope, no Python decode. A real bus hop re-encodes the
+  changelog as a change-event feed (`sources/kafka.py`, the external
+  wire) and the far side ingests it like any source feed.
 - Delivery: each poll reads the upstream commits since the edge's cursor,
   in commit order, along the published parent chain (WAP-staged batches
   are unreachable); the downstream sink is the engine's own idempotent
@@ -22,12 +25,10 @@ cursor-polled edge per target (the protocol in `streaming/cursor.py`):
   built without re-reading A.
 
 Scale notes (100 TB): each window moves only the upstream COMMIT DELTA
-(collapsed changesets), never the table; the downstream apply is the same
-decode→collapse→bucketed-merge plan as first-hop ingest — two shuffles per
-batch, O(batch) commit metadata. The JSON re-encode hop costs one Catalyst
-`to_json` projection per batch; an in-lake-only deployment could skip the
-envelope and feed the changelog columns straight to the collapse, but the
-envelope keeps every edge bus-compatible, which is the reference contract.
+(collapsed changesets), never the table; the downstream apply is the
+collapse→bucketed-merge half of first-hop ingest — scan → collapse →
+bucketed write, entirely in the JVM (no `to_json`, no Arrow IPC, no Python
+workers), two shuffles per window, O(window) commit metadata.
 
 DML only: schema changes do NOT flow through the changelog (the reference
 routes DDL on the bus; the in-lake delta files carry data rows only). Apply
@@ -55,8 +56,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_spark.operators.merge import MASK_COL
 from data_pipeline_spark.plans.table_format import LakehouseTable
-from data_pipeline_spark.sources.kafka import changes_to_feed
+from data_pipeline_spark.schemas import MERGE_KEY
 from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -79,9 +81,9 @@ def filter_replica_changes(changes: DataFrame, predicate: Column | str) -> DataF
     absent key is a no-op). A key that never matched just accrues a
     harmless tombstone.
 
-    Runs on batch or streaming changelog frames, upstream of
-    ``changes_to_feed`` (the D-conversion must happen while ``_change_op``
-    is still visible)."""
+    Runs on batch or streaming changelog frames, before the changelog is
+    projected for the replica (``_apply_replica``) or re-encoded for a bus
+    (``sources/kafka.py``): the D-conversion needs ``_change_op``."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     keep_op = F.when(
         (F.col("_change_op") == "D") | pred, F.col("_change_op")
@@ -95,23 +97,40 @@ def _apply_replica(
     batch_id: int,
     changes: DataFrame,
     row_predicate: Column | str | None,
-    columns: list[str] | None,
 ) -> dict:
-    """Apply one changelog window to one replica target: the (optionally
-    filtered/projected) cascade feed through the target's idempotent merge."""
+    """Apply one changelog window to one replica target as typed rows:
+    filter → (lsn, op, <downstream columns>) → the target's `apply_changes`
+    (collapse → bucketed merge, all in the JVM). Each column is cast to the
+    downstream type and projected to the downstream schema, which
+    `sync_schema` has verified is the upstream's restricted to the keys +
+    the edge's `columns`; D rows carry null non-key columns, as a decoded
+    tombstone does. A partial-mode changelog is refused: a replica applies
+    full images only."""
+    if MASK_COL in changes.columns:
+        raise ValueError(
+            "cascade requires a full-image changelog; this one carries "
+            f"{MASK_COL} (partial-update table) — a replica applies full "
+            "images only, which would lose the mask's set-to-null/unset "
+            "distinction"
+        )
     if row_predicate is not None:
         changes = filter_replica_changes(changes, row_predicate)
+    live = F.col("_change_op") != "D"
+    typed = changes.select(
+        F.col("lsn"),
+        F.col("_change_op").alias("op"),
+        *[
+            (F.col(f.name) if f.name in MERGE_KEY else F.when(live, F.col(f.name)))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in job.table.schema_struct().fields
+        ],
+    )
     # enforce_watermark=False: a window can carry lsns BELOW the replica's
     # watermark (a cherry-pick publishes an older branch merge's lsns after
     # newer ones), which the filter would drop as replays. Read-side LWW
     # keyed by (key, lsn) places every row regardless.
-    return job.apply_batch(
-        spark,
-        batch_id,
-        changes_to_feed(changes, columns=columns),
-        enforce_watermark=False,
-        ddl_rows=[],
-    )
+    return job.apply_changes(spark, batch_id, typed, enforce_watermark=False)
 
 
 def _sync_replica_schema(
@@ -201,7 +220,8 @@ def _sync_replica_schema(
 class CascadeJob:
     """One replication edge: keep `downstream` identical to `upstream` by
     polling its changelog with a durable cursor. Construction mirrors
-    IngestJob (the downstream half IS an IngestJob over the cascade feed)."""
+    IngestJob (the downstream half IS an IngestJob, applied through
+    `apply_changes`)."""
 
     def __init__(
         self,
@@ -221,10 +241,6 @@ class CascadeJob:
         self.row_predicate = row_predicate
         self.columns = columns
         self.upstream = LakehouseTable(upstream_path)
-        # ddl_fast_scan would probe the upstream DELTA files for an `op`
-        # column they don't have; the cascade feed is DML-only by contract,
-        # so the probe is skipped outright via ddl_rows=[] in `_apply_replica`.
-        ingest_kw.setdefault("ddl_fast_scan", False)
         self.job = IngestJob(downstream_path, control_path, **ingest_kw)
 
     def sync_schema(self, auto_ddl: bool = False) -> list[dict]:
@@ -248,9 +264,7 @@ class CascadeJob:
 
         def apply(batch_id: int, chg: DataFrame) -> dict:
             self.sync_schema()
-            return _apply_replica(
-                self.job, spark, batch_id, chg, self.row_predicate, self.columns
-            )
+            return _apply_replica(self.job, spark, batch_id, chg, self.row_predicate)
 
         return poll_window(spark, self.upstream, cursor_path, apply)
 
@@ -286,13 +300,13 @@ class CascadeFanout:
     """N downstream replicas from ONE pass over the upstream changelog.
 
     Running N independent CascadeJob edges works, but each polls A's
-    changelog itself — N× read (and decode) amplification
-    on the upstream storage, the thing a busy hub table can't afford. The
-    fan-out reads each window ONCE, persists it, and submits every
-    target's filter→re-encode→apply from a thread pool over the shared
-    cached batch (the same cluster-saturating pattern as the multi-table
-    router and `initsync_all`; per-target commits are independent — each
-    replica has its own table dir + control dir).
+    changelog itself — N× read amplification on the upstream storage,
+    the thing a busy hub table can't afford. The fan-out reads each window
+    ONCE, persists it, and submits every target's filter→project→apply
+    from a thread pool over the shared cached batch (the same
+    cluster-saturating pattern as the multi-table router and
+    `initsync_all`; per-target commits are independent — each replica has
+    its own table dir + control dir).
 
     Failure semantics: any target's failure fails the poll before the one
     shared cursor commits; the re-poll re-reads the window and targets that
@@ -311,7 +325,6 @@ class CascadeFanout:
             raise ValueError(f"duplicate target names: {names}")
         self.upstream = LakehouseTable(upstream_path)
         self.targets = list(targets)
-        ingest_kw.setdefault("ddl_fast_scan", False)
         self.jobs = {
             t.name: IngestJob(
                 t.table_path, os.path.join(control_root, t.name), **ingest_kw
@@ -339,8 +352,7 @@ class CascadeFanout:
 
                 def one(t: CascadeTarget) -> tuple[str, dict]:
                     return t.name, _apply_replica(
-                        self.jobs[t.name], spark, batch_id, cached,
-                        t.row_predicate, t.columns,
+                        self.jobs[t.name], spark, batch_id, cached, t.row_predicate
                     )
 
                 workers = max(1, min(_MAX_APPLY_THREADS, len(self.targets)))

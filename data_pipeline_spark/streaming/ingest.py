@@ -19,9 +19,10 @@ compaction, manifest-list folds, auto spec migration) to its one runner
 thread, after the batch's control record is durable — so the compaction
 overlaps the consumers' polls and the next trigger instead of sitting
 between a commit and its readers (Hudi's async compaction). Join points:
-the job's next `apply_batch` waits for it before reading the head, so a
-job never races its own maintenance for the commit CAS and delta depth at
-merge time stays ≤ `compact_every`; `run_to_completion`, `replay_batch`,
+the job's next `apply_batch` or `apply_changes` waits for it before
+reading the head, so a job never races its own maintenance for the commit
+CAS and delta depth at merge time stays ≤ `compact_every`;
+`run_to_completion`, `replay_batch`,
 `flush_pending` and `reprocess_quarantine` wait before returning; the
 cursor consumers wait at the end of `run_until_caught_up`; `WapIngestJob`
 waits before it audits or publishes. Callers that drive `apply_batch` or
@@ -50,7 +51,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_spark.functions.decode import decode_events
 from data_pipeline_spark.operators.lww import lww_collapse_agg
-from data_pipeline_spark.operators.merge import collapse_partial
+from data_pipeline_spark.operators.merge import MASK_COL, collapse_partial
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.sources.feed import read_feed_batch, read_feed_stream
 
@@ -256,23 +257,46 @@ class IngestJob:
         Waits for the previous batch's background maintenance first; this
         batch's own maintenance is still running when it returns (see
         `wait_maintenance`)."""
-        self.wait_maintenance()
-        try:
-            return self._apply_batch_inner(
-                spark, batch_id, raw, enforce_watermark, ddl_rows
-            )
-        except Exception as e:
-            self._alert({
-                "kind": "abort",
-                "batch_id": batch_id,
-                "error": f"{type(e).__name__}: {e}",
-            })
-            raise
+        return self._apply(
+            spark, batch_id, enforce_watermark,
+            lambda mark: self._decode_batch(spark, batch_id, raw, ddl_rows, mark),
+        )
 
-    def _apply_batch_inner(
-        self, spark: SparkSession, batch_id: int, raw: DataFrame,
-        enforce_watermark: bool, ddl_rows: list[tuple[int, str]] | None,
+    def apply_changes(
+        self, spark: SparkSession, batch_id: int, changes: DataFrame,
+        enforce_watermark: bool = True,
     ) -> dict:
+        """Apply one window of already-typed change rows — `apply_batch`
+        without the align/archive/DDL/decode front: the same collapse →
+        bucket → merge → control → maintenance-submit body and "abort"
+        alert. `changes` holds (lsn, op, <table columns>) in the table's
+        current schema types, with null non-key columns on D rows; on a
+        partial-mode table an optional `_set_mask` column carries partial
+        images (absent = every row is a full image). The in-engine
+        changelog consumers apply through here, so a replica hop never
+        re-encodes to JSON or starts a Python decode worker."""
+
+        def typed(mark) -> tuple[DataFrame, dict]:
+            snap = self.table.current_snapshot()
+            if self.table.update_mode(snap) == "partial" and MASK_COL not in changes.columns:
+                # A full image replaces the whole row, present or not: an
+                # I with mask -1 (a U would be a no-op on an absent key).
+                is_d = F.col("op") == "D"
+                return changes.withColumns({
+                    "op": F.when(is_d, F.lit("D")).otherwise(F.lit("I")),
+                    MASK_COL: F.when(is_d, F.lit(0)).otherwise(F.lit(-1)).cast("long"),
+                }), snap
+            return changes, snap
+
+        return self._apply(spark, batch_id, enforce_watermark, typed)
+
+    def _apply(self, spark: SparkSession, batch_id: int, enforce_watermark: bool, prepare) -> dict:
+        """The one apply body: `prepare(mark)` yields the typed change rows
+        and the snapshot they are typed for; then collapse → bucket → merge
+        → control record → maintenance submit. Any failure fires the
+        "abort" alert and re-raises. INGEST_DEBUG_TIMING=1 prints the
+        elapsed time at each `mark`."""
+        self.wait_maintenance()
         t0 = time.monotonic()
         debug = os.environ.get("INGEST_DEBUG_TIMING") == "1"
         marks: list[tuple[str, float]] = []
@@ -281,6 +305,58 @@ class IngestJob:
             if debug:
                 marks.append((label, time.monotonic() - t0))
 
+        try:
+            decoded, snap_now = prepare(mark)
+            n_buckets = snap_now["n_buckets"]
+            # Per-batch per-key collapse: full-row images take the max-LSN op
+            # (LWW); partial images must COMPOSE stacked updates column-wise,
+            # so they go through the sequential-apply fold instead (both are
+            # single map-side-combinable aggregations — SURVEY.md §2 T5).
+            # The full-mode collapse is the max-of-struct HASH aggregation,
+            # not the window: no per-partition sort, better 1→4N scaling
+            # (lww.py docstring has the measurements).
+            if self.table.update_mode(snap_now) == "partial":
+                collapsed = collapse_partial(decoded, self.table.field_bits(snap_now))
+            else:
+                collapsed = lww_collapse_agg(decoded)
+            collapsed = collapsed.withColumn("_bucket", self.table.bucket_expr(n_buckets))
+
+            # Write-first: decode → collapse → bucketed delta write runs as
+            # ONE action (no persist, no second pass); per-bucket lineage
+            # comes back from the merge's footer scan of the written delta
+            # files.
+            result = self.table.merge(
+                spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
+                bucket_n=n_buckets,
+            )
+            mark("merge")
+            metrics = [
+                {"partition_id": m["bucket"], "rows_applied": m["rows"],
+                 "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
+                for m in result.get("bucket_metrics", [])
+            ]
+            if not result.get("skipped"):
+                self._write_control(batch_id, metrics, wall_ms=int((time.monotonic() - t0) * 1000))
+                if result.get("maintenance_due"):
+                    self._submit_maintenance(spark, batch_id)
+        except Exception as e:
+            self._alert({
+                "kind": "abort",
+                "batch_id": batch_id,
+                "error": f"{type(e).__name__}: {e}",
+            })
+            raise
+        if debug:
+            print(f"[apply_batch {batch_id}] " + " ".join(f"{l}={s:.2f}s" for l, s in marks))
+        return result
+
+    def _decode_batch(
+        self, spark: SparkSession, batch_id: int, raw: DataFrame,
+        ddl_rows: list[tuple[int, str]] | None, mark,
+    ) -> tuple[DataFrame, dict]:
+        """`apply_batch`'s front: txn align, archive, DDL, decode (or
+        quarantine). Returns the typed change rows and the post-DDL
+        snapshot they were decoded for."""
         if self.aligner is not None:
             self.aligner.check_resumable(batch_id)
             batch_files = self._batch_files(raw, batch_id)
@@ -370,41 +446,7 @@ class IngestJob:
         else:
             decoded = decode_events(raw, schema, renames, field_bits=field_bits)
         mark("decode-quarantine")
-        n_buckets = snap_now["n_buckets"]
-        # Per-batch per-key collapse: full-row images take the max-LSN op
-        # (LWW); partial images must COMPOSE stacked updates column-wise, so
-        # they go through the sequential-apply fold instead (both are single
-        # map-side-combinable aggregations — SURVEY.md §2 T5). The full-mode
-        # collapse is the max-of-struct HASH aggregation, not the
-        # window: no per-partition sort, better 1→4N scaling (lww.py
-        # docstring has the measurements).
-        if partial:
-            collapsed = collapse_partial(decoded, field_bits)
-        else:
-            collapsed = lww_collapse_agg(decoded)
-        collapsed = collapsed.withColumn("_bucket", self.table.bucket_expr(n_buckets))
-
-        # Write-first: decode → collapse → bucketed delta write runs as ONE
-        # action (no persist, no second pass); per-bucket lineage comes back
-        # from the merge's footer scan of the written delta files.
-        result = self.table.merge(
-            spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
-            bucket_n=n_buckets,
-        )
-        mark("merge")
-        metrics = [
-            {"partition_id": m["bucket"], "rows_applied": m["rows"],
-             "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
-            for m in result.get("bucket_metrics", [])
-        ]
-
-        if not result.get("skipped"):
-            self._write_control(batch_id, metrics, wall_ms=int((time.monotonic() - t0) * 1000))
-            if result.get("maintenance_due"):
-                self._submit_maintenance(spark, batch_id)
-        if debug:
-            print(f"[apply_batch {batch_id}] " + " ".join(f"{l}={s:.2f}s" for l, s in marks))
-        return result
+        return decoded, snap_now
 
     # ----------------------------------------------------------- maintenance
     def _submit_maintenance(self, spark: SparkSession, batch_id: int) -> None:

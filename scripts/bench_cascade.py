@@ -1,18 +1,19 @@
 """Cascade-edge benchmark: what does the SECOND hop cost?
 
 First hop: raw change feed → decode → collapse → merge into table A.
-Edge:      A's changelog (cursor-polled windows) → changes_to_feed → same
-           apply path → table B.
+Edge:      A's changelog (cursor-polled windows) as typed rows →
+           IngestJob.apply_changes (collapse → merge, no decode) → table B.
 Fan-out (--fanout N): N full replicas via N independent CascadeJob edges
 (N reads of A's changelog) vs one CascadeFanout (one read per window,
 shared cached window, concurrent applies) — the read-amplification A/B.
 
 The edge never re-reads A — it moves only the collapsed per-commit
 changesets (strictly fewer rows than the raw feed, since upstream collapse
-already folded per-key churn) and skips the JSON-decode of a raw feed's
-free-form payloads in favor of re-encoded canonical ones. Prints one JSON
-line: first-hop events/s, edge rows/s, the row-reduction ratio, and a
-content-equality check (xxhash64 sum over key+lsn+text) proving B == A.
+already folded per-key churn), and it skips the JSON decode entirely: the
+changelog is already typed, so the edge runs in the JVM with no Python
+workers. Prints one JSON line: first-hop events/s, edge rows/s, the
+row-reduction ratio, and a content-equality check (xxhash64 sum over
+key+lsn+text) proving B == A.
 
 Run: python scripts/bench_cascade.py --events 4000000 --cores 8
 """

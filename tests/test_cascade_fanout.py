@@ -87,13 +87,13 @@ def test_fanout_crash_resume(spark, tmp_path, monkeypatch):
     fanout, full, filt, proj = _mk_fanout(spark, tmp_path, a)
     cursor = str(tmp_path / "fan2.cursor")
     filt_job = fanout.jobs["filt"]
-    apply_batch = filt_job.apply_batch
+    apply_changes = filt_job.apply_changes
 
     def crash_once(*args, **kwargs):
-        monkeypatch.setattr(filt_job, "apply_batch", apply_batch)
+        monkeypatch.setattr(filt_job, "apply_changes", apply_changes)
         raise RuntimeError("injected crash (test hook)")
 
-    monkeypatch.setattr(filt_job, "apply_batch", crash_once)
+    monkeypatch.setattr(filt_job, "apply_changes", crash_once)
     with pytest.raises(RuntimeError, match="injected crash"):
         fanout.poll_once(spark, cursor)
     assert not (tmp_path / "fan2.cursor").exists()
