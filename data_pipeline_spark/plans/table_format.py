@@ -38,7 +38,11 @@ Layout (paths relative to the table root):
                                  schema_id, n_buckets, spec_id, specs,
                                  update_mode, delta_depth, manifests:[{name,
                                  buckets, specs, entry_count}], ...}
-    _meta/manifest-<n>-<u>.json {entries:[{path,bucket,schema_id,layer,spec_id}]}
+    _meta/manifest-<n>-<u>.json {entries:[{path,bucket,schema_id,layer,spec_id,
+                                 typed}]}  (typed: the file holds every
+                                 column of its schema in the schema's
+                                 types, so reads pin that schema; absent
+                                 on files written before the mark)
     _meta/schema-<k>.json       {schema_id, last_column_id, fields:[{id,name,
                                  type,former_names}]}
     data/s<n>/_bucket=<b>/*.parquet   (one file per touched bucket per merge;
@@ -1183,12 +1187,14 @@ class LakehouseTable:
         mapping: rename→alias, widen→cast, added→null) + engine columns."""
         if not entries:
             return None
-        by_schema: dict[int, list[str]] = {}
+        groups: dict[tuple[int, bool], list[str]] = {}
         for e in entries:
-            by_schema.setdefault(e["schema_id"], []).append(os.path.join(self.path, e["path"]))
+            groups.setdefault((e["schema_id"], bool(e.get("typed"))), []).append(
+                os.path.join(self.path, e["path"])
+            )
         cur_fields = self._load_schema(snap["schema_id"])["fields"]
         parts = []
-        for schema_id, paths in sorted(by_schema.items()):
+        for (schema_id, typed), paths in sorted(groups.items()):
             written = self._load_schema(schema_id)
             by_id = {f["id"]: f for f in written["fields"]}
             cols = []
@@ -1199,14 +1205,19 @@ class LakehouseTable:
                 else:
                     cols.append(F.col(w["name"]).cast(_spark_type(f["type"])).alias(f["name"]))
             cols.extend(F.col(c) for c in extra)
-            # The file schema is known (_write_data writes each file in its
-            # schema's types), so pin it: an unpinned read starts a Spark
-            # job per call just to infer it from the footers.
-            file_schema = T.StructType(
-                [T.StructField(w["name"], _spark_type(w["type"]), True) for w in written["fields"]]
-                + [T.StructField(c, _ENGINE_TYPES[c], True) for c in extra]
-            )
-            parts.append(spark.read.schema(file_schema).parquet(*paths).select(*cols))
+            reader = spark.read
+            if typed:
+                # A typed file holds every column of its schema in that
+                # schema's types, so pin it: an unpinned read starts a Spark
+                # job per call just to infer it from the footers. Untyped
+                # files (written before the mark, possibly in the caller's
+                # types) are still inferred and cast by `cols`.
+                reader = reader.schema(T.StructType(
+                    [T.StructField(w["name"], _spark_type(w["type"]), True)
+                     for w in written["fields"]]
+                    + [T.StructField(c, _ENGINE_TYPES[c], True) for c in extra]
+                ))
+            parts.append(reader.parquet(*paths).select(*cols))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1514,11 +1525,12 @@ class LakehouseTable:
         min/max skipping needs."""
         rel = f"data/s{snapshot_id}"
         out = os.path.join(self.path, rel)
-        # files hold exactly their schema's types (no-op casts when the rows
-        # already do): _read_parts reads them with that schema pinned
-        types = {
-            f["name"]: _spark_type(f["type"]) for f in self._load_schema(schema_id)["fields"]
-        }
+        # Files hold their schema's types (no-op casts when the rows already
+        # do). One that also holds every schema column is marked `typed`, and
+        # _read_parts reads it with that schema pinned instead of inferred.
+        fields = self._load_schema(schema_id)["fields"]
+        typed = all(f["name"] in df.columns for f in fields)
+        types = {f["name"]: _spark_type(f["type"]) for f in fields}
         types.update(_ENGINE_TYPES)
         df = df.select(
             *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in df.columns]
@@ -1566,6 +1578,7 @@ class LakehouseTable:
                         "schema_id": schema_id,
                         "layer": layer,
                         "spec_id": spec_id,
+                        "typed": typed,
                     })
         return entries
 

@@ -113,6 +113,31 @@ def touched_documents(
         )
     return assemble_conversations(turns, max_turns=max_turns), mode, ids
 
+
+def _image_changes(
+    table: LakehouseTable, lsn: int, images: DataFrame, gone: DataFrame
+) -> DataFrame:
+    """Typed change rows for `IngestJob.apply_changes` on a one-row-per-
+    conv_id table (`turn_idx` pinned to 0): a U with the full image for
+    each row of `images`, a D with null columns for each conv_id of
+    `gone`, all stamped `lsn` and cast to the table's schema."""
+    fields = table.schema_struct().fields
+
+    def rows(df: DataFrame, op: str) -> DataFrame:
+        cols = []
+        for f in fields:
+            if f.name == "conv_id":
+                c = F.col("conv_id")
+            elif f.name == "turn_idx":
+                c = F.lit(0)
+            else:
+                c = F.col(f.name) if op == "U" else F.lit(None)
+            cols.append(c.cast(f.dataType).alias(f.name))
+        return df.select(F.lit(lsn).cast("long").alias("lsn"), F.lit(op).alias("op"), *cols)
+
+    return rows(images, "U").unionByName(rows(gone, "D"))
+
+
 #: Schema of the documents view table. `turn_idx` is constant 0 — a
 #: document is one row per conversation, and pinning the second merge-key
 #: component lets the view reuse the engine's (conv_id, turn_idx) apply
@@ -171,8 +196,6 @@ class CorpusViewJob:
         #: range pruned) or "semi_join" (high-churn distributed path) —
         #: set per refresh, readable by tests and operators.
         self.last_refresh_mode: str | None = None
-        # the cascade feed is DML-only; skip the DDL probe outright
-        ingest_kw.setdefault("ddl_fast_scan", False)
         self.job = IngestJob(view_path, control_path, **ingest_kw)
 
     @staticmethod
@@ -180,9 +203,9 @@ class CorpusViewJob:
         LakehouseTable(path).create(DOCUMENT_SCHEMA, n_buckets=n_buckets, **create_kw)
 
     # -------------------------------------------------------------- refresh
-    def _refresh_feed(self, spark: SparkSession, changed: DataFrame) -> DataFrame:
-        """One refresh: changed conv_ids → current document images as a
-        change-event feed (U with the full image; D when every turn of the
+    def _refresh_changes(self, spark: SparkSession, changed: DataFrame) -> DataFrame:
+        """One refresh: changed conv_ids → current document images as typed
+        change rows (U with the full image; D when every turn of the
         conversation is gone upstream).
 
         Point-read vs semi-join regime selection lives in
@@ -192,7 +215,6 @@ class CorpusViewJob:
         (a later refresh re-derives newer images under a higher lsn)."""
         changed_ids = changed.select("conv_id").distinct()
         snap = self.upstream.current_snapshot()
-        lsn = snap.get("watermark_lsn") or 0
         docs, self.last_refresh_mode, _ = touched_documents(
             spark, self.upstream, changed_ids,
             max_turns=self.max_turns,
@@ -205,39 +227,16 @@ class CorpusViewJob:
             # quality gate AFTER redaction (the filter judges what ships);
             # dropped documents fall through to the deletes anti-join below
             docs = docs.where(F.expr(self.doc_filter))
-        upserts = docs.select(
-            F.lit(lsn).alias("lsn"),
-            F.lit("U").alias("op"),
-            F.lit(None).cast("timestamp").alias("ts"),
-            F.col("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.to_json(F.struct("doc_text", "n_turns", "n_chars")).alias("payload"),
-        )
         # a touched conversation with no surviving DOCUMENT — every turn
         # deleted upstream, or (doc_filter) now below the quality bar —
         # becomes a view delete
-        deletes = (
-            changed_ids
-            .join(docs.select("conv_id"), "conv_id", "left_anti")
-            .select(
-                F.lit(lsn).alias("lsn"),
-                F.lit("D").alias("op"),
-                F.lit(None).cast("timestamp").alias("ts"),
-                F.col("conv_id"),
-                F.lit(0).alias("turn_idx"),
-                F.lit(None).cast("string").alias("payload"),
-            )
-        )
-        return upserts.unionByName(deletes)
+        gone = changed_ids.join(docs.select("conv_id"), "conv_id", "left_anti")
+        return _image_changes(self.job.table, snap.get("watermark_lsn") or 0, docs, gone)
 
     def refresh_for(self, spark: SparkSession, batch_id: int, changed: DataFrame) -> dict:
         """Apply one refresh batch (exposed for tests / batch callers)."""
-        return self.job.apply_batch(
-            spark,
-            batch_id,
-            self._refresh_feed(spark, changed),
-            enforce_watermark=False,
-            ddl_rows=[],
+        return self.job.apply_changes(
+            spark, batch_id, self._refresh_changes(spark, changed), enforce_watermark=False
         )
 
     def poll_once(self, spark: SparkSession, cursor_path: str) -> dict:

@@ -34,7 +34,7 @@ half can never be reconciled):
   2. BANDS applies FIRST, then SIGNATURES: the bands derivation reads the
      touched docs' OLD buckets from the signatures table, which the sig
      apply would destroy — with sig-last ordering a replay of the pinned
-     window re-derives byte-identical feeds, and each table's apply is
+     window re-derives byte-identical change rows, and each table's apply is
      idempotent by batch_id (= the pinned head snapshot id, monotone);
   3. the cursor commits last and the intent is removed; an optional
      TxnCatalog publish gives readers a cross-table-consistent
@@ -64,7 +64,7 @@ from data_pipeline_spark.operators.corpus import (
     minhash_signature,
 )
 from data_pipeline_spark.plans.table_format import LakehouseTable
-from data_pipeline_spark.streaming.corpus_view import touched_documents
+from data_pipeline_spark.streaming.corpus_view import _image_changes, touched_documents
 from data_pipeline_spark.streaming.cursor import lsn_lag, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 from data_pipeline_spark.streaming.txn import TxnCatalog
@@ -158,7 +158,6 @@ class DedupIndexJob:
         self.catalog = TxnCatalog(catalog_path) if catalog_path else None
         #: refresh-path telemetry, set per refresh: "point" or "rebuild"
         self.last_refresh_mode: str | None = None
-        ingest_kw.setdefault("ddl_fast_scan", False)
         ingest_kw.setdefault("on_alert", on_alert)
         self.sig_job = IngestJob(
             os.path.join(index_dir, "signatures"),
@@ -223,28 +222,6 @@ class DedupIndexJob:
             sh, key_col="conv_id", n_hashes=self.n_hashes, with_count=True
         )
 
-    def _feed_rows(self, lsn: int, upserts: DataFrame, payload_cols: list[str],
-                   deletes: DataFrame) -> DataFrame:
-        """Build the engine change-event feed: U with full images, D for
-        gone keys (same shape as CorpusViewJob._refresh_feed)."""
-        u = upserts.select(
-            F.lit(lsn).alias("lsn"),
-            F.lit("U").alias("op"),
-            F.lit(None).cast("timestamp").alias("ts"),
-            F.col("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.to_json(F.struct(*payload_cols)).alias("payload"),
-        )
-        d = deletes.select(
-            F.lit(lsn).alias("lsn"),
-            F.lit("D").alias("op"),
-            F.lit(None).cast("timestamp").alias("ts"),
-            F.col("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.lit(None).cast("string").alias("payload"),
-        )
-        return u.unionByName(d)
-
     def _read_keys(self, spark: SparkSession, table: LakehouseTable,
                    keys: list[str]) -> DataFrame:
         # read(conv_ids=[]) short-circuits to a schema-correct empty frame
@@ -274,11 +251,9 @@ class DedupIndexJob:
             sig_deletes = changed_ids.join(
                 new_sig.select("conv_id"), "conv_id", "left_anti"
             )
-            sig_feed = self._feed_rows(
-                lsn, new_sig, self._mh_cols() + ["n_shingles"], sig_deletes
-            )
-            res["signatures"] = self.sig_job.apply_batch(
-                spark, batch_id, sig_feed, enforce_watermark=False, ddl_rows=[]
+            res["signatures"] = self.sig_job.apply_changes(
+                spark, batch_id, _image_changes(self.sig, lsn, new_sig, sig_deletes),
+                enforce_watermark=False,
             )
         finally:
             new_sig.unpersist()
@@ -322,7 +297,7 @@ class DedupIndexJob:
             kept.unionByName(added)
             .groupBy("key")
             .agg(F.array_sort(F.collect_set("member")).alias("m"))
-            .persist()  # consumed by the bucket-cap probe, the U feed and
+            .persist()  # consumed by the bucket-cap probe, the U rows and
         )                # the D anti-join — one bands point-read, not three
         try:
             return self._apply_bands_point(spark, batch_id, lsn, affected, members)
@@ -338,11 +313,11 @@ class DedupIndexJob:
         deletes = affected.select(F.col("key").alias("conv_id")).join(
             members.select(F.col("key").alias("conv_id")), "conv_id", "left_anti"
         )
-        bands_feed = self._feed_rows(lsn, upserts, ["members"], deletes)
         return {
             "mode": "point",
-            "bands": self.bands_job.apply_batch(
-                spark, batch_id, bands_feed, enforce_watermark=False, ddl_rows=[]
+            "bands": self.bands_job.apply_changes(
+                spark, batch_id, _image_changes(self.bands, lsn, upserts, deletes),
+                enforce_watermark=False,
             ),
         }
 

@@ -272,7 +272,9 @@ class IngestJob:
         alert. `changes` holds (lsn, op, <table columns>) in the table's
         current schema types, with null non-key columns on D rows; on a
         partial-mode table an optional `_set_mask` column carries partial
-        images (absent = every row is a full image). The in-engine
+        images. Without it every non-D row is a full image and is applied
+        as an I with mask -1, so the partial table's own changelog shows
+        an upstream U as an I. The in-engine
         changelog consumers apply through here, so a replica hop never
         re-encodes to JSON or starts a Python decode worker."""
 

@@ -92,6 +92,42 @@ def write_legacy_split_delta(spark, tbl: LakehouseTable, batch_id: int, rows) ->
     return new_id
 
 
+def write_legacy_overwrite(spark, tbl: LakehouseTable, rows) -> int:
+    """Overwrite the table with `rows` ((lsn, conv_id, turn_idx, text)) as a
+    version before the `typed` manifest mark did: the caller's frame types
+    written unchanged — here a bigint `turn_idx` under the schema's int —
+    and no mark on the entries. Returns the new snapshot id."""
+    snap = tbl.current_snapshot()
+    df = spark.createDataFrame(
+        [(c, t, "user", text, None, None, lsn) for lsn, c, t, text in rows],
+        "conv_id string, turn_idx long, role string, text string, tool string, "
+        f"ts timestamp, {LSN_COL} long",
+    ).withColumn("_bucket", tbl.bucket_expr(snap["n_buckets"]))
+    new_id = tbl._next_id(snap)
+    rel = f"data/s{new_id}"
+    out = os.path.join(tbl.path, rel)
+    df.repartition(snap["n_buckets"], "_bucket").write.partitionBy("_bucket").parquet(out)
+    entries = [
+        {"path": os.path.join(rel, d, fn), "bucket": int(d.split("=", 1)[1]),
+         "schema_id": snap["schema_id"], "layer": "base", "spec_id": snap["spec_id"]}
+        for d in sorted(os.listdir(out)) if d.startswith("_bucket=")
+        for fn in sorted(os.listdir(os.path.join(out, d))) if fn.endswith(".parquet")
+    ]
+    tbl._commit({
+        **snap,
+        "snapshot_id": new_id,
+        "parent": snap["snapshot_id"],
+        "kind": "overwrite",
+        "batch_id": None,
+        "delta_commits": 0,
+        "manifests": [tbl._write_manifest(new_id, tbl._record_stats(entries, snap))],
+        "delta_depth": {},
+        "stats": {},
+        "committed_at": time.time(),
+    })
+    return new_id
+
+
 @pytest.fixture
 def legacy_table(spark, tmp_path):
     """Factory for a table as a version before format v2 left it on disk:

@@ -2,7 +2,8 @@
 the downstream merge (`IngestJob.apply_changes`) instead of re-encoding it
 as JSON for `apply_batch` to decode. The replicas must match both the
 upstream and the old route (changes_to_feed → apply_batch), and the polls
-must call neither `apply_batch` nor the Python decode.
+must call neither `apply_batch` nor the Python decode. The documents view
+and the dedup index refresh the same way.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from pyspark.sql import types as T
 
 import data_pipeline_spark.functions.decode as decode_mod
 import data_pipeline_spark.streaming.ingest as ingest_mod
+from data_pipeline_spark.operators.corpus import assemble_conversations
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
@@ -24,7 +26,10 @@ from data_pipeline_spark.streaming.cascade import (
     CascadeTarget,
     filter_replica_changes,
 )
+from data_pipeline_spark.streaming.corpus_view import CorpusViewJob
+from data_pipeline_spark.streaming.dedup_index import DedupIndexJob
 from data_pipeline_spark.streaming.ingest import IngestJob
+from test_dedup_index import _assert_index_equals_scratch
 
 #: flips as a key's text gains a "rev <lsn>" suffix on each update, so
 #: updates move keys into and out of the predicate
@@ -52,7 +57,7 @@ def _advance(spark, job, seed, n_events=1_500):
 
 def _no_python_apply(monkeypatch):
     def boom(*args, **kwargs):
-        raise AssertionError("replica hop re-entered the JSON decode path")
+        raise AssertionError("an in-engine consumer re-entered the JSON decode path")
 
     monkeypatch.setattr(IngestJob, "apply_batch", boom)
     monkeypatch.setattr(ingest_mod, "decode_events", boom)
@@ -172,7 +177,8 @@ def test_full_upstream_to_partial_replica(spark, tmp_path):
     """The reverse direction works: a full-image changelog applied to a
     partial-mode replica lands as full images (`apply_changes` fills the
     missing `_set_mask`), so an update that nulls a column nulls it
-    downstream too."""
+    downstream too. The replica's own changelog shows each upstream U as
+    an I with a full mask: a full image replaces the row, present or not."""
     a = str(tmp_path / "a")
     LakehouseTable(a).create(TRANSCRIPT_SCHEMA, n_buckets=4)
     up_job = IngestJob(a, str(tmp_path / "ctl-a"))
@@ -185,3 +191,36 @@ def test_full_upstream_to_partial_replica(spark, tmp_path):
         pd.testing.assert_frame_equal(
             _pdf(LakehouseTable(a).read(spark)), _pdf(LakehouseTable(b).read(spark))
         )
+    up_ops = {r["_change_op"] for r in LakehouseTable(a).read_changes(spark, 0).collect()}
+    assert up_ops == {"I", "U", "D"}
+    replica = LakehouseTable(b).read_changes(spark, 0).collect()
+    assert {(r["_change_op"], r["_set_mask"]) for r in replica} == {("I", -1), ("D", 0)}
+
+
+def test_view_and_dedup_index_refresh_typed(spark, tmp_path, monkeypatch):
+    """The other in-engine changelog consumers apply typed rows too: a
+    documents view and a dedup index refresh without `apply_batch` or the
+    Python decode, and still equal their from-scratch oracles."""
+    a = str(tmp_path / "a")
+    LakehouseTable(a).create(TRANSCRIPT_SCHEMA, n_buckets=4)
+    up_job = IngestJob(a, str(tmp_path / "ctl-a"))
+    view = str(tmp_path / "view")
+    CorpusViewJob.create_view_table(view, n_buckets=4)
+    vj = CorpusViewJob(a, view, str(tmp_path / "ctl-view"))
+    idx = str(tmp_path / "idx")
+    DedupIndexJob.create_index_tables(idx, n_buckets=4)
+    dj = DedupIndexJob(a, idx)
+    docs = ["conv_id", "doc_text", "n_turns", "n_chars"]
+    for seed in (97, 101):
+        _advance(spark, up_job, seed)
+        with monkeypatch.context() as m:
+            _no_python_apply(m)
+            assert vj.run_until_caught_up(spark, str(tmp_path / "view.cursor")) == 1
+            assert dj.run_until_caught_up(spark, str(tmp_path / "idx.cursor")) == 1
+        want = assemble_conversations(LakehouseTable(a).read(spark)).select(*docs)
+        got = LakehouseTable(view).read(spark).select(*docs)
+        pd.testing.assert_frame_equal(
+            got.toPandas().sort_values("conv_id").reset_index(drop=True),
+            want.toPandas().sort_values("conv_id").reset_index(drop=True),
+        )
+        _assert_index_equals_scratch(spark, dj, a)

@@ -206,12 +206,12 @@ def test_crash_between_bands_and_sig_apply_converges(spark, tmp_path):
     ]))
 
     boom = RuntimeError("injected crash (test hook)")
-    orig = job.sig_job.apply_batch
+    orig = job.sig_job.apply_changes
 
     def crash(*a, **kw):
         raise boom
 
-    job.sig_job.apply_batch = crash
+    job.sig_job.apply_changes = crash
     with pytest.raises(RuntimeError, match="injected crash"):
         job.poll_once(spark, cursor)
     assert os.path.exists(cursor + ".intent")
@@ -237,7 +237,7 @@ def test_crash_between_bands_and_sig_apply_converges(spark, tmp_path):
     pd.testing.assert_frame_equal(pairs, want)
     keys = set(zip(pairs["d1"], pairs["d2"]))
     assert ("dup-b", "dup-c") in keys and ("dup-a", "dup-b") not in keys
-    job.sig_job.apply_batch = orig
+    job.sig_job.apply_changes = orig
 
 
 def test_crash_after_applies_before_cursor_commit(spark, tmp_path):

@@ -1,16 +1,21 @@
-"""Read planning starts no Spark job: `_read_parts` pins each file group's
-schema (its `schema-<id>.json` plus the requested engine columns) instead
-of letting `spark.read.parquet` infer it, which costs one Spark job per
-schema group on every `read`, `read_changes` and compaction.
+"""Read planning starts no Spark job: `_read_parts` pins each typed file
+group's schema (its `schema-<id>.json` plus the requested engine columns)
+instead of letting `spark.read.parquet` infer it, which costs one Spark job
+per schema group on every `read`, `read_changes` and compaction. Files
+written before the `typed` manifest mark may hold other types than their
+schema's; those are still inferred and read right.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
+
+import pyarrow.parquet as pq
 
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
-from conftest import changes_df, write_legacy_split_delta
+from conftest import changes_df, write_legacy_overwrite
 
 
 def _jobs_started(spark, build) -> int:
@@ -31,8 +36,7 @@ def test_read_plans_start_no_spark_job(spark, tmp_path):
     base = [(i + 1, "I", f"c{i % 5}", i // 5, f"a{i}") for i in range(20)]
     tbl.merge(spark, 0, changes_df(spark, base))
     tbl.compact(spark)  # base files
-    legacy = [(21, "U", "c0", 0, "u"), (22, "D", "c1", 0, None)]
-    write_legacy_split_delta(spark, tbl, 1, legacy)  # `_del=` deltas, no _tomb
+    tbl.merge(spark, 1, changes_df(spark, [(21, "U", "c0", 0, "u"), (22, "D", "c1", 0, None)]))
     tbl.apply_ddl([{"action": "add_column", "name": "score", "type": "double"}])
     tbl.merge(spark, 2, changes_df(spark, [(23, "I", "c9", 0, "n"), (24, "D", "c2", 0, None)]))
     # deltas under two schema ids, base under the first
@@ -52,3 +56,45 @@ def test_read_plans_start_no_spark_job(spark, tmp_path):
     assert ("c1", 0) not in live and ("c2", 0) not in live
     ops = sorted((r["lsn"], r["_change_op"]) for r in plans[2].collect())
     assert ops[-4:] == [(21, "U"), (22, "D"), (23, "I"), (24, "D")]
+
+
+def test_untyped_legacy_files_still_read(spark, tmp_path):
+    tbl = LakehouseTable(str(tmp_path / "t"))
+    tbl.create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=99)
+    write_legacy_overwrite(spark, tbl, [(0, f"c{i % 5}", i // 5, f"a{i}") for i in range(20)])
+    legacy = tbl.files()
+    assert not any(e.get("typed") for e in legacy)
+    # the files really hold a bigint where the schema says int
+    md = pq.read_schema(os.path.join(tbl.path, legacy[0]["path"]))
+    assert str(md.field("turn_idx").type) == "int64"
+    tbl.merge(spark, 0, changes_df(spark, [
+        (21, "U", "c0", 0, "u"), (22, "D", "c1", 0, None), (23, "I", "c9", 0, "n"),
+    ]))
+
+    want = {(f"c{i % 5}", i // 5): f"a{i}" for i in range(20)}
+    want[("c0", 0)] = "u"
+    del want[("c1", 0)]
+    want[("c9", 0)] = "n"
+
+    def live() -> dict:
+        return {(r["conv_id"], r["turn_idx"]): r["text"] for r in tbl.read(spark).collect()}
+
+    assert live() == want
+    changes = sorted(
+        (r["lsn"], r["_change_op"], r["conv_id"], r["turn_idx"], r["text"])
+        for r in tbl.read_changes(spark, 0).collect()
+    )
+    assert changes[:20] == sorted(
+        (0, "I", f"c{i % 5}", i // 5, f"a{i}") for i in range(20)
+    )
+    assert changes[20:] == [
+        (21, "U", "c0", 0, "u"), (22, "D", "c1", 0, None), (23, "I", "c9", 0, "n"),
+    ]
+
+    hot = {e["bucket"] for e in tbl.files() if e["layer"] == "delta"}
+    tbl.compact(spark)
+    # compaction rewrote the hot buckets as typed files, the rest stay legacy
+    files = tbl.files()
+    assert {e["bucket"] for e in files if e.get("typed")} == hot
+    assert {e["bucket"] for e in files if not e.get("typed")}
+    assert live() == want
