@@ -1523,8 +1523,6 @@ class LakehouseTable:
         writer then splits the sorted stream into sequential files, so
         every file covers a CONTIGUOUS key range — the layout file-level
         min/max skipping needs."""
-        rel = f"data/s{snapshot_id}"
-        out = os.path.join(self.path, rel)
         # Files hold their schema's types (no-op casts when the rows already
         # do). One that also holds every schema column is marked `typed`, and
         # _read_parts reads it with that schema pinned instead of inferred.
@@ -1541,21 +1539,35 @@ class LakehouseTable:
         writer = shaped.write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        # Write to a unique temp dir, then atomically rename to data/s<id>.
-        # Two writers that allocated the SAME id both used to target s<id>
-        # directly — and Spark's overwrite mode clears the output dir first,
-        # so the loser could delete the winner's already-committed files
-        # before the metadata CAS ever saw the conflict. With the rename,
-        # exactly one writer owns s<id> (POSIX dir rename fails on a
-        # non-empty target); the loser surfaces CommitConflictError here,
-        # retries under a fresh id, and its temp dir is removed. A crashed
-        # writer's renamed-but-never-committed dir is skipped by _next_id
-        # (which scans data/ as well as snapshot files) and reclaimed by
-        # expire_snapshots like any unreferenced file.
-        tmp_out = os.path.join(
-            self.path, "data", f".tmp-s{snapshot_id}-{uuid.uuid4().hex[:8]}"
-        )
+        tmp_out = self._tmp_data_dir(snapshot_id)
         writer.partitionBy("_bucket").parquet(tmp_out)
+        return self._place_data(tmp_out, snapshot_id, schema_id, layer, spec_id, typed)
+
+    def _tmp_data_dir(self, snapshot_id: int) -> str:
+        return os.path.join(self.path, "data", f".tmp-s{snapshot_id}-{uuid.uuid4().hex[:8]}")
+
+    def _place_data(
+        self, tmp_out: str, snapshot_id: int, schema_id: int, layer: str, spec_id: int,
+        typed: bool,
+    ) -> list[dict]:
+        """Move a data dir written at `tmp_out` (`_tmp_data_dir`, holding
+        _bucket=<b>/*.parquet) into place as data/s<id> and return its file
+        entries.
+
+        Writers fill a unique temp dir, then atomically rename it to
+        data/s<id>. Two writers that allocated the SAME id both used to
+        target s<id> directly — and Spark's overwrite mode clears the
+        output dir first, so the loser could delete the winner's
+        already-committed files before the metadata CAS ever saw the
+        conflict. With the rename, exactly one writer owns s<id> (POSIX dir
+        rename fails on a non-empty target); the loser surfaces
+        CommitConflictError here, retries under a fresh id, and its temp
+        dir is removed. A crashed writer's renamed-but-never-committed dir
+        is skipped by _next_id (which scans data/ as well as snapshot
+        files) and reclaimed by expire_snapshots like any unreferenced
+        file."""
+        rel = f"data/s{snapshot_id}"
+        out = os.path.join(self.path, rel)
         try:
             os.rename(tmp_out, out)
         except OSError:
@@ -2047,6 +2059,51 @@ class LakehouseTable:
             delta, new_id, snap["schema_id"], snap["n_buckets"], "delta",
             spec_id=self.spec_id(snap),
         )
+        return self._commit_delta(snap, batch_id, new_id, entries)
+
+    def link_merge(self, batch_id: int, source: LakehouseTable, entries: list[dict]) -> dict:
+        """Commit `source`'s delta files `entries` as this table's merge
+        `batch_id` by reference: each file is hard-linked into
+        data/s<id>/_bucket=<b>/ (copied where the filesystem refuses a
+        link), then committed through the same footer-stats → commit tail
+        as `merge`, with the same batch_id skip. No Spark job, and no new
+        bytes on the same filesystem until a compaction rewrites them.
+
+        The caller vouches that the entries are one merge's typed delta
+        files, written under a schema equal to this table's current one
+        (names and types, in order) and a spec with its bucket count, so
+        they read back here exactly as in `source`. Later deletes on either
+        side (expire, compaction, dropping the source table) unlink one
+        name only; the other keeps the bytes."""
+        import shutil
+
+        snap = self.current_snapshot()
+        if batch_id <= snap["last_batch_id"]:
+            return {"skipped": True, "batch_id": batch_id, "snapshot_id": snap["snapshot_id"]}
+        new_id = self._next_id(snap)
+        tmp_out = self._tmp_data_dir(new_id)
+        for e in entries:
+            src = os.path.join(source.path, e["path"])
+            dst = os.path.join(tmp_out, f"_bucket={e['bucket']}", os.path.basename(e["path"]))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            try:
+                os.link(src, dst)
+            except OSError:  # cross-device / FS without hard links
+                shutil.copyfile(src, dst)
+            else:
+                # the shared inode keeps the source's write time; restart
+                # it so an orphan grace (`expire_snapshots`) counts from
+                # this in-flight commit, as it does for a fresh write
+                os.utime(dst)
+        placed = self._place_data(
+            tmp_out, new_id, snap["schema_id"], "delta", self.spec_id(snap), typed=True
+        )
+        return self._commit_delta(snap, batch_id, new_id, placed)
+
+    def _commit_delta(self, snap: dict, batch_id: int, new_id: int, entries: list[dict]) -> dict:
+        """Commit placed delta files as merge `batch_id` (snapshot `new_id`
+        on top of `snap`); a changeset that wrote nothing commits a no-op
+        merge."""
         if not entries:
             return self._commit_noop_merge(snap, batch_id)
 
@@ -3045,40 +3102,12 @@ class LakehouseTable:
         snapshots, not thousands) and this is a few MB of strings; it never
         reads data files.
         """
-        chain = self.history()
-        ids = [s["snapshot_id"] for s in chain]
-        if from_snapshot_id not in ids:
-            raise ValueError(f"snapshot {from_snapshot_id} not in retained history {ids}")
-        to_id = to_snapshot_id if to_snapshot_id is not None else ids[-1]
-        rollback = _last_rollback(chain, from_snapshot_id, to_id)
-        if rollback is not None:
-            raise CursorExpiredError(from_snapshot_id, rollback)
         cur = self.current_snapshot()
         partial = self.update_mode(cur) == "partial"
         out_parts: list[DataFrame] = []
-        # Path-based diff (not manifest-name diff): compaction/rewrites
-        # carried entries into NEW manifests without changing the underlying
-        # file paths, so only genuinely new files count as changes. Manifest
-        # loads are cached by name, so each manifest reads once per call.
-        prev_files: set[str] = {
-            e["path"]
-            for s in chain
-            if s["snapshot_id"] <= from_snapshot_id
-            for e in self._files(s)
-        }
         data_cols = [f["name"] for f in self._load_schema(cur["schema_id"])["fields"]]
-        for s in chain:
+        for s, new_entries in self._change_window(from_snapshot_id, to_snapshot_id):
             sid = s["snapshot_id"]
-            if sid <= from_snapshot_id or sid > to_id:
-                continue
-            s_files = self._files(s)
-            new_entries = [e for e in s_files if e["path"] not in prev_files]
-            prev_files.update(e["path"] for e in s_files)
-            if s["kind"] in (
-                "create", "ddl", "compact", "recluster", "rebucket",
-                "rewrite_manifests", "evolve_spec", "migrate_spec",
-            ) or not new_entries:
-                continue
             if s["kind"] in ("merge", "cherry-pick"):
                 # cherry-pick re-references an earlier merge's delta files —
                 # new to THIS chain by path-diff, so they emit here exactly
@@ -3120,6 +3149,49 @@ class LakehouseTable:
         for p in out_parts[1:]:
             df = df.unionByName(p)
         return df
+
+    def _change_window(
+        self, from_snapshot_id: int, to_snapshot_id: int | None = None
+    ) -> list[tuple[dict, list[dict]]]:
+        """The commits in (from, to] of the published chain that change
+        rows, each with its file entries new to the chain, in commit order:
+        merge and cherry-pick commits (delta files) and overwrites (base
+        files). Raises ValueError for a `from` outside retained history and
+        CursorExpiredError for a rollback inside the window.
+
+        Path-based diff (not manifest-name diff): compaction/rewrites
+        carried entries into NEW manifests without changing the underlying
+        file paths, so only genuinely new files count as changes. Manifest
+        loads are cached by name, so each manifest reads once per call."""
+        chain = self.history()
+        ids = [s["snapshot_id"] for s in chain]
+        if from_snapshot_id not in ids:
+            raise ValueError(f"snapshot {from_snapshot_id} not in retained history {ids}")
+        to_id = to_snapshot_id if to_snapshot_id is not None else ids[-1]
+        rollback = _last_rollback(chain, from_snapshot_id, to_id)
+        if rollback is not None:
+            raise CursorExpiredError(from_snapshot_id, rollback)
+        prev_files: set[str] = {
+            e["path"]
+            for s in chain
+            if s["snapshot_id"] <= from_snapshot_id
+            for e in self._files(s)
+        }
+        out = []
+        for s in chain:
+            sid = s["snapshot_id"]
+            if sid <= from_snapshot_id or sid > to_id:
+                continue
+            s_files = self._files(s)
+            new_entries = [e for e in s_files if e["path"] not in prev_files]
+            prev_files.update(e["path"] for e in s_files)
+            if s["kind"] in (
+                "create", "ddl", "compact", "recluster", "rebucket",
+                "rewrite_manifests", "evolve_spec", "migrate_spec",
+            ) or not new_entries:
+                continue
+            out.append((s, new_entries))
+        return out
 
     def _touched_key_df(
         self, spark: SparkSession, from_id: int, to_id: int
@@ -3279,6 +3351,8 @@ class LakehouseTable:
         processed the batch (at-least-once for the consumer; make the
         downstream sink idempotent, e.g. another LakehouseTable merge).
         First call (no cursor file) starts from the oldest retained snapshot.
+        The returned cursor names the window it closes: the changes cover
+        (``from_snapshot_id``, ``snapshot_id``].
 
         A cursor that points BELOW the oldest retained snapshot has expired:
         `expire_snapshots` GC'd the deltas between it and the retained chain,
@@ -3311,6 +3385,7 @@ class LakehouseTable:
             start = at if resume is None else resume
         if start >= cur["snapshot_id"]:
             return None, new_cursor
+        new_cursor["from_snapshot_id"] = start
         return self.read_changes(spark, start, cur["snapshot_id"]), new_cursor
 
     @staticmethod

@@ -43,6 +43,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
+        # no per-call DataFrame call-site capture: with it on (the Spark 4
+        # default) every Column/DataFrame API call makes extra py4j round
+        # trips to record its Python origin for error messages, which
+        # multiplies driver-side plan-building time
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.parquet.filterPushdown", "true")
         # INT96 (Spark's legacy default) carries no usable column stats —

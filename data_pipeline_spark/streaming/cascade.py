@@ -5,7 +5,9 @@ bus so further targets consume them like any source feed (extract → Kafka →
 apply → Kafka → apply...; SURVEY.md §2 K1/S4). Here the hop is one
 cursor-polled edge per target (the protocol in `streaming/cursor.py`):
 
-    upstream.tail_changes  →  typed projection  →  downstream apply_changes
+    upstream.tail_changes ─┬─ one merge, same shape ─→ downstream link_merge
+                           └─ any other window ──────→ typed projection
+                                                       → downstream apply_changes
 
 - Transport: in-lake (the edge reads the upstream's committed changelog
   directly — no broker needed). The changelog is already typed and
@@ -25,10 +27,16 @@ cursor-polled edge per target (the protocol in `streaming/cursor.py`):
   built without re-reading A.
 
 Scale notes (100 TB): each window moves only the upstream COMMIT DELTA
-(collapsed changesets), never the table; the downstream apply is the
-collapse→bucketed-merge half of first-hop ingest — scan → collapse →
-bucketed write, entirely in the JVM (no `to_json`, no Arrow IPC, no Python
-workers), two shuffles per window, O(window) commit metadata.
+(collapsed changesets), never the table. A window of exactly one upstream
+merge into a full, unfiltered replica of the same schema and bucket count
+— every steady-state poll of a live edge — moves no rows at all: the
+upstream already wrote that changeset collapsed, typed and bucketed the
+way the replica would, so the replica commits the same files by hard link
+(zero Spark jobs; no new bytes on the same filesystem until compaction
+rewrites them). Every other window runs the collapse→bucketed-merge half
+of first-hop ingest — scan → collapse → bucketed write, entirely in the
+JVM (no `to_json`, no Arrow IPC, no Python workers), two shuffles per
+window. Either way, O(window) commit metadata.
 
 DML only: schema changes do NOT flow through the changelog (the reference
 routes DDL on the bus; the in-lake delta files carry data rows only). Apply
@@ -91,20 +99,72 @@ def filter_replica_changes(changes: DataFrame, predicate: Column | str) -> DataF
     return changes.withColumn("_change_op", keep_op)
 
 
+def _fields(table: LakehouseTable, schema_id: int) -> list[tuple[str, str]]:
+    """(name, type) of each column of one schema version, in order."""
+    return [(f["name"], f["type"]) for f in table._load_schema(schema_id)["fields"]]
+
+
+def _linkable(
+    upstream: LakehouseTable, replica: LakehouseTable, from_id: int, to_id: int
+) -> list[dict] | None:
+    """The upstream files a full replica can commit by reference for the
+    window (from_id, to_id], or None when the window must be applied as
+    typed rows. Linkable means: exactly one commit in the window changes
+    rows, and it is a merge or cherry-pick whose new files are all typed
+    deltas written under a schema equal to the replica's current one
+    (names and types, in order) and a spec with the replica's bucket
+    count, into a full-mode replica. Such files already hold the collapsed
+    changeset (at most one row per key) in the replica's own file layout
+    and bucket routing, so re-collapsing and re-bucketing them would
+    rewrite the same rows."""
+    window = upstream._change_window(from_id, to_id)
+    if len(window) != 1 or window[0][0]["kind"] not in ("merge", "cherry-pick"):
+        return None
+    snap, entries = window[0]
+    down = replica.current_snapshot()
+    if replica.update_mode(down) != "full":
+        return None
+    shape = _fields(replica, down["schema_id"])
+    specs = upstream.table_specs(snap)
+    if all(
+        e.get("typed") and e["layer"] == "delta"
+        and specs.get(e["spec_id"]) == down["n_buckets"]
+        and _fields(upstream, e["schema_id"]) == shape
+        for e in entries
+    ):
+        return entries
+    return None
+
+
 def _apply_replica(
     job: IngestJob,
     spark: SparkSession,
+    upstream: LakehouseTable,
+    from_id: int,
     batch_id: int,
     changes: DataFrame,
     row_predicate: Column | str | None,
 ) -> dict:
-    """Apply one changelog window to one replica target as typed rows:
-    filter → (lsn, op, <downstream columns>) → the target's `apply_changes`
-    (collapse → bucketed merge, all in the JVM). Each column is cast to the
-    downstream type and projected to the downstream schema, which
-    `sync_schema` has verified is the upstream's restricted to the keys +
-    the edge's `columns`; D rows carry null non-key columns, as a decoded
-    tombstone does. A partial-mode changelog is refused: a replica applies
+    """Apply one changelog window (from_id, batch_id] to one replica
+    target — the single place that chooses how:
+
+    - by reference: an unfiltered replica whose window `_linkable` accepts
+      (one merge, same shape; every steady-state poll of a live full
+      edge) commits the upstream's delta files by hard link
+      (`LakehouseTable.link_merge`) through the target's `_apply` tail
+      (maintenance wait, control record, maintenance submit, abort alert):
+      zero Spark jobs, and no new bytes on the same filesystem until
+      compaction;
+    - as typed rows, for every other window (catch-up over several
+      merges, filtered or projected replicas, untyped or legacy files, a
+      bucket-count or schema mismatch, a partial-mode replica): filter →
+      (lsn, op, <downstream columns>) → the target's `apply_changes`
+      (collapse → bucketed merge, all in the JVM). Each column is cast to
+      the downstream type and projected to the downstream schema, which
+      `sync_schema` has verified is the upstream's restricted to the keys
+      + the edge's `columns`.
+
+    A partial-mode changelog is refused either way: a replica applies
     full images only."""
     if MASK_COL in changes.columns:
         raise ValueError(
@@ -113,8 +173,20 @@ def _apply_replica(
             "images only, which would lose the mask's set-to-null/unset "
             "distinction"
         )
-    if row_predicate is not None:
+    if row_predicate is None:
+        linked = _linkable(upstream, job.table, from_id, batch_id)
+        if linked is not None:
+            return job._apply(
+                spark, batch_id, lambda mark: job.table.link_merge(batch_id, upstream, linked)
+            )
+    else:
         changes = filter_replica_changes(changes, row_predicate)
+    # D rows get null non-key columns, as a decoded tombstone does. A
+    # linked D row instead keeps whatever the upstream wrote there (an
+    # upstream decodes a D event's payload, if it has one). The two differ
+    # only in values nothing reads: reads and compaction resolve a key by
+    # its (lsn, op) alone, and `changes_to_feed` and the Debezium publisher
+    # emit a D row's key without its columns.
     live = F.col("_change_op") != "D"
     typed = changes.select(
         F.col("lsn"),
@@ -220,8 +292,8 @@ def _sync_replica_schema(
 class CascadeJob:
     """One replication edge: keep `downstream` identical to `upstream` by
     polling its changelog with a durable cursor. Construction mirrors
-    IngestJob (the downstream half IS an IngestJob, applied through
-    `apply_changes`)."""
+    IngestJob (the downstream half IS an IngestJob: each window lands
+    through its `apply_changes`, or by reference — see `_apply_replica`)."""
 
     def __init__(
         self,
@@ -262,9 +334,11 @@ class CascadeJob:
         from any scheduler. Raises on schema drift (see `sync_schema`) and
         CursorExpiredError (re-initsync the target, then resume)."""
 
-        def apply(batch_id: int, chg: DataFrame) -> dict:
+        def apply(batch_id: int, chg: DataFrame, from_id: int) -> dict:
             self.sync_schema()
-            return _apply_replica(self.job, spark, batch_id, chg, self.row_predicate)
+            return _apply_replica(
+                self.job, spark, self.upstream, from_id, batch_id, chg, self.row_predicate
+            )
 
         return poll_window(spark, self.upstream, cursor_path, apply)
 
@@ -345,14 +419,15 @@ class CascadeFanout:
         """One fan-out step over the window since the cursor; `result` maps
         target name → its apply result."""
 
-        def apply(batch_id: int, chg: DataFrame) -> dict:
+        def apply(batch_id: int, chg: DataFrame, from_id: int) -> dict:
             self.sync_schema()
             cached = chg.persist()
             try:
 
                 def one(t: CascadeTarget) -> tuple[str, dict]:
                     return t.name, _apply_replica(
-                        self.jobs[t.name], spark, batch_id, cached, t.row_predicate
+                        self.jobs[t.name], spark, self.upstream, from_id, batch_id,
+                        cached, t.row_predicate,
                     )
 
                 workers = max(1, min(_MAX_APPLY_THREADS, len(self.targets)))

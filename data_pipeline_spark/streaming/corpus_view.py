@@ -247,7 +247,7 @@ class CorpusViewJob:
         CursorExpiredError when the window can't be read incrementally —
         recover with `resync`."""
 
-        def apply(batch_id: int, chg: DataFrame) -> dict:
+        def apply(batch_id: int, chg: DataFrame, _from_id: int) -> dict:
             return self.refresh_for(spark, batch_id, chg.select("conv_id"))
 
         return poll_window(spark, self.upstream, cursor_path, apply)

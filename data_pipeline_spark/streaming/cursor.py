@@ -2,7 +2,7 @@
 table's changes between two COMMITTED snapshots of its published parent
 chain (Iceberg's incremental scan), never by listing files:
 
-    tail_changes(cursor) → apply(batch_id, changes) → commit_cursor
+    tail_changes(cursor) → apply(batch_id, changes, from_id) → commit_cursor
 
 The cursor commits only after the apply, so a crash in between re-reads
 the window: an exact redelivery (batch_id = the window's head snapshot id)
@@ -24,17 +24,17 @@ def poll_window(
     spark: SparkSession,
     upstream: LakehouseTable,
     cursor_path: str,
-    apply: Callable[[int, DataFrame], dict],
+    apply: Callable[[int, DataFrame, int], dict],
 ) -> dict:
-    """One poll: `apply(batch_id, changes)` the window since the cursor,
-    then commit the cursor. Returns {"applied": False, "cursor"} when there
-    is nothing new, else {"applied": True, "batch_id", "cursor", "result":
-    <apply's return>}."""
+    """One poll: `apply(batch_id, changes, from_id)` the window (from_id,
+    batch_id] since the cursor, then commit the cursor. Returns
+    {"applied": False, "cursor"} when there is nothing new, else
+    {"applied": True, "batch_id", "cursor", "result": <apply's return>}."""
     chg, cursor = upstream.tail_changes(spark, cursor_path)
     if chg is None:
         return {"applied": False, "cursor": cursor}
     batch_id = cursor["snapshot_id"]
-    res = apply(batch_id, chg)
+    res = apply(batch_id, chg, cursor["from_snapshot_id"])
     LakehouseTable.commit_cursor(cursor_path, cursor)
     return {"applied": True, "batch_id": batch_id, "cursor": cursor, "result": res}
 

@@ -257,10 +257,10 @@ class IngestJob:
         Waits for the previous batch's background maintenance first; this
         batch's own maintenance is still running when it returns (see
         `wait_maintenance`)."""
-        return self._apply(
-            spark, batch_id, enforce_watermark,
-            lambda mark: self._decode_batch(spark, batch_id, raw, ddl_rows, mark),
-        )
+        return self._apply(spark, batch_id, lambda mark: self._merge_changes(
+            spark, batch_id, enforce_watermark, mark,
+            *self._decode_batch(spark, batch_id, raw, ddl_rows, mark),
+        ))
 
     def apply_changes(
         self, spark: SparkSession, batch_id: int, changes: DataFrame,
@@ -278,7 +278,7 @@ class IngestJob:
         changelog consumers apply through here, so a replica hop never
         re-encodes to JSON or starts a Python decode worker."""
 
-        def typed(mark) -> tuple[DataFrame, dict]:
+        def typed() -> tuple[DataFrame, dict]:
             snap = self.table.current_snapshot()
             if self.table.update_mode(snap) == "partial" and MASK_COL not in changes.columns:
                 # A full image replaces the whole row, present or not: an
@@ -290,14 +290,16 @@ class IngestJob:
                 }), snap
             return changes, snap
 
-        return self._apply(spark, batch_id, enforce_watermark, typed)
+        return self._apply(spark, batch_id, lambda mark: self._merge_changes(
+            spark, batch_id, enforce_watermark, mark, *typed(),
+        ))
 
-    def _apply(self, spark: SparkSession, batch_id: int, enforce_watermark: bool, prepare) -> dict:
-        """The one apply body: `prepare(mark)` yields the typed change rows
-        and the snapshot they are typed for; then collapse → bucket → merge
-        → control record → maintenance submit. Any failure fires the
-        "abort" alert and re-raises. INGEST_DEBUG_TIMING=1 prints the
-        elapsed time at each `mark`."""
+    def _apply(self, spark: SparkSession, batch_id: int, commit) -> dict:
+        """The one apply body: wait for the previous batch's maintenance,
+        `commit(mark)` the batch (it returns a `LakehouseTable.merge`-shaped
+        result), then control record → maintenance submit. Any failure
+        fires the "abort" alert and re-raises. INGEST_DEBUG_TIMING=1 prints
+        the elapsed time at each `mark`."""
         self.wait_maintenance()
         t0 = time.monotonic()
         debug = os.environ.get("INGEST_DEBUG_TIMING") == "1"
@@ -308,30 +310,7 @@ class IngestJob:
                 marks.append((label, time.monotonic() - t0))
 
         try:
-            decoded, snap_now = prepare(mark)
-            n_buckets = snap_now["n_buckets"]
-            # Per-batch per-key collapse: full-row images take the max-LSN op
-            # (LWW); partial images must COMPOSE stacked updates column-wise,
-            # so they go through the sequential-apply fold instead (both are
-            # single map-side-combinable aggregations — SURVEY.md §2 T5).
-            # The full-mode collapse is the max-of-struct HASH aggregation,
-            # not the window: no per-partition sort, better 1→4N scaling
-            # (lww.py docstring has the measurements).
-            if self.table.update_mode(snap_now) == "partial":
-                collapsed = collapse_partial(decoded, self.table.field_bits(snap_now))
-            else:
-                collapsed = lww_collapse_agg(decoded)
-            collapsed = collapsed.withColumn("_bucket", self.table.bucket_expr(n_buckets))
-
-            # Write-first: decode → collapse → bucketed delta write runs as
-            # ONE action (no persist, no second pass); per-bucket lineage
-            # comes back from the merge's footer scan of the written delta
-            # files.
-            result = self.table.merge(
-                spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
-                bucket_n=n_buckets,
-            )
-            mark("merge")
+            result = commit(mark)
             metrics = [
                 {"partition_id": m["bucket"], "rows_applied": m["rows"],
                  "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
@@ -350,6 +329,37 @@ class IngestJob:
             raise
         if debug:
             print(f"[apply_batch {batch_id}] " + " ".join(f"{l}={s:.2f}s" for l, s in marks))
+        return result
+
+    def _merge_changes(
+        self, spark: SparkSession, batch_id: int, enforce_watermark: bool, mark,
+        decoded: DataFrame, snap_now: dict,
+    ) -> dict:
+        """The typed commit step: collapse → bucket → merge of change rows
+        typed for `snap_now`."""
+        n_buckets = snap_now["n_buckets"]
+        # Per-batch per-key collapse: full-row images take the max-LSN op
+        # (LWW); partial images must COMPOSE stacked updates column-wise,
+        # so they go through the sequential-apply fold instead (both are
+        # single map-side-combinable aggregations — SURVEY.md §2 T5).
+        # The full-mode collapse is the max-of-struct HASH aggregation,
+        # not the window: no per-partition sort, better 1→4N scaling
+        # (lww.py docstring has the measurements).
+        if self.table.update_mode(snap_now) == "partial":
+            collapsed = collapse_partial(decoded, self.table.field_bits(snap_now))
+        else:
+            collapsed = lww_collapse_agg(decoded)
+        collapsed = collapsed.withColumn("_bucket", self.table.bucket_expr(n_buckets))
+
+        # Write-first: decode → collapse → bucketed delta write runs as
+        # ONE action (no persist, no second pass); per-bucket lineage
+        # comes back from the merge's footer scan of the written delta
+        # files.
+        result = self.table.merge(
+            spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
+            bucket_n=n_buckets,
+        )
+        mark("merge")
         return result
 
     def _decode_batch(

@@ -78,7 +78,7 @@ class DebeziumPublishJob:
         chg, cursor = self.table.tail_changes(spark, self.cursor_path)
         if chg is None:
             return {"published": False, "cursor": cursor}
-        from_id = self._cursor_start(cursor)
+        from_id = cursor["from_snapshot_id"]
         to_id = cursor["snapshot_id"]
         wire = envelope_to_debezium(
             changes_to_feed(chg, columns=self.columns), **self.encode_kw
@@ -112,18 +112,6 @@ class DebeziumPublishJob:
             "chunk_files": chunk_files,
             "cursor": cursor,
         }
-
-    def _cursor_start(self, new_cursor: dict) -> int:
-        """The window's FROM id = the durable cursor before this poll, or
-        the oldest retained snapshot on first publish. (An EXPIRED cursor
-        raises inside tail_changes before reaching here — re-bootstrap the
-        consumers, delete the cursor file, resume.)"""
-        import json
-
-        if os.path.exists(self.cursor_path):
-            with open(self.cursor_path) as f:
-                return json.load(f)["snapshot_id"]
-        return self.table.history()[0]["snapshot_id"]
 
     def run_until_caught_up(self, spark: SparkSession, max_polls: int = 1000) -> int:
         """Poll until the published head is fully written; returns the

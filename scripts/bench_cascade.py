@@ -1,17 +1,21 @@
 """Cascade-edge benchmark: what does the SECOND hop cost?
 
 First hop: raw change feed → decode → collapse → merge into table A.
-Edge:      A's changelog (cursor-polled windows) as typed rows →
-           IngestJob.apply_changes (collapse → merge, no decode) → table B.
+Edge:      A's changelog (cursor-polled windows) → table B. A window of
+           one A merge into a same-shape full replica lands by hard link
+           (LakehouseTable.link_merge): zero Spark jobs and no extra bytes
+           on the same filesystem until compaction. The first hop here is
+           one trigger (--chunks ≤ 256 files), so its drain is one merge
+           and the edge is a link; any other window goes as typed rows
+           through IngestJob.apply_changes (collapse → merge, no decode).
 Fan-out (--fanout N): N full replicas via N independent CascadeJob edges
 (N reads of A's changelog) vs one CascadeFanout (one read per window,
 shared cached window, concurrent applies) — the read-amplification A/B.
 
 The edge never re-reads A — it moves only the collapsed per-commit
 changesets (strictly fewer rows than the raw feed, since upstream collapse
-already folded per-key churn), and it skips the JSON decode entirely: the
-changelog is already typed, so the edge runs in the JVM with no Python
-workers. Prints one JSON line: first-hop events/s, edge rows/s, the
+already folded per-key churn), and never decodes JSON: the changelog is
+already typed. Prints one JSON line: first-hop events/s, edge rows/s, the
 row-reduction ratio, and a content-equality check (xxhash64 sum over
 key+lsn+text) proving B == A.
 

@@ -46,6 +46,7 @@ CONTRACT: dict[str, list[str]] = {
     "commit_cursor": ["cursor_path", "cursor"],  # cursor.poll_window commit step
     # writes ---------------------------------------------------------------
     "merge": ["spark"],                        # IngestJob.apply_batch
+    "link_merge": ["batch_id", "source", "entries"],  # cascade._apply_replica
     "overwrite": ["spark"],                    # initsync
     "verify_against": ["spark", "source"],     # initsync verification
     # maintenance ----------------------------------------------------------
