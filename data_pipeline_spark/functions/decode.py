@@ -9,11 +9,13 @@ data path (BASELINE.json north-rule requirement).
 
 Two implementations with identical semantics:
 
-- ``decode_events``      mapInArrow (Arrow compute kernels) — the default,
-                         per the north rule, with a mapInPandas kernel as
-                         its per-row-isolation and decimal fallback; handles
-                         rename-coalescing and type-widening from the schema
-                         version.
+- ``decode_events``      mapInArrow (Arrow compute kernels), per the north
+                         rule; the mapInPandas kernel (``_decode_batch``)
+                         serves decimal schemas and, per batch, any batch
+                         the Arrow kernel fails on (its per-row isolation
+                         feeds quarantine). The schema picks the kernel,
+                         not the caller. Handles rename-coalescing and
+                         type-widening from the schema version.
 - ``decode_events_sql``  pure Catalyst ``from_json`` — JVM-side, kept only
                          as the tests' independent cross-check (it measured
                          slower than the Arrow kernel, BENCH/BASELINE.md).
@@ -448,7 +450,6 @@ def decode_events(
     renames: dict[str, list[str]] | None = None,
     with_validity: bool = False,
     field_bits: dict[str, int] | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Arrow-vectorized decode of DML change records (op != 'DDL').
 
@@ -459,16 +460,16 @@ def decode_events(
     envelope and are cast to the current schema types (covers the turn_idx
     widen).
 
-    impl="arrow" (default): `mapInArrow` + pure Arrow compute kernels —
-    the batch never converts to pandas, strings never materialize as Python
+    The kernel is `mapInArrow` + pure Arrow compute kernels — the batch
+    never converts to pandas, strings never materialize as Python
     objects, so the Python worker's CPU share is several-fold smaller (this
     is what keeps N→4N scaling efficient: the decode stage doubles the
     process count, and its CPU footprint is what presses the host's SMT
     ceiling at 4N). Falls back to the pandas kernel PER BATCH on any parse
     error (that path has the per-row isolation loop for quarantine mode).
-    impl="pandas": the mapInPandas kernel throughout — also chosen
-    automatically for decimal schemas (arrow float→decimal casts round
-    differently; the pandas path hands floats to Spark unchanged).
+    Decimal schemas take the mapInPandas kernel throughout (arrow
+    float→decimal casts round differently; the pandas path hands floats to
+    Spark unchanged).
     """
     renames = renames or {}
     out_schema = decoded_schema(table_schema)
@@ -494,7 +495,7 @@ def decode_events(
     )
 
     has_decimal = any(t.startswith("decimal") for _, t in fields)
-    if impl == "arrow" and not has_decimal:
+    if not has_decimal:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         out_arrow = to_arrow_schema(out_schema)

@@ -38,13 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _op_rank() -> Column:
-    return (
-        F.when(F.col("op") == "D", F.lit(2))
-        .when(F.col("op") == "U", F.lit(1))
-        .otherwise(F.lit(0))
-    )
+from data_pipeline_spark.operators.lww import lww_collapse_agg, op_rank_expr
 
 
 def merge_changeset(
@@ -69,25 +63,13 @@ def merge_changeset(
     both = existing.unionByName(changes) if existing is not None else changes
     key_cols = list(keys)
     payload_cols = [c for c in data_cols if c not in key_cols]
-    packed = both.select(
-        *[F.col(k) for k in key_cols],
-        F.struct(
-            F.col("lsn"),
-            _op_rank().alias("_opr"),
-            F.col("op"),
-            *[F.col(c) for c in extra_cols],
-            *[F.col(c) for c in payload_cols],
-        ).alias("_s"),
+    winner = lww_collapse_agg(
+        both.select("lsn", "op", *key_cols, *extra_cols, *payload_cols), key_cols
     )
-    winner = packed.groupBy(*key_cols).agg(F.max("_s").alias("_s"))
     if not keep_deletes:
-        winner = winner.where(F.col("_s.op") != "D")
+        winner = winner.where(F.col("op") != "D")
     return winner.select(
-        *[F.col(f"_s.{c}").alias(c) for c in extra_cols],
-        F.col("_s.lsn").alias("lsn"),
-        *([F.col("_s.op").alias("op")] if keep_deletes else []),
-        *[F.col(k) for k in key_cols],
-        *[F.col(f"_s.{c}").alias(c) for c in payload_cols],
+        *extra_cols, "lsn", *(["op"] if keep_deletes else []), *key_cols, *payload_cols
     )
 
 
@@ -128,7 +110,7 @@ def _partial_fold(
     faster on the 16M-event partial replay). `max_by` ignores rows whose
     ordering key is null, which is exactly the did-not-set-this-column
     filter. Requires lsn < 2^61 (any realistic SCN/LSN)."""
-    ordk = F.col("lsn") * 4 + _op_rank()
+    ordk = F.col("lsn") * 4 + op_rank_expr()
     aggs = [
         # boundary packed too: op_rank 0=I / 2=D ⇒ ord%4 identifies the op
         F.max(F.when(F.col("op").isin("I", "D"), ordk)).alias("_bnd_ord"),

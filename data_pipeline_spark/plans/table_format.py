@@ -94,6 +94,25 @@ OP_COL = "_op"
 #: Not "_del": legacy `_del=` partition dirs would clash with it.
 TOMB_COL = "_tomb"
 
+#: Most distinct ids an incremental consumer collects to the driver for a
+#: point read (see `bounded_ids`). Past it, the corpus view, the dedup index
+#: and `net_changes` take their distributed regime instead: a longer id list
+#: pushes megabytes through the driver and an isin filter, and once every
+#: bucket is touched the bucket pruning buys nothing.
+HIGH_CHURN_CAP = 100_000
+
+
+def bounded_ids(ids: DataFrame, col: str = "conv_id") -> list | None:
+    """The values of `col` in the distinct frame `ids`, or None when there
+    are more than HIGH_CHURN_CAP of them. One bounded collect decides the
+    regime and yields the point path's id list: `limit` stops the scan at
+    the cap, so a point refresh pays one driver round trip (never a count
+    followed by a collect) and a high-churn one lands at most cap + 1
+    values on the driver before dropping them."""
+    rows = ids.limit(HIGH_CHURN_CAP + 1).collect()
+    return None if len(rows) > HIGH_CHURN_CAP else [r[col] for r in rows]
+
+
 #: Types of the engine columns a read may request from data files.
 _ENGINE_TYPES: dict[str, T.DataType] = {
     LSN_COL: T.LongType(), OP_COL: T.StringType(), MASK_COL: T.LongType(),
@@ -740,7 +759,6 @@ class LakehouseTable:
                 src_batch if src_batch is not None else -1,
             ),
             "watermark_lsn": watermark,
-            "delta_commits": cur.get("delta_commits", 0) + 1,
             "manifests": cur["manifests"] + [self._write_manifest(new_id, picked)],
             "delta_depth": depth,
             "stats": {"picked_snapshot": snapshot_id, "picked_files": len(picked)},
@@ -1171,7 +1189,6 @@ class LakehouseTable:
                 "cluster_order": cluster_order,
                 "target_file_rows": target_file_rows,
                 "stats_columns": stats_columns,
-                "delta_commits": 0,
                 "manifests": [],
                 "delta_depth": {},
                 "stats": {},
@@ -1410,9 +1427,10 @@ class LakehouseTable:
 
         Pass `spark` to additionally model read()'s BUCKET pruning for
         `conv_ids` (the ids' bucket membership is computed by the same
-        Spark xxhash64 the write path routes with — one tiny local job;
-        without a session only key-range skipping is reported, so the
-        counts UNDERSTATE what read() skips on unclustered tables)."""
+        Spark xxhash64 the write path routes with, on the driver, starting
+        no Spark job; without a session only key-range skipping is
+        reported, so the counts UNDERSTATE what read() skips on unclustered
+        tables)."""
         snap = self.current_snapshot() if snapshot_id is None else self.snapshot_by_id(snapshot_id)
         entries = self._files(snap)
         total = len(entries)
@@ -1480,17 +1498,18 @@ class LakehouseTable:
         self, spark: SparkSession, conv_ids: list[str], specs: dict[int, int]
     ) -> dict[int, set[int]]:
         """Bucket ids the given conversations hash into, under EVERY live
-        spec — one tiny local job regardless of spec count (each spec is
-        one collect_set aggregate over the same id list)."""
-        df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-        aggs = [
-            # bucket_expr is the single routing definition — the write path
-            # and this read-side pruning must never diverge
-            F.collect_set(self.bucket_expr(n)).alias(f"s{s}")
-            for s, n in specs.items()
-        ]
-        row = df.agg(*aggs).first()
-        return {s: set(row[f"s{s}"]) for s in specs}
+        spec. The ids go in as a pandas-backed local relation, which Spark
+        projects and collects on the driver: planning a point read starts
+        no Spark job (a list-backed frame would start one per collect)."""
+        import pandas as pd
+
+        df = spark.createDataFrame(pd.DataFrame({"conv_id": conv_ids}), "conv_id string")
+        # bucket_expr is the single routing definition — the write path and
+        # this read-side pruning must never diverge
+        rows = df.select(
+            *[self.bucket_expr(n).alias(f"s{s}") for s, n in specs.items()]
+        ).collect()
+        return {s: {r[f"s{s}"] for r in rows} for s in specs}
 
     def update_mode(self, snap: dict | None = None) -> str:
         snap = snap or self.current_snapshot()
@@ -1948,7 +1967,6 @@ class LakehouseTable:
                 else {}
             ),
             "last_batch_id": max(snap["last_batch_id"], batch_id if batch_id is not None else -1),
-            "delta_commits": 0,
             "manifests": [self._write_manifest(new_id, entries)] if entries else [],
             "delta_depth": {},
             "stats": {},
@@ -2135,7 +2153,6 @@ class LakehouseTable:
             "batch_id": batch_id,
             "last_batch_id": batch_id,
             "watermark_lsn": new_watermark,
-            "delta_commits": snap.get("delta_commits", 0) + 1,
             "manifests": snap["manifests"] + [self._write_manifest(new_id, entries)],
             "delta_depth": depth,
             "stats": {"affected_buckets": len(bucket_metrics)},
@@ -2327,7 +2344,6 @@ class LakehouseTable:
             "parent": snap["snapshot_id"],
             "kind": kind,
             "batch_id": None,
-            "delta_commits": max([0] + list(remaining_depth.values())),
             "manifests": carried,
             "delta_depth": remaining_depth,
             "stats": {
@@ -2406,7 +2422,6 @@ class LakehouseTable:
             "parent": snap["snapshot_id"],
             "kind": "compact",
             "batch_id": None,
-            "delta_commits": max([0] + list(depth.values())),
             "manifests": carried,
             "delta_depth": depth,
             "stats": {
@@ -2515,7 +2530,6 @@ class LakehouseTable:
             "specs": {str(new_spec): new_n_buckets},
             "old_delta_depth": {},
             "auto_migrate_buckets": None,
-            "delta_commits": 0,
             "manifests": [self._write_manifest(new_id, entries)] if entries else [],
             "delta_depth": {},
             "stats": {"rebucketed_from": snap["n_buckets"], "rebucketed_to": new_n_buckets},
@@ -2593,7 +2607,6 @@ class LakehouseTable:
                 "n_buckets": new_n_buckets,
                 "spec_id": new_spec,
                 "specs": specs,
-                "delta_commits": 0,
                 # delta_depth is keyed by CURRENT-spec bucket id, so it
                 # restarts empty; the retired spec's un-folded stacks keep
                 # their read amplification visible under old_delta_depth
@@ -2762,9 +2775,6 @@ class LakehouseTable:
             "delta_depth": depth,
             "old_delta_depth": {} if remaining == 0 else old_depth,
             **({"auto_migrate_buckets": None} if remaining == 0 else {}),
-            "delta_commits": max(
-                [snap.get("delta_commits", 0)] + list(depth.values())
-            ),
             # migration complete → retire the old spec from the live list
             **(
                 {"specs": {str(cur_spec): snap["n_buckets"]}}
@@ -3259,7 +3269,6 @@ class LakehouseTable:
         spark: SparkSession,
         from_snapshot_id: int,
         to_snapshot_id: int | None = None,
-        high_churn_threshold: int = 100_000,
     ) -> DataFrame:
         """NET changelog between two snapshots (Iceberg's
         create_changelog_view(net_changes=true)): ONE row per merge key
@@ -3272,8 +3281,8 @@ class LakehouseTable:
         schema, field-id mapped).
 
         Plan shape (same two-regime split as corpus_view.touched_documents,
-        picked by ONE bounded count over the window's distinct conv_ids):
-        - churn ≤ high_churn_threshold (the design point): the touched
+        picked by `bounded_ids` over the window's distinct conv_ids):
+        - churn ≤ HIGH_CHURN_CAP (the design point): the touched
           conv_ids are collected and pushed into BOTH snapshot reads as
           `conv_ids=` — bucket pruning + manifest key-range skipping make
           the scans O(churn) FILES, not just O(churn) rows — then the exact
@@ -3295,16 +3304,7 @@ class LakehouseTable:
         keys = self._touched_key_df(spark, from_snapshot_id, to_id)
         conv_ids = None
         if keys is not None:
-            # ONE bounded probe-collect decides the regime AND yields the
-            # point path's id list (limit early-exits the distinct at the
-            # cap; ≤ threshold+1 thin strings ship to the driver — same
-            # pattern as corpus_view.touched_documents, never a count
-            # followed by a second collect re-reading the window's deltas)
-            convs = keys.select("conv_id").distinct()
-            probe = min(high_churn_threshold + 1, 2**31 - 1)
-            probed = convs.limit(probe).collect()
-            if len(probed) <= high_churn_threshold:
-                conv_ids = [r["conv_id"] for r in probed]
+            conv_ids = bounded_ids(keys.select("conv_id").distinct())
         before = self._project_to_schema(
             self.read(spark, from_snapshot_id, conv_ids=conv_ids),
             from_snap["schema_id"], to_snap["schema_id"],
@@ -3342,7 +3342,7 @@ class LakehouseTable:
         )
 
     def tail_changes(
-        self, spark: SparkSession, cursor_path: str, on_expired: str = "raise"
+        self, spark: SparkSession, cursor_path: str
     ) -> tuple[DataFrame | None, dict]:
         """Incremental changelog consumption with a durable cursor: returns
         (changes since the cursor's snapshot, new_cursor) and persists the
@@ -3359,14 +3359,10 @@ class LakehouseTable:
         so the changes folded into the oldest snapshot's base files can NEVER
         be emitted incrementally — silently resuming would lose them; a
         `rollback_to` inside the window likewise emits nothing for the rows
-        it removes. By default both raise CursorExpiredError (carrying the
-        oldest retained id, or the newest rollback id in the window); the
-        consumer must re-bootstrap with a full table read (``read(spark)``),
-        then resume tailing from the cursor the error carries.
-        ``on_expired="reset"`` opts into that skip explicitly and marks the
-        returned cursor with ``expired_reset``."""
-        if on_expired not in ("raise", "reset"):
-            raise ValueError(f"on_expired must be 'raise' or 'reset', got {on_expired!r}")
+        it removes. Both raise CursorExpiredError, whose `oldest_retained`
+        is the resume point (the oldest retained id, or the newest rollback
+        id in the window); the consumer re-bootstraps with a full table
+        read (``read(spark)``), then resumes tailing from there."""
         cur = self.current_snapshot()
         chain = self.history()
         chain_ids = [s["snapshot_id"] for s in chain]
@@ -3379,10 +3375,8 @@ class LakehouseTable:
             rollback = _last_rollback(chain, start if expired else at, cur["snapshot_id"])
             resume = rollback if rollback is not None else start if expired else None
             if resume is not None:
-                if on_expired == "raise":
-                    raise CursorExpiredError(at, resume)
-                new_cursor["expired_reset"] = {"from": at, "to": resume}
-            start = at if resume is None else resume
+                raise CursorExpiredError(at, resume)
+            start = at
         if start >= cur["snapshot_id"]:
             return None, new_cursor
         new_cursor["from_snapshot_id"] = start

@@ -252,6 +252,59 @@ def read_feed_stream(
     )
 
 
+def scan_ddl_chunks(
+    files: list[str], txn_below: int | None = None
+) -> list[tuple[int, str]] | None:
+    """(lsn, payload) of every DDL event in the given parquet chunk files,
+    read on the driver with pyarrow and no Spark job: the op column of each
+    file, then (lsn, payload) only from files that hold DDL. txn_below
+    keeps only events of transactions before that txn_id (and those with
+    no txn_id) — the complete-transaction prefix a `TxnAligner` releases.
+    Returns None when there are no files, or one is not local or cannot
+    be read; the caller then probes with Spark."""
+    paths = []
+    for f in files:
+        if f.startswith("file://"):
+            paths.append(f[len("file://"):])
+        elif f.startswith("file:"):
+            paths.append(f[len("file:"):])
+        elif f.startswith("/"):
+            paths.append(f)
+        else:
+            return None
+    if not paths:
+        return None
+    try:
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def probe(path: str) -> list[tuple[int, str]]:
+            ops = pq.read_table(path, columns=["op"])["op"]
+            if not pc.any(pc.equal(ops, "DDL")).as_py():
+                return []
+            cols = ["lsn", "op", "payload"] + (["txn_id"] if txn_below is not None else [])
+            t = pq.read_table(path, columns=cols)
+            keep = pc.equal(t["op"], "DDL")
+            if txn_below is not None:
+                older = pc.fill_null(pc.less(t["txn_id"], txn_below), True)
+                keep = pc.and_(keep, older)
+            t = t.filter(keep)
+            return list(zip(t["lsn"].to_pylist(), t["payload"].to_pylist()))
+
+        # pyarrow releases the GIL per read, so a thread pool makes the
+        # probe one parallel metadata sweep instead of O(files) serial
+        # driver time
+        out: list[tuple[int, str]] = []
+        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+            for hits in ex.map(probe, paths):
+                out.extend(hits)
+        return out
+    except Exception:  # noqa: BLE001 — any read hiccup: use the Spark probe
+        return None
+
+
 # ---------------------------------------------------------------------------
 # Spark-parallel feed generation (bench-scale). Content is derived purely
 # from the LSN via a splitmix-style hash, so any partitioning of the range

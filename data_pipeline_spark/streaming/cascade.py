@@ -68,10 +68,7 @@ from data_pipeline_spark.operators.merge import MASK_COL
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import MERGE_KEY
 from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
-from data_pipeline_spark.streaming.ingest import IngestJob
-
-#: most fan-out targets applied concurrently per window
-_MAX_APPLY_THREADS = 8
+from data_pipeline_spark.streaming.ingest import MAX_APPLY_THREADS, IngestJob
 
 
 def filter_replica_changes(changes: DataFrame, predicate: Column | str) -> DataFrame:
@@ -430,7 +427,7 @@ class CascadeFanout:
                         cached, t.row_predicate,
                     )
 
-                workers = max(1, min(_MAX_APPLY_THREADS, len(self.targets)))
+                workers = max(1, min(MAX_APPLY_THREADS, len(self.targets)))
                 with ThreadPoolExecutor(max_workers=workers) as ex:
                     # dict() drains the iterator so the first failure
                     # propagates (fail the poll, cursor stays put)

@@ -15,7 +15,10 @@ conv_ids hash into (metadata-level file skipping), the re-assembly
 aggregates only their turns, and the merge is the same two-shuffle
 bucketed plan as any ingest batch. At 100 TB a day's churn is a few
 thousand conversations — the refresh costs minutes of one executor, not
-a corpus-wide rebuild.
+a corpus-wide rebuild. A window touching more than
+`table_format.HIGH_CHURN_CAP` conversations (initsync fallout, backfill)
+semi-joins instead of point-reading; the engine picks the regime per
+window (`touched_documents`), the caller does not.
 
 Semantics: the view is a MATERIALIZED VIEW refresh, not a transcript
 replica — each window re-reads the touched conversations' CURRENT state,
@@ -52,7 +55,7 @@ from data_pipeline_spark.operators.corpus import (
     decontaminate,
     redact_pii,
 )
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import LakehouseTable, bounded_ids
 from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -62,15 +65,15 @@ def touched_documents(
     upstream: LakehouseTable,
     changed_ids: DataFrame,
     max_turns: int | None = None,
-    high_churn_threshold: int = 100_000,
     snapshot_id: int | None = None,
 ) -> tuple[DataFrame, str, list[str] | None]:
     """Current document images of the touched conversations — the shared
     core of every incremental corpus consumer (view refresh, delta export,
     dedup index).
 
-    Two regimes, picked by ONE bounded probe-collect over the batch:
-    - churn ≤ high_churn_threshold (the design point — daily churn ≪
+    Two regimes, picked by `bounded_ids` (one bounded probe-collect over
+    the batch, capped at table_format.HIGH_CHURN_CAP):
+    - churn ≤ the cap (the design point — daily churn ≪
       corpus): collect the id list and point-read it (bucket pruning +
       manifest key-range skipping → O(churn) files touched);
     - churn above the cap (initsync fallout, backfill, full overwrite):
@@ -87,27 +90,13 @@ def touched_documents(
     "semi_join"} and ids is the collected id list on the point path (None
     on the high-churn path) — callers that need the ids anyway (the dedup
     index point-reads its own tables by them) must not pay a second
-    collect job.
-
-    The regime is decided by one BOUNDED probe-collect
-    (limit(threshold+1).collect() — early-exits the scan at the cap and
-    doubles as the point path's id list, so the design-point refresh pays
-    ONE driver round-trip, never a count followed by a collect); the
-    high-churn path lands at most threshold+1 ids on the driver and
-    discards them."""
-    # limit() takes a JVM int; a "never semi-join" threshold (maxsize) must
-    # not overflow it — capping the probe at int32-max is semantically
-    # identical (n can never exceed it AND the threshold)
-    probe = min(high_churn_threshold + 1, 2**31 - 1)
-    rows = changed_ids.limit(probe).collect()
-    if len(rows) <= high_churn_threshold:
+    collect job."""
+    ids = bounded_ids(changed_ids)
+    if ids is not None:
         mode = "point"
-        # the probe didn't truncate (n <= threshold < probe), so the rows
-        # ARE the complete id list
-        ids = [r["conv_id"] for r in rows]
         turns = upstream.read(spark, snapshot_id=snapshot_id, conv_ids=ids)
     else:
-        mode, ids = "semi_join", None
+        mode = "semi_join"
         turns = upstream.read(spark, snapshot_id=snapshot_id).join(
             changed_ids, "conv_id", "semi"
         )
@@ -166,7 +155,11 @@ class CorpusViewJob:
     view-correct semantics: a document whose churn drops it below the bar
     is DELETED from the view (the same anti-join that handles whole-
     conversation deletes), and one that rises above it appears. Row-local
-    predicate, no extra shuffle."""
+    predicate, no extra shuffle.
+
+    Each refresh picks its own read regime (`touched_documents`): a point
+    read of the touched conversations, or a distributed semi-join once they
+    exceed `table_format.HIGH_CHURN_CAP`; `last_refresh_mode` names it."""
 
     def __init__(
         self,
@@ -176,22 +169,12 @@ class CorpusViewJob:
         redact: bool = False,
         max_turns: int | None = None,
         doc_filter: str | None = None,
-        high_churn_threshold: int = 100_000,
         **ingest_kw,
     ):
         self.upstream = LakehouseTable(upstream_path)
         self.redact = redact
         self.max_turns = max_turns
         self.doc_filter = doc_filter
-        # Above this many distinct touched conversations per refresh the
-        # point-read path stops making sense: collecting the id list pushes
-        # megabytes through the driver and the isin filter, and with every
-        # bucket touched the pruning buys nothing. Past the cap we switch to
-        # a distributed semi-join of the changed ids against the upstream
-        # read (same shape as the DDL-bomb cap in multi_table.py) — zero
-        # driver-side materialization, correct for a post-initsync or
-        # backfill batch touching 100% of conversations.
-        self.high_churn_threshold = high_churn_threshold
         #: refresh-path telemetry: "point" (collected id list, bucket/key-
         #: range pruned) or "semi_join" (high-churn distributed path) —
         #: set per refresh, readable by tests and operators.
@@ -218,7 +201,6 @@ class CorpusViewJob:
         docs, self.last_refresh_mode, _ = touched_documents(
             spark, self.upstream, changed_ids,
             max_turns=self.max_turns,
-            high_churn_threshold=self.high_churn_threshold,
             snapshot_id=snap["snapshot_id"],
         )
         if self.redact:
@@ -304,7 +286,6 @@ def export_corpus_delta(
     min_turns: int = 1,
     max_turns: int | None = None,
     doc_filter: str | None = None,
-    high_churn_threshold: int = 100_000,
     benchmark: str | None = None,
     benchmark_text_col: str = "text",
     decontaminate_ngram: int = 3,
@@ -380,8 +361,7 @@ def export_corpus_delta(
         changed_ids = chg.select("conv_id").distinct()
         docs, mode, _ = touched_documents(
             spark, upstream, changed_ids,
-            max_turns=max_turns, high_churn_threshold=high_churn_threshold,
-            snapshot_id=to_id,
+            max_turns=max_turns, snapshot_id=to_id,
         )
     # a bootstrap's dir gets its own prefix: `prev or 0` would collide with
     # a REAL from_snapshot=0 window (create() writes snapshot 0, so an

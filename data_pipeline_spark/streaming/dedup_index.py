@@ -16,7 +16,10 @@ conversations; their documents are re-assembled via the shared
 `touched_documents` point-read path, re-signed (one hash-agg over their
 shingles), and folded into the index — the ONLY bucket rows rewritten are
 the touched docs' old ∪ new buckets, point-read by key (bucket pruning +
-manifest key ranges, O(churn) files). Nothing corpus-sized moves.
+manifest key ranges, O(churn) files). Nothing corpus-sized moves. Past
+`table_format.HIGH_CHURN_CAP` touched docs (or band keys) a refresh
+rebuilds the bands table in one distributed pass instead; the engine picks
+the regime per refresh, the caller does not.
 
 Candidate lookup inverts the same stores: a doc's near-dup candidates are
 the members of its buckets — point reads again, so "what just became a
@@ -63,7 +66,7 @@ from data_pipeline_spark.operators.corpus import (
     doc_shingles,
     minhash_signature,
 )
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import LakehouseTable, bounded_ids
 from data_pipeline_spark.streaming.corpus_view import _image_changes, touched_documents
 from data_pipeline_spark.streaming.cursor import lsn_lag, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
@@ -98,6 +101,12 @@ BANDS_SCHEMA = T.StructType(
 
 _MEMBERS_T = "array<string>"
 
+#: Most ids `near_dups_for` answers by point reads; above it the lookup is
+#: one distributed pass over the bands table. This is the crossover that
+#: scripts/bench_dedup_index.py measured at sandbox scale; it rises with
+#: corpus size.
+LOOKUP_POINT_CAP = 2_000
+
 
 class DedupIndexJob:
     """Keep MinHash signatures + LSH bucket membership equal to the batch
@@ -108,11 +117,12 @@ class DedupIndexJob:
     8 hashes, 4 bands of 2).
     min_matches: signature-agreement threshold for emitted pairs (of
     n_hashes; default half, the pipeline's est_jaccard ≥ 0.5).
-    high_churn_threshold: above this many touched docs per refresh the
-    point-read paths stop paying (same regime split as CorpusViewJob);
-    the bands table is then REBUILT from the post-refresh signatures in
-    one linear distributed pass (overwrite) — the honest degraded mode
-    for initsync fallout / backfills.
+    Each refresh picks its regime (`last_refresh_mode`): point, or — past
+    `table_format.HIGH_CHURN_CAP` touched docs or band keys, where the
+    point reads stop paying (same split as CorpusViewJob) — a REBUILD of
+    the bands table from the post-refresh signatures in one linear
+    distributed pass (overwrite), the honest degraded mode for initsync
+    fallout / backfills.
     catalog_path: optional TxnCatalog dir; each refresh publishes the
     (signatures, bands) snapshot pair atomically for consistent readers.
     max_bucket_members: opt-in alert (via on_alert) when any bucket's
@@ -130,8 +140,6 @@ class DedupIndexJob:
         n_bands: int = 4,
         rows_per_band: int = 2,
         min_matches: int | None = None,
-        high_churn_threshold: int = 100_000,
-        lookup_point_threshold: int = 2_000,
         catalog_path: str | None = None,
         max_bucket_members: int | None = None,
         max_turns: int | None = None,
@@ -150,8 +158,6 @@ class DedupIndexJob:
         self.n_bands = n_bands
         self.rows_per_band = rows_per_band
         self.min_matches = (n_hashes + 1) // 2 if min_matches is None else min_matches
-        self.high_churn_threshold = high_churn_threshold
-        self.lookup_point_threshold = lookup_point_threshold
         self.max_bucket_members = max_bucket_members
         self.max_turns = max_turns
         self.on_alert = on_alert
@@ -237,7 +243,6 @@ class DedupIndexJob:
         docs, mode, ids = touched_documents(
             spark, self.upstream, changed_ids,
             max_turns=self.max_turns,
-            high_churn_threshold=self.high_churn_threshold,
             snapshot_id=snap["snapshot_id"],
         )
         new_sig = self._sign(docs).persist()
@@ -269,7 +274,7 @@ class DedupIndexJob:
         """O(churn) path: rewrite only the touched docs' old ∪ new buckets.
         ids: the changed id list, already collected by touched_documents'
         bounded probe. The band keys (≤ 2 × n_bands per doc) are probed the
-        same way: above high_churn_threshold keys, rebuild instead."""
+        same way: above HIGH_CHURN_CAP keys, rebuild instead."""
         self.last_refresh_mode = "point"
         changed_ids = spark.createDataFrame(
             [(c,) for c in ids], "conv_id string"
@@ -279,10 +284,9 @@ class DedupIndexJob:
             self._bands_of(old_sig).unionByName(self._bands_of(new_sig))
             .select("key").distinct()
         )
-        probed = affected.limit(self.high_churn_threshold + 1).collect()
-        if len(probed) > self.high_churn_threshold:
+        keys = bounded_ids(affected, "key")
+        if keys is None:
             return self._refresh_rebuild(spark, batch_id, lsn, changed_ids, new_sig)
-        keys = [r["key"] for r in probed]
         cur_members = self._read_keys(spark, self.bands, keys).select(
             F.col("conv_id").alias("key"),
             F.explode(F.from_json("members", _MEMBERS_T)).alias("member"),
@@ -493,8 +497,8 @@ class DedupIndexJob:
     def near_dups_for(self, spark: SparkSession, ids: list[str]) -> DataFrame:
         """Near-dup pairs touching the given docs — the per-batch "what
         near-dups did this churn introduce?" query. Two regimes, split on
-        `lookup_point_threshold` — deliberately NOT the refresh's
-        high_churn_threshold, because the cost structures differ: the
+        `LOOKUP_POINT_CAP` — deliberately NOT the refresh's
+        HIGH_CHURN_CAP, because the cost structures differ: the
         refresh's point path reads O(churn) pruned files once, while the
         lookup's point path COLLECTS the docs' bucket keys (|ids| × n_bands
         of them) to the driver and point-reads them, then collects the
@@ -504,7 +508,7 @@ class DedupIndexJob:
         scripts/bench_dedup_index.py; the crossover RISES with corpus size —
         the scan side grows, the point side doesn't):
 
-        - |ids| ≤ lookup_point_threshold (the design point): point reads
+        - |ids| ≤ LOOKUP_POINT_CAP (the design point): point reads
           only — the docs' sig rows -> their bucket keys -> those buckets'
           member rows. O(|ids| × bucket size), a handful of pruned file
           reads.
@@ -528,7 +532,8 @@ class DedupIndexJob:
         # OR-condition join, which Spark can only run as
         # BroadcastNestedLoopJoin — |cand| × |ids| comparisons, 130 s at
         # 10k ids; scripts/bench_dedup_index.py tracks both regressions.)
-        if len(ids) <= self.lookup_point_threshold:
+        point = len(ids) <= LOOKUP_POINT_CAP
+        if point:
             my_sig = self.sig.read(
                 spark, snapshot_id=self._pinned("signatures"), conv_ids=ids
             )
@@ -544,7 +549,7 @@ class DedupIndexJob:
             rows = self._read_keys(spark, self.bands, keys).select(
                 F.from_json("members", _MEMBERS_T).alias("ms")
             ).persist()
-            # ids is driver-bounded here (≤ lookup_point_threshold): a
+            # ids is driver-bounded here (≤ LOOKUP_POINT_CAP): a
             # literal array keeps the anchor extraction row-local
             lit_ids = F.array(*[F.lit(c) for c in ids])
             hits = rows.select(
@@ -577,7 +582,7 @@ class DedupIndexJob:
         # partner signatures: point-read when the candidate set is small
         # enough to enumerate, else the full (pinned) signature read joins
         # distributed — never a driver-side partner list on the big path
-        if len(ids) <= self.lookup_point_threshold:
+        if point:
             partners = [
                 r["m"]
                 for r in rows.select(F.explode("ms").alias("m")).distinct().collect()

@@ -53,11 +53,16 @@ from data_pipeline_spark.functions.decode import decode_events
 from data_pipeline_spark.operators.lww import lww_collapse_agg
 from data_pipeline_spark.operators.merge import MASK_COL, collapse_partial
 from data_pipeline_spark.plans.table_format import LakehouseTable
-from data_pipeline_spark.sources.feed import read_feed_batch, read_feed_stream
+from data_pipeline_spark.sources.feed import read_feed_batch, read_feed_stream, scan_ddl_chunks
 
 #: Driver-side cap on collected DDL rows per batch (DDL is rare and tiny by
-#: design; crossing this means a malformed feed — abort, don't OOM).
+#: design; crossing this means a malformed feed — abort, don't OOM). The
+#: multi-table router's whole-batch sweep uses it too.
 DDL_ROW_CAP = 10_000
+
+#: Most per-table (multi-table router) or per-target (cascade fan-out)
+#: applies submitted to Spark at once from one batch or window.
+MAX_APPLY_THREADS = 8
 
 
 class IngestJob:
@@ -76,10 +81,6 @@ class IngestJob:
         # (durable audit trail) whether or not a callback is set; a failed
         # background maintenance run fires {"kind": "maintenance_error",
         # batch_id, error}.
-        ddl_fast_scan: bool = True,  # driver-side pyarrow DDL probe; MUST be
-        # False when apply_batch receives a FILTERED slice of the batch (the
-        # file scan sees whole files, not the DF's filters) — multi-table
-        # routing does this
         ref: str | None = None,  # land batches on a BRANCH (write-audit-
         # publish): commits go to this branch head; main readers see nothing
         # until LakehouseTable(path).fast_forward(ref) publishes
@@ -93,8 +94,8 @@ class IngestJob:
         stream_reader=None,  # plug-in feed reader with the read_feed_stream
         # signature (spark, feed_dir, max_files_per_trigger, with_txns) —
         # e.g. sources/debezium.read_debezium_stream adapts a Debezium topic
-        # directory. Custom readers force the exact DDL path: the pyarrow
-        # fast-probe assumes the chunk files hold CHANGE_EVENT columns.
+        # directory. Custom readers get the Spark DDL probe: the driver-side
+        # chunk-file probe assumes the files hold CHANGE_EVENT columns.
         batch_reader=None,  # replay_batch counterpart (read_feed_batch shape)
     ):
         if on_error not in ("abort", "quarantine"):
@@ -110,17 +111,10 @@ class IngestJob:
             from data_pipeline_spark.streaming.txn import TxnAligner
 
             self.aligner = TxnAligner(os.path.join(control_path, "txn_spill"))
-            # the pyarrow DDL fast-probe scans the batch's WHOLE chunk files;
-            # the aligned frame is a filtered union (spill + safe prefix), so
-            # the probe would see deferred DDL early — force the exact path
-            ddl_fast_scan = False
         else:
             self.aligner = None
         self.stream_reader = stream_reader or read_feed_stream
         self.batch_reader = batch_reader or read_feed_batch
-        if stream_reader is not None or batch_reader is not None:
-            ddl_fast_scan = False
-        self.ddl_fast_scan = ddl_fast_scan
         self._checkpoint_dir: str | None = None
         # the background maintenance runner, created on first use
         self._runner: ThreadPoolExecutor | None = None
@@ -198,46 +192,6 @@ class IngestJob:
                 if line.startswith("{"):
                     out.append(json.loads(line)["path"])
         return out
-
-    def _scan_ddl_files(self, raw: DataFrame, batch_id: int) -> list[tuple[int, str]] | None:
-        """Driver-side DDL detection over the micro-batch's parquet chunk
-        files (op column only). Returns None when the batch isn't backed by
-        local parquet files — caller falls back to the Spark probe."""
-        if not self.ddl_fast_scan:
-            return None
-        files = self._batch_files(raw, batch_id)
-        if not files:
-            return None
-        paths = []
-        for f in files:
-            if not f.startswith("file:"):
-                return None
-            paths.append(f[len("file://"):] if f.startswith("file://") else f[len("file:"):])
-        try:
-            from concurrent.futures import ThreadPoolExecutor
-
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            def probe(path: str) -> list[tuple[int, str]]:
-                ops = pq.read_table(path, columns=["op"])["op"]
-                if not pc.any(pc.equal(ops, "DDL")).as_py():
-                    return []
-                t = pq.read_table(path, columns=["lsn", "op", "payload"])
-                t = t.filter(pc.equal(t["op"], "DDL"))
-                return list(zip(t["lsn"].to_pylist(), t["payload"].to_pylist()))
-
-            # pyarrow releases the GIL per read — a thread pool turns the
-            # per-batch probe from O(files) serial driver time into one
-            # parallel metadata sweep (the driver-side fixed cost is what
-            # erodes N→4N scaling efficiency: it doesn't shrink with cores)
-            out: list[tuple[int, str]] = []
-            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-                for hits in ex.map(probe, paths):
-                    out.extend(hits)
-            return out
-        except Exception:  # noqa: BLE001 — any read hiccup: use the Spark probe
-            return None
 
     # ------------------------------------------------------------- one batch
     def apply_batch(
@@ -398,23 +352,27 @@ class IngestJob:
 
         # DDL branch (reference: applier DDL routing, SURVEY.md §2 T3/T8).
         # DDL rows are rare and tiny — driver-side metadata ops, in LSN
-        # order. Fast path: scan ONLY the op column of this batch's chunk
-        # files with pyarrow in the driver (dictionary-encoded, a few ms) —
-        # no Spark job at all; payloads are fetched only from files that
-        # actually contain DDL. Falls back to a two-phase Spark probe when
+        # order. When the batch is whole chunk files of the default feed,
+        # `scan_ddl_chunks` reads them on the driver with no Spark job. Not
+        # for a txn-aligned job (its frame is a filtered union of spill and
+        # safe prefix; the aligner probes instead) or a custom reader (its
+        # files need not hold CHANGE_EVENT columns). Otherwise — and when
         # the source isn't local parquet files (e.g. Kafka in prod, where
-        # the extract side would flag DDL in message headers instead).
+        # the extract side would flag DDL in message headers instead) —
+        # one bounded Spark collect.
+        if (
+            ddl_rows is None
+            and not self.txn_aligned
+            and self.stream_reader is read_feed_stream
+            and self.batch_reader is read_feed_batch
+        ):
+            ddl_rows = scan_ddl_chunks(self._batch_files(raw, batch_id))
         if ddl_rows is None:
-            ddl_rows = self._scan_ddl_files(raw, batch_id)
-        if ddl_rows is None:
-            has_ddl = raw.where(F.col("op") == "DDL").select("lsn").first() is not None
             rows = (
                 raw.where(F.col("op") == "DDL")
                 .select("lsn", "payload")
                 .limit(DDL_ROW_CAP + 1)
                 .collect()
-                if has_ddl
-                else []
             )
             ddl_rows = [(r.lsn, r.payload) for r in rows]
         if len(ddl_rows) > DDL_ROW_CAP:
@@ -540,25 +498,18 @@ class IngestJob:
         checkpoint_dir: str,
         max_files_per_trigger: int = 8,
         available_now: bool = True,
-        fail_after_batches: int | None = None,  # test hook: simulate a crash
     ):
         """Run the streaming ingest. available_now=True drains the feed and
         stops (Trigger.AvailableNow) — the replay/bench mode; False runs
         continuously tailing the directory."""
-        applied = {"n": 0}
-
-        def handle(df: DataFrame, batch_id: int) -> None:
-            if fail_after_batches is not None and applied["n"] >= fail_after_batches:
-                raise RuntimeError("injected crash (test hook)")
-            self.apply_batch(df.sparkSession, int(batch_id), df)
-            applied["n"] += 1
-
         self._checkpoint_dir = checkpoint_dir
         stream = self.stream_reader(
             spark, feed_dir, max_files_per_trigger, with_txns=self.txn_aligned
         )
         writer = (
-            stream.writeStream.foreachBatch(handle)
+            stream.writeStream.foreachBatch(
+                lambda df, batch_id: self.apply_batch(df.sparkSession, int(batch_id), df)
+            )
             .option("checkpointLocation", checkpoint_dir)
         )
         if available_now:

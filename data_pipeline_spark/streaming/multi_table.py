@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TXN_EVENT_SCHEMA
+from data_pipeline_spark.streaming import ingest
 from data_pipeline_spark.streaming.ingest import IngestJob
 
 MULTI_EVENT_SCHEMA = T.StructType(
@@ -56,13 +57,6 @@ MULTI_TXN_EVENT_SCHEMA = T.StructType(
 
 
 class MultiTableIngestJob:
-    #: Driver-side cap on collected DDL rows per batch. DDL is rare and tiny
-    #: by design (the sweep is a driver-side metadata op); a malformed feed
-    #: that floods DDL rows would otherwise OOM the driver through the
-    #: collect. Crossing the cap aborts the batch with an alert — the stream
-    #: stops cleanly and resumes from the checkpoint once the feed is fixed.
-    DDL_ROW_CAP = 10_000
-
     def __init__(
         self,
         tables: dict[str, str],  # table_name -> LakehouseTable path
@@ -71,7 +65,6 @@ class MultiTableIngestJob:
         table_root: str | None = None,  # where create_table tables materialize;
         # None disables dynamic registration (strict static allowlist)
         create_defaults: dict | None = None,  # n_buckets/update_mode for creates
-        apply_concurrency: int = 8,  # per-table apply jobs submitted at once
         txn_aligned: bool = False,  # hold router batches to SOURCE-transaction
         # boundaries (streaming/txn.py): txn ids are global across tables
         # (like Oracle SCN), so one aligner guards the whole feed and a
@@ -86,7 +79,6 @@ class MultiTableIngestJob:
         self.control_root = control_root
         self.table_root = table_root
         self.create_defaults = dict(create_defaults or {})
-        self.apply_concurrency = apply_concurrency
         if txn_aligned:
             from data_pipeline_spark.streaming.txn import TxnAligner
 
@@ -99,9 +91,6 @@ class MultiTableIngestJob:
             self.catalog = TxnCatalog(catalog_path)
         else:
             self.catalog = None
-        # sub-jobs never probe for DDL themselves: the router's single sweep
-        # hands each one its rows (ddl_rows=[...] below)
-        ingest_kwargs.setdefault("ddl_fast_scan", False)
         self._ingest_kwargs = ingest_kwargs
         self.jobs = {
             name: IngestJob(path, os.path.join(control_root, name), **ingest_kwargs)
@@ -150,22 +139,26 @@ class MultiTableIngestJob:
         try:
             # single driver-side DDL sweep for the whole batch (DDL rows are
             # rare and tiny — reference: applier DDL branch, SURVEY.md §2 T3).
-            # The limit caps driver memory: a DDL bomb aborts with an alert
-            # instead of OOM-ing the driver through an unbounded collect.
+            # The limit caps driver memory (`ingest.DDL_ROW_CAP`): a DDL bomb
+            # aborts with an alert instead of OOM-ing the driver through an
+            # unbounded collect; the stream resumes from the checkpoint once
+            # the feed is fixed. Sub-jobs never probe for DDL themselves:
+            # each gets its rows from this sweep (ddl_rows=[...] below).
+            cap = ingest.DDL_ROW_CAP
             ddl = (
                 cached.where(F.col("op") == "DDL")
                 .select("lsn", "table_name", "payload")
-                .limit(self.DDL_ROW_CAP + 1)
+                .limit(cap + 1)
                 .collect()
             )
-            if len(ddl) > self.DDL_ROW_CAP:
+            if len(ddl) > cap:
                 self._alert({
                     "kind": "abort",
                     "batch_id": batch_id,
-                    "error": f"DDL bomb: > {self.DDL_ROW_CAP} DDL rows in one batch",
+                    "error": f"DDL bomb: > {cap} DDL rows in one batch",
                 })
                 raise ValueError(
-                    f"batch {batch_id}: more than {self.DDL_ROW_CAP} DDL rows — "
+                    f"batch {batch_id}: more than {cap} DDL rows — "
                     "refusing to collect an unbounded DDL sweep on the driver"
                 )
             ddl_by_table: dict[str, list[tuple[int, str]]] = {}
@@ -199,12 +192,9 @@ class MultiTableIngestJob:
                     spark, batch_id, sub, ddl_rows=ddl_by_table.get(name, [])
                 )
 
-            workers = max(1, min(self.apply_concurrency, len(self.jobs)))
-            if workers == 1:
-                results = dict(one(item) for item in self.jobs.items())
-            else:
-                with ThreadPoolExecutor(max_workers=workers) as ex:
-                    results = dict(ex.map(one, list(self.jobs.items())))
+            workers = max(1, min(ingest.MAX_APPLY_THREADS, len(self.jobs)))
+            with ThreadPoolExecutor(max_workers=workers) as ex:
+                results = dict(ex.map(one, list(self.jobs.items())))
             self._publish_catalog(batch_id)
             return results
         finally:
@@ -278,7 +268,8 @@ class MultiTableIngestJob:
             report = tbl.verify_against(spark, df) if verify else {"ok": True}
             return name, report
 
-        with ThreadPoolExecutor(max_workers=min(8, max(1, len(sources)))) as ex:
+        workers = max(1, min(ingest.MAX_APPLY_THREADS, len(sources)))
+        with ThreadPoolExecutor(max_workers=workers) as ex:
             return dict(ex.map(one, sources.items()))
 
     def run_to_completion(

@@ -63,6 +63,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_spark.sources.feed import scan_ddl_chunks
+
 
 class TxnAligner:
     """Split each micro-batch at the last complete source-transaction
@@ -141,11 +143,10 @@ class TxnAligner:
         the previous spill: parquet FOOTER stats give max(txn_id) with no
         Spark job; the open tail is extracted with a pyarrow point filter
         (row-group stats confine the read to the last file(s)) and written
-        as the spill; the DDL probe rides the same sweep (op column only,
-        then (lsn, payload) from files that actually contain DDL, deferred
-        region excluded). Returns (mx, ddl_rows) — the caller builds the
-        safe frame — or None to fall back to the Spark path (non-local
-        files, missing stats, oversized tail)."""
+        as the spill; the DDL probe (`scan_ddl_chunks` below mx) rides
+        the same sweep, deferred region excluded. Returns (mx, ddl_rows) —
+        the caller builds the safe frame — or None to fall back to the
+        Spark path (non-local files, missing stats, oversized tail)."""
         paths = []
         for f in files:
             if f.startswith("file://"):
@@ -166,7 +167,6 @@ class TxnAligner:
             from concurrent.futures import ThreadPoolExecutor
 
             import pyarrow as pa
-            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             def footer(path: str):
@@ -216,22 +216,9 @@ class TxnAligner:
                 if b < batch_id - 1:
                     shutil.rmtree(self._spill_path(b), ignore_errors=True)
 
-            ddl_rows: list[tuple[int, str]] | None = None
-            if ddl_probe:
-                def probe(path: str) -> list[tuple[int, str]]:
-                    ops = pq.read_table(path, columns=["op"])["op"]
-                    if not pc.any(pc.equal(ops, "DDL")).as_py():
-                        return []
-                    t = pq.read_table(path, columns=["lsn", "op", "payload", "txn_id"])
-                    t = t.filter(
-                        pc.and_(pc.equal(t["op"], "DDL"), pc.less(t["txn_id"], mx))
-                    )
-                    return list(zip(t["lsn"].to_pylist(), t["payload"].to_pylist()))
-
-                ddl_rows = []
-                with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as ex:
-                    for hits in ex.map(probe, paths):
-                        ddl_rows.extend(hits)
+            ddl_rows = scan_ddl_chunks(paths, txn_below=mx) if ddl_probe else None
+            if ddl_probe and ddl_rows is None:
+                return None
             return mx, ddl_rows
         except Exception:  # noqa: BLE001 — any read hiccup: use the Spark path
             return None

@@ -54,6 +54,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from data_pipeline_spark.operators.corpus import assemble_conversations
+    from data_pipeline_spark.plans import table_format
     from data_pipeline_spark.plans.table_format import LakehouseTable
     from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
     from data_pipeline_spark.session import get_spark
@@ -149,23 +150,23 @@ def main() -> None:
         # shape). Same refresh work through both regimes, timed: the
         # collected-isin point read must lose to the distributed semi-join
         # once churn ~ corpus — the crossover that motivates
-        # high_churn_threshold.
+        # table_format.HIGH_CHURN_CAP (patched per regime below).
         all_ids = (
             LakehouseTable(up).read(spark).select("conv_id").distinct()
         )
         highchurn_ab = {}
-        for label, threshold, bid in (
+        default_cap = table_format.HIGH_CHURN_CAP
+        for label, cap, bid in (
             ("point_100pct_sec", 2**31 - 2, 10**6 + 2),
             ("semi_join_100pct_sec", 0, 10**6 + 3),
         ):
-            vj_ab = CorpusViewJob(
-                up, view, os.path.join(root, "ctl-view"),
-                high_churn_threshold=threshold,
-            )
+            table_format.HIGH_CHURN_CAP = cap
+            vj_ab = CorpusViewJob(up, view, os.path.join(root, "ctl-view"))
             t0 = time.monotonic()
             vj_ab.refresh_for(spark, bid, all_ids)
             highchurn_ab[label] = round(time.monotonic() - t0, 1)
             highchurn_ab[label.replace("_sec", "_mode")] = vj_ab.last_refresh_mode
+        table_format.HIGH_CHURN_CAP = default_cap
 
         # ---- phase 4: the no-view baseline — full corpus rebuild ---------
         rebuild_out = os.path.join(root, "rebuild")

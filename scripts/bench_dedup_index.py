@@ -42,9 +42,11 @@ def bench_one(spark, root: str, events: int, convs: int, buckets: int,
         minhash_signature,
     )
     from data_pipeline_spark.oracle import reduce_feed
+    from data_pipeline_spark.plans import table_format
     from data_pipeline_spark.plans.table_format import LakehouseTable
     from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
     from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
+    from data_pipeline_spark.streaming import dedup_index
     from data_pipeline_spark.streaming.dedup_index import DedupIndexJob
     from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -79,7 +81,8 @@ def bench_one(spark, root: str, events: int, convs: int, buckets: int,
     )
     # above the max churn window (so churn refreshes stay on the point
     # path) and below the big corpus (so bootstrap takes the rebuild)
-    dix = DedupIndexJob(up, idx, high_churn_threshold=20_000)
+    table_format.HIGH_CHURN_CAP = 20_000
+    dix = DedupIndexJob(up, idx)
     cursor = os.path.join(root, "dedup.cursor")
     s = time.time()
     dix.run_until_caught_up(spark, cursor)
@@ -145,17 +148,17 @@ def bench_one(spark, root: str, events: int, convs: int, buckets: int,
 
         # lookup in BOTH regimes on the same state: the point path collects
         # |ids| x n_bands bucket keys driver-side, the distributed path is
-        # one bands-table scan — the crossover sets lookup_point_threshold
-        saved = dix.lookup_point_threshold
-        dix.lookup_point_threshold = len(churned) + 1
+        # one bands-table scan — the crossover sets LOOKUP_POINT_CAP
+        saved = dedup_index.LOOKUP_POINT_CAP
+        dedup_index.LOOKUP_POINT_CAP = len(churned) + 1
         lookup_point_s = timed(
             lambda c=churned: dix.near_dups_for(spark, c).agg(F.count("*")).collect()
         )
-        dix.lookup_point_threshold = 0
+        dedup_index.LOOKUP_POINT_CAP = 0
         lookup_dist_s = timed(
             lambda c=churned: dix.near_dups_for(spark, c).agg(F.count("*")).collect()
         )
-        dix.lookup_point_threshold = saved
+        dedup_index.LOOKUP_POINT_CAP = saved
         windows.append({
             "churned_docs": n_keys,
             "incremental_refresh_s": round(refresh_s, 3),

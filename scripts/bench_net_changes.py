@@ -5,8 +5,9 @@ size and measures `net_changes` wall per window:
 
 - point regime (default): touched conv_ids collected → both snapshot reads
   file-skip via bucket pruning + manifest key ranges → cost ~ churn;
-- semi-join regime (high_churn_threshold=0): the same window answered by a
-  distributed semi-join over full snapshot reads → the high-churn shape;
+- semi-join regime (table_format.HIGH_CHURN_CAP patched to 0): the same
+  window answered by a distributed semi-join over full snapshot reads →
+  the high-churn shape;
 - fallback full diff: a window containing an overwrite can't enumerate
   touched keys from metadata and pays the documented full two-snapshot diff.
 
@@ -44,6 +45,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from data_pipeline_spark.oracle import reduce_feed
+    from data_pipeline_spark.plans import table_format
     from data_pipeline_spark.plans.table_format import LakehouseTable
     from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
     from data_pipeline_spark.session import get_spark
@@ -128,11 +130,13 @@ def main() -> None:
         lsn_base += n_keys
         sid_b = t.current_snapshot()["snapshot_id"]
 
-        nc = lambda thr: t.net_changes(  # noqa: E731
-            spark, sid_a, sid_b, high_churn_threshold=thr
+        nc = lambda: t.net_changes(  # noqa: E731
+            spark, sid_a, sid_b
         ).agg(F.count("*")).collect()
-        point_s = timed(lambda: nc(100_000))
-        semi_s = timed(lambda: nc(0))
+        point_s = timed(nc)
+        table_format.HIGH_CHURN_CAP = 0  # force the semi-join regime
+        semi_s = timed(nc)
+        table_format.HIGH_CHURN_CAP = 100_000
         n_net = t.net_changes(spark, sid_a, sid_b).count()
         if plan_audit is None:
             plan = t.net_changes(spark, sid_a, sid_b)._jdf.queryExecution().executedPlan().toString()

@@ -26,13 +26,23 @@ for mode, partial in (("full", False), ("partial", True)):
     job = IngestJob(tp, ctl)
     job.table.create(TRANSCRIPT_SCHEMA, n_buckets=16, update_mode=mode if partial else "full")
 
-    # crash after 2 batches
+    # crash after 2 batches: apply_batch raises on its third call
+    real_apply, calls = job.apply_batch, [0]
+
+    def crashing_apply(*args, **kwargs):
+        if calls[0] >= 2:
+            raise RuntimeError("injected crash")
+        calls[0] += 1
+        return real_apply(*args, **kwargs)
+
+    job.apply_batch = crashing_apply
     try:
-        q = job.start_stream(spark, feed, ckpt, max_files_per_trigger=2, fail_after_batches=2)
+        q = job.start_stream(spark, feed, ckpt, max_files_per_trigger=2)
         q.awaitTermination()
         raise SystemExit("expected injected crash did not fire")
     except StreamingQueryException:
         pass
+    del job.apply_batch
     # resume from checkpoint
     job.run_to_completion(spark, feed, ckpt, max_files_per_trigger=2)
 

@@ -41,6 +41,21 @@ def changes_df(spark, rows):
     )
 
 
+def crash_after(job, n: int) -> None:
+    """Make `job.apply_batch` raise on every call after its first `n`, as a
+    crash between micro-batches would. `del job.apply_batch` restores it."""
+    real = job.apply_batch
+    calls = {"n": 0}
+
+    def apply_batch(*args, **kwargs):
+        if calls["n"] >= n:
+            raise RuntimeError("injected crash")
+        calls["n"] += 1
+        return real(*args, **kwargs)
+
+    job.apply_batch = apply_batch
+
+
 def write_legacy_split_delta(spark, tbl: LakehouseTable, batch_id: int, rows) -> int:
     """Merge `rows` ((lsn, op, conv_id, turn_idx, text)) as a version before
     the `_tomb` column did: the delta partitioned by (_bucket, _del), so a

@@ -155,10 +155,6 @@ def test_expired_cursor_raises_with_rebootstrap_info(spark, tmp_path):
         tbl.tail_changes(spark, cursor)
     assert ei.value.cursor_snapshot_id == 1
     assert ei.value.oldest_retained == tbl.history()[0]["snapshot_id"]
-    # explicit opt-in reset works and is flagged on the returned cursor
-    changes, cur = tbl.tail_changes(spark, cursor, on_expired="reset")
-    assert cur["expired_reset"]["from"] == 1
-    assert cur["snapshot_id"] == tbl.current_snapshot()["snapshot_id"]
 
 
 def test_fresh_cursor_unaffected(spark, tmp_path):
@@ -166,7 +162,7 @@ def test_fresh_cursor_unaffected(spark, tmp_path):
     _merge_n(spark, tbl, 3)
     cursor = str(tmp_path / "c2.cursor")
     changes, cur = tbl.tail_changes(spark, cursor)  # first call: no cursor file
-    assert changes is not None and "expired_reset" not in cur
+    assert changes is not None and set(cur) == {"snapshot_id", "from_snapshot_id"}
     LakehouseTable.commit_cursor(cursor, cur)
     none_changes, _ = tbl.tail_changes(spark, cursor)
     assert none_changes is None

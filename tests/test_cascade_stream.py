@@ -156,6 +156,3 @@ def test_cascade_upstream_rollback_refuses_to_poll(spark, tmp_path):
     assert ei.value.oldest_retained == rollback_id
     with open(cursor) as f:
         assert json.load(f)["snapshot_id"] < rollback_id
-    # the opt-in reset skips to the rollback snapshot, like an expired cursor
-    _, reset = up.tail_changes(spark, cursor, on_expired="reset")
-    assert reset["expired_reset"]["to"] == rollback_id

@@ -1,5 +1,5 @@
 """High-churn corpus-view refresh (VERDICT r3 #3): when one refresh batch
-touches more conversations than `high_churn_threshold`, the view must switch
+touches more conversations than `table_format.HIGH_CHURN_CAP`, the view must switch
 from the collected-id point-read to a distributed semi-join — no driver-side
 id materialization — and still converge to the full re-assembly oracle.
 Covers: 100%-of-corpus overwrite through the semi-join path, the mode
@@ -10,6 +10,7 @@ from __future__ import annotations
 import pandas as pd
 
 from data_pipeline_spark.operators.corpus import assemble_conversations
+from data_pipeline_spark.plans import table_format
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
@@ -42,13 +43,14 @@ def _apply(spark, job, table, batch_id, pdf):
     )
 
 
-def test_high_churn_semi_join_refresh(spark, tmp_path):
+def test_high_churn_semi_join_refresh(spark, tmp_path, monkeypatch):
     up = str(tmp_path / "up")
     view = str(tmp_path / "view")
     LakehouseTable(up).create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
     CorpusViewJob.create_view_table(view, n_buckets=4)
     ingest = IngestJob(up, str(tmp_path / "ctl-up"))
-    vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"), high_churn_threshold=10)
+    monkeypatch.setattr(table_format, "HIGH_CHURN_CAP", 10)
+    vj = CorpusViewJob(up, view, str(tmp_path / "ctl-view"))
     cursor = str(tmp_path / "view.cursor")
 
     # seed: 120 conversations — a single catch-up batch over them already
@@ -97,7 +99,7 @@ def test_high_churn_semi_join_refresh(spark, tmp_path):
 
 
 def test_point_path_unchanged_for_small_churn(spark, tmp_path):
-    """Default threshold (100k): everything in a small test is point-mode —
+    """Default cap (100k): everything in a small test is point-mode —
     the r3 behavior is untouched for the design point."""
     up = str(tmp_path / "up")
     view = str(tmp_path / "view")

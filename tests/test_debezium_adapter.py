@@ -225,7 +225,7 @@ def test_mysql_binlog_rotation_keeps_post_rotation_events(spark, tmp_path):
 
     path = str(tmp_path / "t")
     LakehouseTable(path).create(TRANSCRIPT_SCHEMA, n_buckets=4)
-    job = IngestJob(path, str(tmp_path / "ctl"), ddl_fast_scan=False)
+    job = IngestJob(path, str(tmp_path / "ctl"))
     for batch_id, rows in enumerate((slice(0, cut), slice(cut, None))):
         raw = spark.createDataFrame(values.iloc[rows].to_frame(), "value string")
         job.apply_batch(spark, batch_id, debezium_to_envelope(raw))
@@ -376,7 +376,6 @@ def test_streaming_ingest_with_ddl_equals_native(spark, tmp_path):
         t_dbz, str(tmp_path / "cd"),
         stream_reader=read_debezium_stream, batch_reader=read_debezium_batch,
     )
-    assert job.ddl_fast_scan is False  # custom readers force the exact path
     job.run_to_completion(spark, dbz, str(tmp_path / "kd"), max_files_per_trigger=2)
 
     a = (LakehouseTable(t_nat).read(spark).toPandas()

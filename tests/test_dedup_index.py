@@ -21,9 +21,11 @@ from data_pipeline_spark.operators.corpus import (
     doc_shingles,
     minhash_signature,
 )
+from data_pipeline_spark.plans import table_format
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
+from data_pipeline_spark.streaming import dedup_index
 from data_pipeline_spark.streaming.dedup_index import DedupIndexJob
 from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -267,8 +269,9 @@ def test_crash_after_applies_before_cursor_commit(spark, tmp_path):
 # -> distributed pass above threshold) is pinned in-gate by the corpus-view
 # churn suite and the near_dups_for regime lookups; the full index-rebuild
 # sweep runs in the slow suite.
-def test_high_churn_rebuild_regime(spark, tmp_path):
-    up, ingest, job, cursor = _setup(spark, tmp_path, high_churn_threshold=5)
+def test_high_churn_rebuild_regime(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(table_format, "HIGH_CHURN_CAP", 5)
+    up, ingest, job, cursor = _setup(spark, tmp_path)
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=400, n_convs=30, seed=7500)
     ))
@@ -285,7 +288,7 @@ def test_high_churn_rebuild_regime(spark, tmp_path):
 
     # a small follow-up batch drops back to the point regime on the SAME
     # index (the rebuild must leave per-key state the point path can read)
-    job.high_churn_threshold = 100_000
+    monkeypatch.setattr(table_format, "HIGH_CHURN_CAP", 100_000)
     _apply(spark, ingest, up, 2, _dup_feed([
         (1, "U", "dup-b", 0, "no longer a duplicate of anything here"),
     ]))
@@ -294,11 +297,12 @@ def test_high_churn_rebuild_regime(spark, tmp_path):
     _assert_index_equals_scratch(spark, job, up)
 
 
-def test_point_refresh_band_keys_bounded(spark, tmp_path):
-    """Touched docs ≤ high_churn_threshold < band keys: the point path's
+def test_point_refresh_band_keys_bounded(spark, tmp_path, monkeypatch):
+    """Touched docs ≤ HIGH_CHURN_CAP < band keys: the point path's
     bounded band-key probe falls through to the rebuild instead of
     collecting every key to the driver, and the index stays exact."""
-    up, ingest, job, cursor = _setup(spark, tmp_path, high_churn_threshold=3)
+    monkeypatch.setattr(table_format, "HIGH_CHURN_CAP", 3)
+    up, ingest, job, cursor = _setup(spark, tmp_path)
     _apply(spark, ingest, up, 0, _dup_feed([
         (1, "I", "dup-a", 0, "alpha beta gamma delta epsilon zeta"),
         (2, "I", "dup-b", 0, "eta theta iota kappa lambda mu"),
@@ -308,7 +312,7 @@ def test_point_refresh_band_keys_bounded(spark, tmp_path):
     _assert_index_equals_scratch(spark, job, up)
 
 
-def test_near_dups_for_matches_restricted_pairs(spark, tmp_path):
+def test_near_dups_for_matches_restricted_pairs(spark, tmp_path, monkeypatch):
     up, ingest, job, cursor = _setup(spark, tmp_path)
     _apply(spark, ingest, up, 0, generate_feed_pandas(
         FeedSpec(n_events=400, n_convs=30, seed=7600)
@@ -331,7 +335,7 @@ def test_near_dups_for_matches_restricted_pairs(spark, tmp_path):
 
     # the distributed regime (|ids| above the lookup threshold) must return
     # the same pairs via one linear pass over the bands table
-    job.lookup_point_threshold = 0
+    monkeypatch.setattr(dedup_index, "LOOKUP_POINT_CAP", 0)
     got_dist = _pd(job.near_dups_for(spark, ["dup-b"]), ["d1", "d2", "est_jaccard"])
     pd.testing.assert_frame_equal(got_dist, want)
 

@@ -4,8 +4,8 @@ guard (#6).
 The multi-table router submits each table's decode→collapse→merge as its own
 Spark job from a thread pool over the shared cached batch — per-table commits
 are independent (different table/control dirs), so batch wall-clock is the
-max of per-table merges, not their sum. Correctness must be identical to the
-old sequential loop under ≥ 4 tables and multiple batches.
+max of per-table merges, not their sum. Each table must equal the sequential
+reduction of its slice of the feed under ≥ 4 tables and multiple batches.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from data_pipeline_spark.oracle import reduce_feed
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
+from data_pipeline_spark.streaming import ingest as ingest_mod
 from data_pipeline_spark.streaming.multi_table import (
     MULTI_EVENT_SCHEMA,
     MultiTableIngestJob,
@@ -70,7 +71,7 @@ def _assert_matches_oracle(spark, tables, feed):
 def test_concurrent_apply_four_tables_matches_oracle(spark, tmp_path):
     feed = _multi_feed()
     tables, job = _mk_router(spark, tmp_path, "cc")
-    assert job.apply_concurrency == 8  # concurrent is the default
+    assert ingest_mod.MAX_APPLY_THREADS == 8  # tables apply concurrently
     # two batches: split at an LSN boundary so watermarks engage per table
     half = len(feed) // 2
     for bid, chunk in enumerate((feed.iloc[:half], feed.iloc[half:])):
@@ -83,23 +84,25 @@ def test_concurrent_apply_four_tables_matches_oracle(spark, tmp_path):
 
 
 def test_concurrent_equals_sequential(spark, tmp_path):
+    """The concurrent router's per-table state equals the sequential
+    reduction of each table's slice of the feed."""
     feed = _multi_feed(seed0=23)
     sdf = spark.createDataFrame(feed, MULTI_EVENT_SCHEMA)
     tables_c, job_c = _mk_router(spark, tmp_path, "par")
-    tables_s, job_s = _mk_router(spark, tmp_path, "seq", apply_concurrency=1)
     rc = job_c.apply_batch(spark, 0, sdf)
-    rs = job_s.apply_batch(spark, 0, sdf)
-    assert set(rc) == set(rs) == set(TABLES)
+    assert set(rc) == set(TABLES)
     for name in TABLES:
         a = (
             LakehouseTable(tables_c[name]).read(spark).toPandas()
             .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
         )
-        b = (
-            LakehouseTable(tables_s[name]).read(spark).toPandas()
-            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
+        sl = feed[feed["table_name"] == name].drop(columns=["table_name"])
+        b = reduce_feed(sl.reset_index(drop=True))
+        assert len(a) == len(b), name
+        assert a["conv_id"].tolist() == b["conv_id"].tolist(), name
+        assert a["turn_idx"].tolist() == [int(t) for t in b["turn_idx"]], name
+        for col in ("role", "text", "tool"):
+            assert a[col].tolist() == [None if pd.isna(v) else v for v in b[col]], (name, col)
 
 
 def test_concurrent_replay_idempotent(spark, tmp_path):
@@ -123,7 +126,7 @@ def _ddl_rows(n, table="chats"):
 
 
 def test_ddl_bomb_aborts_multitable_with_alert(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(MultiTableIngestJob, "DDL_ROW_CAP", 5)
+    monkeypatch.setattr(ingest_mod, "DDL_ROW_CAP", 5)
     tables, job = _mk_router(spark, tmp_path, "bomb")
     sdf = spark.createDataFrame(
         _ddl_rows(10), schema=MULTI_EVENT_SCHEMA
@@ -138,7 +141,6 @@ def test_ddl_bomb_aborts_multitable_with_alert(spark, tmp_path, monkeypatch):
 
 
 def test_ddl_bomb_aborts_single_table(spark, tmp_path, monkeypatch):
-    from data_pipeline_spark.streaming import ingest as ingest_mod
     from data_pipeline_spark.streaming.ingest import IngestJob
 
     monkeypatch.setattr(ingest_mod, "DDL_ROW_CAP", 5)

@@ -20,6 +20,7 @@ import json
 import pandas as pd
 
 from data_pipeline_spark.oracle import reduce_feed
+from data_pipeline_spark.plans import table_format
 from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed_pandas
@@ -203,9 +204,9 @@ def test_net_changes_overwrite_fallback(spark, tmp_path):
     assert (got["_change_op"] == "U").sum() == 5
 
 
-def test_net_changes_regime_split(spark, tmp_path):
+def test_net_changes_regime_split(spark, tmp_path, monkeypatch):
     """Point regime (default: conv_ids collected, file-skipping read) and
-    high-churn regime (threshold=0: distributed semi-join, nothing on the
+    high-churn regime (HIGH_CHURN_CAP=0: distributed semi-join, nothing on the
     driver) must produce the identical changelog; the point regime's scans
     must actually skip files (bucket pruning on the touched conv_ids)."""
     pdf = generate_feed_pandas(FeedSpec(n_events=4_000, n_convs=60, seed=37))
@@ -232,7 +233,9 @@ def test_net_changes_regime_split(spark, tmp_path):
     sid_b = t.current_snapshot()["snapshot_id"]
 
     point = _got(t.net_changes(spark, sid_a, sid_b))
-    semi = _got(t.net_changes(spark, sid_a, sid_b, high_churn_threshold=0))
+    with monkeypatch.context() as m:
+        m.setattr(table_format, "HIGH_CHURN_CAP", 0)
+        semi = _got(t.net_changes(spark, sid_a, sid_b))
     pd.testing.assert_frame_equal(point, semi, check_dtype=False)
     assert len(point) == 1 and point.iloc[0]["text"] == "regime"
 

@@ -1,7 +1,8 @@
 """Read planning starts no Spark job: `_read_parts` pins each typed file
 group's schema (its `schema-<id>.json` plus the requested engine columns)
 instead of letting `spark.read.parquet` infer it, which costs one Spark job
-per schema group on every `read`, `read_changes` and compaction. Files
+per schema group on every `read`, `read_changes` and compaction. A point
+read routes its ids to buckets on the driver, also without a job. Files
 written before the `typed` manifest mark may hold other types than their
 schema's; those are still inferred and read right.
 """
@@ -47,6 +48,7 @@ def test_read_plans_start_no_spark_job(spark, tmp_path):
         tbl.read(spark),
         tbl.read(spark, with_lsn=True),
         tbl.read_changes(spark, 0),
+        tbl.read(spark, conv_ids=["c0", "c9"]),
     ])) == 0
     # the counter sees the jobs an action does start
     assert _jobs_started(spark, lambda: [p.count() for p in plans]) > 0
@@ -56,6 +58,8 @@ def test_read_plans_start_no_spark_job(spark, tmp_path):
     assert ("c1", 0) not in live and ("c2", 0) not in live
     ops = sorted((r["lsn"], r["_change_op"]) for r in plans[2].collect())
     assert ops[-4:] == [(21, "U"), (22, "D"), (23, "I"), (24, "D")]
+    point = {(r["conv_id"], r["turn_idx"]): r["text"] for r in plans[3].collect()}
+    assert point == {k: v[0] for k, v in live.items() if k[0] in ("c0", "c9")}
 
 
 def test_untyped_legacy_files_still_read(spark, tmp_path):

@@ -7,7 +7,7 @@ import os
 import pandas as pd
 import pytest
 
-from data_pipeline_spark.functions.decode import decode_events, decode_events_sql
+from data_pipeline_spark.functions.decode import _decode_batch, decode_events, decode_events_sql
 from data_pipeline_spark.operators.lww import lww_dedup
 from data_pipeline_spark.oracle import reduce_feed
 from data_pipeline_spark.plans.table_format import LakehouseTable
@@ -62,17 +62,24 @@ def test_decode_pandas_equals_sql(spark, feed_dir):
 
 
 def test_decode_arrow_equals_pandas_impl(spark, feed_dir):
-    """The mapInArrow kernel (default) and the mapInPandas kernel must be
+    """The mapInArrow kernel (`decode_events`) and the mapInPandas kernel
+    (`_decode_batch`, its decimal and per-row-isolation fallback) must be
     value-identical — including the explicit-null-vs-absent `_set_mask`
     semantics the partial-image mode depends on."""
     raw = read_feed_batch(spark, feed_dir)
     bits = {"role": 3, "text": 4, "tool": 5, "ts": 6}
-    a = decode_events(
-        raw, TRANSCRIPT_SCHEMA, field_bits=bits, impl="arrow"
-    ).orderBy("lsn").toPandas()
-    p = decode_events(
-        raw, TRANSCRIPT_SCHEMA, field_bits=bits, impl="pandas"
-    ).orderBy("lsn").toPandas()
+    arrow = decode_events(raw, TRANSCRIPT_SCHEMA, field_bits=bits)
+    a = arrow.orderBy("lsn").toPandas()
+    fields = [(f.name, f.dataType.simpleString()) for f in TRANSCRIPT_SCHEMA.fields]
+    p = (
+        raw.where(raw["op"] != "DDL")
+        .select("lsn", "op", "conv_id", "turn_idx", "payload")
+        .mapInPandas(
+            lambda batches: (_decode_batch(b, fields, {}, False, bits) for b in batches),
+            schema=arrow.schema,
+        )
+        .orderBy("lsn").toPandas()
+    )
     pd.testing.assert_frame_equal(a, p, check_dtype=False)
 
 
@@ -161,7 +168,7 @@ def test_mor_compaction_preserves_state(spark, feed_dir, tmp_path):
     assert not r["skipped"]
     snap2 = table.current_snapshot()
     assert all(e.get("layer") == "base" for e in table.files(snap2))
-    assert snap2["delta_commits"] == 0
+    assert snap2["delta_depth"] == {}
     after = table_as_pandas(spark, table)
     pd.testing.assert_frame_equal(before, after)
     assert_matches_oracle(spark, table, SPEC)

@@ -9,6 +9,7 @@ from data_pipeline_spark.plans.table_format import LakehouseTable
 from data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 from data_pipeline_spark.sources.feed import FeedSpec, generate_feed, generate_feed_pandas
 from data_pipeline_spark.streaming.ingest import IngestJob
+from conftest import crash_after
 
 SPEC = FeedSpec(n_events=12_000, n_convs=300, seed=42, chunk_size=2_000, hot_key=True)
 
@@ -45,11 +46,11 @@ def test_crash_resume_exactly_once(spark, feed_dir, tmp_path):
     tbl = str(tmp_path / "t")
     LakehouseTable(tbl).create(TRANSCRIPT_SCHEMA, n_buckets=16)
     job = IngestJob(tbl, str(tmp_path / "ctl"))
-    q = job.start_stream(
-        spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1, fail_after_batches=1
-    )
+    crash_after(job, 1)
+    q = job.start_stream(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1)
     with pytest.raises(Exception):
         q.awaitTermination()
+    del job.apply_batch
     # resume — checkpoint replays the in-flight batch; merge must dedup it
     job.run_to_completion(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1)
     _assert_final_state(spark, tbl)

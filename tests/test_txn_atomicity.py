@@ -24,6 +24,7 @@ from data_pipeline_spark.streaming.multi_table import (
     MultiTableIngestJob,
 )
 from data_pipeline_spark.streaming.txn import TxnCatalog
+from conftest import crash_after
 
 SPEC = FeedSpec(
     n_events=9_000, n_convs=250, seed=7, chunk_size=1_500, with_txns=True,
@@ -126,12 +127,11 @@ def test_stream_crash_resume_flush(spark, feed, feed_dir, tmp_path):
     tbl = str(tmp_path / "t")
     LakehouseTable(tbl).create(TRANSCRIPT_SCHEMA, n_buckets=8)
     job = IngestJob(tbl, str(tmp_path / "ctl"), txn_aligned=True)
-    q = job.start_stream(
-        spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1,
-        fail_after_batches=2,
-    )
+    crash_after(job, 2)
+    q = job.start_stream(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1)
     with pytest.raises(Exception):
         q.awaitTermination()
+    del job.apply_batch
     job.run_to_completion(spark, feed_dir, str(tmp_path / "cp"), max_files_per_trigger=1)
     final = _table_state(spark, tbl)
     expected = reduce_feed(feed)
@@ -300,6 +300,33 @@ def test_fast_path_engages_and_matches_spark_path(spark, feed_dir, tmp_path):
             .toPandas().sort_values("lsn").reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(sa, sb)
+
+
+def test_fast_path_ddl_probe_matches_spark_path(spark, tmp_path):
+    """The driver-side DDL probe keeps exactly the safe region's DDL, as the
+    Spark path does: DDL of complete transactions and DDL without a txn_id
+    apply now, DDL of the deferred open transaction waits."""
+    import os
+
+    from data_pipeline_spark.streaming.txn import TxnAligner
+
+    ddl = '{"action": "add_column", "name": "x%d", "type": "int"}'
+    chunk = str(tmp_path / "chunk.parquet")
+    pd.DataFrame({
+        "lsn": pd.Series([1, 2, 3, 4, 5], dtype="int64"),
+        "op": ["I", "DDL", "DDL", "I", "DDL"],
+        "ts": pd.Series([pd.NaT] * 5, dtype="datetime64[us]"),
+        "conv_id": ["c", None, None, "c", None],
+        "turn_idx": pd.array([0, None, None, 1, None], dtype="Int32"),
+        "payload": ['{"text": "a"}', ddl % 2, ddl % 3, '{"text": "b"}', ddl % 5],
+        "txn_id": pd.array([1, 1, None, 2, 2], dtype="Int64"),
+    }).to_parquet(chunk, index=False)
+    df = spark.read.schema(TXN_EVENT_SCHEMA).parquet(chunk)
+    fast = TxnAligner(str(tmp_path / "fast"))
+    _, fast_ddl = fast.align(spark, 0, df, ddl_probe=True, files=[chunk])
+    assert "part-00000.parquet" in os.listdir(str(tmp_path / "fast" / "batch=0"))
+    _, slow_ddl = TxnAligner(str(tmp_path / "slow")).align(spark, 0, df, ddl_probe=True)
+    assert sorted(fast_ddl) == sorted(slow_ddl) == [(2, ddl % 2), (3, ddl % 3)]
 
 
 def test_aligner_passthrough_without_txn_envelope(spark, tmp_path):
