@@ -336,11 +336,12 @@ def with_commit_retry(fn, max_retries: int = 5, base_backoff: float = 0.05):
 class CursorExpiredError(RuntimeError):
     """A changelog consumer's cursor can't be resumed incrementally: it
     points below the oldest retained snapshot (`expire_snapshots` GC'd the
-    delta commits in between), or its window holds a `rollback_to`, which
-    writes no change rows for the rows it removes. The missing changes are
-    only recoverable by re-reading the full table. Re-bootstrap (full
-    read), then resume tailing from `oldest_retained` (the oldest retained
-    snapshot, or the rollback)."""
+    delta commits in between), or its window holds a commit that replaces
+    rows without writing change rows for the ones it removes: a
+    `rollback_to`, or an `overwrite` of a table that held data. The missing
+    changes are only recoverable by re-reading the full table. Re-bootstrap
+    (full read), then resume tailing from `oldest_retained` (the oldest
+    retained snapshot, or the rollback or overwrite)."""
 
     def __init__(self, cursor_snapshot_id: int, oldest_retained: int):
         super().__init__(
@@ -350,17 +351,6 @@ class CursorExpiredError(RuntimeError):
         )
         self.cursor_snapshot_id = cursor_snapshot_id
         self.oldest_retained = oldest_retained
-
-
-def _last_rollback(chain: list[dict], from_id: int, to_id: int) -> int | None:
-    """Id of the newest `rollback` snapshot in the changelog window
-    (from_id, to_id] of a parent chain, or None."""
-    ids = [
-        s["snapshot_id"]
-        for s in chain
-        if s["kind"] == "rollback" and from_id < s["snapshot_id"] <= to_id
-    ]
-    return max(ids, default=None)
 
 
 def _bump_depth(depth: dict[str, int], buckets: set[int]) -> dict[str, int]:
@@ -3098,11 +3088,13 @@ class LakehouseTable:
         tables: null/-1 = full image). Sources per snapshot kind:
         - merge / cherry-pick: its delta files — the collapsed changeset
           verbatim;
-        - overwrite: every written row, as inserts;
+        - overwrite of an empty table (the first initsync): every written
+          row, as an insert;
         - create/ddl/compact/rebucket: no logical row changes;
-        - rollback: restores old files and writes no change rows for what
-          it removes → raises CursorExpiredError carrying the rollback id
-          (re-bootstrap the consumer, then resume from there).
+        - rollback, and overwrite of a table that held data: they replace
+          rows and write no change rows for the ones they remove → raises
+          CursorExpiredError carrying the newest such id (re-bootstrap the
+          consumer, then resume from there).
 
         Scale note: the path-based diff builds `prev_files` (every file path
         at/below `from_snapshot_id`) on the driver — O(retained files) set
@@ -3132,7 +3124,7 @@ class LakehouseTable:
                     *data_cols,
                     *([F.col(MASK_COL)] if partial else []),
                 )
-            else:  # overwrite: full load = all rows as inserts
+            else:  # overwrite of an empty table: all rows as inserts
                 df = self._read_parts(spark, cur, new_entries, [LSN_COL])
                 df = df.select(
                     F.lit(sid).alias("_snapshot_id"),
@@ -3165,9 +3157,10 @@ class LakehouseTable:
     ) -> list[tuple[dict, list[dict]]]:
         """The commits in (from, to] of the published chain that change
         rows, each with its file entries new to the chain, in commit order:
-        merge and cherry-pick commits (delta files) and overwrites (base
-        files). Raises ValueError for a `from` outside retained history and
-        CursorExpiredError for a rollback inside the window.
+        merge and cherry-pick commits (delta files) and overwrites of an
+        empty table (base files). Raises ValueError for a `from` outside
+        retained history and CursorExpiredError for a window that holds a
+        rollback or an overwrite of a table that held data (`_last_reset`).
 
         Path-based diff (not manifest-name diff): compaction/rewrites
         carried entries into NEW manifests without changing the underlying
@@ -3178,9 +3171,9 @@ class LakehouseTable:
         if from_snapshot_id not in ids:
             raise ValueError(f"snapshot {from_snapshot_id} not in retained history {ids}")
         to_id = to_snapshot_id if to_snapshot_id is not None else ids[-1]
-        rollback = _last_rollback(chain, from_snapshot_id, to_id)
-        if rollback is not None:
-            raise CursorExpiredError(from_snapshot_id, rollback)
+        reset = self._last_reset(chain, from_snapshot_id, to_id)
+        if reset is not None:
+            raise CursorExpiredError(from_snapshot_id, reset)
         prev_files: set[str] = {
             e["path"]
             for s in chain
@@ -3203,6 +3196,21 @@ class LakehouseTable:
             out.append((s, new_entries))
         return out
 
+    def _last_reset(self, chain: list[dict], from_id: int, to_id: int) -> int | None:
+        """Id of the newest commit in the changelog window (from_id, to_id]
+        of a parent chain that replaces rows without writing change rows
+        for the ones it removes, or None: a `rollback`, or an `overwrite`
+        whose parent held data files. An overwrite of an empty table (the
+        first initsync) removes nothing, so its rows read as inserts."""
+        ids = [
+            s["snapshot_id"]
+            for parent, s in zip(chain, chain[1:])
+            if from_id < s["snapshot_id"] <= to_id
+            and (s["kind"] == "rollback"
+                 or (s["kind"] == "overwrite" and self._files(parent)))
+        ]
+        return max(ids, default=None)
+
     def _touched_key_df(
         self, spark: SparkSession, from_id: int, to_id: int
     ) -> DataFrame | None:
@@ -3211,28 +3219,14 @@ class LakehouseTable:
         None when the key set is not derivable from deltas alone: an
         overwrite replaces every row, and a rollback reverts state without
         writing anything — those windows must diff full snapshots."""
-        chain = self.history()
-        prev_files: set[str] = {
-            e["path"]
-            for s in chain
-            if s["snapshot_id"] <= from_id
-            for e in self._files(s)
-        }
+        try:
+            window = self._change_window(from_id, to_id)
+        except CursorExpiredError:
+            return None
+        if any(s["kind"] == "overwrite" for s, _ in window):
+            return None
         to_snap = self.snapshot_by_id(to_id)
-        delta_e: list[dict] = []
-        for s in chain:
-            sid = s["snapshot_id"]
-            if sid <= from_id or sid > to_id:
-                continue
-            s_files = self._files(s)
-            new_entries = [e for e in s_files if e["path"] not in prev_files]
-            prev_files.update(e["path"] for e in s_files)
-            if s["kind"] in ("overwrite", "rollback"):
-                return None
-            if s["kind"] in ("merge", "cherry-pick"):
-                delta_e.extend(new_entries)
-            # create/ddl/compact/recluster/rebucket/rewrite_manifests/
-            # evolve_spec/migrate_spec: no logical row changes
+        delta_e = [e for _, entries in window for e in entries]
         if not delta_e:
             return spark.createDataFrame(
                 [], T.StructType([f for f in self.schema_struct(to_snap).fields
@@ -3293,15 +3287,13 @@ class LakehouseTable:
         Both regimes end in one full-outer join on the merge key. Windows
         containing an overwrite or a rollback can't enumerate touched keys
         from metadata and fall back to a full two-snapshot diff."""
-        chain_ids = [s["snapshot_id"] for s in self.history()]
-        if from_snapshot_id not in chain_ids:
-            raise ValueError(
-                f"snapshot {from_snapshot_id} not in retained history {chain_ids}"
-            )
-        to_id = to_snapshot_id if to_snapshot_id is not None else chain_ids[-1]
+        to_id = (
+            to_snapshot_id if to_snapshot_id is not None
+            else self.current_snapshot()["snapshot_id"]
+        )
+        keys = self._touched_key_df(spark, from_snapshot_id, to_id)
         from_snap = self.snapshot_by_id(from_snapshot_id)
         to_snap = self.snapshot_by_id(to_id)
-        keys = self._touched_key_df(spark, from_snapshot_id, to_id)
         conv_ids = None
         if keys is not None:
             conv_ids = bounded_ids(keys.select("conv_id").distinct())
@@ -3358,9 +3350,10 @@ class LakehouseTable:
         `expire_snapshots` GC'd the deltas between it and the retained chain,
         so the changes folded into the oldest snapshot's base files can NEVER
         be emitted incrementally — silently resuming would lose them; a
-        `rollback_to` inside the window likewise emits nothing for the rows
-        it removes. Both raise CursorExpiredError, whose `oldest_retained`
-        is the resume point (the oldest retained id, or the newest rollback
+        `rollback_to`, or an `overwrite` of a table that held data, inside
+        the window likewise emits nothing for the rows it removes. Both
+        raise CursorExpiredError, whose `oldest_retained` is the resume
+        point (the oldest retained id, or the newest rollback or overwrite
         id in the window); the consumer re-bootstraps with a full table
         read (``read(spark)``), then resumes tailing from there."""
         cur = self.current_snapshot()
@@ -3372,8 +3365,8 @@ class LakehouseTable:
             with open(cursor_path) as f:
                 at = json.load(f)["snapshot_id"]
             expired = at not in chain_ids
-            rollback = _last_rollback(chain, start if expired else at, cur["snapshot_id"])
-            resume = rollback if rollback is not None else start if expired else None
+            reset = self._last_reset(chain, start if expired else at, cur["snapshot_id"])
+            resume = reset if reset is not None else start if expired else None
             if resume is not None:
                 raise CursorExpiredError(at, resume)
             start = at

@@ -51,8 +51,10 @@ upstream DDL a single call.
 Retention contract: the upstream's retained snapshots are the edge's
 transport — keep the upstream's `expire_snapshots` retention longer than
 the longest edge outage (the Kafka-retention rule). An edge down past
-retention, or an upstream `rollback_to` inside its window, raises
-CursorExpiredError: re-initsync the target, then resume.
+retention, or an upstream `rollback_to` or `overwrite` of a non-empty
+table inside its window (neither writes change rows for the rows it
+removes), raises CursorExpiredError: re-initsync the target, then resume.
+An upstream's first overwrite, onto an empty table, replicates as inserts.
 """
 
 from __future__ import annotations
@@ -174,7 +176,7 @@ def _apply_replica(
         linked = _linkable(upstream, job.table, from_id, batch_id)
         if linked is not None:
             return job._apply(
-                spark, batch_id, lambda mark: job.table.link_merge(batch_id, upstream, linked)
+                spark, batch_id, lambda: job.table.link_merge(batch_id, upstream, linked)
             )
     else:
         changes = filter_replica_changes(changes, row_predicate)

@@ -238,7 +238,8 @@ class CorpusViewJob:
         """Full reconciliation against the current PUBLISHED upstream — the
         `CursorExpiredError` recovery (view down past upstream retention,
         upstream history collapsed by a compliance `purge_keys`, or an
-        upstream `rollback_to` inside the view's window). A
+        upstream `rollback_to` or `overwrite` of a non-empty table inside
+        the view's window). A
         fresh cursor alone is NOT enough: `tail_changes` with no cursor
         starts at the oldest RETAINED snapshot, and rows folded into base
         files by earlier `expire_snapshots`/purge calls are absent from

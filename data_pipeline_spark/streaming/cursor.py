@@ -8,7 +8,8 @@ The cursor commits only after the apply, so a crash in between re-reads
 the window: an exact redelivery (batch_id = the window's head snapshot id)
 is skipped by the sink's batch_id check, a widened one re-applies old rows
 as LWW no-ops. A window the cursor can't cover (expired retention, an
-upstream `rollback_to`, a format `upgrade`) raises `CursorExpiredError`.
+upstream `rollback_to` or `overwrite` of a non-empty table, a format
+`upgrade`) raises `CursorExpiredError`.
 """
 
 from __future__ import annotations

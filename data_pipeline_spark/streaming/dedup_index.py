@@ -48,8 +48,11 @@ members list grow with the dup cluster size — that is a data-quality
 signal, surfaced via the opt-in `max_bucket_members` alert; run exact
 dedup upstream (dedup_exact_docs) to keep clusters honest.
 
-The upstream's changelog is read through the shared cursor protocol
-(`streaming/cursor.py`), the same contract as CorpusViewJob. DML only.
+The upstream's changelog is read with the same cursor file format and
+`CursorExpiredError` contract as the other consumers, but not through the
+shared loop in `streaming/cursor.py`: `poll_once` keeps its own cursor
+read, expiry check and intent file (the window it pins is recorded before
+the refresh, so a crashed refresh re-derives the same window). DML only.
 """
 
 from __future__ import annotations

@@ -211,9 +211,9 @@ class IngestJob:
         Waits for the previous batch's background maintenance first; this
         batch's own maintenance is still running when it returns (see
         `wait_maintenance`)."""
-        return self._apply(spark, batch_id, lambda mark: self._merge_changes(
-            spark, batch_id, enforce_watermark, mark,
-            *self._decode_batch(spark, batch_id, raw, ddl_rows, mark),
+        return self._apply(spark, batch_id, lambda: self._merge_changes(
+            spark, batch_id, enforce_watermark,
+            *self._decode_batch(spark, batch_id, raw, ddl_rows),
         ))
 
     def apply_changes(
@@ -244,27 +244,19 @@ class IngestJob:
                 }), snap
             return changes, snap
 
-        return self._apply(spark, batch_id, lambda mark: self._merge_changes(
-            spark, batch_id, enforce_watermark, mark, *typed(),
+        return self._apply(spark, batch_id, lambda: self._merge_changes(
+            spark, batch_id, enforce_watermark, *typed(),
         ))
 
     def _apply(self, spark: SparkSession, batch_id: int, commit) -> dict:
         """The one apply body: wait for the previous batch's maintenance,
-        `commit(mark)` the batch (it returns a `LakehouseTable.merge`-shaped
+        `commit()` the batch (it returns a `LakehouseTable.merge`-shaped
         result), then control record → maintenance submit. Any failure
-        fires the "abort" alert and re-raises. INGEST_DEBUG_TIMING=1 prints
-        the elapsed time at each `mark`."""
+        fires the "abort" alert and re-raises."""
         self.wait_maintenance()
         t0 = time.monotonic()
-        debug = os.environ.get("INGEST_DEBUG_TIMING") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if debug:
-                marks.append((label, time.monotonic() - t0))
-
         try:
-            result = commit(mark)
+            result = commit()
             metrics = [
                 {"partition_id": m["bucket"], "rows_applied": m["rows"],
                  "rows_deleted": m["deleted"], "watermark_lsn": m["max_lsn"]}
@@ -281,12 +273,10 @@ class IngestJob:
                 "error": f"{type(e).__name__}: {e}",
             })
             raise
-        if debug:
-            print(f"[apply_batch {batch_id}] " + " ".join(f"{l}={s:.2f}s" for l, s in marks))
         return result
 
     def _merge_changes(
-        self, spark: SparkSession, batch_id: int, enforce_watermark: bool, mark,
+        self, spark: SparkSession, batch_id: int, enforce_watermark: bool,
         decoded: DataFrame, snap_now: dict,
     ) -> dict:
         """The typed commit step: collapse → bucket → merge of change rows
@@ -309,16 +299,14 @@ class IngestJob:
         # ONE action (no persist, no second pass); per-bucket lineage
         # comes back from the merge's footer scan of the written delta
         # files.
-        result = self.table.merge(
+        return self.table.merge(
             spark, batch_id, collapsed, enforce_watermark=enforce_watermark,
             bucket_n=n_buckets,
         )
-        mark("merge")
-        return result
 
     def _decode_batch(
         self, spark: SparkSession, batch_id: int, raw: DataFrame,
-        ddl_rows: list[tuple[int, str]] | None, mark,
+        ddl_rows: list[tuple[int, str]] | None,
     ) -> tuple[DataFrame, dict]:
         """`apply_batch`'s front: txn align, archive, DDL, decode (or
         quarantine). Returns the typed change rows and the post-DDL
@@ -336,7 +324,6 @@ class IngestJob:
                 )
             else:
                 raw = self.aligner.align(spark, batch_id, raw, files=batch_files)
-            mark("txn-align")
         if "txn_id" in raw.columns:
             # envelope-only column: the decode/merge path below is txn-blind
             raw = raw.drop("txn_id")
@@ -348,7 +335,6 @@ class IngestJob:
             raw.write.mode("overwrite").parquet(
                 os.path.join(self.archive_path, f"batch={batch_id}")
             )
-            mark("archive")
 
         # DDL branch (reference: applier DDL routing, SURVEY.md §2 T3/T8).
         # DDL rows are rare and tiny — driver-side metadata ops, in LSN
@@ -386,7 +372,6 @@ class IngestJob:
         if ddl_rows:
             descriptors = [json.loads(p) for _, p in sorted(ddl_rows)]
             self.table.apply_ddl(descriptors)
-        mark("ddl")
 
         snap_now = self.table.current_snapshot()
         schema = self.table.schema_struct(snap_now)
@@ -415,7 +400,6 @@ class IngestJob:
             decoded = flagged.where(F.col("_valid")).drop("_valid", "_error", "_payload")
         else:
             decoded = decode_events(raw, schema, renames, field_bits=field_bits)
-        mark("decode-quarantine")
         return decoded, snap_now
 
     # ----------------------------------------------------------- maintenance

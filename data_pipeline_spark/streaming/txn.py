@@ -212,9 +212,7 @@ class TxnAligner:
             pq.write_table(tail, os.path.join(tmp_dir, "part-00000.parquet"))
             shutil.rmtree(out_dir, ignore_errors=True)
             os.replace(tmp_dir, out_dir)
-            for b in self._pending_ids():
-                if b < batch_id - 1:
-                    shutil.rmtree(self._spill_path(b), ignore_errors=True)
+            self._gc_spills(batch_id)
 
             ddl_rows = scan_ddl_chunks(paths, txn_below=mx) if ddl_probe else None
             if ddl_probe and ddl_rows is None:
@@ -324,7 +322,12 @@ class TxnAligner:
 
     def _write_spill(self, batch_id: int, tail: DataFrame) -> None:
         tail.write.mode("overwrite").parquet(self._spill_path(batch_id))
-        # GC: replay can only redeliver the LAST unconfirmed batch, which
+        self._gc_spills(batch_id)
+
+    def _gc_spills(self, batch_id: int) -> None:
+        """Keep this batch's spill and the newest one below it; drop the
+        rest. Both alignment paths call this after writing their spill."""
+        # Replay can only redeliver the LAST unconfirmed batch, which
         # needs the newest spill < batch_id; everything older is dead.
         # "Newest prior" by ID, not batch_id-1: an audit discard leaves a
         # GAP in the spill ids (its spill rolled back), and the spill this

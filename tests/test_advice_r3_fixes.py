@@ -68,12 +68,12 @@ def test_commit_link_exhaustion_raises_instead_of_swinging_hint(
     assert not os.path.exists(target)
 
 
-# -------------------------------------- 2. null-op parity arrow vs pandas
+# ------------------------------- 2. null-op parity kernel vs fallback
 def test_arrow_kernel_null_op_takes_update_branch(monkeypatch):
     """ADVICE r2 low: pc.if_else with a null condition yielded a null
-    `_set_mask` in the arrow kernel while the pandas kernel emitted the
-    computed mask (null op ⇒ treated as U). Both kernels on the same batch
-    must now agree bit-for-bit."""
+    `_set_mask` in the arrow kernel while the old pandas kernel emitted the
+    computed mask (null op ⇒ treated as U). The kernel and its
+    row-isolation fallback on the same batch must agree bit-for-bit."""
     import pyspark.sql.types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -107,14 +107,14 @@ def test_arrow_kernel_null_op_takes_update_branch(monkeypatch):
     )
     rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
     via_arrow = _decode_batch_arrow(rb, fields, {}, False, bits, out_arrow).to_pandas()
-    via_pandas = _decode_batch(pdf, fields, {}, False, bits).reset_index(drop=True)
+    via_rows = _decode_batch(rb, fields, {}, False, bits, out_arrow).to_pandas()
 
     # the null-op row computes a mask like a U — never a null
     assert not pd.isna(via_arrow.loc[0, "_set_mask"])
     assert int(via_arrow.loc[0, "_set_mask"]) == (1 << bits["role"]) | (1 << bits["text"])
     # full bit-for-bit agreement between kernels
     assert [int(x) for x in via_arrow["_set_mask"]] == [
-        int(x) for x in via_pandas["_set_mask"]
+        int(x) for x in via_rows["_set_mask"]
     ]
 
 

@@ -156,3 +156,32 @@ def test_cascade_upstream_rollback_refuses_to_poll(spark, tmp_path):
     assert ei.value.oldest_retained == rollback_id
     with open(cursor) as f:
         assert json.load(f)["snapshot_id"] < rollback_id
+
+
+def test_cascade_upstream_overwrite_refuses_to_poll(spark, tmp_path):
+    """An overwrite of a table that held data writes no change rows for the
+    rows it removes, like a rollback. The first overwrite (onto an empty
+    table) still replicates as inserts; the poll after a second overwrite
+    must raise CursorExpiredError carrying that overwrite as the resume
+    point, instead of leaving the removed row in the replica."""
+    a, b = _mk_empty(tmp_path, "a7"), _mk_empty(tmp_path, "b7")
+    up = LakehouseTable(a)
+    row = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+    def overwrite(*keys):
+        df = spark.createDataFrame([(k, 0, "user", k, None, None) for k in keys], row)
+        return up.overwrite(spark, df)["snapshot_id"]
+
+    edge = CascadeJob(a, b, str(tmp_path / "ctl-e7"))
+    cursor = str(tmp_path / "e7.cursor")
+    overwrite("a", "b")
+    assert edge.poll_once(spark, cursor)["applied"]
+    assert _state(spark, b)["conv_id"].tolist() == ["a", "b"]
+
+    second = overwrite("a")
+    with pytest.raises(CursorExpiredError) as ei:
+        edge.poll_once(spark, cursor)
+    assert ei.value.oldest_retained == second
+    with open(cursor) as f:
+        assert json.load(f)["snapshot_id"] < second
+    edge.job.wait_maintenance()

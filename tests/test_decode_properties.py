@@ -1,11 +1,13 @@
-"""Property tests for the Arrow decode kernel (round 2's mapInArrow path).
+"""Property tests for the Arrow decode kernel and its row-isolation
+fallback (`functions/decode.py`).
 
-The Arrow kernel and the pandas kernel must be value-identical on ANY
-payload soup — unicode, escaped quotes/newlines/backslashes, explicit
-nulls vs absent keys (the `_set_mask` distinction), missing payloads,
-and malformed JSON (which flips the whole batch to the pandas fallback
-with its per-row isolation loop). Runs at the kernel level (no Spark) for
-speed; the Spark-level equality is tests/test_replay_e2e.py.
+Wherever the Arrow kernel accepts a batch, it and the fallback must be
+value-identical on ANY payload soup — unicode, escaped
+quotes/newlines/backslashes, explicit nulls vs absent keys (the
+`_set_mask` distinction), missing payloads. Malformed and non-object JSON
+makes the kernel reject the whole batch; the fallback then isolates the
+bad rows. Runs at the kernel level (no Spark) for speed; the Spark-level
+equality is tests/test_replay_e2e.py.
 """
 
 from __future__ import annotations
@@ -13,15 +15,18 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+import pyarrow as pa
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_pipeline_spark.functions.decode import (
-    _arrow_payload_schema,
-    _bulk_parse_arrow,
     _decode_batch,
+    _decode_batch_arrow,
 )
+from data_pipeline_spark.schemas import decoded_schema
 
 FIELDS = [
     ("conv_id", "string"),
@@ -32,6 +37,20 @@ FIELDS = [
     ("ts", "timestamp"),
 ]
 BITS = {"role": 3, "text": 4, "tool": 5, "ts": 6}
+OUT_ARROW = to_arrow_schema(T.StructType(
+    decoded_schema(T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ])).fields
+    + [T.StructField("_set_mask", T.LongType()),
+       T.StructField("_payload", T.StringType()),
+       T.StructField("_error", T.StringType()),
+       T.StructField("_valid", T.BooleanType(), False)]
+))
 
 # text values that stress JSON string framing: quotes, backslashes, raw
 # unicode, escape sequences that decode to newlines/quotes
@@ -71,68 +90,59 @@ rows = st.lists(
 )
 
 
-def _envelope(op_payloads) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "lsn": pd.Series(range(1, len(op_payloads) + 1), dtype="int64"),
-            "op": [op for op, _ in op_payloads],
-            "conv_id": [f"c{i % 3}" for i in range(len(op_payloads))],
-            "turn_idx": pd.Series([i % 5 for i in range(len(op_payloads))], dtype="int32"),
-            "payload": pd.Series([p for _, p in op_payloads], dtype="object"),
-        }
-    )
+def _envelope(op_payloads) -> pa.RecordBatch:
+    n = len(op_payloads)
+    return pa.RecordBatch.from_pydict({
+        "lsn": pa.array(range(1, n + 1), pa.int64()),
+        "op": pa.array([op for op, _ in op_payloads], pa.string()),
+        "conv_id": pa.array([f"c{i % 3}" for i in range(n)], pa.string()),
+        "turn_idx": pa.array([i % 5 for i in range(n)], pa.int32()),
+        "payload": pa.array([p for _, p in op_payloads], pa.string()),
+    })
+
+
+def _fallback(rb) -> pd.DataFrame:
+    return _decode_batch(rb, FIELDS, {}, True, BITS, OUT_ARROW).to_pandas()
 
 
 @settings(max_examples=120, deadline=None)
 @given(op_payloads=rows)
-def test_arrow_parse_agrees_with_pandas_kernel(op_payloads):
-    """Where the Arrow bulk parse succeeds, the full decode (with validity
-    flags AND the partial-image `_set_mask`) must equal the pandas kernel's
-    output value-for-value; where it fails, the caller's fallback IS the
-    pandas kernel, so agreement is trivially total either way. This drives
-    the comparison on every generated soup and only skips the assert when
-    arrow declined the batch (still asserting the pandas kernel doesn't
-    crash)."""
-    pdf = _envelope(op_payloads)
-    via_pandas = _decode_batch(
-        pdf, FIELDS, {}, with_validity=True, field_bits=BITS
-    ).reset_index(drop=True)
+def test_arrow_kernel_agrees_with_row_fallback(op_payloads):
+    """Where the Arrow kernel accepts a batch, its full decode (validity
+    flags AND the partial-image `_set_mask`) must equal the row-isolation
+    fallback's value-for-value. Where it rejects one, the fallback is the
+    decode, so its invariants must hold on every soup."""
+    rb = _envelope(op_payloads)
+    via_rows = _fallback(rb)
+    try:
+        via_arrow = _decode_batch_arrow(rb, FIELDS, {}, True, BITS, OUT_ARROW).to_pandas()
+    except Exception:  # noqa: BLE001 — rejected batches take the fallback
+        via_arrow = None
+    if via_arrow is not None:
+        pd.testing.assert_frame_equal(via_arrow, via_rows)
 
-    payloads = pdf["payload"].dropna()
-    # the kernels only bulk-parse object-shaped payloads (non-objects are
-    # rejected up front with a validity error) — mirror that here
-    payloads = payloads[payloads.str.lstrip().str.startswith("{")]
-    arrow_parsed = _bulk_parse_arrow(payloads, FIELDS, {}) if len(payloads) else None
-    if arrow_parsed is None:
-        return  # arrow declined → runtime uses the pandas kernel verbatim
-
-    # reproduce the arrow-happy-path decode through the pandas assembly by
-    # checking the PARSE layer itself: every known field's parsed values
-    # must match what pandas' read_json produced inside _decode_batch
-    import io
-
-    ref = pd.read_json(
-        io.StringIO("[" + ",".join(payloads.tolist()) + "]"),
-        orient="records", dtype=False, convert_dates=False,
-    )
-    ref.index = payloads.index
-    for name, _typ in FIELDS:
-        if name in ("conv_id", "turn_idx"):
+    # the fallback's own invariants hold on this soup
+    assert (via_rows["_valid"] | via_rows["_error"].notna()).all()
+    d_rows = via_rows["op"] == "D"
+    assert (via_rows.loc[d_rows, "_set_mask"] == 0).all()
+    i_rows = via_rows["op"] == "I"
+    assert (via_rows.loc[i_rows, "_set_mask"] == -1).all()
+    # a payload json.loads rejects, or one that is not an object, is flagged
+    for i, (_, p) in enumerate(op_payloads):
+        if p is None:
             continue
-        a = arrow_parsed[name] if name in arrow_parsed else None
-        b = ref[name] if name in ref else None
-        if a is None and b is None:
-            continue
-        av = [None if pd.isna(x) else x for x in (a if a is not None else pd.Series(None, index=payloads.index, dtype="object"))]
-        bv = [None if pd.isna(x) else x for x in (b if b is not None else pd.Series(None, index=payloads.index, dtype="object"))]
-        assert av == bv, f"field {name}: arrow={av} pandas={bv}"
+        try:
+            ok = isinstance(json.loads(p), dict)
+        except ValueError:
+            ok = False
+        if not ok:
+            assert not via_rows.loc[i, "_valid"], (p, via_rows.loc[i, "_error"])
 
-    # and the pandas kernel's own invariants hold on this soup
-    assert (via_pandas["_valid"] | via_pandas["_error"].notna()).all()
-    d_rows = via_pandas["op"] == "D"
-    assert (via_pandas.loc[d_rows, "_set_mask"] == 0).all()
-    i_rows = via_pandas["op"] == "I"
-    assert (via_pandas.loc[i_rows, "_set_mask"] == -1).all()
+
+def test_fallback_raises_on_first_bad_row_without_validity():
+    rb = _envelope([("I", '{"text": "ok"}'), ("U", "{broken"), ("I", "null")])
+    with pytest.raises(ValueError, match="broken"):
+        _decode_batch(rb, FIELDS, {}, False, None, OUT_ARROW)
 
 
 @settings(max_examples=60, deadline=None)
@@ -141,13 +151,12 @@ def test_explicit_null_vs_absent_mask(op_payloads):
     """For U rows with valid JSON payloads: a field's mask bit is set iff
     the key APPEARS in the payload (even as explicit null), never when the
     key is absent — recomputed here independently from the raw JSON."""
-    pdf = _envelope(op_payloads)
-    out = _decode_batch(pdf, FIELDS, {}, with_validity=True, field_bits=BITS)
-    for i in range(len(pdf)):
-        if pdf.loc[i, "op"] != "U" or pd.isna(pdf.loc[i, "payload"]):
+    out = _fallback(_envelope(op_payloads))
+    for i, (op, payload) in enumerate(op_payloads):
+        if op != "U" or payload is None:
             continue
         try:
-            obj = json.loads(pdf.loc[i, "payload"])
+            obj = json.loads(payload)
         except ValueError:
             continue
         if not isinstance(obj, dict):
@@ -156,5 +165,5 @@ def test_explicit_null_vs_absent_mask(op_payloads):
         for name, bit in BITS.items():
             expected = name in obj
             assert bool(mask & (1 << bit)) == expected, (
-                f"row {i} field {name}: payload={pdf.loc[i, 'payload']!r} mask={mask}"
+                f"row {i} field {name}: payload={payload!r} mask={mask}"
             )

@@ -62,20 +62,25 @@ def test_decode_pandas_equals_sql(spark, feed_dir):
 
 
 def test_decode_arrow_equals_pandas_impl(spark, feed_dir):
-    """The mapInArrow kernel (`decode_events`) and the mapInPandas kernel
-    (`_decode_batch`, its decimal and per-row-isolation fallback) must be
+    """The Arrow kernel (`decode_events`) and its row-isolation fallback
+    (`_decode_batch`, which decodes any batch the kernel rejects) must be
     value-identical — including the explicit-null-vs-absent `_set_mask`
     semantics the partial-image mode depends on."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     raw = read_feed_batch(spark, feed_dir)
     bits = {"role": 3, "text": 4, "tool": 5, "ts": 6}
     arrow = decode_events(raw, TRANSCRIPT_SCHEMA, field_bits=bits)
     a = arrow.orderBy("lsn").toPandas()
     fields = [(f.name, f.dataType.simpleString()) for f in TRANSCRIPT_SCHEMA.fields]
+    out_arrow = to_arrow_schema(arrow.schema)
     p = (
         raw.where(raw["op"] != "DDL")
         .select("lsn", "op", "conv_id", "turn_idx", "payload")
-        .mapInPandas(
-            lambda batches: (_decode_batch(b, fields, {}, False, bits) for b in batches),
+        .mapInArrow(
+            lambda batches: (
+                _decode_batch(b, fields, {}, False, bits, out_arrow) for b in batches
+            ),
             schema=arrow.schema,
         )
         .orderBy("lsn").toPandas()

@@ -329,6 +329,47 @@ def test_fast_path_ddl_probe_matches_spark_path(spark, tmp_path):
     assert sorted(fast_ddl) == sorted(slow_ddl) == [(2, ddl % 2), (3, ddl % 3)]
 
 
+def test_fast_path_gc_keeps_consumed_spill_across_discard_gap(spark, tmp_path):
+    """The footer fast path garbage-collects spills by the same rule as the
+    Spark path: after an audit discard leaves a gap in the spill ids, the
+    next batch must keep the newest spill below it, because a redelivery of
+    that batch re-reads it."""
+    import os
+
+    from data_pipeline_spark.streaming.txn import TxnAligner
+
+    def chunk(bid, lsn0, txns):
+        path = str(tmp_path / f"chunk-{bid}.parquet")
+        n = len(txns)
+        pd.DataFrame({
+            "lsn": pd.Series(range(lsn0, lsn0 + n), dtype="int64"),
+            "op": ["I"] * n,
+            "ts": pd.Series([pd.NaT] * n, dtype="datetime64[us]"),
+            "conv_id": [f"c{lsn0 + i}" for i in range(n)],
+            "turn_idx": pd.array([0] * n, dtype="Int32"),
+            "payload": ['{"text": "x"}'] * n,
+            "txn_id": pd.array(txns, dtype="Int64"),
+        }).to_parquet(path, index=False)
+        return path
+
+    aligner = TxnAligner(str(tmp_path / "spill"))
+
+    def align(bid, path):
+        df = spark.read.schema(TXN_EVENT_SCHEMA).parquet(path)
+        aligner.align(spark, bid, df, files=[path])
+        # the fast path wrote this spill (pyarrow writes one part file)
+        spill = aligner._spill_path(bid)
+        assert "part-00000.parquet" in os.listdir(spill)
+
+    align(3, chunk(3, 1, [6, 6, 7, 7]))     # txn 7 is deferred: spill 3
+    align(4, chunk(4, 5, [7, 8, 8]))        # consumes spill 3, spills txn 8
+    aligner.discard(4)                      # audit discard: spill 4 rolls back
+    assert aligner._pending_ids() == [3]
+    align(5, chunk(5, 8, [9, 9, 10]))
+    # batch 5 consumed spill 3; its redelivery must still find it
+    assert aligner._pending_ids() == [3, 5]
+
+
 def test_aligner_passthrough_without_txn_envelope(spark, tmp_path):
     """A feed without txn ids ingests exactly as before (opt-in surface)."""
     spec = FeedSpec(n_events=2_000, n_convs=80, seed=3, chunk_size=2_000)

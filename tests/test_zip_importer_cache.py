@@ -1,4 +1,4 @@
-"""The decode kernels drop cached zipimporters when they finish, so a reused
+"""The decode kernel drops cached zipimporters when it finishes, so a reused
 Python worker's next `importlib.invalidate_caches()` re-reads no archive,
 and imports from a zip on sys.path still resolve afterwards."""
 
