@@ -160,10 +160,11 @@ def _decode_batch(
 ):
     """The row-isolation fallback for a batch `_decode_batch_arrow`
     rejects; same arguments and output. Each payload parses with
-    `json.loads`. A payload that is not valid JSON or not a JSON object
-    gets an `_error` under with_validity (the ingest loop quarantines it,
-    reference skip-vs-abort error handling — data_pipeline applier error
-    paths + mailer, SURVEY.md §2 T11) and otherwise raises ValueError.
+    `json.loads`. A payload that is not valid JSON, not a JSON object, or
+    holds a value of the wrong type for its column gets an `_error` under
+    with_validity (the ingest loop quarantines it, reference skip-vs-abort
+    error handling — data_pipeline applier error paths + mailer, SURVEY.md
+    §2 T11) and otherwise raises ValueError.
     The parsed rows then go through the kernel's own `_assemble`, so a
     decimal column takes the same float64 → decimal cast, and the two
     agree on every batch the kernel accepts."""
@@ -186,7 +187,21 @@ def _decode_batch(
                 rows.append(obj)
         parsed.append(p is not None and err is None)
         errors.append(err)
-    tab = pa.Table.from_pylist(rows, schema=_arrow_payload_schema(table_fields, renames))
+    schema = _arrow_payload_schema(table_fields, renames)
+    try:
+        tab = pa.Table.from_pylist(rows, schema=schema)
+    except (pa.ArrowException, OverflowError):
+        # a value of the wrong JSON type for its column ({"text": 5}): flag
+        # (or raise) the rows that fail on their own, keep the rest
+        at = [i for i, ok in enumerate(parsed) if ok]
+        for i, row in zip(at, rows):
+            try:
+                pa.Table.from_pylist([row], schema=schema)
+            except (pa.ArrowException, OverflowError) as e:
+                if not with_validity:
+                    raise ValueError(f"{type(e).__name__}: {e}: {row!r}") from e
+                parsed[i], errors[i] = False, f"{type(e).__name__}: {e}"
+        tab = pa.Table.from_pylist([r for i, r in zip(at, rows) if parsed[i]], schema=schema)
     return _assemble(
         rb, tab, pa.array(parsed, pa.bool_()), pa.array(errors, pa.string()),
         table_fields, renames, with_validity, field_bits, out_arrow_schema,

@@ -72,6 +72,7 @@ from __future__ import annotations
 
 import bisect
 import collections
+import dataclasses
 import datetime
 import json
 import os
@@ -353,6 +354,37 @@ class CursorExpiredError(RuntimeError):
         self.oldest_retained = oldest_retained
 
 
+@dataclasses.dataclass
+class ChangeWindow:
+    """One changelog window (from_id, to_id] of a table's published chain,
+    planned from metadata (`LakehouseTable.tail_window`): `commits` as
+    `_change_window` returns them, and the chain `head` at planning time.
+    `changes(spark)` plans the change rows (`read_changes`' columns) only
+    when called. from_id == to_id: nothing committed since the cursor."""
+
+    table: LakehouseTable
+    from_id: int
+    to_id: int
+    head: dict
+    commits: list[tuple[dict, list[dict]]]
+
+    @property
+    def cursor(self) -> dict:
+        """The cursor that closes this window (`commit_cursor`'s input)."""
+        return {"snapshot_id": self.to_id, "from_snapshot_id": self.from_id}
+
+    def changes(self, spark: SparkSession) -> DataFrame:
+        return self.table._changes_df(spark, self.head, self.commits)
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Write `text` to `path` atomically (tmp file + rename)."""
+    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
+
+
 def _bump_depth(depth: dict[str, int], buckets: set[int]) -> dict[str, int]:
     """`delta_depth` after one delta commit that touched `buckets`: +1 per
     bucket however many files the commit wrote there, so `compact_every`
@@ -586,10 +618,7 @@ class LakehouseTable:
             self.current_snapshot() if snapshot_id is None
             else self.snapshot_by_id(snapshot_id)  # raises if missing
         )
-        tmp = hint + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(f"snapshot-{snap['snapshot_id']:08d}.json")
-        os.rename(tmp, hint)
+        _atomic_write(hint, f"snapshot-{snap['snapshot_id']:08d}.json")
         return {"branch": name, "snapshot_id": snap["snapshot_id"]}
 
     def drop_branch(self, name: str) -> dict:
@@ -898,11 +927,7 @@ class LakehouseTable:
         return carried
 
     def _write_json(self, name: str, obj: dict) -> None:
-        p = os.path.join(self.meta_dir, name)
-        tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.rename(tmp, p)
+        _atomic_write(os.path.join(self.meta_dir, name), json.dumps(obj))
 
     #: How old (seconds) an unreachable snapshot file must be before a new
     #: writer may reclaim it as a crash orphan. A *fresh* file at our target
@@ -1045,10 +1070,7 @@ class LakehouseTable:
                         f"head moved to {cur_id} while this commit was built "
                         f"from head {expected_head} — reload and retry"
                     )
-            hint_tmp = self._hint_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(hint_tmp, "w") as f:
-                f.write(name)
-            os.rename(hint_tmp, self._hint_path())  # atomic on POSIX
+            _atomic_write(self._hint_path(), name)
         finally:
             if acquired:
                 try:
@@ -3104,11 +3126,20 @@ class LakehouseTable:
         snapshots, not thousands) and this is a few MB of strings; it never
         reads data files.
         """
-        cur = self.current_snapshot()
+        chain = self.history()
+        return self._changes_df(
+            spark, chain[-1], self._change_window(from_snapshot_id, to_snapshot_id, chain)
+        )
+
+    def _changes_df(
+        self, spark: SparkSession, cur: dict, window: list[tuple[dict, list[dict]]]
+    ) -> DataFrame:
+        """The change rows of `_change_window`'s commits, projected to the
+        schema of `cur` (the chain head)."""
         partial = self.update_mode(cur) == "partial"
         out_parts: list[DataFrame] = []
         data_cols = [f["name"] for f in self._load_schema(cur["schema_id"])["fields"]]
-        for s, new_entries in self._change_window(from_snapshot_id, to_snapshot_id):
+        for s, new_entries in window:
             sid = s["snapshot_id"]
             if s["kind"] in ("merge", "cherry-pick"):
                 # cherry-pick re-references an earlier merge's delta files —
@@ -3153,7 +3184,8 @@ class LakehouseTable:
         return df
 
     def _change_window(
-        self, from_snapshot_id: int, to_snapshot_id: int | None = None
+        self, from_snapshot_id: int, to_snapshot_id: int | None = None,
+        chain: list[dict] | None = None,
     ) -> list[tuple[dict, list[dict]]]:
         """The commits in (from, to] of the published chain that change
         rows, each with its file entries new to the chain, in commit order:
@@ -3165,8 +3197,9 @@ class LakehouseTable:
         Path-based diff (not manifest-name diff): compaction/rewrites
         carried entries into NEW manifests without changing the underlying
         file paths, so only genuinely new files count as changes. Manifest
-        loads are cached by name, so each manifest reads once per call."""
-        chain = self.history()
+        loads are cached by name, so each manifest reads once per call.
+        `chain`: the caller's `history()`, so one poll walks it once."""
+        chain = chain if chain is not None else self.history()
         ids = [s["snapshot_id"] for s in chain]
         if from_snapshot_id not in ids:
             raise ValueError(f"snapshot {from_snapshot_id} not in retained history {ids}")
@@ -3336,15 +3369,28 @@ class LakehouseTable:
     def tail_changes(
         self, spark: SparkSession, cursor_path: str
     ) -> tuple[DataFrame | None, dict]:
-        """Incremental changelog consumption with a durable cursor: returns
-        (changes since the cursor's snapshot, new_cursor) and persists the
-        cursor only via the returned commit callback pattern — caller calls
+        """`tail_window` as (changes, new_cursor), or (None, cursor) when
+        nothing was committed since the cursor. The caller calls
         ``commit_cursor(cursor_path, new_cursor)`` AFTER it has durably
-        processed the batch (at-least-once for the consumer; make the
-        downstream sink idempotent, e.g. another LakehouseTable merge).
-        First call (no cursor file) starts from the oldest retained snapshot.
-        The returned cursor names the window it closes: the changes cover
-        (``from_snapshot_id``, ``snapshot_id``].
+        processed the changes, which cover (``from_snapshot_id``,
+        ``snapshot_id``]."""
+        w = self.tail_window(cursor_path)
+        if w.from_id == w.to_id:
+            return None, w.cursor
+        return w.changes(spark), w.cursor
+
+    def tail_window(self, cursor_path: str) -> ChangeWindow:
+        """Plan the changelog window since a durable cursor from metadata
+        (one `history()` walk) and pin it. First call (no cursor file)
+        starts from the oldest retained snapshot.
+
+        Pinning: before a window is returned, `{from, to}` is written to
+        ``<cursor_path>.intent`` by atomic rename; `commit_cursor` removes
+        it after the cursor rename. A consumer that crashed in between
+        gets exactly (cursor, to] again however far the table has moved,
+        so redelivery is exact: its sink skips the window by batch_id
+        (= to) or finishes what the crash cut short. An intent whose window
+        committed (cursor >= to) or whose `to` left the chain is dropped.
 
         A cursor that points BELOW the oldest retained snapshot has expired:
         `expire_snapshots` GC'd the deltas between it and the retained chain,
@@ -3356,31 +3402,39 @@ class LakehouseTable:
         point (the oldest retained id, or the newest rollback or overwrite
         id in the window); the consumer re-bootstraps with a full table
         read (``read(spark)``), then resumes tailing from there."""
-        cur = self.current_snapshot()
         chain = self.history()
-        chain_ids = [s["snapshot_id"] for s in chain]
-        new_cursor = {"snapshot_id": cur["snapshot_id"]}
-        start = chain_ids[0]
+        ids = [s["snapshot_id"] for s in chain]
+        start = ids[0]
         if os.path.exists(cursor_path):
             with open(cursor_path) as f:
                 at = json.load(f)["snapshot_id"]
-            expired = at not in chain_ids
-            reset = self._last_reset(chain, start if expired else at, cur["snapshot_id"])
-            resume = reset if reset is not None else start if expired else None
-            if resume is not None:
-                raise CursorExpiredError(at, resume)
+            if at not in ids:
+                reset = self._last_reset(chain, start, ids[-1])
+                raise CursorExpiredError(at, start if reset is None else reset)
             start = at
-        if start >= cur["snapshot_id"]:
-            return None, new_cursor
-        new_cursor["from_snapshot_id"] = start
-        return self.read_changes(spark, start, cur["snapshot_id"]), new_cursor
+        to = ids[-1]
+        intent_path = cursor_path + ".intent"
+        if os.path.exists(intent_path):
+            with open(intent_path) as f:
+                pinned = json.load(f)["to"]
+            if start < pinned and pinned in ids:
+                to = pinned
+            else:  # its window committed, or `to` left the chain
+                os.remove(intent_path)
+        if start >= to:
+            return ChangeWindow(self, start, start, chain[-1], [])
+        window = ChangeWindow(self, start, to, chain[-1], self._change_window(start, to, chain))
+        _atomic_write(intent_path, json.dumps({"from": start, "to": to}))
+        return window
 
     @staticmethod
     def commit_cursor(cursor_path: str, cursor: dict) -> None:
-        tmp = cursor_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(cursor, f)
-        os.rename(tmp, cursor_path)
+        """Durably advance a `tail_window` cursor, then drop its intent."""
+        _atomic_write(cursor_path, json.dumps(cursor))
+        try:
+            os.remove(cursor_path + ".intent")
+        except FileNotFoundError:
+            pass
 
     def rollback_to(self, snapshot_id: int) -> dict:
         """Roll the table back to a previous snapshot's state (Iceberg

@@ -5,9 +5,9 @@ bus so further targets consume them like any source feed (extract → Kafka →
 apply → Kafka → apply...; SURVEY.md §2 K1/S4). Here the hop is one
 cursor-polled edge per target (the protocol in `streaming/cursor.py`):
 
-    upstream.tail_changes ─┬─ one merge, same shape ─→ downstream link_merge
-                           └─ any other window ──────→ typed projection
-                                                       → downstream apply_changes
+    upstream.tail_window ─┬─ one merge, same shape ─→ downstream link_merge
+                          └─ any other window ──────→ typed projection
+                                                      → downstream apply_changes
 
 - Transport: in-lake (the edge reads the upstream's committed changelog
   directly — no broker needed). The changelog is already typed and
@@ -17,10 +17,10 @@ cursor-polled edge per target (the protocol in `streaming/cursor.py`):
   wire) and the far side ingests it like any source feed.
 - Delivery: each poll reads the upstream commits since the edge's cursor,
   in commit order, along the published parent chain (WAP-staged batches
-  are unreachable); the downstream sink is the engine's own idempotent
-  merge — LWW keyed by (conv_id, turn_idx, lsn) makes re-applied rows
-  no-ops, and a window redelivered after a lost cursor commit is skipped
-  by batch_id (the window's upstream head snapshot id).
+  are unreachable). The window is pinned before the apply, so after a
+  lost cursor commit the re-poll gets the identical window, which the
+  downstream merge skips by batch_id (the window's upstream head snapshot
+  id); the next poll then reads what the upstream committed meanwhile.
   Net effect: exactly-once table state.
 - Chains compose: B can itself cascade to C (each edge has its own
   cursor + control table), which is how fan-out replication trees are
@@ -60,14 +60,16 @@ An upstream's first overwrite, onto an empty table, replicates as inserts.
 from __future__ import annotations
 
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.operators.merge import MASK_COL
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import ChangeWindow, LakehouseTable
 from data_pipeline_spark.schemas import MERGE_KEY
 from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import MAX_APPLY_THREADS, IngestJob
@@ -103,23 +105,20 @@ def _fields(table: LakehouseTable, schema_id: int) -> list[tuple[str, str]]:
     return [(f["name"], f["type"]) for f in table._load_schema(schema_id)["fields"]]
 
 
-def _linkable(
-    upstream: LakehouseTable, replica: LakehouseTable, from_id: int, to_id: int
-) -> list[dict] | None:
+def _linkable(w: ChangeWindow, replica: LakehouseTable) -> list[dict] | None:
     """The upstream files a full replica can commit by reference for the
-    window (from_id, to_id], or None when the window must be applied as
-    typed rows. Linkable means: exactly one commit in the window changes
-    rows, and it is a merge or cherry-pick whose new files are all typed
-    deltas written under a schema equal to the replica's current one
-    (names and types, in order) and a spec with the replica's bucket
-    count, into a full-mode replica. Such files already hold the collapsed
-    changeset (at most one row per key) in the replica's own file layout
-    and bucket routing, so re-collapsing and re-bucketing them would
-    rewrite the same rows."""
-    window = upstream._change_window(from_id, to_id)
-    if len(window) != 1 or window[0][0]["kind"] not in ("merge", "cherry-pick"):
+    window `w`, or None when the window must be applied as typed rows,
+    decided from the window's metadata alone. Linkable means: exactly one
+    commit in the window changes rows, and it is a merge or cherry-pick
+    whose new files are all typed deltas written under a schema equal to
+    the replica's current one (names and types, in order) and a spec with
+    the replica's bucket count, into a full-mode replica. Such files
+    already hold the collapsed changeset (at most one row per key) in the
+    replica's own file layout and bucket routing, so re-collapsing and
+    re-bucketing them would rewrite the same rows."""
+    if len(w.commits) != 1 or w.commits[0][0]["kind"] not in ("merge", "cherry-pick"):
         return None
-    snap, entries = window[0]
+    upstream, (snap, entries) = w.table, w.commits[0]
     down = replica.current_snapshot()
     if replica.update_mode(down) != "full":
         return None
@@ -138,14 +137,12 @@ def _linkable(
 def _apply_replica(
     job: IngestJob,
     spark: SparkSession,
-    upstream: LakehouseTable,
-    from_id: int,
-    batch_id: int,
-    changes: DataFrame,
+    w: ChangeWindow,
     row_predicate: Column | str | None,
+    changes: Callable[[], DataFrame] | None = None,
 ) -> dict:
-    """Apply one changelog window (from_id, batch_id] to one replica
-    target — the single place that chooses how:
+    """Apply one changelog window `w` to one replica target — the single
+    place that chooses how:
 
     - by reference: an unfiltered replica whose window `_linkable` accepts
       (one merge, same shape; every steady-state poll of a live full
@@ -163,9 +160,11 @@ def _apply_replica(
       `sync_schema` has verified is the upstream's restricted to the keys
       + the edge's `columns`.
 
-    A partial-mode changelog is refused either way: a replica applies
-    full images only."""
-    if MASK_COL in changes.columns:
+    A partial-mode upstream is refused either way: a replica applies full
+    images only. `changes` builds the window's change rows (default
+    `w.changes`); only the typed path calls it."""
+    batch_id = w.to_id
+    if w.table.update_mode(w.head) == "partial":
         raise ValueError(
             "cascade requires a full-image changelog; this one carries "
             f"{MASK_COL} (partial-update table) — a replica applies full "
@@ -173,13 +172,14 @@ def _apply_replica(
             "distinction"
         )
     if row_predicate is None:
-        linked = _linkable(upstream, job.table, from_id, batch_id)
+        linked = _linkable(w, job.table)
         if linked is not None:
             return job._apply(
-                spark, batch_id, lambda: job.table.link_merge(batch_id, upstream, linked)
+                spark, batch_id, lambda: job.table.link_merge(batch_id, w.table, linked)
             )
-    else:
-        changes = filter_replica_changes(changes, row_predicate)
+    chg = changes() if changes is not None else w.changes(spark)
+    if row_predicate is not None:
+        chg = filter_replica_changes(chg, row_predicate)
     # D rows get null non-key columns, as a decoded tombstone does. A
     # linked D row instead keeps whatever the upstream wrote there (an
     # upstream decodes a D event's payload, if it has one). The two differ
@@ -187,7 +187,7 @@ def _apply_replica(
     # its (lsn, op) alone, and `changes_to_feed` and the Debezium publisher
     # emit a D row's key without its columns.
     live = F.col("_change_op") != "D"
-    typed = changes.select(
+    typed = chg.select(
         F.col("lsn"),
         F.col("_change_op").alias("op"),
         *[
@@ -333,13 +333,11 @@ class CascadeJob:
         from any scheduler. Raises on schema drift (see `sync_schema`) and
         CursorExpiredError (re-initsync the target, then resume)."""
 
-        def apply(batch_id: int, chg: DataFrame, from_id: int) -> dict:
+        def apply(w: ChangeWindow) -> dict:
             self.sync_schema()
-            return _apply_replica(
-                self.job, spark, self.upstream, from_id, batch_id, chg, self.row_predicate
-            )
+            return _apply_replica(self.job, spark, w, self.row_predicate)
 
-        return poll_window(spark, self.upstream, cursor_path, apply)
+        return poll_window(self.upstream, cursor_path, apply)
 
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
@@ -418,26 +416,35 @@ class CascadeFanout:
         """One fan-out step over the window since the cursor; `result` maps
         target name → its apply result."""
 
-        def apply(batch_id: int, chg: DataFrame, from_id: int) -> dict:
+        def apply(w: ChangeWindow) -> dict:
             self.sync_schema()
-            cached = chg.persist()
+            cached: list[DataFrame] = []
+            lock = threading.Lock()
+
+            def changes() -> DataFrame:
+                # built and persisted by the first target that applies
+                # typed rows; linked targets never build it
+                with lock:
+                    if not cached:
+                        cached.append(w.changes(spark).persist())
+                    return cached[0]
+
+            def one(t: CascadeTarget) -> tuple[str, dict]:
+                return t.name, _apply_replica(
+                    self.jobs[t.name], spark, w, t.row_predicate, changes
+                )
+
             try:
-
-                def one(t: CascadeTarget) -> tuple[str, dict]:
-                    return t.name, _apply_replica(
-                        self.jobs[t.name], spark, self.upstream, from_id, batch_id,
-                        cached, t.row_predicate,
-                    )
-
                 workers = max(1, min(MAX_APPLY_THREADS, len(self.targets)))
                 with ThreadPoolExecutor(max_workers=workers) as ex:
                     # dict() drains the iterator so the first failure
                     # propagates (fail the poll, cursor stays put)
                     return dict(ex.map(one, self.targets))
             finally:
-                cached.unpersist()
+                for df in cached:
+                    df.unpersist()
 
-        return poll_window(spark, self.upstream, cursor_path, apply)
+        return poll_window(self.upstream, cursor_path, apply)
 
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000

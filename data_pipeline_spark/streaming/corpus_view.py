@@ -4,7 +4,7 @@
 documents; this module keeps that result LIVE as conversations keep
 changing, without ever re-assembling the whole corpus:
 
-    upstream.tail_changes → touched conv_ids → bucket-pruned point read
+    upstream.tail_window → touched conv_ids → bucket-pruned point read
     → re-assemble ONLY those conversations → merge into the docs table
     through the engine's own idempotent apply path → commit cursor
 
@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +54,12 @@ from data_pipeline_spark.operators.corpus import (
     decontaminate,
     redact_pii,
 )
-from data_pipeline_spark.plans.table_format import LakehouseTable, bounded_ids
+from data_pipeline_spark.plans.table_format import (
+    ChangeWindow,
+    LakehouseTable,
+    _atomic_write,
+    bounded_ids,
+)
 from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 
@@ -224,15 +228,15 @@ class CorpusViewJob:
     def poll_once(self, spark: SparkSession, cursor_path: str) -> dict:
         """One refresh over the window since the cursor. It reads the
         published chain only, so on a write-audit-publish upstream the view
-        converges on exactly the audited corpus; a lost cursor commit just
-        re-refreshes the same conversations to the same images. Raises
+        converges on exactly the audited corpus; after a lost cursor commit
+        the pinned window comes back and skips by batch_id. Raises
         CursorExpiredError when the window can't be read incrementally —
         recover with `resync`."""
 
-        def apply(batch_id: int, chg: DataFrame, _from_id: int) -> dict:
-            return self.refresh_for(spark, batch_id, chg.select("conv_id"))
+        def apply(w: ChangeWindow) -> dict:
+            return self.refresh_for(spark, w.to_id, w.changes(spark).select("conv_id"))
 
-        return poll_window(spark, self.upstream, cursor_path, apply)
+        return poll_window(self.upstream, cursor_path, apply)
 
     def resync(self, spark: SparkSession, cursor_path: str) -> dict:
         """Full reconciliation against the current PUBLISHED upstream — the
@@ -240,7 +244,7 @@ class CorpusViewJob:
         upstream history collapsed by a compliance `purge_keys`, or an
         upstream `rollback_to` or `overwrite` of a non-empty table inside
         the view's window). A
-        fresh cursor alone is NOT enough: `tail_changes` with no cursor
+        fresh cursor alone is NOT enough: `tail_window` with no cursor
         starts at the oldest RETAINED snapshot, and rows folded into base
         files by earlier `expire_snapshots`/purge calls are absent from
         the retained changelog — a changelog-walk "bootstrap" would
@@ -295,7 +299,7 @@ def export_corpus_delta(
     conversations changed since the last export — the continual-pretraining
     delta. Where `snapshot_corpus` re-exports the whole corpus per training
     run, this walks the published changelog with a durable cursor
-    (`tail_changes`, so it is WAP-safe like every cursor consumer) and
+    (`tail_window`, so it is WAP-safe like every cursor consumer) and
     writes one self-describing delta per call under
 
         out_dir/delta-<from_snapshot>-<to_snapshot>/
@@ -315,7 +319,7 @@ def export_corpus_delta(
 
     Bootstrap: the FIRST export (no cursor file) is a FULL corpus export at
     the current published head — never a changelog walk, because
-    `tail_changes` with no cursor starts at the oldest RETAINED snapshot
+    `tail_window` with no cursor starts at the oldest RETAINED snapshot
     and the base rows folded into it by earlier `expire_snapshots` calls
     would be silently missing from a changelog-derived first delta.
     Recovery from `CursorExpiredError` (the exporter was down past upstream
@@ -329,118 +333,98 @@ def export_corpus_delta(
     2. _delta_manifest.json written LAST inside the dir via tmp+rename —
        its presence marks the dir COMPLETE; dirs without it are skipped by
        `list_corpus_deltas`;
-    3. cursor commit. A crash between 2 and 3 leaves a complete-looking
-       dir whose window the retry will re-export with a newer head — safe,
-       because the wider window from the same from-snapshot re-ships every
-       conversation the narrower one touched (chain walk prefers the
-       widest window per from-snapshot), and the successful retry also
-       garbage-collects such abandoned siblings.
+    3. cursor commit. The window is pinned (`tail_window`), so a retry
+       after a crash before this point exports the same (from, to] into
+       the same dir: one without a manifest is rewritten, a complete one
+       is kept as it is — no complete dir is rewritten or deleted. A
+       crashed bootstrap re-runs at its retry's head; the chain walk
+       starts at the newest bootstrap.
 
     Scale shape: per call the work is O(churn) — same point-read /
     semi-join regime as the view refresh (`touched_documents`); the write
     is repartitioned by conv_id for a deterministic layout."""
     upstream = LakehouseTable(upstream_path)
-    prev = None
-    if os.path.exists(cursor_path):
-        with open(cursor_path) as f:
-            prev = json.load(f)["snapshot_id"]
 
-    if prev is None:
-        # bootstrap: the full corpus at the published head, as delta 0→head
-        to_id = upstream.current_snapshot()["snapshot_id"]
-        cursor = {"snapshot_id": to_id}
-        mode = "bootstrap"
-        docs = assemble_conversations(
-            upstream.read(spark, snapshot_id=to_id), max_turns=max_turns
+    def export(w: ChangeWindow | None, to_id: int) -> dict:
+        # a bootstrap's dir gets its own prefix: `from or 0` would collide
+        # with a REAL from_snapshot=0 window (create() writes snapshot 0, so
+        # an exporter set up before first ingest bootstraps AT 0)
+        from_key = "bootstrap" if w is None else f"{w.from_id:08d}"
+        sub = os.path.join(out_dir, f"delta-{from_key}-{to_id:08d}")
+        mpath = os.path.join(sub, "_delta_manifest.json")
+        if os.path.exists(mpath):  # the replay of a window that completed
+            with open(mpath) as f:
+                return {"path": sub, **json.load(f)}
+        if w is None:  # bootstrap: the full corpus at the published head
+            mode, changed_ids = "bootstrap", None
+            docs = assemble_conversations(
+                upstream.read(spark, snapshot_id=to_id), max_turns=max_turns
+            )
+        else:
+            changed_ids = w.changes(spark).select("conv_id").distinct()
+            docs, mode, _ = touched_documents(
+                spark, upstream, changed_ids,
+                max_turns=max_turns, snapshot_id=to_id,
+            )
+        if min_turns > 1:
+            docs = docs.where(F.col("n_turns") >= min_turns)
+        persisted = None
+        if benchmark is not None:
+            # same raw-vs-raw contamination screen as snapshot_corpus, BEFORE
+            # redaction; a doc that churns INTO contamination falls out of
+            # docs here and therefore emits a delete below — the delta chain
+            # stays decontaminated under updates, not just at bootstrap
+            persisted = docs.persist()
+            docs = decontaminate(
+                persisted, spark.read.parquet(benchmark),
+                text_col="doc_text", key_col="conv_id",
+                bench_text_col=benchmark_text_col, n=decontaminate_ngram,
+            )
+        if redact:
+            docs = redact_pii(docs, text_col="doc_text")
+        if doc_filter:
+            docs = docs.where(F.expr(doc_filter))
+        docs.repartition(F.col("conv_id")).sortWithinPartitions("conv_id").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(sub, "docs.parquet"))
+        if persisted is not None:
+            persisted.unpersist()
+        docs_written = spark.read.parquet(os.path.join(sub, "docs.parquet"))
+        deletes = (  # a bootstrap deletes nothing
+            spark.createDataFrame([], "conv_id string") if changed_ids is None
+            else changed_ids.join(docs_written.select("conv_id"), "conv_id", "left_anti")
         )
-        changed_ids = None
-    else:
-        chg, cursor = upstream.tail_changes(spark, cursor_path)
-        if chg is None:
-            return {"exported": False, "cursor": cursor}
-        to_id = cursor["snapshot_id"]
-        changed_ids = chg.select("conv_id").distinct()
-        docs, mode, _ = touched_documents(
-            spark, upstream, changed_ids,
-            max_turns=max_turns, snapshot_id=to_id,
+        deletes.repartition(1).write.mode("overwrite").parquet(
+            os.path.join(sub, "deletes.parquet")
         )
-    # a bootstrap's dir gets its own prefix: `prev or 0` would collide with
-    # a REAL from_snapshot=0 window (create() writes snapshot 0, so an
-    # exporter set up before first ingest bootstraps AT 0) — and the
-    # sibling-GC below would then delete the committed bootstrap itself
-    from_key = "bootstrap" if prev is None else f"{prev:08d}"
-    sub = os.path.join(out_dir, f"delta-{from_key}-{to_id:08d}")
-    if min_turns > 1:
-        docs = docs.where(F.col("n_turns") >= min_turns)
-    persisted = None
-    if benchmark is not None:
-        # same raw-vs-raw contamination screen as snapshot_corpus, BEFORE
-        # redaction; a doc that churns INTO contamination falls out of
-        # docs here and therefore emits a delete below — the delta chain
-        # stays decontaminated under updates, not just at bootstrap
-        persisted = docs.persist()
-        docs = decontaminate(
-            persisted, spark.read.parquet(benchmark),
-            text_col="doc_text", key_col="conv_id",
-            bench_text_col=benchmark_text_col, n=decontaminate_ngram,
-        )
-    if redact:
-        docs = redact_pii(docs, text_col="doc_text")
-    if doc_filter:
-        docs = docs.where(F.expr(doc_filter))
-    docs.repartition(F.col("conv_id")).sortWithinPartitions("conv_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(sub, "docs.parquet"))
-    if persisted is not None:
-        persisted.unpersist()
-    docs_written = spark.read.parquet(os.path.join(sub, "docs.parquet"))
-    if changed_ids is None:  # bootstrap: nothing can be deleted yet
-        deletes = spark.createDataFrame([], "conv_id string")
-    else:
-        deletes = changed_ids.join(
-            docs_written.select("conv_id"), "conv_id", "left_anti"
-        )
-    deletes.repartition(1).write.mode("overwrite").parquet(
-        os.path.join(sub, "deletes.parquet")
-    )
-    n_docs = docs_written.count()
-    n_deleted = spark.read.parquet(os.path.join(sub, "deletes.parquet")).count()
-    manifest = {
-        "source_table": os.path.abspath(upstream_path),
-        "from_snapshot": prev,
-        "to_snapshot": to_id,
-        "watermark_lsn": upstream.snapshot_by_id(to_id).get("watermark_lsn"),
-        "n_docs": n_docs,
-        "n_deleted": n_deleted,
-        "mode": mode,
-        "settings": {"redact": redact, "min_turns": min_turns,
-                     "max_turns": max_turns, "doc_filter": doc_filter,
-                     **(
-                         {
-                             "decontaminated_against": _lineage_path(benchmark),
-                             "decontaminate_ngram": decontaminate_ngram,
-                         }
-                         if benchmark is not None
-                         else {}
-                     )},
-    }
-    # manifest last, atomically: its presence IS the dir's completion marker
-    mpath = os.path.join(sub, "_delta_manifest.json")
-    with open(mpath + ".tmp", "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
-    LakehouseTable.commit_cursor(cursor_path, cursor)
-    # reclaim abandoned pre-crash siblings: narrower windows from the same
-    # from-snapshot (or older bootstraps) are fully covered by this one
-    prefix = f"delta-{from_key}-"
-    for d in os.listdir(out_dir):
-        if d.startswith(prefix) and d != os.path.basename(sub):
-            try:
-                if int(d.rsplit("-", 1)[1]) < to_id:
-                    shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
-            except ValueError:
-                continue
-    return {"exported": True, "path": sub, "cursor": cursor, **manifest}
+        settings = {"redact": redact, "min_turns": min_turns,
+                    "max_turns": max_turns, "doc_filter": doc_filter}
+        if benchmark is not None:
+            settings.update(decontaminated_against=_lineage_path(benchmark),
+                            decontaminate_ngram=decontaminate_ngram)
+        manifest = {
+            "source_table": os.path.abspath(upstream_path),
+            "from_snapshot": None if w is None else w.from_id,
+            "to_snapshot": to_id,
+            "watermark_lsn": upstream.snapshot_by_id(to_id).get("watermark_lsn"),
+            "n_docs": docs_written.count(),
+            "n_deleted": spark.read.parquet(os.path.join(sub, "deletes.parquet")).count(),
+            "mode": mode,
+            "settings": settings,
+        }
+        # manifest last, atomically: its presence IS the dir's completion marker
+        _atomic_write(mpath, json.dumps(manifest, indent=2, sort_keys=True))
+        return {"path": sub, **manifest}
+
+    if not os.path.exists(cursor_path):
+        cursor = {"snapshot_id": upstream.current_snapshot()["snapshot_id"]}
+        out = export(None, cursor["snapshot_id"])
+        LakehouseTable.commit_cursor(cursor_path, cursor)
+        return {"exported": True, "cursor": cursor, **out}
+    r = poll_window(upstream, cursor_path, lambda w: export(w, w.to_id))
+    if not r["applied"]:
+        return {"exported": False, "cursor": r["cursor"]}
+    return {"exported": True, "cursor": r["cursor"], **r["result"]}
 
 
 def list_corpus_deltas(out_dir: str) -> list[dict]:
@@ -451,36 +435,23 @@ def list_corpus_deltas(out_dir: str) -> list[dict]:
     The walk starts at the newest bootstrap (widest `to_snapshot` among
     `from_snapshot is None` entries — a re-bootstrap after cursor expiry
     supersedes any older chain, full export covers everything) and follows
-    `from_snapshot == previous to_snapshot` links, preferring the WIDEST
-    window when a crashed export left an abandoned narrower sibling (the
-    wider window re-ships every conversation the narrower touched, so it
-    covers it). Returns each manifest dict with its `path` added."""
-    found: list[dict] = []
-    if not os.path.isdir(out_dir):
-        return found
-    for d in sorted(os.listdir(out_dir)):
-        if not d.startswith("delta-"):
-            continue
+    `from_snapshot == previous to_snapshot` links. The pinned cursor
+    protocol writes one window per from-snapshot; should a dir from an
+    older chain share one, the wider window wins, as among bootstraps.
+    Returns each manifest dict with its `path` added."""
+    links: dict[int | None, dict] = {}  # from_snapshot → widest window
+    for d in sorted(os.listdir(out_dir)) if os.path.isdir(out_dir) else []:
         mpath = os.path.join(out_dir, d, "_delta_manifest.json")
-        try:
-            with open(mpath) as f:
-                m = json.load(f)
-        except FileNotFoundError:
-            # no manifest = incomplete export; or a concurrent exporter
-            # just GC'd an abandoned sibling between listdir and open —
-            # either way the dir is not part of the committed chain
-            continue
-        m["path"] = os.path.join(out_dir, d)
-        found.append(m)
-    boots = [m for m in found if m["from_snapshot"] is None]
-    if not boots:
-        return []
-    chain = [max(boots, key=lambda m: m["to_snapshot"])]
-    while True:
-        nxt = [m for m in found if m["from_snapshot"] == chain[-1]["to_snapshot"]]
-        if not nxt:
-            return chain
-        chain.append(max(nxt, key=lambda m: m["to_snapshot"]))
+        if not d.startswith("delta-") or not os.path.exists(mpath):
+            continue  # not a delta dir, or an incomplete export
+        with open(mpath) as f:
+            m = {**json.load(f), "path": os.path.join(out_dir, d)}
+        if m["to_snapshot"] > links.get(m["from_snapshot"], {}).get("to_snapshot", -1):
+            links[m["from_snapshot"]] = m
+    chain = [links[None]] if None in links else []
+    while chain and chain[-1]["to_snapshot"] in links:
+        chain.append(links[chain[-1]["to_snapshot"]])
+    return chain
 
 
 def read_corpus_deltas(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -2,42 +2,42 @@
 table's changes between two COMMITTED snapshots of its published parent
 chain (Iceberg's incremental scan), never by listing files:
 
-    tail_changes(cursor) → apply(batch_id, changes, from_id) → commit_cursor
+    tail_window(cursor) → apply(window) → commit_cursor
 
-The cursor commits only after the apply, so a crash in between re-reads
-the window: an exact redelivery (batch_id = the window's head snapshot id)
-is skipped by the sink's batch_id check, a widened one re-applies old rows
-as LWW no-ops. A window the cursor can't cover (expired retention, an
-upstream `rollback_to` or `overwrite` of a non-empty table, a format
-`upgrade`) raises `CursorExpiredError`.
+`tail_window` plans the window from snapshot metadata and pins it in an
+intent file before returning; the cursor commits only after the apply and
+then drops the intent. A crash in between hands the consumer the SAME
+window again, however far the table has moved since, so redelivery is
+exact: a table sink skips it by batch_id (the window's head snapshot id),
+a file sink finds its own output and finishes or keeps it. A window the
+cursor can't cover (expired retention, an upstream `rollback_to` or
+`overwrite` of a non-empty table, a format `upgrade`) raises
+`CursorExpiredError`.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import ChangeWindow, LakehouseTable
 
 
 def poll_window(
-    spark: SparkSession,
     upstream: LakehouseTable,
     cursor_path: str,
-    apply: Callable[[int, DataFrame, int], dict],
+    apply: Callable[[ChangeWindow], dict],
 ) -> dict:
-    """One poll: `apply(batch_id, changes, from_id)` the window (from_id,
-    batch_id] since the cursor, then commit the cursor. Returns
+    """One poll: `apply(window)` the pinned window (window.from_id,
+    window.to_id] since the cursor, then commit the cursor. Returns
     {"applied": False, "cursor"} when there is nothing new, else
-    {"applied": True, "batch_id", "cursor", "result": <apply's return>}."""
-    chg, cursor = upstream.tail_changes(spark, cursor_path)
-    if chg is None:
-        return {"applied": False, "cursor": cursor}
-    batch_id = cursor["snapshot_id"]
-    res = apply(batch_id, chg, cursor["from_snapshot_id"])
-    LakehouseTable.commit_cursor(cursor_path, cursor)
-    return {"applied": True, "batch_id": batch_id, "cursor": cursor, "result": res}
+    {"applied": True, "batch_id": window.to_id, "cursor", "result":
+    <apply's return>}."""
+    w = upstream.tail_window(cursor_path)
+    if w.from_id == w.to_id:
+        return {"applied": False, "cursor": w.cursor}
+    res = apply(w)
+    LakehouseTable.commit_cursor(cursor_path, w.cursor)
+    return {"applied": True, "batch_id": w.to_id, "cursor": w.cursor, "result": res}
 
 
 def run_until_caught_up(poll: Callable[[], bool], max_polls: int, what: str) -> int:

@@ -32,8 +32,9 @@ Exactly-once / crash safety — the refresh writes TWO tables, so the window
 must be a pure function of durable state (otherwise a crash between the
 two applies re-derives a DIFFERENT window and the first table's applied
 half can never be reconciled):
-  1. an INTENT file (atomic rename) pins the window's head snapshot before
-     any write; the window start is the durable cursor (or oldest retained);
+  1. `streaming/cursor.poll_window`, the loop every consumer polls
+     through, pins the window (cursor, head] in an intent file before any
+     write;
   2. BANDS applies FIRST, then SIGNATURES: the bands derivation reads the
      touched docs' OLD buckets from the signatures table, which the sig
      apply would destroy — with sig-last ordering a replay of the pinned
@@ -46,18 +47,12 @@ half can never be reconciled):
 Degenerate buckets (mass exact-duplicates all banding together) make a
 members list grow with the dup cluster size — that is a data-quality
 signal, surfaced via the opt-in `max_bucket_members` alert; run exact
-dedup upstream (dedup_exact_docs) to keep clusters honest.
-
-The upstream's changelog is read with the same cursor file format and
-`CursorExpiredError` contract as the other consumers, but not through the
-shared loop in `streaming/cursor.py`: `poll_once` keeps its own cursor
-read, expiry check and intent file (the window it pins is recorded before
-the refresh, so a crashed refresh re-derives the same window). DML only.
+dedup upstream (dedup_exact_docs) to keep clusters honest. Like every
+changelog consumer, the index follows DML only.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,9 +64,9 @@ from data_pipeline_spark.operators.corpus import (
     doc_shingles,
     minhash_signature,
 )
-from data_pipeline_spark.plans.table_format import LakehouseTable, bounded_ids
+from data_pipeline_spark.plans.table_format import ChangeWindow, LakehouseTable, bounded_ids
 from data_pipeline_spark.streaming.corpus_view import _image_changes, touched_documents
-from data_pipeline_spark.streaming.cursor import lsn_lag, run_until_caught_up
+from data_pipeline_spark.streaming.cursor import lsn_lag, poll_window, run_until_caught_up
 from data_pipeline_spark.streaming.ingest import IngestJob
 from data_pipeline_spark.streaming.txn import TxnCatalog
 
@@ -231,22 +226,17 @@ class DedupIndexJob:
             sh, key_col="conv_id", n_hashes=self.n_hashes, with_count=True
         )
 
-    def _read_keys(self, spark: SparkSession, table: LakehouseTable,
-                   keys: list[str]) -> DataFrame:
-        # read(conv_ids=[]) short-circuits to a schema-correct empty frame
-        return table.read(spark, conv_ids=keys)
-
     # -------------------------------------------------------------- refresh
-    def refresh_for(self, spark: SparkSession, batch_id: int,
-                    changed_ids: DataFrame, snap: dict) -> dict:
-        """Apply one pinned refresh window. changed_ids: distinct conv_id
-        frame; snap: the upstream snapshot the window ends at (images and
-        stamped LSN are a pure function of it — see module docstring)."""
-        lsn = snap.get("watermark_lsn") or 0
+    def refresh_for(self, spark: SparkSession, w: ChangeWindow) -> dict:
+        """Apply one pinned refresh window `w`. The images and the stamped
+        LSN are a pure function of the upstream snapshot the window ends at
+        (see module docstring)."""
+        batch_id = w.to_id
+        changed_ids = w.changes(spark).select("conv_id").distinct()
+        lsn = self.upstream.snapshot_by_id(batch_id).get("watermark_lsn") or 0
         docs, mode, ids = touched_documents(
             spark, self.upstream, changed_ids,
-            max_turns=self.max_turns,
-            snapshot_id=snap["snapshot_id"],
+            max_turns=self.max_turns, snapshot_id=batch_id,
         )
         new_sig = self._sign(docs).persist()
         try:
@@ -290,7 +280,7 @@ class DedupIndexJob:
         keys = bounded_ids(affected, "key")
         if keys is None:
             return self._refresh_rebuild(spark, batch_id, lsn, changed_ids, new_sig)
-        cur_members = self._read_keys(spark, self.bands, keys).select(
+        cur_members = self.bands.read(spark, conv_ids=keys).select(
             F.col("conv_id").alias("key"),
             F.explode(F.from_json("members", _MEMBERS_T)).alias("member"),
         )
@@ -377,46 +367,9 @@ class DedupIndexJob:
 
     # ----------------------------------------------------- cursor-driven mode
     def poll_once(self, spark: SparkSession, cursor_path: str) -> dict:
-        """One crash-safe refresh window (see module docstring for the
-        intent protocol). Reads the PUBLISHED upstream chain (WAP-safe,
-        like CorpusViewJob.poll_once)."""
-        intent_path = cursor_path + ".intent"
-        chain = [s["snapshot_id"] for s in self.upstream.history()]
-        start = None
-        if os.path.exists(cursor_path):
-            with open(cursor_path) as f:
-                start = json.load(f)["snapshot_id"]
-            if start not in chain:
-                from data_pipeline_spark.plans.table_format import CursorExpiredError
-                raise CursorExpiredError(start, chain[0])
-        if start is None:
-            start = chain[0]
-
-        if os.path.exists(intent_path):
-            with open(intent_path) as f:
-                to = json.load(f)["to"]
-            if start >= to or to not in chain:
-                # stale intent: its window already committed (cursor moved
-                # past it) or rolled away — discard and fall through
-                os.remove(intent_path)
-                return self.poll_once(spark, cursor_path)
-        else:
-            to = self.upstream.current_snapshot()["snapshot_id"]
-            if start >= to:
-                return {"applied": False, "cursor": {"snapshot_id": start}}
-            tmp = intent_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"to": to, "from": start}, f)
-            os.replace(tmp, intent_path)
-
-        chg = self.upstream.read_changes(spark, start, to)
-        changed_ids = chg.select("conv_id").distinct()
-        snap = self.upstream.snapshot_by_id(to)
-        res = self.refresh_for(spark, to, changed_ids, snap)
-        LakehouseTable.commit_cursor(cursor_path, {"snapshot_id": to})
-        os.remove(intent_path)
-        return {"applied": True, "batch_id": to,
-                "cursor": {"snapshot_id": to}, "result": res}
+        """One crash-safe refresh window (see module docstring). Reads the
+        PUBLISHED upstream chain (WAP-safe, like CorpusViewJob.poll_once)."""
+        return poll_window(self.upstream, cursor_path, lambda w: self.refresh_for(spark, w))
 
     def run_until_caught_up(
         self, spark: SparkSession, cursor_path: str, max_polls: int = 1000
@@ -549,7 +502,7 @@ class DedupIndexJob:
             # frame's plan (same reasoning as _refresh_point's members
             # persist; without it each consumer re-executes the pruned-file
             # reads)
-            rows = self._read_keys(spark, self.bands, keys).select(
+            rows = self.bands.read(spark, conv_ids=keys).select(
                 F.from_json("members", _MEMBERS_T).alias("ms")
             ).persist()
             # ids is driver-bounded here (≤ LOOKUP_POINT_CAP): a
@@ -590,7 +543,7 @@ class DedupIndexJob:
                 r["m"]
                 for r in rows.select(F.explode("ms").alias("m")).distinct().collect()
             ]
-            part_sig = self._read_keys(spark, self.sig, sorted(set(partners) | set(ids)))
+            part_sig = self.sig.read(spark, conv_ids=sorted(set(partners) | set(ids)))
             # the pair set is O(|ids| × bucket) by construction: materialize
             # it off the cached point-read (localCheckpoint truncates the
             # lineage) so the cache can be released before returning the

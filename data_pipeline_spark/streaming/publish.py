@@ -11,20 +11,20 @@ downstream feeds in its own envelope; publishing the *standard* envelope
 is what lets non-engine consumers (JDBC sinks, search indexers, other
 teams' pipelines) subscribe without custom decode.
 
-Delivery contract — at-least-once output, idempotent for LWW consumers:
+Delivery contract — exactly one chunk set per window, no path rewritten:
 
-- The cursor (`tail_changes`) commits only AFTER the chunk write lands;
-  a crash between them re-publishes a window that STARTS at the same
-  snapshot (the head may have advanced), so records can repeat —
-  exactly the Kafka/Debezium contract, absorbed by any keyed-LWW sink.
-- Output chunks are flat sibling files ``chunk-<from>-<to>-NNNN.parquet``
-  named by window snapshot ids (the feed-directory layout both
-  ``spark.read`` and the streaming file source consume; dot-prefixed tmp
-  dirs are invisible to Spark's file index mid-write). Before writing,
-  stale ``chunk-<from>-*`` files (a previous crash's never-
-  cursor-committed window from the same start) are removed, so the
-  directory holds one chunk set per published window — re-reading the
-  whole directory never double-counts a window.
+- The window comes from `streaming/cursor.poll_window`: pinned before the
+  write, the cursor committed only after the chunk set is in place. A
+  crash in between hands the retry the SAME window however far the table
+  has moved, so the retry finishes that window's chunk set.
+- Output chunks are flat sibling files ``chunk-<from>-<to>-<part>c<k>.parquet``
+  named by window snapshot ids and Spark file name (the feed-directory
+  layout both ``spark.read`` and the streaming file source consume).
+  Spark writes into a dot-prefixed tmp dir, invisible to its file index;
+  each part is then renamed into place. A retry renames the parts left in
+  a committed (``_SUCCESS``) tmp dir, and writes nothing once the
+  window's chunks are placed. No visible chunk path is ever deleted or
+  rewritten, so a file-stream reader never loses a chunk it listed.
 - Chunk mtimes increase in publish order, so Spark's streaming file
   source delivers them in changelog order (same convention as the feed
   generator's log segments).
@@ -33,7 +33,7 @@ Same upstream contract as the cascade edges: MOR, full-image
 (`changes_to_feed` refuses `_set_mask` changelogs), DML-only (schema
 changes don't emit rows; consumers learn DDL out of band or via
 `envelope_to_debezium` over an explicit DDL feed). Reads via
-`tail_changes`' published parent chain, so WAP-staged deltas are
+`tail_window`'s published parent chain, so WAP-staged deltas are
 unreachable by construction; raises CursorExpiredError when the
 publisher was down past upstream retention (re-bootstrap the consumer,
 then resume).
@@ -46,10 +46,10 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-from data_pipeline_spark.plans.table_format import LakehouseTable
+from data_pipeline_spark.plans.table_format import ChangeWindow, LakehouseTable
 from data_pipeline_spark.sources.debezium import envelope_to_debezium
 from data_pipeline_spark.sources.kafka import changes_to_feed
-from data_pipeline_spark.streaming.cursor import run_until_caught_up
+from data_pipeline_spark.streaming.cursor import poll_window, run_until_caught_up
 
 
 class DebeziumPublishJob:
@@ -75,43 +75,40 @@ class DebeziumPublishJob:
 
     def poll_once(self, spark: SparkSession) -> dict:
         """Publish the changelog window since the cursor, if any."""
-        chg, cursor = self.table.tail_changes(spark, self.cursor_path)
-        if chg is None:
-            return {"published": False, "cursor": cursor}
-        from_id = cursor["from_snapshot_id"]
-        to_id = cursor["snapshot_id"]
-        wire = envelope_to_debezium(
-            changes_to_feed(chg, columns=self.columns), **self.encode_kw
-        )
-        stem = f"chunk-{from_id:08d}-{to_id:08d}"
-        # a crash after a previous write of the SAME window start (cursor
-        # never committed) left stale chunk files: remove them so the
-        # directory holds exactly one chunk set per cursor-committed window
-        for fn in os.listdir(self.out_dir):
-            if fn.startswith(f"chunk-{from_id:08d}-"):
-                p = os.path.join(self.out_dir, fn)
-                shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
-        tmp = os.path.join(self.out_dir, f".{stem}.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        wire.write.mode("overwrite").parquet(tmp)
-        # flatten to ordered sibling FILES (the feed-directory layout both
-        # spark.read and the streaming file source consume): rename is
-        # atomic per file; the cursor commits only after all are in place
-        parts = sorted(fn for fn in os.listdir(tmp) if fn.endswith(".parquet"))
-        chunk_files = []
-        for i, fn in enumerate(parts):
-            dst = os.path.join(self.out_dir, f"{stem}-{i:04d}.parquet")
-            os.rename(os.path.join(tmp, fn), dst)
-            chunk_files.append(dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        LakehouseTable.commit_cursor(self.cursor_path, cursor)
-        return {
-            "published": True,
-            "from_snapshot_id": from_id,
-            "to_snapshot_id": to_id,
-            "chunk_files": chunk_files,
-            "cursor": cursor,
-        }
+        r = poll_window(self.table, self.cursor_path, lambda w: self._place(spark, w))
+        c = r["cursor"]
+        if not r["applied"]:
+            return {"published": False, "cursor": c}
+        return {"published": True, "from_snapshot_id": c["from_snapshot_id"],
+                "to_snapshot_id": c["snapshot_id"], "chunk_files": r["result"], "cursor": c}
+
+    def _place(self, spark: SparkSession, w: ChangeWindow) -> list[str]:
+        """Put window `w`'s chunk set in place, finishing one that a crash
+        cut short; returns the chunk paths."""
+        stem = f"chunk-{w.from_id:08d}-{w.to_id:08d}-"
+        tmp = os.path.join(self.out_dir, f".{stem}tmp")
+
+        def placed() -> list[str]:
+            return sorted(
+                os.path.join(self.out_dir, fn)
+                for fn in os.listdir(self.out_dir) if fn.startswith(stem)
+            )
+
+        if not placed() and not os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            wire = envelope_to_debezium(
+                changes_to_feed(w.changes(spark), columns=self.columns), **self.encode_kw
+            )
+            wire.write.mode("overwrite").parquet(tmp)
+        if os.path.isdir(tmp):
+            # rename is atomic per file; part-<n>-<uuid>-c<k>... → <stem><n>c<k>
+            # (k numbers the files of one task, past maxRecordsPerFile)
+            for fn in os.listdir(tmp):
+                if fn.startswith("part-") and fn.endswith(".parquet"):
+                    n, k = fn.split("-")[1], fn.rsplit("-", 1)[1].split(".")[0]
+                    dst = os.path.join(self.out_dir, f"{stem}{n}{k}.parquet")
+                    os.rename(os.path.join(tmp, fn), dst)
+            shutil.rmtree(tmp)
+        return placed()
 
     def run_until_caught_up(self, spark: SparkSession, max_polls: int = 1000) -> int:
         """Poll until the published head is fully written; returns the

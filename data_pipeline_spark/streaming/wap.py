@@ -30,7 +30,7 @@ them; counts are cached. `combine_audits` ANDs several. Every publish /
 audit-failure lands in the control alerts trail (alerts.jsonl +
 on_alert hook) with the snapshot ids involved.
 
-Downstream consumption of a WAP table: `tail_changes`/`read_changes`
+Downstream consumption of a WAP table: `tail_window`/`read_changes`
 (cursor over the main chain, which every in-engine consumer polls) —
 publish-respecting by construction."""
 

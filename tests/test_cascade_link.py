@@ -66,6 +66,19 @@ def _inodes(paths) -> set[int]:
     return {os.stat(p).st_ino for p in paths}
 
 
+def _counted(monkeypatch, name: str) -> list[str]:
+    """Record each call of LakehouseTable.<name> (the table path)."""
+    calls: list[str] = []
+    orig = getattr(LakehouseTable, name)
+
+    def counted(self, *args, **kwargs):
+        calls.append(self.path)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakehouseTable, name, counted)
+    return calls
+
+
 def _window_ops(spark, table: LakehouseTable, from_id: int, to_id: int) -> Counter:
     return Counter(
         (r["conv_id"], r["turn_idx"], r["lsn"], r["_change_op"])
@@ -73,7 +86,7 @@ def _window_ops(spark, table: LakehouseTable, from_id: int, to_id: int) -> Count
     )
 
 
-def test_one_merge_window_links(spark, tmp_path):
+def test_one_merge_window_links(spark, tmp_path, monkeypatch):
     a = _table(tmp_path, "a")
     b = _table(tmp_path, "b")
     up_job, up, rep = IngestJob(a, str(tmp_path / "ctl-a")), LakehouseTable(a), LakehouseTable(b)
@@ -88,8 +101,12 @@ def test_one_merge_window_links(spark, tmp_path):
         ((merge, up_entries),) = up._change_window(up_from, up_to)
         assert merge["kind"] == "merge"
 
+        # planned from metadata: one chain walk, no changelog scan planned
+        reads, walks = _counted(monkeypatch, "_read_parts"), _counted(monkeypatch, "history")
         res, jobs = _poll(spark, edge, cursor)
+        monkeypatch.undo()
         assert res["applied"] and jobs == 0
+        assert (reads, walks) == ([], [a])
         rep_to = res["result"]["snapshot_id"]
         linked = _new_files(rep, rep_to)
         up_files = [os.path.join(a, e["path"]) for e in up_entries]

@@ -85,8 +85,9 @@ def test_cascade_catchup_and_incremental(spark, tmp_path):
 
 def test_cascade_crash_resume_idempotent(spark, tmp_path, monkeypatch):
     """Crash between the downstream apply and the cursor commit; then more
-    upstream commits land before the re-poll. The widened window re-applies
-    the crashed one's rows as LWW no-ops — B still converges to A exactly."""
+    upstream commits land before the re-poll. The re-poll gets the pinned
+    window back and skips it by batch_id; the next poll applies the newer
+    window — B still converges to A exactly."""
     a = _mk_upstream(spark, tmp_path, "a3", seed=5)
     b = _mk_empty(tmp_path, "b3")
     edge = CascadeJob(a, b, str(tmp_path / "ctl-e3"))
@@ -105,7 +106,7 @@ def test_cascade_crash_resume_idempotent(spark, tmp_path, monkeypatch):
     assert len(_state(spark, b)) > 0  # the apply landed
 
     _advance(spark, tmp_path, a, seed=7)
-    assert edge.run_until_caught_up(spark, cursor) == 1
+    assert edge.run_until_caught_up(spark, cursor) == 2  # the skip, then the new window
     pd.testing.assert_frame_equal(_state(spark, a), _state(spark, b))
 
 

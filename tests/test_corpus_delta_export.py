@@ -6,8 +6,8 @@ Covers the review findings from round 4: the first export is a FULL
 bootstrap (correct even after `expire_snapshots` folded history into the
 oldest retained snapshot), exports are pinned to the window's head
 snapshot, the manifest is the dir's completion marker, and a crash between
-the manifest and the cursor commit leaves an abandoned sibling that the
-retry covers, garbage-collects, and the chain walk never mis-folds."""
+the manifest and the cursor commit is replayed as the same window into the
+same dir, which the retry keeps as written."""
 
 from __future__ import annotations
 
@@ -174,7 +174,7 @@ def test_crash_before_cursor_commit_converges(spark, tmp_path):
     ))
 
     # crash AFTER the manifest write, BEFORE the cursor commit — leaves a
-    # COMPLETE-looking abandoned dir
+    # COMPLETE dir whose window the cursor never recorded
     orig = LakehouseTable.commit_cursor
 
     def boom(cursor_path, cur):
@@ -186,21 +186,26 @@ def test_crash_before_cursor_commit_converges(spark, tmp_path):
             export_corpus_delta(spark, up, out, cursor, redact=False)
     finally:
         LakehouseTable.commit_cursor = staticmethod(orig)
-    abandoned = [d for d in os.listdir(out) if d != os.path.basename(r1["path"])]
-    assert len(abandoned) == 1
-    assert os.path.exists(os.path.join(out, abandoned[0], "_delta_manifest.json"))
+    crashed = [d for d in os.listdir(out) if d != os.path.basename(r1["path"])]
+    assert len(crashed) == 1
+    crashed_manifest = os.path.join(out, crashed[0], "_delta_manifest.json")
+    mtime = os.stat(crashed_manifest).st_mtime_ns
 
-    # upstream moves on BEFORE the retry — the re-export window COVERS the
-    # crashed one (same from_snapshot, newer head)
+    # upstream moves on BEFORE the retry; the retry replays the PINNED
+    # window: it keeps the crashed dir as written and commits the cursor
     _apply(spark, ingest, up, 2, generate_feed_pandas(
         FeedSpec(n_events=200, n_convs=25, seed=922)
     ))
     r2 = export_corpus_delta(spark, up, out, cursor, redact=False)
     assert r2["exported"] and r2["from_snapshot"] == r1["to_snapshot"]
-    # the successful retry garbage-collected the abandoned sibling, and the
-    # chain walk yields exactly bootstrap → covering window
-    assert not os.path.exists(os.path.join(out, abandoned[0]))
-    assert [m["path"] for m in list_corpus_deltas(out)] == [r1["path"], r2["path"]]
+    assert r2["path"] == os.path.join(out, crashed[0])
+    assert os.stat(crashed_manifest).st_mtime_ns == mtime
+    # the next export ships the newer window
+    r3 = export_corpus_delta(spark, up, out, cursor, redact=False)
+    assert r3["exported"] and r3["from_snapshot"] == r2["to_snapshot"]
+    assert [m["path"] for m in list_corpus_deltas(out)] == [
+        r1["path"], r2["path"], r3["path"]
+    ]
     pd.testing.assert_frame_equal(_fold_chain(out), _oracle(spark, up))
     assert export_corpus_delta(spark, up, out, cursor)["exported"] is False
 
@@ -208,9 +213,9 @@ def test_crash_before_cursor_commit_converges(spark, tmp_path):
 def test_bootstrap_at_snapshot_zero_survives_next_export(spark, tmp_path):
     """Review finding: `create()` writes snapshot 0, so an exporter set up
     BEFORE first ingest bootstraps at snapshot 0 — the next incremental
-    export (from_snapshot=0) must not garbage-collect the committed
-    bootstrap as an 'abandoned sibling' (the old dir naming collided:
-    bootstrap None and real from=0 both rendered as 00000000)."""
+    export (from_snapshot=0) must land in its own dir beside the committed
+    bootstrap (an old dir naming collided: bootstrap None and real from=0
+    both rendered as 00000000)."""
     up = str(tmp_path / "up")
     LakehouseTable(up).create(TRANSCRIPT_SCHEMA, n_buckets=4, compact_every=10**9)
     out = str(tmp_path / "corpus-deltas")
@@ -226,7 +231,7 @@ def test_bootstrap_at_snapshot_zero_survives_next_export(spark, tmp_path):
     ))
     r2 = export_corpus_delta(spark, up, out, cursor, redact=False)
     assert r2["from_snapshot"] == 0
-    assert os.path.exists(r1["path"]), "bootstrap dir must survive the GC"
+    assert os.path.exists(r1["path"])
     assert [m["path"] for m in list_corpus_deltas(out)] == [r1["path"], r2["path"]]
     pd.testing.assert_frame_equal(_fold_chain(out), _oracle(spark, up))
 

@@ -1,7 +1,8 @@
 """DebeziumPublishJob (streaming/publish.py): an engine table published as
 Debezium chunks is consumable by a downstream engine (the hardest consumer
-to satisfy — byte-for-byte table equality), survives crash-between-write-
-and-cursor-commit, and never leaves stale windows behind."""
+to satisfy — byte-for-byte table equality), and a crash between the chunk
+write and the cursor commit ends with one complete chunk set per window,
+without deleting or rewriting any visible chunk."""
 
 from __future__ import annotations
 
@@ -79,44 +80,113 @@ def test_publish_and_consume_round_trip(spark, tmp_path, upstream):
     pd.testing.assert_frame_equal(_table_pd(spark, upstream), _table_pd(spark, down))
 
 
-@pytest.mark.slow  # gate-budget: the at-least-once cursor protocol this
-# drives (commit-after-write, stale-window replacement) is the same
-# tail_changes contract the in-gate cascade poll_once tests pin, and the
-# in-gate round-trip test keeps publish->consume equality; the full
-# crash-with-advancing-upstream race runs in the slow sweep.
-def test_incremental_windows_and_crash_replay(spark, tmp_path, upstream):
-    """Publish, advance upstream, publish again → two chunks; then simulate
-    a crash between chunk write and cursor commit and re-poll: the stale
-    window is replaced, consumers converge, nothing double-counts."""
+def _crash_commit_once(monkeypatch):
+    """Make the next commit_cursor raise (the job dies after its chunk set
+    is placed, before the cursor commits), then restore it."""
+    commit = LakehouseTable.commit_cursor
+
+    def crash_once(path, cur):
+        monkeypatch.setattr(LakehouseTable, "commit_cursor", staticmethod(commit))
+        raise RuntimeError("injected crash (test hook)")
+
+    monkeypatch.setattr(LakehouseTable, "commit_cursor", staticmethod(crash_once))
+
+
+def _visible(wire) -> dict[str, tuple[int, float]]:
+    """Visible chunk files (what a Spark reader lists): path → (inode, mtime)."""
+    return {
+        p: (os.stat(p).st_ino, os.stat(p).st_mtime)
+        for p in (os.path.join(wire, fn) for fn in os.listdir(wire))
+        if not os.path.basename(p).startswith(("_", "."))
+    }
+
+
+def test_crash_after_renames_republishes_same_paths(spark, tmp_path, upstream, monkeypatch):
+    """Crash after the chunk renames, before the cursor commit, and the
+    upstream advances: the retry publishes the identical window to the
+    same paths and leaves every visible file as it was; the next poll
+    publishes the newer window, and a consumer reproduces the upstream."""
+    wire = str(tmp_path / "wire")
+    pub = DebeziumPublishJob(upstream, wire)
+    _crash_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pub.poll_once(spark)
+    before = _visible(wire)
+    assert before and not os.path.exists(pub.cursor_path)
+
+    _advance(spark, tmp_path, upstream, seed=18, n=1_000, batch_id=99)
+    r = pub.poll_once(spark)
+    assert r["published"] and sorted(r["chunk_files"]) == sorted(before)
+    assert _visible(wire) == before  # nothing deleted, rewritten or added
+
+    r2 = pub.poll_once(spark)
+    assert r2["published"] and r2["from_snapshot_id"] == r["to_snapshot_id"]
+    assert pub.poll_once(spark)["published"] is False
+    after = _visible(wire)
+    assert {p: after[p] for p in before} == before
+    down = _consume(spark, tmp_path, wire, "down")
+    pd.testing.assert_frame_equal(_table_pd(spark, upstream), _table_pd(spark, down))
+
+
+def test_crash_mid_renames_completes_chunk_set(spark, tmp_path, upstream, monkeypatch):
+    """Crash after k of the n part renames: the retry renames the rest from
+    the committed tmp dir, so the window's chunk set is complete and the
+    k chunks already visible are untouched."""
+    wire = str(tmp_path / "wire")
+    pub = DebeziumPublishJob(upstream, wire)
+    rename, done = os.rename, []
+
+    def rename_k(src, dst, *args, **kwargs):
+        if os.path.basename(dst).startswith("chunk-"):
+            if len(done) == 1:
+                raise OSError("injected crash mid-rename")
+            done.append(dst)
+        return rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", rename_k)
+    with pytest.raises(OSError, match="injected crash"):
+        pub.poll_once(spark)
+    monkeypatch.undo()
+    (tmp,) = [fn for fn in os.listdir(wire) if fn.startswith(".chunk-")]
+    left = [fn for fn in os.listdir(os.path.join(wire, tmp)) if fn.endswith(".parquet")]
+    assert left, "the window must write more than one part"
+    before = _visible(wire)
+    assert list(before) == done
+
+    r = pub.poll_once(spark)
+    assert r["published"] and len(r["chunk_files"]) == len(left) + 1
+    assert {p: _visible(wire)[p] for p in before} == before
+    assert not os.path.exists(os.path.join(wire, tmp))
+    down = _consume(spark, tmp_path, wire, "down")
+    pd.testing.assert_frame_equal(_table_pd(spark, upstream), _table_pd(spark, down))
+
+
+@pytest.mark.slow  # gate-budget: the crash-before-cursor-commit protocol is
+# pinned in-gate by the two crash tests above; this sweep adds a second
+# committed window and a consumer over both.
+def test_incremental_windows_and_crash_replay(spark, tmp_path, upstream, monkeypatch):
+    """Publish, advance upstream, crash between the chunk write and the
+    cursor commit, advance again, then catch up: the retry finishes the
+    crashed window and the next poll publishes the newer one, so the
+    directory holds one chunk set per committed window and a consumer of
+    all of them reproduces the upstream."""
     wire = str(tmp_path / "wire")
     pub = DebeziumPublishJob(upstream, wire)
     assert pub.run_until_caught_up(spark) == 1
 
     _advance(spark, tmp_path, upstream, seed=18, n=2_000, batch_id=99)
+    _crash_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pub.poll_once(spark)
+    crashed = _visible(wire)
 
-    # crash simulation: publish the new window but lose the cursor commit
-    cursor_before = open(pub.cursor_path).read()
-    r = pub.poll_once(spark)
-    assert r["published"]
-    with open(pub.cursor_path, "w") as f:
-        f.write(cursor_before)  # cursor never committed
-    stale_files = r["chunk_files"]
-    assert stale_files and all(os.path.exists(p) for p in stale_files)
-
-    # upstream advances AGAIN before the retry, so the re-published window
-    # has the same FROM but a different TO than the stale chunk
     _advance(spark, tmp_path, upstream, seed=19, n=1_000, batch_id=100)
-    r2 = pub.poll_once(spark)
-    assert r2["published"]
-    assert r2["from_snapshot_id"] == r["from_snapshot_id"]
-    assert r2["to_snapshot_id"] > r["to_snapshot_id"]
-    assert not any(os.path.exists(p) for p in stale_files)  # stale replaced
-    assert pub.poll_once(spark)["published"] is False
+    assert pub.run_until_caught_up(spark) == 2  # the crashed window, then the new one
+    after = _visible(wire)
+    assert {p: after[p] for p in crashed} == crashed
 
-    # exactly one chunk set per committed window; consumer reproduces upstream
-    windows = {fn.rsplit("-", 1)[0] for fn in os.listdir(wire)
-               if fn.startswith("chunk-")}
-    assert len(windows) == 2
+    windows = {os.path.basename(p).rsplit("-", 1)[0] for p in after}
+    assert len(windows) == 3
     down = _consume(spark, tmp_path, wire, "down")
     pd.testing.assert_frame_equal(_table_pd(spark, upstream), _table_pd(spark, down))
 

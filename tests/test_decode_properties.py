@@ -145,6 +145,19 @@ def test_fallback_raises_on_first_bad_row_without_validity():
         _decode_batch(rb, FIELDS, {}, False, None, OUT_ARROW)
 
 
+def test_fallback_quarantines_only_the_wrong_typed_row():
+    """Well-formed JSON whose value has the wrong type for its column
+    fails the batch's Arrow conversion; the fallback flags that row alone
+    and decodes its neighbour."""
+    rb = _envelope([("I", '{"text": "ok", "role": "user"}'), ("I", '{"text": 5}')])
+    out = _fallback(rb)
+    assert list(out["_valid"]) == [True, False]
+    assert (out.loc[0, "text"], out.loc[0, "role"]) == ("ok", "user")
+    assert "ArrowTypeError" in out.loc[1, "_error"]
+    with pytest.raises(ValueError, match="ArrowTypeError"):
+        _decode_batch(rb, FIELDS, {}, False, None, OUT_ARROW)
+
+
 @settings(max_examples=60, deadline=None)
 @given(op_payloads=rows)
 def test_explicit_null_vs_absent_mask(op_payloads):

@@ -41,8 +41,9 @@ CONTRACT: dict[str, list[str]] = {
     "apply_ddl": ["descriptors"],              # multi_table DDL replication
     # reads ----------------------------------------------------------------
     "read": ["spark", "snapshot_id", "conv_ids", "tag"],  # corpus_view, corpus
-    "read_changes": ["spark", "from_snapshot_id"],        # DedupIndexJob.poll_once
-    "tail_changes": ["spark", "cursor_path"],  # cursor.poll_window (all consumers)
+    "read_changes": ["spark", "from_snapshot_id"],        # wap.WapContext.changes
+    "tail_changes": ["spark", "cursor_path"],  # table-level consumers, tests
+    "tail_window": ["cursor_path"],            # cursor.poll_window (all consumers)
     "commit_cursor": ["cursor_path", "cursor"],  # cursor.poll_window commit step
     # writes ---------------------------------------------------------------
     "merge": ["spark"],                        # IngestJob.apply_batch
@@ -131,6 +132,34 @@ def test_contract_covers_engine_call_surface():
     assert not uncovered, (
         f"engine calls LakehouseTable methods outside the contract: "
         f"{sorted(uncovered)} — add them to CONTRACT (and any adapter)"
+    )
+
+
+def test_changelog_reads_go_through_poll_window():
+    """One consumer protocol: every changelog consumer polls through
+    `streaming/cursor.poll_window`, so no `.tail_changes(`/`.read_changes(`
+    call exists outside it and the table layer. The one exception is the
+    WAP audit's read of the unpublished branch (`WapContext.changes`),
+    which no cursor covers."""
+    import os
+    import re
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(table_format.__file__)))
+    allowed = {os.path.join("streaming", "cursor.py"), os.path.join("plans", "table_format.py")}
+    audit = (os.path.join("streaming", "wap.py"), "self.branch.read_changes(")
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            rel = os.path.relpath(os.path.join(dirpath, fname), pkg)
+            if not fname.endswith(".py") or rel in allowed:
+                continue
+            with open(os.path.join(pkg, rel)) as f:
+                src = f.read()
+            for m in re.finditer(r"[\w.]*\.(?:tail_changes|read_changes)\(", src):
+                found.append((rel, m.group(0)))
+    assert found.count(audit) == 1, found
+    assert [c for c in found if c != audit] == [], (
+        "changelog consumers must poll through streaming/cursor.poll_window"
     )
 
 
