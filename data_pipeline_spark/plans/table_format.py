@@ -18,7 +18,7 @@ delta files double as the changelog (`read_changes`, `tail_changes`).
 
 `merge` only commits; it never compacts. It reports `maintenance_due`, and
 `maintain` — the one upkeep entry point (hot-bucket compaction, manifest-
-list folds, auto spec migration) — runs as its own CAS commits. The ingest
+list folds, auto spec migration) — runs as its own commits. The ingest
 job runs it on a background thread after each batch's control record is
 durable (streaming/ingest.py), so compaction stays off the path from a
 commit to its consumers.
@@ -61,11 +61,16 @@ Exactly-once: `merge` is idempotent two ways (reference analog: skip records
 with lsn ≤ recovery point — data_pipeline/applier recovery vs
 process_control, SURVEY.md §2 T4): (a) batch_id ≤ last committed batch_id is
 a no-op (foreachBatch replays), (b) rows at or below the table watermark LSN
-are filtered (at-least-once transport redelivery). One streaming writer per
-table is the design; a second writer is caught by optimistic concurrency —
-snapshot files are created with O_EXCL (a CAS on the snapshot id), the loser
-gets CommitConflictError and must reload + retry (Iceberg's protocol; on
-object stores the CAS comes from the catalog).
+are filtered (at-least-once transport redelivery).
+
+Concurrency (Iceberg's commit conflict resolution and retry): an operation
+places its data files first, then commits through `_commit_op` a pure
+`produce(head, snapshot_id)` that derives the snapshot from a head. The
+commit is a CAS on the snapshot id and the head; a lost CAS re-runs
+`produce` alone on the new head, never the data write, when `_REBASE_OVER`
+admits the commits in between. A refused rebase raises CommitConflictError:
+the caller re-runs the operation (`with_commit_retry`) or the next
+maintenance cycle does.
 """
 
 from __future__ import annotations
@@ -231,9 +236,30 @@ def _pred_may_match(lo, hi, op: str, v) -> bool:
 
 
 class CommitConflictError(RuntimeError):
-    """Another writer committed the same snapshot id first (optimistic
-    concurrency, Iceberg-style): reload the table state and retry the
-    operation against the new current snapshot."""
+    """A commit lost to another writer and could not be rebased onto its
+    head (optimistic concurrency, Iceberg-style): re-run the operation
+    against the new current snapshot (`with_commit_retry`)."""
+
+
+class _Refused(Exception):
+    """A refused rebase's CommitConflictError, past `_commit_op`'s CAS loop."""
+
+
+_DELTA_KINDS = ("merge", "cherry-pick")
+_FOLD_OVER = _DELTA_KINDS + ("rewrite_manifests",)
+
+#: Commit kinds in (read, head] that `_commit_op` may rebase a commit of
+#: each kind over. Delta commits keep their files and re-layer them on any
+#: commit that keeps rows, schema and spec; folds drop exactly the files
+#: they read, which only delta commits and manifest folds leave in place;
+#: None: metadata-only, re-derived from any head (`apply_ddl` still refuses
+#: a changed schema); (): the commit needs the head it read.
+_REBASE_OVER: dict[str, tuple[str, ...] | None] = {
+    **dict.fromkeys(_DELTA_KINDS, _FOLD_OVER + ("compact", "recluster", "migrate_spec")),
+    **dict.fromkeys(("compact", "recluster", "migrate_spec"), _FOLD_OVER),
+    **dict.fromkeys(("ddl", "evolve_spec", "rewrite_manifests", "rollback"), None),
+    **dict.fromkeys(("create", "upgrade", "overwrite", "rebucket"), ()),
+}
 
 
 #: column types a z-order key can normalize through manifest bounds:
@@ -311,18 +337,16 @@ def _zorder_expr(cols: list[tuple[str, str, int, int]]) -> F.Column:
 
 
 def with_commit_retry(fn, max_retries: int = 5, base_backoff: float = 0.05):
-    """Iceberg-style optimistic-commit retry for multi-writer callers.
+    """Retry `fn` on CommitConflictError, with jittered exponential backoff.
 
-    ``fn`` must be a CLOSURE THAT RE-READS table state itself — every
-    public mutator here does (``merge``/``apply_ddl``/``overwrite``/
-    ``compact`` all call ``current_snapshot()`` at entry), so
-    ``with_commit_retry(lambda: tbl.merge(spark, bid, changes))`` reloads →
-    reapplies → recommits on each attempt. On CommitConflictError the
-    attempt's data files (written under the losing snapshot id's dir) stay
-    on disk as unreferenced orphans — invisible to every reader, reclaimed
-    by maintenance, exactly Iceberg's behavior for a failed optimistic
-    commit. Backoff is exponential with full jitter so two contending
-    writers decorrelate instead of re-colliding in lockstep."""
+    `_commit_op` retries a lost CAS through this loop, so what reaches a
+    caller is a refused rebase: a merge racing a DDL, spec evolution,
+    overwrite or rollback, or a fold racing another fold. Wrap the whole
+    operation for those — ``with_commit_retry(lambda: tbl.merge(spark,
+    bid, changes))``: every public mutator re-reads ``current_snapshot()``
+    at entry, so each attempt re-plans and re-writes on the new head. A
+    refused attempt's data files stay behind as unreferenced orphans,
+    reclaimed by `expire_snapshots` (Iceberg's behaviour)."""
     import random
 
     for attempt in range(max_retries + 1):
@@ -392,6 +416,18 @@ def _bump_depth(depth: dict[str, int], buckets: set[int]) -> dict[str, int]:
     out = dict(depth)
     for b in buckets:
         out[str(b)] = out.get(str(b), 0) + 1
+    return out
+
+
+def _fold_depth(base: dict, head: dict, folded: set[int]) -> dict[str, int]:
+    """`head`'s `delta_depth` after a fold of the buckets `folded` planned at
+    `base`: each keeps only the delta commits added since `base`."""
+    out = {}
+    for b, c in head["delta_depth"].items():
+        if int(b) in folded:
+            c -= base["delta_depth"].get(b, 0)
+        if c > 0:
+            out[b] = c
     return out
 
 
@@ -721,22 +757,18 @@ class LakehouseTable:
                 f"{src['n_buckets']} buckets → spec {cur['spec_id']}/"
                 f"{cur['n_buckets']}); the picked files route keys wrong"
             )
-        prefix = f"manifest-{src['snapshot_id']:08d}-"
-        picked = [
-            e
-            for m in src["manifests"]
-            if m["name"].startswith(prefix)
-            for e in self._manifest_entries(m["name"])
-        ]
+        picked = self._own_entries(src)
         if not picked:
             return {"skipped": True, "reason": "no files written by snapshot"}
-        # idempotency must survive compaction folding the picked files out
-        # of the HEAD: check presence across the whole retained chain (the
-        # pre-compact snapshots still reference the paths), not just the
-        # current snapshot — else a retried pick after a compact would
-        # re-layer stale deltas and re-emit the batch to every cursor
-        have = {e["path"] for s in self.history() for e in self._files(s)}
-        if all(e["path"] in have for e in picked):
+
+        def present() -> bool:
+            # across the whole retained chain, not just the head: a compact
+            # may have folded the picked files out of the head, and a
+            # re-pick would re-layer stale deltas and re-emit the batch
+            have = {e["path"] for s in self.history() for e in self._files(s)}
+            return all(e["path"] in have for e in picked)
+
+        if present():
             return {"skipped": True, "reason": "already present"}
         # divergent-DDL guard: a field id shared by the picked files' schema
         # and the current schema must name the same logical column (same
@@ -761,32 +793,33 @@ class LakehouseTable:
                         "divergent DDL across refs; replay the batch instead"
                     )
         watermark = max(
-            [cur.get("watermark_lsn") or 0]
-            + [fs["lsn_max"] for fs in self.file_stats(picked) if fs["lsn_max"] is not None]
+            [0] + [fs["lsn_max"] for fs in self.file_stats(picked) if fs["lsn_max"] is not None]
         )
-        depth = _bump_depth(cur["delta_depth"], {e["bucket"] for e in picked})
+        buckets = {e["bucket"] for e in picked}
         src_batch = src.get("batch_id")
-        new_id = self._next_id(cur)
-        new = {
-            **cur,
-            "snapshot_id": new_id,
-            "parent": cur["snapshot_id"],
-            "kind": "cherry-pick",
-            "batch_id": src_batch,
-            "last_batch_id": max(
-                cur.get("last_batch_id", -1),
-                src_batch if src_batch is not None else -1,
-            ),
-            "watermark_lsn": watermark,
-            "manifests": cur["manifests"] + [self._write_manifest(new_id, picked)],
-            "delta_depth": depth,
-            "stats": {"picked_snapshot": snapshot_id, "picked_files": len(picked)},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+
+        def produce(head: dict, sid: int) -> dict | None:
+            if head is not cur and present():
+                return None  # picked by another writer meanwhile
+            return {
+                **head,
+                "batch_id": src_batch,
+                "last_batch_id": max(
+                    head.get("last_batch_id", -1),
+                    src_batch if src_batch is not None else -1,
+                ),
+                "watermark_lsn": max(head.get("watermark_lsn") or 0, watermark),
+                "manifests": head["manifests"] + [self._write_manifest(sid, picked)],
+                "delta_depth": _bump_depth(head["delta_depth"], buckets),
+                "stats": {"picked_snapshot": snapshot_id, "picked_files": len(picked)},
+            }
+
+        new = self._commit_op("cherry-pick", produce, cur)
+        if new is None:
+            return {"skipped": True, "reason": "already present"}
         return {
             "skipped": False,
-            "snapshot_id": new_id,
+            "snapshot_id": new["snapshot_id"],
             "picked_snapshot": snapshot_id,
             "picked_files": len(picked),
         }
@@ -865,57 +898,30 @@ class LakehouseTable:
         """Public accessor for tools/tests: the snapshot's file inventory."""
         return self._files(snap or self.current_snapshot())
 
-    def _carry_without_buckets(
-        self, snap: dict, new_snapshot_id: int, drop_buckets: set[int],
-        spec_id: int | None = None, layer: str | None = None,
-    ) -> list[dict]:
-        """Manifest refs for a commit that removes every entry in
-        `drop_buckets`: untouched manifests carry by name (no I/O beyond the
-        ref), intersecting ones are rewritten without the dropped buckets —
-        O(affected manifests), never O(table).
-
-        spec_id / layer narrow the drop to entries of that partition spec /
-        layer: bucket ids are only comparable within one spec, so a
-        mixed-spec commit (squash, migrate) must not drop an old-spec
-        entry whose bucket NUMBER merely collides with a current-spec
-        bucket it is rewriting."""
-        carried: list[dict] = []
-        for m in snap["manifests"]:
-            if not (set(m["buckets"]) & drop_buckets) or (
-                spec_id is not None and spec_id not in m["specs"]
-            ):
-                carried.append(m)
-                continue
-            entries = self._manifest_entries(m["name"])
-            rest = [
-                e
-                for e in entries
-                if not (
-                    e["bucket"] in drop_buckets
-                    and (spec_id is None or e["spec_id"] == spec_id)
-                    and (layer is None or e["layer"] == layer)
-                )
-            ]
-            if len(rest) == len(entries):
-                # bucket numbers intersected but spec/layer filtered the
-                # drop to nothing — carry by ref, no rewrite
-                carried.append(m)
-            elif rest:
-                carried.append(self._write_manifest(new_snapshot_id, rest))
-        return carried
+    def _own_entries(self, snap: dict) -> list[dict]:
+        """The file entries `snap`'s own commit added: its manifests named
+        `manifest-<its id>-`, the id `_commit_op` committed it under."""
+        prefix = f"manifest-{snap['snapshot_id']:08d}-"
+        return [
+            e
+            for m in snap["manifests"]
+            if m["name"].startswith(prefix)
+            for e in self._manifest_entries(m["name"])
+        ]
 
     def _carry_without_paths(
         self, snap: dict, new_snapshot_id: int, drop_paths: set[str],
-        specs_hint: set[int] | None = None,
+        buckets: set[int], added: list[dict],
     ) -> list[dict]:
-        """Manifest refs for a commit that removes an explicit entry set
-        (migrate_spec re-layouts exact files): same carry-by-name / rewrite
-        split as _carry_without_buckets, keyed by path. specs_hint: the
-        dropped entries' spec ids — manifests whose recorded spec set is
-        disjoint carry by ref without being opened."""
+        """Manifest refs for a fold that removes the entries `drop_paths`
+        (the files it read, whose buckets are `buckets`) from `snap`, or
+        from any head it is rebased onto, and adds `added`: manifests that
+        lose nothing carry by name, unopened when their buckets are
+        disjoint; the rest are rewritten — O(affected manifests), never
+        O(table)."""
         carried: list[dict] = []
         for m in snap["manifests"]:
-            if specs_hint is not None and not (set(m["specs"]) & specs_hint):
+            if not (set(m["buckets"]) & buckets):
                 carried.append(m)
                 continue
             entries = self._manifest_entries(m["name"])
@@ -924,7 +930,7 @@ class LakehouseTable:
                 carried.append(m)
             elif rest:
                 carried.append(self._write_manifest(new_snapshot_id, rest))
-        return carried
+        return carried + ([self._write_manifest(new_snapshot_id, added)] if added else [])
 
     def _write_json(self, name: str, obj: dict) -> None:
         _atomic_write(os.path.join(self.meta_dir, name), json.dumps(obj))
@@ -935,19 +941,90 @@ class LakehouseTable:
     #: reclaiming that would lose its commit, so it's a conflict instead.
     orphan_reclaim_seconds: float = 60.0
 
-    def _commit(self, snap: dict, expected_head: int | None = None) -> None:
-        """Write the snapshot json, then atomically swing the version hint.
-        expected_head defaults to the snapshot's parent (see _swing_hint).
+    def _commit_op(
+        self, kind: str, produce, base: dict | None, sid: int | None = None
+    ) -> dict | None:
+        """The one commit path (Iceberg's SnapshotProducer): commit the
+        `kind` snapshot `produce(head, snapshot_id)` derives, and return it
+        (None when `produce` returns None: nothing left to commit). `produce`
+        returns the snapshot's own fields and writes at most manifests,
+        named for `snapshot_id`; this fills in `kind`, `snapshot_id`,
+        `parent` and `committed_at`. `base` is the snapshot the operation
+        read (None for `create`), `sid` the id its data dir was reserved
+        under. Once the head has moved past `base`, `produce` runs on the
+        new head under a fresh id, after `_rebase_gap` admitted the commits
+        in between, and `stats.rebased_over` counts them. A lost CAS is
+        retried (`with_commit_retry`); a refused rebase raises at once."""
+        read_id = None if base is None else base["snapshot_id"]
 
-        CAS protocol: the snapshot JSON is fully written to a temp file,
-        then `os.link`ed to its final name — POSIX guarantees exactly one
-        linker wins, and the winner's file is COMPLETE the instant it becomes
-        visible (no in-flight window where the visible file is half-written).
-        Two writers that both built snapshot N from N-1 cannot both commit:
-        the loser gets CommitConflictError and must reload + retry. This is
-        Iceberg's optimistic-concurrency protocol on a local FS; on object
-        stores the same CAS comes from the catalog (the reason real Iceberg
-        needs one).
+        def attempt() -> dict | None:
+            nonlocal sid
+            head = base if self._head_id() == read_id else self.current_snapshot()
+            if sid is None or head is not base:
+                sid = self._next_id(head)
+            try:
+                gap = [] if head is base else self._rebase_gap(kind, read_id, head)
+                fields = produce(head, sid)
+            except CommitConflictError as e:
+                raise _Refused(e) from None
+            if fields is None:
+                return None
+            head_id = None if head is None else head["snapshot_id"]
+            new = {
+                **fields,
+                "kind": kind,
+                "snapshot_id": sid,
+                "parent": None if kind in ("create", "upgrade") else head_id,
+                "committed_at": time.time(),
+            }
+            if gap:
+                new["stats"] = {**new["stats"], "rebased_over": len(gap)}
+            try:
+                self._commit(new, expected_head=head_id)
+            except CommitConflictError as e:
+                if _REBASE_OVER[kind] == ():
+                    raise _Refused(e) from None
+                sid = None
+                raise
+            return new
+
+        try:
+            return with_commit_retry(attempt)
+        except _Refused as r:
+            raise r.args[0] from None
+
+    def _rebase_gap(self, kind: str, read_id: int | None, head: dict) -> list[dict]:
+        """The commits in (read_id, head], oldest first, that a `kind`
+        commit planned at `read_id` is rebased over; CommitConflictError
+        when `_REBASE_OVER[kind]` refuses one, or `read_id` is no longer an
+        ancestor of the head (a branch reset, an expired link)."""
+        allowed, gap, s = _REBASE_OVER[kind], [], head
+        while s["snapshot_id"] != read_id:
+            if allowed is not None and s["kind"] not in allowed:
+                raise CommitConflictError(
+                    f"{kind} planned at snapshot {read_id} cannot be rebased "
+                    f"over {s['kind']} snapshot {s['snapshot_id']}"
+                )
+            gap.append(s)
+            pid = s.get("parent")
+            if read_id is None or pid is None or pid < read_id or not os.path.exists(
+                os.path.join(self.meta_dir, f"snapshot-{pid:08d}.json")
+            ):
+                raise CommitConflictError(
+                    f"snapshot {read_id} is no longer an ancestor of head "
+                    f"{head['snapshot_id']}"
+                )
+            s = self.snapshot_by_id(pid)
+        return gap[::-1]
+
+    def _commit(self, snap: dict, expected_head: int | None = None) -> None:
+        """`_commit_op`'s CAS: write the snapshot json, then atomically
+        swing the version hint. expected_head defaults to the snapshot's
+        parent (see _swing_hint). The json is fully written to a temp file,
+        then `os.link`ed to its final name: exactly one linker wins, and
+        the winner's file is complete the instant it is visible; the loser
+        gets CommitConflictError. On object stores the same CAS comes from
+        the catalog.
 
         Crash orphans (file linked, hint never swung) are reclaimed only when
         demonstrably stale — older than `orphan_reclaim_seconds` — because a
@@ -1181,12 +1258,10 @@ class LakehouseTable:
             "schema-0.json",
             {"schema_id": 0, "fields": fields, "last_column_id": len(fields)},
         )
-        self._commit(
-            {
+        self._commit_op(
+            "create",
+            lambda head, sid: {
                 "format_version": FORMAT_VERSION,
-                "snapshot_id": 0,
-                "parent": None,
-                "kind": "create",
                 "batch_id": None,
                 "last_batch_id": -1,
                 "watermark_lsn": 0,
@@ -1204,8 +1279,9 @@ class LakehouseTable:
                 "manifests": [],
                 "delta_depth": {},
                 "stats": {},
-                "committed_at": time.time(),
-            }
+            },
+            None,
+            sid=0,
         )
 
     # ------------------------------------------------------------------ read
@@ -1582,33 +1658,27 @@ class LakehouseTable:
         typed: bool,
     ) -> list[dict]:
         """Move a data dir written at `tmp_out` (`_tmp_data_dir`, holding
-        _bucket=<b>/*.parquet) into place as data/s<id> and return its file
-        entries.
+        _bucket=<b>/*.parquet) into place by atomic rename and return its
+        file entries. The target is data/s<snapshot_id>, the id the
+        operation reserved; a dir rename fails on a non-empty target, so
+        when another writer took it (a merge and its job's compaction that
+        reserved the same id) the rename moves on to the next free
+        data/s<id>. The snapshot id is settled at commit (`_commit_op`): it
+        equals the dir id when uncontended. A crashed writer's
+        never-committed dir is skipped by _next_id and reclaimed by
+        expire_snapshots like any unreferenced file."""
+        import errno
 
-        Writers fill a unique temp dir, then atomically rename it to
-        data/s<id>. Two writers that allocated the SAME id both used to
-        target s<id> directly — and Spark's overwrite mode clears the
-        output dir first, so the loser could delete the winner's
-        already-committed files before the metadata CAS ever saw the
-        conflict. With the rename, exactly one writer owns s<id> (POSIX dir
-        rename fails on a non-empty target); the loser surfaces
-        CommitConflictError here, retries under a fresh id, and its temp
-        dir is removed. A crashed writer's renamed-but-never-committed dir
-        is skipped by _next_id (which scans data/ as well as snapshot
-        files) and reclaimed by expire_snapshots like any unreferenced
-        file."""
-        rel = f"data/s{snapshot_id}"
-        out = os.path.join(self.path, rel)
-        try:
-            os.rename(tmp_out, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp_out, ignore_errors=True)
-            raise CommitConflictError(
-                f"data dir {rel} already written by a concurrent writer "
-                "allocating the same snapshot id"
-            ) from None
+        while True:
+            rel = f"data/s{snapshot_id}"
+            out = os.path.join(self.path, rel)
+            try:
+                os.rename(tmp_out, out)
+                break
+            except OSError as e:
+                if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                    raise
+                snapshot_id += 1
         entries = []
         for d in sorted(os.listdir(out)):
             if not d.startswith("_bucket="):
@@ -1960,32 +2030,32 @@ class LakehouseTable:
             spec_id=self.spec_id(snap),
         )
         entries = self._record_stats(entries, snap)
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "overwrite",
-            "batch_id": batch_id,
-            # a full load retires every pre-existing file: no old-spec file
-            # can survive it, so collapse the live-spec list (else a
-            # mid-migration initsync would leave the retired spec
-            # registered forever)
-            "specs": {str(self.spec_id(snap)): snap["n_buckets"]},
-            "old_delta_depth": {},
-            "auto_migrate_buckets": None,
-            **(
-                {"watermark_lsn": max(snap.get("watermark_lsn") or 0, watermark_lsn)}
-                if watermark_lsn is not None
-                else {}
-            ),
-            "last_batch_id": max(snap["last_batch_id"], batch_id if batch_id is not None else -1),
-            "manifests": [self._write_manifest(new_id, entries)] if entries else [],
-            "delta_depth": {},
-            "stats": {},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return new
+
+        def produce(head: dict, sid: int) -> dict:
+            return {
+                **head,
+                "batch_id": batch_id,
+                # a full load retires every pre-existing file: no old-spec
+                # file can survive it, so collapse the live-spec list (else
+                # a mid-migration initsync would leave the retired spec
+                # registered forever)
+                "specs": {str(self.spec_id(head)): head["n_buckets"]},
+                "old_delta_depth": {},
+                "auto_migrate_buckets": None,
+                **(
+                    {"watermark_lsn": max(head.get("watermark_lsn") or 0, watermark_lsn)}
+                    if watermark_lsn is not None
+                    else {}
+                ),
+                "last_batch_id": max(
+                    head["last_batch_id"], batch_id if batch_id is not None else -1
+                ),
+                "manifests": [self._write_manifest(sid, entries)] if entries else [],
+                "delta_depth": {},
+                "stats": {},
+            }
+
+        return self._commit_op("overwrite", produce, snap, new_id)
 
     # ----------------------------------------------------------------- merge
     def merge(
@@ -2021,17 +2091,15 @@ class LakehouseTable:
             changes = changes.withColumn("_bucket", self.bucket_expr(n_buckets))
         elif bucket_n is not None and bucket_n != n_buckets:
             # caller computed _bucket under a spec that was evolved away
-            # between its planning and this commit (or a with_commit_retry
-            # re-run straddling an evolve): re-route, else the delta files
-            # land in dirs that disagree with the rows' real buckets and
-            # bucket-pruned point reads miss them
+            # before this merge read the head: re-route, else the delta
+            # files land in dirs that disagree with the rows' real buckets
+            # and bucket-pruned point reads miss them
             changes = changes.withColumn("_bucket", self.bucket_expr(n_buckets))
         # Columns added to the schema AFTER this changeset was decoded (a
-        # concurrent add_column landing between decode and commit, or a
-        # with_commit_retry re-running merge against an evolved snapshot)
+        # concurrent add_column landing before this merge read the head)
         # are null for these rows by definition — Iceberg's add-column
-        # semantics. Fill them so the retry loop composes with DDL writers;
-        # any OTHER mismatch (e.g. a pre-rename name) still fails analysis.
+        # semantics. Any OTHER mismatch (e.g. a pre-rename name) still
+        # fails analysis.
         have = set(changes.columns)
         missing = [
             f for f in self._load_schema(snap["schema_id"])["fields"]
@@ -2047,23 +2115,6 @@ class LakehouseTable:
             )
 
         return self._merge_mor(spark, snap, batch_id, changes)
-
-    def _commit_noop_merge(self, snap, batch_id) -> dict:
-        """Fully-duplicate batch: metadata-only commit advancing batch_id."""
-        new = {
-            **snap,
-            "snapshot_id": self._next_id(snap),
-            "parent": snap["snapshot_id"],
-            "kind": "merge",
-            "batch_id": batch_id,
-            "last_batch_id": batch_id,
-            "stats": {"affected_buckets": 0},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return {"skipped": False, "batch_id": batch_id, "snapshot_id": new["snapshot_id"],
-                "affected_buckets": 0, "rows_filtered_by_watermark": True,
-                "maintenance_due": self._maintenance_due(new)}
 
     def _merge_mor(self, spark, snap, batch_id, changes) -> dict:
         """Delta commit, write-first: write the changeset (deletes kept as
@@ -2131,12 +2182,9 @@ class LakehouseTable:
         return self._commit_delta(snap, batch_id, new_id, placed)
 
     def _commit_delta(self, snap: dict, batch_id: int, new_id: int, entries: list[dict]) -> dict:
-        """Commit placed delta files as merge `batch_id` (snapshot `new_id`
-        on top of `snap`); a changeset that wrote nothing commits a no-op
-        merge."""
-        if not entries:
-            return self._commit_noop_merge(snap, batch_id)
-
+        """Commit delta files placed under reserved id `new_id` as merge
+        `batch_id` planned on `snap` (none: a metadata-only merge advancing
+        the batch id); a batch another writer committed meanwhile skips."""
         # Per-bucket lineage from parquet footers only (no data read, no
         # Spark job): applied rows are file row counts, deletes are the
         # non-null _tomb counts, and the watermark is the max of the files'
@@ -2151,28 +2199,31 @@ class LakehouseTable:
             if fs["lsn_max"] is not None:
                 m["max_lsn"] = max(m["max_lsn"], fs["lsn_max"])
         bucket_metrics = sorted(by_bucket.values(), key=lambda m: m["bucket"])
-        new_watermark = max(
-            [snap.get("watermark_lsn") or 0] + [m["max_lsn"] for m in bucket_metrics]
-        )
-        # O(batch) commit metadata: one new manifest + incremental per-bucket
-        # delta depth; prior manifests carry by reference.
-        depth = _bump_depth(snap["delta_depth"], {e["bucket"] for e in entries})
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "merge",
-            "batch_id": batch_id,
-            "last_batch_id": batch_id,
-            "watermark_lsn": new_watermark,
-            "manifests": snap["manifests"] + [self._write_manifest(new_id, entries)],
-            "delta_depth": depth,
-            "stats": {"affected_buckets": len(bucket_metrics)},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return {"skipped": False, "batch_id": batch_id, "snapshot_id": new_id,
+        max_lsn = max([m["max_lsn"] for m in bucket_metrics], default=0)
+
+        def produce(head: dict, sid: int) -> dict | None:
+            if batch_id <= head["last_batch_id"]:
+                return None
+            # O(batch) commit metadata: one new manifest + incremental
+            # per-bucket delta depth; prior manifests carry by reference.
+            return {
+                **head,
+                "batch_id": batch_id,
+                "last_batch_id": batch_id,
+                "watermark_lsn": max(head.get("watermark_lsn") or 0, max_lsn),
+                "manifests": head["manifests"]
+                + ([self._write_manifest(sid, entries)] if entries else []),
+                "delta_depth": _bump_depth(head["delta_depth"], set(by_bucket)),
+                "stats": {"affected_buckets": len(bucket_metrics)},
+            }
+
+        new = self._commit_op("merge", produce, snap, new_id)
+        if new is None:
+            return {"skipped": True, "batch_id": batch_id,
+                    "snapshot_id": self.current_snapshot()["snapshot_id"]}
+        return {"skipped": False, "batch_id": batch_id, "snapshot_id": new["snapshot_id"],
                 "affected_buckets": len(bucket_metrics),
+                "rows_filtered_by_watermark": not entries,
                 "maintenance_due": self._maintenance_due(new),
                 "bucket_metrics": bucket_metrics}
 
@@ -2205,21 +2256,23 @@ class LakehouseTable:
           3. then one `auto_migrate_buckets` chunk when a spec migration is
              armed.
 
-        A no-op when nothing is due. Each step is its own CAS commit, so a
-        concurrent writer makes this raise CommitConflictError (step 3
-        alone gives its chunk up to the next cycle instead). Returns what
-        it committed: {"commits": [{"snapshot_id", "kind"}], "buckets":
-        the compacted bucket ids, "files_rewritten": data files folded,
-        "spec_migration": the migrate chunk's counts or None}."""
+        A no-op when nothing is due. Each step is its own commit, rebased
+        over merges that land meanwhile; any other concurrent commit makes
+        it raise CommitConflictError (step 3 alone gives its chunk up to
+        the next cycle instead). Returns what it committed: {"commits":
+        [{"snapshot_id", "kind", "rebased_over"}], "buckets": the compacted
+        bucket ids, "files_rewritten": data files folded, "spec_migration":
+        the migrate chunk's counts or None}."""
         out: dict = {"commits": [], "buckets": [], "files_rewritten": 0,
                      "spec_migration": None}
 
-        def committed(r: dict) -> bool:
-            if r.get("skipped", False):
+        def committed(r: dict | None) -> bool:
+            if r is None or r.get("skipped", False):
                 return False
             new = self.snapshot_by_id(r["snapshot_id"])
-            out["commits"].append({"snapshot_id": new["snapshot_id"], "kind": new["kind"]})
             stats = new["stats"]
+            out["commits"].append({"snapshot_id": new["snapshot_id"], "kind": new["kind"],
+                                   "rebased_over": stats.get("rebased_over", 0)})
             out["files_rewritten"] += stats.get("compacted_files", stats.get("squashed_files", 0))
             return True
 
@@ -2232,32 +2285,28 @@ class LakehouseTable:
         elif every and len(snap["manifests"]) >= every:
             committed(self.rewrite_manifests())
         mig = self._maybe_auto_migrate(spark, self.current_snapshot())
-        if mig:
-            out["commits"].append({"snapshot_id": mig.pop("snapshot_id"), "kind": "migrate_spec"})
-            out["spec_migration"] = mig
+        if committed(mig):
+            out["spec_migration"] = {
+                k: mig[k] for k in ("migrated_files", "remaining_old_files")
+            }
         return out
 
     def _maybe_auto_migrate(self, spark, snap: dict) -> dict | None:
         """One SINGLE-SHOT migrate chunk per `maintain` cycle when
         `auto_migrate_buckets` is armed (set by evolve_bucket_spec; see
-        its docstring). Exactly one attempt, no retry loop: a lost CAS
-        abandons this chunk and the next batch's cycle picks it up — the
-        maintenance runner must never sit in migrate backoff sleeps. The
-        guard costs one dict get on tables that never evolved."""
+        its docstring), as `migrate_spec` returns it. A merge landing
+        meanwhile is rebased over inside the chunk's commit; a refused
+        rebase (another fold, a DDL) abandons the chunk and returns None —
+        the next batch's cycle picks it up, so the maintenance runner
+        never sits in retry backoff. The guard costs one dict get on
+        tables that never evolved."""
         amb = snap.get("auto_migrate_buckets")
         if not amb or len(self.table_specs(self.current_snapshot())) <= 1:
             return None
         try:
-            r = self._migrate_spec_once(spark, max_old_buckets=amb)
+            return self._migrate_spec_once(spark, max_old_buckets=amb)
         except CommitConflictError:
             return None
-        if r.get("skipped"):
-            return None
-        return {
-            "snapshot_id": r["snapshot_id"],
-            "migrated_files": r["migrated_files"],
-            "remaining_old_files": r["remaining_old_files"],
-        }
 
     # ------------------------------------------------------------ compaction
     def delta_depth(self, snap: dict | None = None) -> dict[int, int]:
@@ -2265,7 +2314,7 @@ class LakehouseTable:
         migrate) that touched the bucket since its last fold — its read
         amplification, and what `compact_every` is compared against —
         keyed by CURRENT-spec bucket id. Maintained INCREMENTALLY in the
-        snapshot (merge adds, compact clears) so the per-commit
+        snapshot (merge adds, a fold clears what it read) so the per-commit
         compaction decision is O(n_buckets), not an O(total files) sweep.
         During a spec migration the retired spec's un-folded stacks are NOT
         counted here (their bucket ids live in another keyspace) — they
@@ -2343,31 +2392,19 @@ class LakehouseTable:
                 spec_id=self.spec_id(snap),
             )
             entries = self._record_stats(entries, snap)
-        carried = self._carry_without_buckets(snap, new_id, sel)
-        if entries:
-            carried.append(self._write_manifest(new_id, entries))
-        remaining_depth = {
-            b: c for b, c in snap["delta_depth"].items() if int(b) not in sel
-        }
-        prev_total = sum(m["entry_count"] for m in snap["manifests"])
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": kind,
-            "batch_id": None,
-            "manifests": carried,
-            "delta_depth": remaining_depth,
-            "stats": {
-                "compacted_buckets": len(sel),
-                "compacted_files": prev_total
-                - sum(m["entry_count"] for m in carried)
-                + len(entries),
-            },
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return {"skipped": False, "snapshot_id": new_id, "compacted_buckets": len(sel)}
+        folded = {e["path"] for e in self._files(snap) if e["bucket"] in sel}
+
+        def produce(head: dict, sid: int) -> dict:
+            return {
+                **head,
+                "batch_id": None,
+                "manifests": self._carry_without_paths(head, sid, folded, sel, entries),
+                "delta_depth": _fold_depth(snap, head, sel),
+                "stats": {"compacted_buckets": len(sel), "compacted_files": len(folded)},
+            }
+
+        new = self._commit_op(kind, produce, snap, new_id)
+        return {"skipped": False, "snapshot_id": new["snapshot_id"], "compacted_buckets": len(sel)}
 
     def _squash(self, spark: SparkSession, snap: dict, sel: set[int]) -> dict:
         """Mixed-spec compaction: collapse each selected bucket's delta
@@ -2419,34 +2456,26 @@ class LakehouseTable:
             out, new_id, snap["schema_id"], snap["n_buckets"], "delta",
             spec_id=cur_spec,
         )
-        carried = self._carry_without_buckets(
-            snap, new_id, sel, spec_id=cur_spec, layer="delta"
-        )
-        if entries:
-            carried.append(self._write_manifest(new_id, entries))
-        depth = _bump_depth(
-            {b: c for b, c in snap["delta_depth"].items() if int(b) not in sel},
-            {e["bucket"] for e in entries},
-        )
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "compact",
-            "batch_id": None,
-            "manifests": carried,
-            "delta_depth": depth,
-            "stats": {
-                "mode": "squash",
-                "squashed_buckets": len(sel),
-                "squashed_files": len(delta_e),
-            },
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+        folded = {e["path"] for e in delta_e}
+        squashed = {e["bucket"] for e in entries}
+
+        def produce(head: dict, sid: int) -> dict:
+            return {
+                **head,
+                "batch_id": None,
+                "manifests": self._carry_without_paths(head, sid, folded, sel, entries),
+                "delta_depth": _bump_depth(_fold_depth(snap, head, sel), squashed),
+                "stats": {
+                    "mode": "squash",
+                    "squashed_buckets": len(sel),
+                    "squashed_files": len(delta_e),
+                },
+            }
+
+        new = self._commit_op("compact", produce, snap, new_id)
         return {
             "skipped": False,
-            "snapshot_id": new_id,
+            "snapshot_id": new["snapshot_id"],
             "compacted_buckets": len(sel),
             "mode": "squash",
         }
@@ -2468,8 +2497,8 @@ class LakehouseTable:
         forever. Read planning walks that list on the driver, so this op
         folds list length back to O(total/target) in pure metadata — no
         data rewrite, no Spark session, O(entries) driver time. Changelog
-        readers are unaffected: the rewrite introduces no new data paths,
-        so the path-based incremental diff skips it like a compaction.
+        readers are unaffected: the rewrite changes no rows, so the
+        changelog skips it like a compaction.
 
         No-op ({"skipped": True}) when the list is already that small."""
         snap = self.current_snapshot()
@@ -2479,28 +2508,27 @@ class LakehouseTable:
         n_target = max(1, -(-len(entries) // target)) if entries else 0
         if len(manifests) <= n_target:
             return {"skipped": True, "n_manifests": len(manifests)}
-        new_id = self._next_id(snap)
-        refs = self._write_manifests(new_id, entries, target)
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "rewrite_manifests",
-            "batch_id": None,
-            "manifests": refs,
-            "stats": {
-                "manifests_before": len(manifests),
-                "manifests_after": len(refs),
-                "entries": len(entries),
-            },
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+
+        def produce(head: dict, sid: int) -> dict:
+            files = self._files(head)
+            refs = self._write_manifests(sid, files, target)
+            return {
+                **head,
+                "batch_id": None,
+                "manifests": refs,
+                "stats": {
+                    "manifests_before": len(head["manifests"]),
+                    "manifests_after": len(refs),
+                    "entries": len(files),
+                },
+            }
+
+        new = self._commit_op("rewrite_manifests", produce, snap)
         return {
             "skipped": False,
-            "snapshot_id": new_id,
-            "manifests_before": len(manifests),
-            "manifests_after": len(refs),
+            "snapshot_id": new["snapshot_id"],
+            "manifests_before": new["stats"]["manifests_before"],
+            "manifests_after": new["stats"]["manifests_after"],
         }
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> dict:
@@ -2531,24 +2559,23 @@ class LakehouseTable:
                 spec_id=new_spec,
             )
             entries = self._record_stats(entries, snap)
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "rebucket",
-            "batch_id": None,
-            "n_buckets": new_n_buckets,
-            "spec_id": new_spec,
-            "specs": {str(new_spec): new_n_buckets},
-            "old_delta_depth": {},
-            "auto_migrate_buckets": None,
-            "manifests": [self._write_manifest(new_id, entries)] if entries else [],
-            "delta_depth": {},
-            "stats": {"rebucketed_from": snap["n_buckets"], "rebucketed_to": new_n_buckets},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
-        return {"skipped": False, "snapshot_id": new_id, "n_buckets": new_n_buckets}
+
+        def produce(head: dict, sid: int) -> dict:
+            return {
+                **head,
+                "batch_id": None,
+                "n_buckets": new_n_buckets,
+                "spec_id": new_spec,
+                "specs": {str(new_spec): new_n_buckets},
+                "old_delta_depth": {},
+                "auto_migrate_buckets": None,
+                "manifests": [self._write_manifest(sid, entries)] if entries else [],
+                "delta_depth": {},
+                "stats": {"rebucketed_from": head["n_buckets"], "rebucketed_to": new_n_buckets},
+            }
+
+        new = self._commit_op("rebucket", produce, snap, new_id)
+        return {"skipped": False, "snapshot_id": new["snapshot_id"], "n_buckets": new_n_buckets}
 
     def evolve_bucket_spec(
         self, spark: SparkSession, new_n_buckets: int,
@@ -2588,17 +2615,18 @@ class LakehouseTable:
                 "(0 would record an armed setting that never migrates)"
             )
 
-        def attempt() -> dict:
-            snap = self.current_snapshot()
-            if new_n_buckets == snap["n_buckets"]:
-                return {"skipped": True, "n_buckets": new_n_buckets}
-            if self._mixed_spec(snap):
+        snap = self.current_snapshot()
+
+        def produce(head: dict, sid: int) -> dict | None:
+            if new_n_buckets == head["n_buckets"]:
+                return None
+            if self._mixed_spec(head):
                 raise ValueError(
                     "a spec migration is already in progress — run "
                     "migrate_spec to completion before evolving again"
                 )
-            new_spec = self.spec_id(snap) + 1
-            n_old_files = len(self._files(snap))
+            new_spec = self.spec_id(head) + 1
+            n_old_files = len(self._files(head))
             # an empty table has nothing to migrate: don't leave the
             # retired spec in the live list (migrate_spec would have no
             # non-skipped call left to collapse it)
@@ -2606,15 +2634,12 @@ class LakehouseTable:
                 {str(new_spec): new_n_buckets}
                 if n_old_files == 0
                 else {
-                    **{str(s): n for s, n in self.table_specs(snap).items()},
+                    **{str(s): n for s, n in self.table_specs(head).items()},
                     str(new_spec): new_n_buckets,
                 }
             )
-            new = {
-                **snap,
-                "snapshot_id": self._next_id(snap),
-                "parent": snap["snapshot_id"],
-                "kind": "evolve_spec",
+            return {
+                **head,
                 "batch_id": None,
                 "n_buckets": new_n_buckets,
                 "spec_id": new_spec,
@@ -2627,7 +2652,7 @@ class LakehouseTable:
                 "delta_depth": {},
                 "old_delta_depth": {
                     b: c
-                    for b, c in snap["delta_depth"].items()
+                    for b, c in head["delta_depth"].items()
                     if c
                 },
                 # an empty table collapses specs immediately (above): never
@@ -2636,22 +2661,22 @@ class LakehouseTable:
                     auto_migrate_buckets if n_old_files else None
                 ),
                 "stats": {
-                    "evolved_from": snap["n_buckets"],
+                    "evolved_from": head["n_buckets"],
                     "evolved_to": new_n_buckets,
                     "old_spec_files": n_old_files,
                 },
-                "committed_at": time.time(),
-            }
-            self._commit(new)
-            return {
-                "skipped": False,
-                "snapshot_id": new["snapshot_id"],
-                "spec_id": new_spec,
-                "n_buckets": new_n_buckets,
-                "old_spec_files": new["stats"]["old_spec_files"],
             }
 
-        return with_commit_retry(attempt)
+        new = self._commit_op("evolve_spec", produce, snap)
+        if new is None:
+            return {"skipped": True, "n_buckets": new_n_buckets}
+        return {
+            "skipped": False,
+            "snapshot_id": new["snapshot_id"],
+            "spec_id": new["spec_id"],
+            "n_buckets": new_n_buckets,
+            "old_spec_files": new["stats"]["old_spec_files"],
+        }
 
     def migrate_spec(
         self, spark: SparkSession, max_old_buckets: int | None = None
@@ -2671,9 +2696,11 @@ class LakehouseTable:
         the last old-spec file retires, the spec list collapses to the
         current spec and normal tombstone-dropping compaction resumes.
 
-        Online like evolve: a merge landing between plan and commit loses
-        only this CAS attempt — the whole step (including the re-layout
-        write) retries against the new head internally."""
+        Online: a merge landing between plan and commit is rebased over
+        inside the chunk's commit (`_commit_op`). Another fold, a DDL or a
+        spec change refuses the rebase; then the whole step, re-layout
+        write included, re-runs against the new head
+        (`with_commit_retry`)."""
         return with_commit_retry(
             lambda: self._migrate_spec_once(spark, max_old_buckets)
         )
@@ -2689,13 +2716,10 @@ class LakehouseTable:
                 # no old-spec files remain (e.g. a rollback or compaction
                 # retired the last one) but the spec list is stale: commit
                 # the metadata-only collapse so mixed-spec handling ends
-                new = {
-                    **snap,
-                    "snapshot_id": self._next_id(snap),
-                    "parent": snap["snapshot_id"],
-                    "kind": "migrate_spec",
+                self._commit_op("migrate_spec", lambda head, sid: {
+                    **head,
                     "batch_id": None,
-                    "specs": {str(cur_spec): snap["n_buckets"]},
+                    "specs": {str(cur_spec): head["n_buckets"]},
                     "old_delta_depth": {},
                     "auto_migrate_buckets": None,
                     "stats": {
@@ -2703,9 +2727,7 @@ class LakehouseTable:
                         "migrated_buckets": 0,
                         "remaining_old_files": 0,
                     },
-                    "committed_at": time.time(),
-                }
-                self._commit(new)
+                }, snap)
             return {"skipped": True, "remaining_old_files": 0}
         groups = sorted({(e["spec_id"], e["bucket"]) for e in old})
         if max_old_buckets is not None:
@@ -2760,50 +2782,45 @@ class LakehouseTable:
             )
             delta_buckets = {e["bucket"] for e in delta_entries}
             entries += delta_entries
-        carried = self._carry_without_paths(
-            snap, new_id, {e["path"] for e in chosen},
-            specs_hint={s for s, _b in groups},
-        )
-        if entries:
-            carried.append(self._write_manifest(new_id, entries))
-        # migrated delta stacks now live under current-spec buckets: count
-        # them in delta_depth so auto-compaction sees them, and retire
-        # their old-spec observability entries
-        depth = _bump_depth(snap["delta_depth"], delta_buckets)
+        folded = {e["path"] for e in chosen}
         migrated_old = {b for _s, b in groups}
-        old_depth = {
-            b: c
-            for b, c in snap.get("old_delta_depth", {}).items()
-            if int(b) not in migrated_old
-        }
         remaining = len(old) - len(chosen)
-        new = {
-            **snap,
-            "snapshot_id": new_id,
-            "parent": snap["snapshot_id"],
-            "kind": "migrate_spec",
-            "batch_id": None,
-            "manifests": carried,
-            "delta_depth": depth,
-            "old_delta_depth": {} if remaining == 0 else old_depth,
-            **({"auto_migrate_buckets": None} if remaining == 0 else {}),
-            # migration complete → retire the old spec from the live list
-            **(
-                {"specs": {str(cur_spec): snap["n_buckets"]}}
-                if remaining == 0
-                else {}
-            ),
-            "stats": {
-                "migrated_files": len(chosen),
-                "migrated_buckets": len(groups),
-                "remaining_old_files": remaining,
-            },
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+
+        def produce(head: dict, sid: int) -> dict:
+            # migrated delta stacks now live under current-spec buckets:
+            # count them in delta_depth so auto-compaction sees them, and
+            # retire their old-spec observability entries
+            old_depth = {
+                b: c
+                for b, c in head.get("old_delta_depth", {}).items()
+                if int(b) not in migrated_old
+            }
+            return {
+                **head,
+                "batch_id": None,
+                "manifests": self._carry_without_paths(
+                    head, sid, folded, migrated_old, entries
+                ),
+                "delta_depth": _bump_depth(head["delta_depth"], delta_buckets),
+                "old_delta_depth": {} if remaining == 0 else old_depth,
+                **({"auto_migrate_buckets": None} if remaining == 0 else {}),
+                # migration complete → retire the old spec from the live list
+                **(
+                    {"specs": {str(cur_spec): head["n_buckets"]}}
+                    if remaining == 0
+                    else {}
+                ),
+                "stats": {
+                    "migrated_files": len(chosen),
+                    "migrated_buckets": len(groups),
+                    "remaining_old_files": remaining,
+                },
+            }
+
+        new = self._commit_op("migrate_spec", produce, snap, new_id)
         return {
             "skipped": False,
-            "snapshot_id": new_id,
+            "snapshot_id": new["snapshot_id"],
             "migrated_files": len(chosen),
             "remaining_old_files": remaining,
         }
@@ -2923,18 +2940,22 @@ class LakehouseTable:
             kept = [live_by_old[c] for c in cols if c in live_by_old]
             return kept or None
 
-        new = {
-            **snap,
-            "snapshot_id": self._next_id(snap),
-            "parent": snap["snapshot_id"],
-            "kind": "ddl",
-            "batch_id": None,
-            "schema_id": new_schema_id,
-            "cluster_by": remap(snap.get("cluster_by")),
-            "stats_columns": remap(snap.get("stats_columns")),
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+        def produce(head: dict, sid: int) -> dict:
+            if head["schema_id"] != snap["schema_id"]:
+                raise CommitConflictError(
+                    f"schema {snap['schema_id']} this DDL was planned on was "
+                    f"replaced by schema {head['schema_id']}"
+                )
+            return {
+                **head,
+                "batch_id": None,
+                "schema_id": new_schema_id,
+                "cluster_by": remap(head.get("cluster_by")),
+                "stats_columns": remap(head.get("stats_columns")),
+                "stats": {},
+            }
+
+        self._commit_op("ddl", produce, snap)
         return {"skipped": False, "schema_id": new_schema_id}
 
     # ---------------------------------------------------------------- verify
@@ -3118,13 +3139,9 @@ class LakehouseTable:
           CursorExpiredError carrying the newest such id (re-bootstrap the
           consumer, then resume from there).
 
-        Scale note: the path-based diff builds `prev_files` (every file path
-        at/below `from_snapshot_id`) on the driver — O(retained files) set
-        entries per call, bounded by `expire_snapshots` retention exactly
-        like Iceberg's own incremental-scan planning (which also walks
-        manifests driver-side). Keep retention windows sane (dozens of
-        snapshots, not thousands) and this is a few MB of strings; it never
-        reads data files.
+        Planning reads metadata only: each row-changing commit's own
+        manifests (Iceberg's added-snapshot manifests), so its cost grows
+        with the window, not with retention.
         """
         chain = self.history()
         return self._changes_df(
@@ -3194,10 +3211,9 @@ class LakehouseTable:
         retained history and CursorExpiredError for a window that holds a
         rollback or an overwrite of a table that held data (`_last_reset`).
 
-        Path-based diff (not manifest-name diff): compaction/rewrites
-        carried entries into NEW manifests without changing the underlying
-        file paths, so only genuinely new files count as changes. Manifest
-        loads are cached by name, so each manifest reads once per call.
+        Each commit's entries are its own manifests (`_own_entries`):
+        compactions and manifest rewrites carry entries into new manifests
+        and change no rows, so only these three kinds are read.
         `chain`: the caller's `history()`, so one poll walks it once."""
         chain = chain if chain is not None else self.history()
         ids = [s["snapshot_id"] for s in chain]
@@ -3207,26 +3223,15 @@ class LakehouseTable:
         reset = self._last_reset(chain, from_snapshot_id, to_id)
         if reset is not None:
             raise CursorExpiredError(from_snapshot_id, reset)
-        prev_files: set[str] = {
-            e["path"]
-            for s in chain
-            if s["snapshot_id"] <= from_snapshot_id
-            for e in self._files(s)
-        }
         out = []
         for s in chain:
-            sid = s["snapshot_id"]
-            if sid <= from_snapshot_id or sid > to_id:
-                continue
-            s_files = self._files(s)
-            new_entries = [e for e in s_files if e["path"] not in prev_files]
-            prev_files.update(e["path"] for e in s_files)
-            if s["kind"] in (
-                "create", "ddl", "compact", "recluster", "rebucket",
-                "rewrite_manifests", "evolve_spec", "migrate_spec",
-            ) or not new_entries:
-                continue
-            out.append((s, new_entries))
+            if (
+                from_snapshot_id < s["snapshot_id"] <= to_id
+                and s["kind"] in ("merge", "cherry-pick", "overwrite")
+            ):
+                new_entries = self._own_entries(s)
+                if new_entries:
+                    out.append((s, new_entries))
         return out
 
     def _last_reset(self, chain: list[dict], from_id: int, to_id: int) -> int | None:
@@ -3444,17 +3449,9 @@ class LakehouseTable:
         back point re-applies them (their batch_ids exceed the restored
         last_batch_id)."""
         target = self.snapshot_by_id(snapshot_id)
-        cur = self.current_snapshot()
-        new = {
-            **target,
-            "snapshot_id": self._next_id(cur),
-            "parent": cur["snapshot_id"],
-            "kind": "rollback",
-            "batch_id": None,
-            "stats": {"rolled_back_to": snapshot_id},
-            "committed_at": time.time(),
-        }
-        self._commit(new)
+        new = self._commit_op("rollback", lambda head, sid: {
+            **target, "batch_id": None, "stats": {"rolled_back_to": snapshot_id},
+        }, self.current_snapshot())
         return {"skipped": False, "snapshot_id": new["snapshot_id"], "restored": snapshot_id}
 
     # ------------------------------------------------------------ maintenance
@@ -3495,21 +3492,17 @@ class LakehouseTable:
                     for f in self._read_json(fn)["fields"]
                 )
                 self._write_json(f"schema-{old['schema_id']}.json", sch)
-            self._commit({
+            self._commit_op("upgrade", lambda head, sid: {
                 **{k: v for k, v in old.items() if k not in ("files", "merge_mode")},
                 "format_version": FORMAT_VERSION,
-                "snapshot_id": new_id,
-                "parent": None,
-                "kind": "upgrade",
                 "batch_id": None,
                 "spec_id": spec,
                 "specs": old.get("specs") or {str(spec): old["n_buckets"]},
                 "update_mode": old.get("update_mode", "full"),
-                "manifests": self._write_manifests(new_id, entries),
+                "manifests": self._write_manifests(sid, entries),
                 "delta_depth": depth,
                 "stats": {"upgraded_from": old["snapshot_id"]},
-                "committed_at": time.time(),
-            }, expected_head=old["snapshot_id"])
+            }, old, new_id)
         stale = [
             fn for fn in sorted(os.listdir(self.meta_dir))
             if fn.startswith("snapshot-") and fn.endswith(".json")

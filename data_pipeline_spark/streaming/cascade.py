@@ -148,7 +148,7 @@ def _apply_replica(
       (one merge, same shape; every steady-state poll of a live full
       edge) commits the upstream's delta files by hard link
       (`LakehouseTable.link_merge`) through the target's `_apply` tail
-      (maintenance wait, control record, maintenance submit, abort alert):
+      (control record, maintenance submit, abort alert):
       zero Spark jobs, and no new bytes on the same filesystem until
       compaction;
     - as typed rows, for every other window (catch-up over several
@@ -321,9 +321,11 @@ class CascadeJob:
         its apply. auto_ddl=True derives and APPLIES the missing downstream
         DDL (rename-aware via upstream `former_names`, widen-lattice-checked)
         instead of raising — the healing step; returns the descriptors
-        applied. Waits for the replica's background maintenance first, so
-        a healing DDL commit never races a compaction."""
-        self.job.wait_maintenance()
+        applied. A heal waits for the replica's background maintenance
+        first, so its DDL commit does not refuse a running compaction; the
+        per-poll check commits nothing and does not wait."""
+        if auto_ddl:
+            self.job.wait_maintenance()
         return _sync_replica_schema(
             self.upstream, self.job.table, self.columns, auto_ddl=auto_ddl
         )
@@ -404,7 +406,8 @@ class CascadeFanout:
         }
 
     def sync_schema(self, auto_ddl: bool = False) -> dict[str, list[dict]]:
-        self._wait_maintenance()
+        if auto_ddl:
+            self._wait_maintenance()
         return {
             t.name: _sync_replica_schema(
                 self.upstream, self.jobs[t.name].table, t.columns, auto_ddl=auto_ddl

@@ -16,23 +16,22 @@ actually commits, so the audit shows each batch applied exactly once.
 Background maintenance: a merge only commits. When it reports
 `maintenance_due`, the job hands `LakehouseTable.maintain` (hot-bucket
 compaction, manifest-list folds, auto spec migration) to its one runner
-thread, after the batch's control record is durable — so the compaction
-overlaps the consumers' polls and the next trigger instead of sitting
-between a commit and its readers (Hudi's async compaction). Join points:
-the job's next `apply_batch` or `apply_changes` waits for it before
-reading the head, so a job never races its own maintenance for the commit
-CAS and delta depth at merge time stays ≤ `compact_every`;
-`run_to_completion`, `replay_batch`,
-`flush_pending` and `reprocess_quarantine` wait before returning; the
-cursor consumers wait at the end of `run_until_caught_up`; `WapIngestJob`
-waits before it audits or publishes. Callers that drive `apply_batch` or
-`start_stream` themselves call `wait_maintenance()`. A maintenance error
-never fails a batch: it is alerted as {"kind": "maintenance_error"} and
-the next committed batch submits maintenance again. Backlog bound: when a
-bucket's depth has reached 2 × `compact_every` (the runner kept failing),
-the batch runs `maintain` inline and its errors propagate. Every run
-appends one line to <control>/maintenance.jsonl (batch_id, commits,
-buckets, files_rewritten, wall_s, error).
+thread once the batch's control record is durable, so compaction overlaps
+the consumers' polls and the next batches (Hudi's async compaction). No
+batch waits for it: whichever of a merge and the compaction commits second
+is rebased onto the other (`LakehouseTable._commit_op`). Join points:
+`run_to_completion`, `replay_batch`, `flush_pending` and
+`reprocess_quarantine` wait before returning; the cursor consumers wait at
+the end of `run_until_caught_up`; `WapIngestJob` waits before it audits or
+publishes. Callers that drive `apply_batch` or `start_stream` themselves
+call `wait_maintenance()`. A maintenance error (a refused rebase
+included) never fails a batch: it is alerted as {"kind":
+"maintenance_error"} and the next committed batch submits maintenance
+again. Backlog bound: once a bucket's depth reaches 2 × `compact_every`,
+the batch joins the pending run and runs `maintain` inline, errors
+propagating. Every run appends one line to <control>/maintenance.jsonl
+(batch_id, commits with `rebased_over`, buckets, files_rewritten, wall_s,
+error).
 """
 
 from __future__ import annotations
@@ -206,11 +205,8 @@ class IngestJob:
 
         A failing batch fires an "abort" alert (reference: mailer on abort,
         SURVEY.md §2 T11) and re-raises — the stream stops and resumes from
-        the checkpoint.
-
-        Waits for the previous batch's background maintenance first; this
-        batch's own maintenance is still running when it returns (see
-        `wait_maintenance`)."""
+        the checkpoint. Background maintenance may still be running when it
+        returns (see `wait_maintenance`)."""
         return self._apply(spark, batch_id, lambda: self._merge_changes(
             spark, batch_id, enforce_watermark,
             *self._decode_batch(spark, batch_id, raw, ddl_rows),
@@ -249,11 +245,10 @@ class IngestJob:
         ))
 
     def _apply(self, spark: SparkSession, batch_id: int, commit) -> dict:
-        """The one apply body: wait for the previous batch's maintenance,
-        `commit()` the batch (it returns a `LakehouseTable.merge`-shaped
-        result), then control record → maintenance submit. Any failure
-        fires the "abort" alert and re-raises."""
-        self.wait_maintenance()
+        """The one apply body: `commit()` the batch (it returns a
+        `LakehouseTable.merge`-shaped result), then control record →
+        maintenance submit. Any failure fires the "abort" alert and
+        re-raises."""
         t0 = time.monotonic()
         try:
             result = commit()
@@ -404,10 +399,12 @@ class IngestJob:
 
     # ----------------------------------------------------------- maintenance
     def _submit_maintenance(self, spark: SparkSession, batch_id: int) -> None:
-        """Hand `maintain` to the runner — or run it inline, errors
-        propagating, once some bucket's backlog reached 2 × compact_every."""
+        """Hand `maintain` to the runner — or, once some bucket's backlog
+        reached 2 × compact_every, join the pending run and run it inline,
+        errors propagating, so two compactions never race."""
         snap = self.table.current_snapshot()
         if max(self.table.delta_depth(snap).values(), default=0) >= 2 * snap.get("compact_every", 8):
+            self.wait_maintenance()
             self._maintain(spark, batch_id, inline=True)
             return
         if self._runner is None:

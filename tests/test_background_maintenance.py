@@ -1,9 +1,10 @@
 """Background maintenance: `merge` only commits, and the ingest job runs
 `LakehouseTable.maintain` on its one runner thread after the batch's control
-record is durable. The next batch joins it, so a job never races its own
-compaction; an error is alerted, never fails a batch, and is retried by the
-next batch's maintenance — until a bucket's backlog reaches
-2 × compact_every, where maintenance runs inline and errors propagate.
+record is durable. The next batch does not wait for it: a merge and the
+compaction racing it are rebased onto each other at commit. An error is
+alerted, never fails a batch, and is retried by the next batch's
+maintenance — until a bucket's backlog reaches 2 × compact_every, where
+maintenance joins the pending run, runs inline and errors propagate.
 """
 
 from __future__ import annotations
@@ -131,9 +132,11 @@ def test_backlog_bound_runs_inline_and_raises(spark, feed_dir, tmp_path, monkeyp
 
 def test_cadence_without_self_conflict(spark, feed_dir, tmp_path, monkeypatch):
     """10 back-to-back batches at compact_every=2 with a slowed compaction:
-    each batch lands once, the next batch waits for the running compaction
-    (no CommitConflictError, no maintenance_error), history alternates
-    merge, merge, compact, and no merge sees a depth above compact_every."""
+    the next batch no longer waits for the running compaction, so merges
+    land while it runs and whichever commits second is rebased onto the
+    other (no CommitConflictError, no maintenance_error). Each batch lands
+    once, at least one compaction is rebased over a merge, and the
+    inline backlog bound keeps every depth at or below 2 × compact_every."""
     orig = LakehouseTable.compact
 
     def slow(self, spark, buckets=None):
@@ -156,10 +159,10 @@ def test_cadence_without_self_conflict(spark, feed_dir, tmp_path, monkeypatch):
     merges = [s for s in hist if s["kind"] == "merge"]
     assert [s["batch_id"] for s in merges] == list(range(10))
     assert all(s["stats"]["affected_buckets"] == N_BUCKETS for s in merges)
-    assert [s["kind"] for s in hist] == ["merge", "merge", "compact"] * 5
-    assert max(max(s["delta_depth"].values()) for s in merges) <= 2
+    assert max(max(s["delta_depth"].values(), default=0) for s in hist) <= 4
     recs = _lines(os.path.join(job.control_path, "maintenance.jsonl"))
-    assert [r["batch_id"] for r in recs] == [1, 3, 5, 7, 9]
-    assert all(r["error"] is None and r["wall_s"] >= 1.0 for r in recs)
+    assert recs and all(r["error"] is None for r in recs)
+    compacts = [c for r in recs for c in r["commits"] if c["kind"] == "compact"]
+    assert any(c["rebased_over"] >= 1 for c in compacts)
     _assert_oracle(spark, job.table)
     assert fsck(job.table, deep=True)["ok"]
